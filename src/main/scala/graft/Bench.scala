@@ -49,7 +49,7 @@ object Bench {
     // (x23's embedding kernel read ~0.2 s at ANY SF). These consume
     // through a checksum over every output column — nothing prunable,
     // one row back to the driver. Set audited empirically
-    // (tools/PruneAudit, sf0.1 consume/count ratio >= 1.4, archived in
+    // (sf0.1 consume/count ratio >= 1.4, archived in
     // bench/prune_audit_r12.csv); their numbers re-baseline at r12
     // (bench/watchitems_r12.md) — compare r12+ values against
     // BENCH_r12, not earlier rounds.
@@ -60,8 +60,8 @@ object Bench {
       "m11_video_fp_dedup", "x2_quality_score", "x5_repetition",
       "x13_mix_report", "x15_quality_classifier", "x19_gopher_rules",
       "x23_hashed_embedding",
-      // r12 additions over the 1.4 cutoff (PruneAudit at sf0.1:
-      // q21 4.2, m17 2.9, q20 1.6)
+      // r12 additions over the 1.4 cutoff (bench/prune_audit_r12b.csv
+      // at sf0.1: q21 4.2, m17 2.9, q20 1.6)
       "m17_video_scene_cuts", "q20_percentile", "q21_range_window")
     def consume(name: String, df: org.apache.spark.sql.DataFrame): Unit =
       if (consumeAll(name))

@@ -733,7 +733,6 @@ object ConnectQueries {
    */
   def snapshotStreamHandoff(s: SparkSession, dir: String): DataFrame = {
     import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
     val base = s"target/tmp/s7b_${new java.io.File(dir).getName}"
     graft.util.Fs.deleteRecursive(Paths.get(base)) // idempotent re-runs
     val in = s"$base/in"

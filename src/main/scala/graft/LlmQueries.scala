@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -8,6 +8,9 @@ import graft.functions.Hashing
 import graft.ml.Similarity
 import graft.multimodal.Multimodal
 import graft.operators.CacheScope
+import graft.pipeline.AdmissionGate.{AudioSeedMod, Bands, ContainMaxDf,
+  ContainMinShingles, ContainTauDen, ContainTauNum, DecontMaxDf,
+  DecontMinShared, Dim, NumPerms, SemMaxBucket, SemTau, scaledPlaneCount}
 import graft.text.{Dedup, TextAnalysis}
 
 /**
@@ -23,13 +26,12 @@ object LlmQueries {
   import graft.Tables.{T, Tpar}
 
   // ---- shared constants (Spark plan AND oracle SQL derive from these) ----
+  // (NumPerms, Bands, Dim and the admission-leg dials are the gate's,
+  // imported from graft.pipeline.AdmissionGate)
 
-  private val NumPerms = 16
-  private val Bands = 4
   private val Rows = NumPerms / Bands
   private val Perms = Hashing.minhashPerms(NumPerms)
   private val NPlanes = 8
-  private[graft] val Dim = 64
   private val Planes = Similarity.hyperplanes(NPlanes, Dim)
   private val TopK = 10
   private val NCells = 16
@@ -607,7 +609,6 @@ object LlmQueries {
    * DECIMAL-exact (e3b), retrieval ties break on id, so the recall
    * FRACTIONS hash-compare against the DuckDB oracle. */
   def annRecallTrained(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val emb = embFrame(s, dir)
     val q = emb.filter(col("id") < 5)
     val cents = trainedCents(s, dir)
@@ -873,640 +874,6 @@ object LlmQueries {
     (existing, Seq(w0, w1, w2))
   }
 
-  /** One trigger's verdict from the batch's ARTIFACTS and the
-   * precomputed reference STATE — the per-trigger core shared by w12
-   * (`fused = false`: dedup verdict only), w14 (`fused = true`: dedup
-   * + batch-local quality head + novelty vs the state shingle table)
-   * and w15 (`posts` set: + the d16 decontamination leg against the
-   * frozen benchmark posting table). Takes only derived frames — no
-   * reference text can enter; the spec pins that by asserting every
-   * file scan under the verdict resolves into the state dir. */
-  private[graft] def admissionTriggerVerdict(
-      batch: DataFrame, batchArt: DataFrame, stateArt: DataFrame,
-      stateSh: DataFrame, fused: Boolean,
-      posts: Option[DataFrame] = None,
-      cposts: Option[DataFrame] = None,
-      semb: Option[(DataFrame, DataFrame)] = None,
-      extraFlags: Seq[(String, DataFrame)] = Nil)(
-      implicit scope: CacheScope): DataFrame = {
-    val dedup = Dedup.admissionVerdictIncremental(batchArt, stateArt,
-      numBands = Bands, numPerms = NumPerms)
-    if (!fused) dedup
-    else {
-      val qual = batch.select(col("doc_id"),
-        TextAnalysis.classifierLogit(
-          TextAnalysis.qualityFeatures(col("text"))).as("_z"))
-        .select(col("doc_id"), (col("_z") >= 0.0).as("quality_keep"))
-      val nov = Dedup.noveltyIncremental(batchArt, stateSh)
-        .select("doc_id", "n_shingles", "n_known", "novelty")
-      val base = dedup.join(qual, "doc_id")
-        .join(nov, Seq("doc_id"), "left")
-      // each optional leg joins its flag and ANDs into the gate; the
-      // flag frames are batch-proportional (threshold-decided joins)
-      val withCt = posts match {
-        case None => base
-        case Some(p) =>
-          val ct = Dedup.contaminatedIds(batchArt, p, DecontMinShared)
-            .withColumn("_ct", lit(true))
-          base.join(ct, Seq("doc_id"), "left")
-            .withColumn("contaminated",
-              coalesce(col("_ct"), lit(false))).drop("_ct")
-      }
-      val withCn = cposts match {
-        case None => withCt
-        case Some(cp) =>
-          val cn = Dedup.containedIds(batchArt, cp,
-              ContainTauNum, ContainTauDen, ContainMinShingles)
-            .withColumn("_cn", lit(true))
-          withCt.join(cn, Seq("doc_id"), "left")
-            .withColumn("contained_dup",
-              coalesce(col("_cn"), lit(false))).drop("_cn")
-      }
-      // the SEMANTIC leg (w17): batch hashed-text vectors bucket-join
-      // the state embedding table (LSH equality — a paraphrase with the
-      // same token bag lands the IDENTICAL vector, so the same bucket,
-      // guaranteed); within-bucket exact cosine >= tau refuses. The
-      // shingle legs are structurally blind to word-order paraphrase:
-      // same bag, disjoint 3-grams. HOT-BUCKET CAP (the m7 discipline,
-      // mirrored in the oracle): a state bucket holding more than
-      // [[SemMaxBucket]] reference docs is degenerate (empty/boilerplate
-      // token bags pile onto one vector) and leaves the join — per-doc
-      // comparisons stay <= batch × cap however the reference grows
-      val withSm = semb match {
-        case None => withCn
-        case Some((bEmb, sEmb)) =>
-          val okBuckets = sEmb.groupBy("bucket")
-            .agg(count(lit(1)).as("_occ"))
-            .filter(col("_occ") <= SemMaxBucket).select("bucket")
-          val sm = bEmb.select(col("doc_id"), col("bucket"),
-              col("vec").as("_bv"))
-            .join(sEmb.join(okBuckets, Seq("bucket"), "left_semi")
-              .select(col("bucket"), col("vec").as("_rv")),
-              Seq("bucket"))
-            .filter(Similarity.cosine(col("_bv"), col("_rv")) >= SemTau)
-            .select("doc_id").distinct().withColumn("_sm", lit(true))
-          withCn.join(sm, Seq("doc_id"), "left")
-            .withColumn("semantic_dup",
-              coalesce(col("_sm"), lit(false))).drop("_sm")
-      }
-      // extra axes (w18's media legs): each is a (flagName, flaggedIds)
-      // pair — batch-proportional id frames decided by their own joins
-      // upstream — joined left and ANDed into the gate like every leg
-      val withExtra = extraFlags.foldLeft(withSm) { case (df, (name, ids)) =>
-        df.join(ids.select("doc_id").distinct()
-            .withColumn(s"_x_$name", lit(true)), Seq("doc_id"), "left")
-          .withColumn(name, coalesce(col(s"_x_$name"), lit(false)))
-          .drop(s"_x_$name")
-      }
-      val gate = Seq(!col("exact_dup"), !col("near_dup"),
-          col("quality_keep")) ++
-        posts.map(_ => !col("contaminated")) ++
-        cposts.map(_ => !col("contained_dup")) ++
-        semb.map(_ => !col("semantic_dup")) ++
-        extraFlags.map { case (name, _) => !col(name) }
-      withExtra.withColumn("admitted", gate.reduce(_ && _))
-    }
-  }
-
-  private val DecontMinShared = 5
-  private val DecontMaxDf = 10
-  // containment-leg dials: tau = 4/5 over informative shingles, with a
-  // floor on the smaller side so trivial snippets don't trigger; the
-  // seed posting table df-caps at the d16 boilerplate dial
-  private val ContainTauNum = 4
-  private val ContainTauDen = 5
-  private val ContainMinShingles = 10
-  private val ContainMaxDf = 10
-  // semantic-leg cosine threshold over hashed-text-count vectors — the
-  // d15 SemDeDup dial: signed counts make high cosine mean genuinely
-  // shared token distributions
-  private val SemTau = 0.9
-  // semantic-leg hot-bucket cap (the m12/m21 `maxBucket` discipline):
-  // state buckets holding more reference docs than this leave the join.
-  // 16× the dial's expected occupancy — headroom for the natural skew
-  // of centered text embeddings (semantic clusters are real structure;
-  // measured max ≈ 6× expected at sf0.1) while a degenerate pile
-  // (templated boilerplate) still exits the join instead of exploding it
-  private val SemMaxBucket = 256
-
-  /** THE ADMISSION-GATE CORE — one implementation of bootstrap,
-   * per-trigger verdict, state append and maintenance, shared by TWO
-   * lifecycles: the bespoke stream runners ([[runAdmissionStream]] —
-   * w12/w14/w15/w16/w17/w18) and the Connect-lifecycle sink
-   * ([[graft.pipeline.AdmissionSink]] — l13/l14, where the same gate is
-   * REST-registered, paused, resumed and offset-reset like any other
-   * connector). Extracted at r17 so the declarative sink can enable
-   * EVERY admission axis by config key (the reference's whole UX is
-   * per-connector config toggles) without duplicating the carefully
-   * shaped per-trigger plans.
-   *
-   * Each trigger computes its verdict from the BATCH's text plus the
-   * PRECOMPUTED state ONLY: the admitted-corpus text lands under
-   * `ref/` as the pipeline's product but is never re-read (the r13
-   * scale fix — per-trigger cost is O(batch) hashing + joins against
-   * state tables that grow only by admitted artifacts). Per-trigger
-   * writes stay in their own `batch=`/`adm`/`b<id>` dirs with
-   * overwrite (w10's idempotent replay shape), and the state read
-   * filters to ids STRICTLY BELOW the current batch — a crashed
-   * attempt's leftover state can never make its replay
-   * self-duplicate.
-   *
-   * The class owns the gate's LIVE dials: the frozen bucketing center
-   * and the growing semantic plane count. A RESUMED deployment (the
-   * sink lifecycle — the runners always start fresh) rebuilds both
-   * from persisted state via [[resumeDials]]: the center reads back
-   * from `state/center`, and the plane count re-derives as
-   * scaledPlaneCount(newest fold's emb rows, floor = bootstrap count)
-   * — growth happens ONLY at maintenance folds and scaledPlaneCount
-   * is monotone in the (append-only) reference size, so the newest
-   * fold pins exactly the dial the folding trigger chose; without
-   * this, a resumed stream would bucket batches under the bootstrap
-   * dial against state bucketed under the grown dial and silently
-   * miss semantic dups. */
-  // Fixed daemon pool for overlapping INDEPENDENT state writes (r18,
-  // guide §2.6 "overlap independent jobs"): Spark's scheduler happily
-  // runs several jobs at once inside one application — the admission
-  // gates' per-trigger state appends and bootstrap tables are
-  // independent few-task jobs over already-cached frames whose wall
-  // was pure driver-side serialization (profiled: l14 = ~208 jobs of
-  // ~150 ms each, one at a time). Six threads: more than the widest
-  // independent write set needs, far fewer than the cores.
-  private lazy val stateWriteEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(6,
-        (r: Runnable) => {
-          val t = new Thread(r, "graft-state-write")
-          t.setDaemon(true)
-          t
-        }))
-
-  /** Run independent write thunks concurrently (first failure
-   * propagates, all complete or fail before return). ONLY for writes
-   * to DISTINCT directories with no ordering contract — the crash
-   * exposure is unchanged (any subset of the per-batch overwrite dirs
-   * may exist after a crash, exactly as with sequential writes, and a
-   * replay overwrites them all before any later batch reads). */
-  private[graft] def inParallel(writes: Seq[() => Unit]): Unit =
-    if (writes.size <= 1) writes.foreach(_())
-    else {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec = stateWriteEc
-      // every write's OUTCOME is awaited (Try lifts failures into the
-      // value), then the first failure re-throws: a fail-fast
-      // Future.sequence would return while sibling writes are still in
-      // flight, and the caller's cleanup/abort (unpersist, state reset)
-      // could race a live write (r18 verdict item)
-      val outcomes = Await.result(
-        Future.sequence(writes.map(w => Future(scala.util.Try(w())))),
-        Duration.Inf)
-      outcomes.foreach(_.get)
-    }
-
-  // Per-sub-table schema memo (r18): the admission state tables'
-  // schemas are fixed by their writers (one writer per sub-table name,
-  // identical across gates), but a bare spark.read.parquet re-infers
-  // the schema from footers on EVERY trigger — a driver-side footer
-  // read per sub-table per trigger, and at scale a schema-sampling
-  // pass over many state files. Remember each sub-table's schema after
-  // the first inference and pin it on later reads.
-  private val stateSchemaMemo = scala.collection.concurrent.TrieMap
-    .empty[String, org.apache.spark.sql.types.StructType]
-  // First-read-per-dir assertion (r19, the r18 verdict's hardening):
-  // the memo is keyed by bare sub-table name for the JVM's lifetime
-  // across all gates and SFs — correct today because every writer of a
-  // given sub name produces one fixed schema, but if a future axis ever
-  // forked a sub-table's schema per config the memo would silently pin
-  // the first-seen one (wrong columns read as nulls). Each distinct
-  // state DIR therefore verifies its actual footer schema against the
-  // pinned one once (per dir, not per trigger — the per-trigger footer
-  // skip the memo exists for is untouched).
-  private val stateSchemaSeen = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Unit]
-  private[graft] def readStateTable(sp: SparkSession, sub: String,
-                                    paths: Seq[String]): DataFrame =
-    stateSchemaMemo.get(sub) match {
-      case Some(sc) =>
-        paths.headOption.foreach { head =>
-          if (stateSchemaSeen.putIfAbsent((sub, head), ()).isEmpty) {
-            val actual = sp.read.parquet(head).schema
-            require(
-              actual.fields.map(f => (f.name, f.dataType)).toSeq ==
-                sc.fields.map(f => (f.name, f.dataType)).toSeq,
-              s"state sub-table '$sub' at $head has schema $actual but " +
-                s"the JVM-wide memo pinned $sc — a writer forked the " +
-                "sub-table schema; the memo would read the new columns " +
-                "as nulls")
-          }
-        }
-        sp.read.schema(sc).parquet(paths: _*)
-      case None =>
-        val df = sp.read.parquet(paths: _*)
-        stateSchemaMemo.put(sub, df.schema)
-        paths.headOption.foreach(h => stateSchemaSeen.put((sub, h), ()))
-        df
-    }
-  // NOTE (r19, measured and REJECTED): spreading small state scans by
-  // byte size (repartition to bytes/512KB when 2–64 MB) A/B'd a DEAD
-  // TIE on the 4-gate admission set (27.229 vs 27.228 s at matched
-  // canaries ~0.46). The profiled single-task ~650 ms verdict-leg
-  // stages overlap under AQE already; the trigger wall is bounded by
-  // AQE stage-sequencing + per-plan driver work, not task execution —
-  // an extra exchange per leg buys nothing. Kept single-task.
-
-  private[graft] final class AdmissionGateCore(
-      base: String, fused: Boolean, hasBench: Boolean,
-      containment: Boolean, semantic: Boolean, media: Boolean,
-      hasBenchMedia: Boolean,
-      semPlanes0: Seq[Seq[Long]] = Planes,
-      semCenter0: Seq[Double] = Nil,
-      foldThreshold: Int = 6) {
-    val refDir = s"$base/ref"
-    val stateDir = s"$base/state"
-    val outDir = s"$base/out"
-    // the semantic leg's LIVE LSH dial: starts at the caller's
-    // production plane count (expected bucket ~ 16 docs over the gate
-    // corpus — the d14b dial) and GROWS at the maintenance fold as the
-    // reference crosses occupancy thresholds; the fold re-buckets the
-    // folded state and the appends after it bucket under the grown
-    // planes, so batch and state sides always agree
-    private var curPlanes = semPlanes0
-    /** Test hook: the live plane-dial size (spec-asserted around the
-     * fold-growth and resume-derivation paths). */
-    private[graft] def currentPlaneCount: Int = curPlanes.size
-    /** Test failpoint: throw BETWEEN the maintenance fold's atomic
-     * rewrite and this batch's state append — the crash window the
-     * torn-fold resume spec drives (the fold published, the folding
-     * batch's own appends never landed, the checkpoint never
-     * committed, so a restart replays this batch against the folded
-     * state under the re-derived dial). */
-    private[graft] var failAfterFold: Boolean = false
-    // the bucketing CENTER: hashed text-count vectors share a dominant
-    // common direction, so raw sign-of-dot buckets collapse into a
-    // mega-bucket the hot-bucket cap would then blind; buckets derive
-    // from the unit-normalized, seed-mean-centered vector instead
-    // ([[Similarity.meanUnitVector]]). Frozen at bootstrap (quantizer
-    // discipline — a reindex re-trains it) and persisted beside the
-    // state so a resumed deployment reads it back rather than needing
-    // the retired seed; the tiny `center` dir is invisible to
-    // AdmissionState.parts.
-    private var center: Seq[Double] = semCenter0
-
-    private def rawEmbOf(df: DataFrame): DataFrame = df
-      .select(col("doc_id").as("ref_id"),
-        TextAnalysis.hashedEmbedding(
-          Dedup.tokens(lower(col("text"))), Dim).as("vec"))
-    private def bucketOf(vec: Column): Column =
-      Similarity.lshBucket(Similarity.unitCentered(vec, center), curPlanes)
-    private def embFrameOf(df: DataFrame): DataFrame = rawEmbOf(df)
-      .select(col("ref_id"), bucketOf(col("vec")).as("bucket"), col("vec"))
-
-    /** True once [[bootstrap]] has COMPLETED on this gate root (the
-     * marker is the bootstrap's last write, so a crash mid-bootstrap
-     * reads false and the next start redoes the whole idempotent
-     * overwrite set). Dot-prefixed: invisible to AdmissionState.parts. */
-    def bootstrapped: Boolean =
-      java.nio.file.Files.exists(
-        java.nio.file.Paths.get(stateDir, ".bootstrapped"))
-
-    /** First-start bootstrap: the seed corpus's DERIVED state — built
-     * ONCE, before the stream starts; every trigger joins against
-     * these files. All writes are mode-overwrite and the completion
-     * marker lands last, so a crashed bootstrap simply re-runs. */
-    def bootstrap(s: SparkSession, seed: DataFrame,
-                  bench: Option[DataFrame],
-                  benchMedia: Option[DataFrame]): Unit = {
-      // r18: the bootstrap tables build in TWO CONCURRENT PHASES
-      // (guide §2.6) — phase A writes everything derivable from the
-      // caller's frames, phase B the tables that read phase-A parquet
-      // back (the lineage-cut discipline, see the sh/posts notes
-      // below). Same writes, same bytes, same idempotent overwrite
-      // semantics; only the serialization between independent jobs is
-      // gone. The marker still lands strictly last.
-      val phaseA = Seq.newBuilder[() => Unit]
-      val phaseB = Seq.newBuilder[() => Unit]
-      // job labels (guide §1.5), set INSIDE each thunk: the pool
-      // threads running them don't inherit the caller's thread-local
-      def boot(desc: String)(body: => Unit): () => Unit =
-        () => {
-          s.sparkContext.setJobDescription(desc)
-          try body finally s.sparkContext.setJobDescription(null)
-        }
-      phaseA += boot("adm:boot:seed") {
-        seed.write.mode("overwrite").parquet(s"$refDir/seed")
-      }
-      phaseA += boot("adm:boot:art") {
-        Dedup.admissionArtifacts(seed, "doc_id", "text",
-            k = 3, numPerms = NumPerms)
-          .write.mode("overwrite").parquet(s"$stateDir/seed/art")
-      }
-      // the distinct-shingle table exists for the novelty leg only — the
-      // plain dedup form (w12/l13) neither writes nor reads it. It
-      // derives from the artifact PARQUET, not the artifact plan:
-      // explode() infers a not-null/size filter that Catalyst pushes
-      // below the projections, inlining the whole tokenize+md5+shingle
-      // subtree ~7x per document into a scan-level Filter (measured 10s
-      // vs 0.5s on the seed) — the read-back cuts the lineage so the
-      // filter lands on a materialized column
-      if (fused)
-        phaseB += boot("adm:boot:sh") {
-          s.read.parquet(s"$stateDir/seed/art")
-            .select(explode(col("sset")).as("h")).distinct()
-            .write.mode("overwrite").parquet(s"$stateDir/seed/sh")
-        }
-      // the FROZEN benchmark posting table (w15's decontamination leg):
-      // built once at bootstrap — benchmarks change rarely — and read by
-      // every trigger; df-capped like d16, derived via the same artifact
-      // read-back that keeps explode off the raw tokenize plan. The
-      // `bench`-prefixed dirs are invisible to AdmissionState.parts
-      // (names parse as neither seed, b<id> nor fold=<k>).
-      bench.foreach { b =>
-        phaseA += boot("adm:boot:bench_art") {
-          Dedup.admissionArtifacts(b, "doc_id", "text", k = 3,
-              numPerms = NumPerms)
-            .write.mode("overwrite").parquet(s"$stateDir/bench/art")
-        }
-        phaseB += boot("adm:boot:bench_posts") {
-          val bsh = s.read.parquet(s"$stateDir/bench/art")
-            .select(col("doc_id").as("bench_id"),
-              explode(col("sset")).as("h"))
-          val bkeep = bsh.groupBy("h").agg(count(lit(1)).as("_df"))
-            .filter(col("_df") <= DecontMaxDf).select("h")
-          bsh.join(bkeep, Seq("h"))
-            .write.mode("overwrite").parquet(s"$stateDir/bench/posts")
-        }
-      }
-      // the containment leg's posting state (w16): the seed's df-capped
-      // per-doc postings, built once at bootstrap from the artifact
-      // read-back (the same lineage-cut discipline as the sh table);
-      // admitted batches append their raw postings per trigger
-      if (containment)
-        phaseB += boot("adm:boot:cpost") {
-          Dedup.containmentPostings(
-              s.read.parquet(s"$stateDir/seed/art"), ContainMaxDf)
-            .write.mode("overwrite").parquet(s"$stateDir/seed/cpost")
-        }
-      // the semantic leg's embedding state (w17): hashed-text vector +
-      // LSH bucket per reference doc — one O(seed) codegen pass at
-      // bootstrap, appended per admitted batch like every state table.
-      // The center agg must complete before the bucketed emb write (the
-      // bucket expression closes over it), so the leg is ONE thunk.
-      if (semantic)
-        phaseA += boot("adm:boot:emb") {
-          if (center.isEmpty) {
-            // one tokenize+embed pass, not two (r18): the center agg
-            // and the bucketed emb write both read the seed's raw
-            // embeddings — persist them for the thunk's lifetime
-            val re = rawEmbOf(seed)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              center = Similarity.meanUnitVector(re, "vec", Dim)
-              import s.implicits._
-              Seq(center).toDF("center")
-                .write.mode("overwrite").parquet(s"$stateDir/center")
-              re.select(col("ref_id"), bucketOf(col("vec")).as("bucket"),
-                  col("vec"))
-                .write.mode("overwrite").parquet(s"$stateDir/seed/emb")
-            } finally { re.unpersist(blocking = false); () }
-          } else {
-            import s.implicits._
-            Seq(center).toDF("center")
-              .write.mode("overwrite").parquet(s"$stateDir/center")
-            embFrameOf(seed).write.mode("overwrite")
-              .parquet(s"$stateDir/seed/emb")
-          }
-        }
-      // the MEDIA axes (w18 = m22/m24's legs fused into this gate):
-      // seed media fingerprints bootstrap once; the frozen
-      // benchmark-media fingerprints freeze like the text posting
-      // benchmark
-      if (media) {
-        val (si, sa) = mediaFingerprints(seed)
-        phaseA += boot("adm:boot:imgfp") {
-          si.write.mode("overwrite").parquet(s"$stateDir/seed/imgfp")
-        }
-        phaseA += boot("adm:boot:audfp") {
-          sa.write.mode("overwrite").parquet(s"$stateDir/seed/audfp")
-        }
-        benchMedia.foreach { bm =>
-          val (bi, ba) = mediaFingerprints(bm)
-          phaseA += boot("adm:boot:benchm_imgfp") {
-            bi.write.mode("overwrite").parquet(s"$stateDir/benchm/imgfp")
-          }
-          phaseA += boot("adm:boot:benchm_audfp") {
-            ba.write.mode("overwrite").parquet(s"$stateDir/benchm/audfp")
-          }
-        }
-      }
-      inParallel(phaseA.result())
-      inParallel(phaseB.result())
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(stateDir, ".bootstrapped"), "1")
-      ()
-    }
-
-    /** Startup-with-existing-state (the sink lifecycle's resume path):
-     * rebuild the live dials from persisted state — see the class doc
-     * for why the newest fold pins the plane count exactly. */
-    def resumeDials(s: SparkSession): Unit = if (semantic) {
-      center = s.read.parquet(s"$stateDir/center")
-        .head().getSeq[Double](0).toSeq
-      graft.text.AdmissionState.newestFold(stateDir).foreach { fdir =>
-        val n = s.read.parquet(s"$fdir/emb").count()
-        val grown = scaledPlaneCount(n, floor = semPlanes0.size)
-        if (grown > curPlanes.size)
-          curPlanes = Similarity.hyperplanes(grown, Dim)
-      }
-    }
-
-    /** One micro-batch through the gate: verdict from state, admitted
-     * survivors' text to `ref/`, their artifacts appended to state,
-     * the maintenance fold once the unfolded tail exceeds the
-     * threshold. Replay-safe: verdict and appends land in per-batch
-     * overwrite dirs; the state read excludes ids at or above the
-     * current batch. */
-    def applyBatch(sp: SparkSession, epoch: Long,
-                   batch: DataFrame, id: Long): Unit =
-      CacheScope.withScope { implicit scope =>
-        val b = scope.persist(batch).toDF()
-        graft.text.AdmissionState.guard(stateDir, epoch)
-        // self-driving state maintenance (the LogTable auto-compaction
-        // move) runs at the HEAD of the trigger (r18): once the
-        // unfolded tail exceeds the threshold, fold everything strictly
-        // below this batch BEFORE computing its verdict. Fold-first
-        // makes the whole trigger replay-deterministic: a crash
-        // anywhere in the trigger (fold published but appends not, or
-        // verdict written but checkpoint not committed) replays against
-        // exactly the state this attempt read — the fold is already
-        // published and won't re-run (parts collapse below threshold),
-        // so the verdict recomputes identically (pinned by the
-        // torn-fold spec). With fold-AFTER-verdict, the folding
-        // trigger's verdict read pre-fold state under the old dial and
-        // its replay read the folded state under the grown dial — a
-        // borderline semantic pair could legitimately flip across a
-        // crash. The PRODUCTION fold verb rewrites the derived tables
-        // atomically with the compaction: `cpost` re-caps under the
-        // GLOBAL df (cross-batch boilerplate leaves the postings
-        // exactly here), and `emb` re-buckets under the GROWN plane
-        // dial when the folded reference crosses an occupancy
-        // threshold (expected bucket ~16 docs) — this trigger's verdict
-        // and appends then bucket under the same grown planes, so
-        // state and batch sides never mix dials.
-        val preParts = graft.text.AdmissionState.parts(stateDir, id)
-        if (preParts.size > foldThreshold) {
-          if (semantic) {
-            val nRef = readStateTable(sp, "emb",
-              preParts.map(_ + "/emb")).count()
-            val grown = scaledPlaneCount(nRef, floor = curPlanes.size)
-            if (grown > curPlanes.size)
-              curPlanes = Similarity.hyperplanes(grown, Dim)
-          }
-          Dedup.maintenanceFold(sp, stateDir, upTo = id - 1,
-            subs = (if (fused) Seq("art", "sh") else Seq("art")) ++
-              (if (containment) Seq("cpost") else Nil) ++
-              (if (semantic) Seq("emb") else Nil) ++
-              (if (media) Seq("imgfp", "audfp") else Nil),
-            epoch = epoch,
-            recapMaxDf = if (containment) Some(ContainMaxDf) else None,
-            rebucket = if (semantic) Some(bucketOf _) else None)
-          if (failAfterFold)
-            throw new IllegalStateException(
-              "injected crash between fold rewrite and state append")
-        }
-        // state = seed + every PRIOR batch's admitted artifacts —
-        // never this batch's own (replay safety, as with adm dirs);
-        // resolves through AdmissionState so folded state (the
-        // small-files maintenance verb) reads as one compacted dir —
-        // re-resolved AFTER the fold above retired the dirs it covered
-        val parts = graft.text.AdmissionState.parts(stateDir, id)
-        val stateArt = readStateTable(sp, "art", parts.map(_ + "/art"))
-        val stateSh = if (fused)
-                        readStateTable(sp, "sh", parts.map(_ + "/sh"))
-                      else sp.emptyDataFrame
-        val batchArt = scope.persist(Dedup.admissionArtifacts(
-          b, "doc_id", "text", k = 3, numPerms = NumPerms)).toDF()
-        val posts = if (hasBench)
-          Some(readStateTable(sp, "posts", Seq(s"$stateDir/bench/posts")))
-        else None
-        val cposts = if (containment)
-          Some(readStateTable(sp, "cpost", parts.map(_ + "/cpost")))
-        else None
-        val batchEmb = if (semantic)
-          Some(scope.persist(embFrameOf(b)
-            .withColumnRenamed("ref_id", "doc_id")).toDF()) else None
-        val semb = batchEmb.map(be =>
-          (be, readStateTable(sp, "emb", parts.map(_ + "/emb"))))
-        // the media axes: the batch's OWN decode + fingerprint
-        // (O(batch) — reference media never re-decodes), then
-        // fingerprint-group semi-joins against the evolving state
-        // tables and the frozen benchmark-media tables (m22/m24)
-        val batchMedia = if (!media) None else {
-          val (bi, ba) = mediaFingerprints(b)
-          Some((scope.persist(bi).toDF(), scope.persist(ba).toDF()))
-        }
-        val mediaFlags: Seq[(String, DataFrame)] = batchMedia match {
-          case None => Nil
-          case Some((bImg, bAud)) =>
-            val stateImg = readStateTable(sp, "imgfp",
-              parts.map(_ + "/imgfp"))
-            val stateAud = readStateTable(sp, "audfp",
-              parts.map(_ + "/audfp"))
-            def hits(bfp: DataFrame, state: DataFrame,
-                     keys: Seq[String]): DataFrame =
-              bfp.join(state.select(keys.map(col): _*), keys, "left_semi")
-                .select(col("media_id").as("doc_id"))
-            Seq(
-              "image_dup" -> hits(bImg, stateImg, Seq("hash_hi", "hash_lo")),
-              "audio_dup" -> hits(bAud, stateAud, Seq("fp_hi", "fp_lo"))) ++
-              (if (!hasBenchMedia) Nil else {
-                val bi = readStateTable(sp, "imgfp",
-                  Seq(s"$stateDir/benchm/imgfp"))
-                val ba = readStateTable(sp, "audfp",
-                  Seq(s"$stateDir/benchm/audfp"))
-                Seq("media_contaminated" ->
-                  hits(bImg, bi, Seq("hash_hi", "hash_lo"))
-                    .unionByName(hits(bAud, ba, Seq("fp_hi", "fp_lo"))))
-              })
-        }
-        // job labels (guide §1.5): thread-local, so each pool thread's
-        // label names exactly its own append in profiles/the UI
-        def labeled[A](desc: String)(body: => A): A = {
-          sp.sparkContext.setJobDescription(desc)
-          try body finally sp.sparkContext.setJobDescription(null)
-        }
-        val verdict = scope.persist(admissionTriggerVerdict(
-          b, batchArt, stateArt, stateSh, fused, posts, cposts,
-          semb, mediaFlags)).toDF()
-        labeled(s"adm:verdict b$id") {
-          verdict.write.mode("overwrite").parquet(s"$outDir/batch=$id")
-        }
-        val admIds = verdict.filter(col("admitted")).select("doc_id")
-        // the state append: only the admitted docs' artifacts. Forced
-        // into the cache ONCE (count) so the concurrent writers below
-        // all read it instead of racing to recompute the join.
-        val admArt = scope.persist(batchArt.join(admIds, "doc_id")).toDF()
-        labeled(s"adm:admArt b$id")(admArt.count())
-        // r18: the per-batch product + state appends run CONCURRENTLY
-        // (guide §2.6) — every input (verdict, b, batchArt, batchEmb,
-        // media fingerprints) is already cached by the verdict pass,
-        // the destinations are disjoint per-batch overwrite dirs, and
-        // no append reads another's output. Crash exposure is
-        // unchanged: any subset of the dirs may exist after a crash
-        // (exactly as with sequential writes — the checkpoint hasn't
-        // committed), and the replay overwrites every one of them
-        // before any later batch or fold reads b<id>.
-        val appends = Seq.newBuilder[() => Unit]
-        // the admitted-corpus product (text) — WRITE-only from here on
-        appends += (() => labeled(s"adm:append:ref b$id") {
-          b.join(admIds, "doc_id")
-            .write.mode("overwrite").parquet(s"$refDir/adm$id")
-        })
-        appends += (() => labeled(s"adm:append:art b$id") {
-          admArt.write.mode("overwrite").parquet(s"$stateDir/b$id/art")
-        })
-        if (fused)
-          appends += (() => labeled(s"adm:append:sh b$id") {
-            admArt.select(explode(col("sset")).as("h")).distinct()
-              .write.mode("overwrite").parquet(s"$stateDir/b$id/sh")
-          })
-        if (containment)
-          // raw (uncapped) postings: the append is batch-bounded, so
-          // per-trigger containment fanout stays O(batch*maxDf +
-          // unfolded*batch); the maintenance fold above re-caps
-          // globally ([[Dedup.maintenanceFold]])
-          appends += (() => labeled(s"adm:append:cpost b$id") {
-            admArt.select(col("doc_id").as("ref_id"), col("sset"))
-              .select(col("ref_id"),
-                explode(col("sset")).as("h"),
-                size(col("sset")).cast("long").as("n_b"))
-              .write.mode("overwrite").parquet(s"$stateDir/b$id/cpost")
-          })
-        // bucket derived FROM THE VECTOR at append time (not reused
-        // from the verdict frame): if the fold above grew the plane
-        // dial, this append must already bucket under the grown planes
-        batchEmb.foreach(be =>
-          appends += (() => labeled(s"adm:append:emb b$id") {
-            be.join(admIds, "doc_id")
-              .select(col("doc_id").as("ref_id"),
-                bucketOf(col("vec")).as("bucket"), col("vec"))
-              .write.mode("overwrite").parquet(s"$stateDir/b$id/emb")
-          }))
-        batchMedia.foreach { case (bImg, bAud) =>
-          appends += (() => labeled(s"adm:append:imgfp b$id") {
-            bImg.join(admIds, bImg("media_id") === admIds("doc_id"),
-                "left_semi")
-              .write.mode("overwrite").parquet(s"$stateDir/b$id/imgfp")
-          })
-          appends += (() => labeled(s"adm:append:audfp b$id") {
-            bAud.join(admIds, bAud("media_id") === admIds("doc_id"),
-                "left_semi")
-              .write.mode("overwrite").parquet(s"$stateDir/b$id/audfp")
-          })
-        }
-        inParallel(appends.result())
-      }
-  }
-
   /** Per-JVM staged-wave cache — the memoFrame discipline applied to
    * the admission gates' INPUT staging (r18): every invocation used to
    * re-derive its wave frames (multi-branch unions/joins over the docs
@@ -1532,73 +899,108 @@ object LlmQueries {
       val ws = waves
       val dsts = ws.indices
         .map(i => cache.resolve(f"wave$i%02d.parquet"))
-      inParallel(ws.zip(dsts).map { case (w, p) =>
+      graft.pipeline.AdmissionGate.inParallel(ws.zip(dsts).map { case (w, p) =>
         () => graft.Tables.stageFile(w, p, 0L)
       })
       dsts
     })
 
-  /** Shared w12/w14 stream runner — stages `waves` as minute-spaced
-   * files, bootstraps the evolving reference's DERIVED state via
-   * [[AdmissionGateCore]] (the one-time O(corpus) build production
-   * amortizes over every later trigger), then drives the stream; each
-   * trigger is one [[AdmissionGateCore.applyBatch]]. `onTrigger`
-   * observes (batchId, wallMillis) for the ladder probe. */
-  private[graft] def runAdmissionStream(
-      s: SparkSession, seed: DataFrame, waves: Seq[DataFrame],
-      base: String, fused: Boolean,
-      onTrigger: (Long, Long) => Unit = (_, _) => (),
-      foldThreshold: Int = 6,
-      bench: Option[DataFrame] = None,
-      containment: Boolean = false,
-      semantic: Boolean = false,
-      semPlanes: Seq[Seq[Long]] = Planes,
-      semCenter: Seq[Double] = Nil,
-      media: Boolean = false,
-      benchMedia: Option[DataFrame] = None): DataFrame = {
+  // ---- admission gates: one lifecycle, the Engine's admission sink ----
+
+  /** An admission gate's working root for one data dir. */
+  private def gateBase(name: String, dir: String): String =
+    s"target/tmp/${name}_${new java.io.File(dir).getName}"
+
+  /** Lay out an admission gate's fixture under `base` (wiped first):
+   * the seed corpus at `seed/`, the benchmark corpus (if any) at
+   * `bench/`, and the waves staged once per JVM ([[stagedWaveFiles]]).
+   * Returns `stage(i)`, which lands wave i in the source dir `in/` as
+   * a minute-spaced file (one trigger per wave at maxFilesPerTrigger=1). */
+  private[graft] def stageGateFixture(base: String, seed: DataFrame,
+      bench: Option[DataFrame], waves: Seq[DataFrame]): Int => Unit = {
     import java.nio.file.{Files, Paths}
-    // benchMedia only feeds the media-decontamination leg, which exists
-    // only when media=true — fail fast on the inconsistent combination
-    // instead of silently dropping the caller's benchmark set
-    require(benchMedia.isEmpty || media,
-      "benchMedia requires media=true (the media-decontamination leg is part of the media axis)")
     graft.util.Fs.deleteRecursive(Paths.get(base))
-    val in = Paths.get(base, "in")
-    Files.createDirectories(in)
-    stagedWaveFiles(graft.Tables.dirTag(base), waves)
-      .zipWithIndex.foreach { case (src, i) =>
-        graft.Tables.stageCopy(src, in.resolve(f"wave$i%02d.parquet"),
-          1000000000000L + i * 60000L)
-      }
-    val schema = seed.schema
-    val core = new AdmissionGateCore(base, fused,
-      hasBench = bench.nonEmpty, containment = containment,
-      semantic = semantic, media = media,
-      hasBenchMedia = benchMedia.nonEmpty,
-      semPlanes0 = semPlanes, semCenter0 = semCenter,
-      foldThreshold = foldThreshold)
-    core.bootstrap(s, seed, bench, benchMedia)
-    // the admission-runner role: epoch lease + checkpoint-identity bind
-    // (a rescheduled job on this stateDir supersedes us; OUR next append
-    // or fold then refuses — see AdmissionState's concurrency contract)
-    val epoch = graft.text.AdmissionState.acquireWriter(core.stateDir)
-    graft.text.AdmissionState.bindCheckpoint(core.stateDir, s"$base/ckpt")
+    Files.createDirectories(Paths.get(base, "in"))
+    seed.write.parquet(s"$base/seed")
+    bench.foreach(_.write.parquet(s"$base/bench"))
+    val staged = stagedWaveFiles(graft.Tables.dirTag(base), waves)
+    i => graft.Tables.stageCopy(staged(i),
+      Paths.get(base, "in", f"wave$i%02d.parquet"),
+      1000000000000L + i * 60000L)
+  }
+
+  /** The `{"type":"admission"}` pipeline spec over a
+   * [[stageGateFixture]] layout: `sink` adds the axis keys. A `wire`
+   * source reads the staged waves as Kafka-dump records (the CDC
+   * envelope inside the C1 JSON envelope, see [[wireWave]]) and
+   * unwraps them with the ExtractNewRecordState SMT. */
+  private[graft] def admissionSpecJson(name: String, base: String,
+      sink: Seq[(String, String)] = Nil, wire: Boolean = false,
+      decodeParallelism: Option[String] = None): String = {
+    val q = new com.fasterxml.jackson.databind.ObjectMapper()
+    def fields(kvs: Seq[(String, String)]): String = kvs.map { case (k, v) =>
+      s"${q.writeValueAsString(k)}:${q.writeValueAsString(v)}"
+    }.mkString(",")
+    val source = Seq("type" -> "parquet", "path" -> s"$base/in",
+        "topic" -> "corpus", "maxFilesPerTrigger" -> "1") ++
+      (if (wire) Seq("wireFormat" -> "json_envelope", "schemaDdl" -> DocCdcDdl)
+       else Seq("schemaDdl" -> DocRowDdl, "seqColumn" -> "doc_id")) ++
+      decodeParallelism.map("decodeParallelism" -> _)
+    val keyFields = if (wire) "after" else "doc_id"
+    val transforms =
+      if (wire) "{\"type\":\"extractNewRecordState\"}" else ""
+    val gate = Seq("type" -> "admission", "path" -> s"$base/gate",
+      "seedPath" -> s"$base/seed") ++ sink
+    s"""{"name":${q.writeValueAsString(name)},
+       |"source":{${fields(source)},"keyFields":["$keyFields"]},
+       |"transforms":[$transforms],
+       |"sink":{${fields(gate)}}}""".stripMargin
+  }
+
+  /** Register `spec` on an in-process [[graft.pipeline.Engine]] (its
+   * own session at 4 shuffle partitions), drain every staged file and
+   * deregister — the admission lifecycle with no REST. Returns each
+   * non-empty trigger's (batchId, wall ms) from the query's progress. */
+  private[graft] def drainAdmissionGate(s: SparkSession, base: String,
+                                        spec: String): Seq[(Long, Long)] = {
     val scoped = s.newSession()
     scoped.conf.set("spark.sql.shuffle.partitions", "4")
-    val stream = scoped.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in.toString)
-    val q = stream.writeStream
-      .option("checkpointLocation", s"$base/ckpt")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val t0 = System.nanoTime()
-        core.applyBatch(batch.sparkSession, epoch, batch, id)
-        onTrigger(id, (System.nanoTime() - t0) / 1000000L)
-        ()
-      }.start()
-    q.processAllAvailable()
-    q.stop()
-    s.read.parquet(core.outDir).drop("batch")
+    val engine = new graft.pipeline.Engine(scoped, s"$base/engine")
+    val p = graft.pipeline.PipelineSpec.fromJson(spec)
+    val q = engine.register(p)
+    try {
+      q.processAllAvailable()
+      q.recentProgress.toSeq.filter(_.numInputRows > 0).map(pr =>
+        (pr.batchId, pr.durationMs.get("triggerExecution").toLong))
+    } finally engine.delete(p.name)
   }
+
+  /** A w-/m-gate end to end: stage the fixture, drain it through the
+   * admission sink with the `sink` axis keys (`benchKeys` name the keys
+   * that point at the `bench` corpus), return the verdict rows. */
+  private def admissionGate(s: SparkSession, name: String, dir: String,
+      seed: DataFrame, waves: Seq[DataFrame],
+      sink: Seq[(String, String)] = Nil, bench: Option[DataFrame] = None,
+      benchKeys: Seq[String] = Nil): DataFrame = {
+    val base = gateBase(name, dir)
+    waves.indices.foreach(stageGateFixture(base, seed, bench, waves))
+    drainAdmissionGate(s, base, admissionSpecJson(name, base,
+      sink ++ benchKeys.map(_ -> s"$base/bench")))
+    s.read.parquet(s"$base/gate/out").drop("batch")
+  }
+
+  /** Sink keys switched on. */
+  private[graft] def on(keys: String*): Seq[(String, String)] =
+    keys.map(_ -> "true")
+
+  /** The full ten-axis gate's sink keys (w18/l14): every axis at the
+   * corpus-scaled semantic dial; both benchmark keys point at the one
+   * benchmark suite. */
+  private def fullGateKeys(s: SparkSession, dir: String)
+      : Seq[(String, String)] =
+    on("fused", "containment", "semantic", "media") :+
+      ("semPlanes" -> d14Planes(s, dir).toString)
+  private val FullGateBenchKeys = Seq("benchPath", "benchMediaPath")
 
   /** W12: STREAMED admission dedup — d13's verdict machinery run
    * INSIDE the streaming lifecycle with the property d13 cannot
@@ -1608,25 +1010,25 @@ object LlmQueries {
    * The fixture plants both duplicate shapes (see [[admissionWaves]]).
    * The reference's state is parquet artifact tables growing by
    * admitted docs — never executor memory, never re-derived text (see
-   * [[runAdmissionStream]]). The oracle unrolls the three admission
-   * rounds exactly (shared suffixed minhash pipeline per round). */
+   * [[graft.pipeline.AdmissionGateCore]]). The oracle unrolls the three
+   * admission rounds exactly (shared suffixed minhash pipeline per
+   * round). */
   def streamDedupAdmission(s: SparkSession, dir: String): DataFrame = {
     val docs = Tpar(s, dir, "documents").select("doc_id", "text")
     val (existing, waves) = admissionWaves(docs)
-    runAdmissionStream(s, existing, waves,
-        s"target/tmp/w12_${new java.io.File(dir).getName}", fused = false)
+    admissionGate(s, "w12", dir, existing, waves)
       .select("doc_id", "exact_dup", "near_dup", "admitted")
       .orderBy("doc_id")
   }
 
-  /** Shared l13/l14 lifecycle driver: spin up an [[graft.pipeline
+  /** Shared l13–l16 REST lifecycle: spin up an [[graft.pipeline
    * .Engine]] + [[graft.pipeline.ConnectServer]], REST-register the
    * admission spec, drain the pre-staged waves, PAUSE, stage the
    * backlog (which a paused gate must NOT process), RESUME from the
    * checkpoint (a fresh fenced admission epoch supersedes the paused
    * incarnation's, and the gate core rebuilds its live dials from
-   * persisted state — [[AdmissionGateCore.resumeDials]]), drain the
-   * backlog, DEREGISTER. Returns the gate's verdict frame with the
+   * persisted state — [[graft.pipeline.AdmissionGateCore.resumeDials]]),
+   * drain the backlog, DEREGISTER. Returns the gate's verdict frame with the
    * lifecycle evidence riding as literal columns (l9's shape). */
   private def driveAdmissionPipeline(
       s: SparkSession, base: String, name: String, specJson: String,
@@ -1675,9 +1077,8 @@ object LlmQueries {
   }
 
   /** L13: THE INGEST GATE THROUGH THE CONNECT LIFECYCLE — the
-   * reference's whole UX is declarative configs over REST (L1/L9),
-   * and until this gate the admission operators were reachable only
-   * through the bespoke runners. A `{"type": "admission"}` sink spec
+   * reference's whole UX is declarative configs over REST (L1/L9).
+   * A `{"type": "admission"}` sink spec
    * ([[graft.pipeline.AdmissionSink]]) registers w12's
    * dedup-at-admission as a [[graft.pipeline.PipelineSpec]] via
    * [[graft.pipeline.ConnectServer]], drives wave 0 + 1, PAUSES with
@@ -1688,31 +1089,13 @@ object LlmQueries {
    * per-trigger core, same oracle — with the lifecycle evidence
    * riding as literal columns (l9's shape). */
   def admissionPipelineLifecycle(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val base = s"target/tmp/l13_${new java.io.File(dir).getName}"
-    graft.util.Fs.deleteRecursive(Paths.get(base))
-    val in = s"$base/in"
-    Files.createDirectories(Paths.get(in))
+    val base = gateBase("l13", dir)
     val docs = Tpar(s, dir, "documents").select("doc_id", "text")
     val (existing, waves) = admissionWaves(docs)
-    existing.write.parquet(s"$base/seed")
-    val staged = stagedWaveFiles(graft.Tables.dirTag(base), waves)
-    def stage(i: Int): Unit =
-      graft.Tables.stageCopy(staged(i), Paths.get(in, f"wave$i%02d.parquet"),
-        1000000000000L + i * 60000L)
+    val stage = stageGateFixture(base, existing, None, waves)
     stage(0); stage(1) // wave 2 lands as backlog while paused
-    val q = new com.fasterxml.jackson.databind.ObjectMapper()
-    val specJson =
-      s"""{"name":"l13",
-         |"source":{"type":"parquet","path":${q.writeValueAsString(in)},
-         |  "schemaDdl":"doc_id BIGINT, text STRING",
-         |  "keyFields":["doc_id"],"seqColumn":"doc_id",
-         |  "topic":"corpus","maxFilesPerTrigger":"1"},
-         |"transforms":[],
-         |"sink":{"type":"admission",
-         |  "path":${q.writeValueAsString(s"$base/gate")},
-         |  "seedPath":${q.writeValueAsString(s"$base/seed")}}}""".stripMargin
-    driveAdmissionPipeline(s, base, "l13", specJson, () => stage(2))
+    driveAdmissionPipeline(s, base, "l13", admissionSpecJson("l13", base),
+        () => stage(2))
       .select(col("doc_id"), col("exact_dup"), col("near_dup"),
         col("admitted"),
         col("status_after_register"), col("status_while_paused"),
@@ -1730,39 +1113,17 @@ object LlmQueries {
    * verdicts must hash-match it EXACTLY (one shared oracle), with the
    * pause/resume boundary between the two waves: the resumed
    * incarnation re-reads the frozen center from state and re-derives
-   * the plane dial ([[AdmissionGateCore.resumeDials]]), so the match
-   * also proves the dial-resume recipe the runners never exercise. */
+   * the plane dial ([[graft.pipeline.AdmissionGateCore.resumeDials]]),
+   * so the match also proves the dial-resume recipe w18's single
+   * uninterrupted drain never exercises. */
   def admissionPipelineFull(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val base = s"target/tmp/l14_${new java.io.File(dir).getName}"
-    graft.util.Fs.deleteRecursive(Paths.get(base))
-    val in = s"$base/in"
-    Files.createDirectories(Paths.get(in))
+    val base = gateBase("l14", dir)
     val (seed, benchM, waves) = fullAdmissionFixture(s, dir)
-    seed.write.parquet(s"$base/seed")
-    benchM.write.parquet(s"$base/bench")
-    val staged = stagedWaveFiles(graft.Tables.dirTag(base), waves)
-    def stage(i: Int): Unit =
-      graft.Tables.stageCopy(staged(i), Paths.get(in, f"wave$i%02d.parquet"),
-        1000000000000L + i * 60000L)
+    val stage = stageGateFixture(base, seed, Some(benchM), waves)
     stage(0) // wave 1 lands as backlog while paused
-    val q = new com.fasterxml.jackson.databind.ObjectMapper()
-    val specJson =
-      s"""{"name":"l14",
-         |"source":{"type":"parquet","path":${q.writeValueAsString(in)},
-         |  "schemaDdl":"doc_id BIGINT, text STRING",
-         |  "keyFields":["doc_id"],"seqColumn":"doc_id",
-         |  "topic":"corpus","maxFilesPerTrigger":"1"},
-         |"transforms":[],
-         |"sink":{"type":"admission",
-         |  "path":${q.writeValueAsString(s"$base/gate")},
-         |  "seedPath":${q.writeValueAsString(s"$base/seed")},
-         |  "fused":"true","containment":"true","semantic":"true",
-         |  "media":"true",
-         |  "benchPath":${q.writeValueAsString(s"$base/bench")},
-         |  "benchMediaPath":${q.writeValueAsString(s"$base/bench")},
-         |  "semPlanes":"${d14Planes(s, dir)}"}}""".stripMargin
-    driveAdmissionPipeline(s, base, "l14", specJson, () => stage(1))
+    val spec = admissionSpecJson("l14", base, fullGateKeys(s, dir) ++
+      FullGateBenchKeys.map(_ -> s"$base/bench"))
+    driveAdmissionPipeline(s, base, "l14", spec, () => stage(1))
       .select(col("doc_id"), col("exact_dup"), col("near_dup"),
         col("quality_keep"), col("n_shingles"), col("n_known"),
         col("novelty"), col("contaminated"), col("contained_dup"),
@@ -1825,34 +1186,14 @@ object LlmQueries {
    * — proving the gate composes with the engine's codec + SMT algebra
    * rather than only consuming raw parquet. */
   def admissionPipelineFramed(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val base = s"target/tmp/l15_${new java.io.File(dir).getName}"
-    graft.util.Fs.deleteRecursive(Paths.get(base))
-    val in = s"$base/in"
-    Files.createDirectories(Paths.get(in))
+    val base = gateBase("l15", dir)
     val docs = Tpar(s, dir, "documents").select("doc_id", "text")
     val (existing, waves) = admissionWaves(docs)
-    existing.write.parquet(s"$base/seed")
-    val staged = stagedWaveFiles(graft.Tables.dirTag(base),
-      waves.map(wireWave(_)))
-    def stage(i: Int): Unit =
-      graft.Tables.stageCopy(staged(i),
-        Paths.get(in, f"wave$i%02d.parquet"), 1000000000000L + i * 60000L)
+    val stage = stageGateFixture(base, existing, None, waves.map(wireWave(_)))
     stage(0); stage(1) // wave 2 lands as backlog while paused
-    val q = new com.fasterxml.jackson.databind.ObjectMapper()
-    val specJson =
-      s"""{"name":"l15",
-         |"source":{"type":"parquet","path":${q.writeValueAsString(in)},
-         |  "wireFormat":"json_envelope",
-         |  "schemaDdl":${q.writeValueAsString(DocCdcDdl)},
-         |  "keyFields":["after"],
-         |  "decodeParallelism":"8",
-         |  "topic":"corpus","maxFilesPerTrigger":"1"},
-         |"transforms":[{"type":"extractNewRecordState"}],
-         |"sink":{"type":"admission",
-         |  "path":${q.writeValueAsString(s"$base/gate")},
-         |  "seedPath":${q.writeValueAsString(s"$base/seed")}}}""".stripMargin
-    driveAdmissionPipeline(s, base, "l15", specJson, () => stage(2))
+    val spec = admissionSpecJson("l15", base, wire = true,
+      decodeParallelism = Some("8"))
+    driveAdmissionPipeline(s, base, "l15", spec, () => stage(2))
       .select(col("doc_id"), col("exact_dup"), col("near_dup"),
         col("admitted"),
         col("status_after_register"), col("status_while_paused"),
@@ -1881,14 +1222,9 @@ object LlmQueries {
    * (stage, reason; doc_id falls back to -offset for rows that never
    * decoded one) + the pinned `dlq_n`. */
   def admissionPipelineDlq(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val base = s"target/tmp/l16_${new java.io.File(dir).getName}"
-    graft.util.Fs.deleteRecursive(Paths.get(base))
-    val in = s"$base/in"
-    Files.createDirectories(Paths.get(in))
+    val base = gateBase("l16", dir)
     val docs = Tpar(s, dir, "documents").select("doc_id", "text")
     val (existing, waves) = admissionWaves(docs)
-    existing.write.parquet(s"$base/seed")
     import s.implicits._
     val rowT = org.apache.spark.sql.types.DataType.fromDDL(DocRowDdl)
     val envT = org.apache.spark.sql.types.DataType.fromDDL(DocCdcDdl)
@@ -1916,28 +1252,14 @@ object LlmQueries {
       1 -> plantRow(None, Some("orphan document with no key"), 8000001L)
         .unionByName(plantRow(Some(9000001L), None, 9000001L)),
       2 -> plantRow(Some(9000002L), Some("y " * 5000), 9000002L)).toMap
-    val staged = stagedWaveFiles(graft.Tables.dirTag(base),
+    val stage = stageGateFixture(base, existing, None,
       waves.zipWithIndex.map { case (w, i) => wireWave(w, plants.get(i)) })
-    def stage(i: Int): Unit =
-      graft.Tables.stageCopy(staged(i),
-        Paths.get(in, f"wave$i%02d.parquet"), 1000000000000L + i * 60000L)
     stage(0); stage(1) // wave 2 lands as backlog while paused
-    val q = new com.fasterxml.jackson.databind.ObjectMapper()
-    val specJson =
-      s"""{"name":"l16",
-         |"source":{"type":"parquet","path":${q.writeValueAsString(in)},
-         |  "wireFormat":"json_envelope",
-         |  "schemaDdl":${q.writeValueAsString(DocCdcDdl)},
-         |  "keyFields":["after"],
-         |  "decodeParallelism":"8",
-         |  "topic":"corpus","maxFilesPerTrigger":"1"},
-         |"transforms":[{"type":"extractNewRecordState"}],
-         |"sink":{"type":"admission",
-         |  "path":${q.writeValueAsString(s"$base/gate")},
-         |  "seedPath":${q.writeValueAsString(s"$base/seed")},
-         |  "errorsTolerance":"all","maxDocChars":"5000"}}""".stripMargin
+    val spec = admissionSpecJson("l16", base,
+      Seq("errorsTolerance" -> "all", "maxDocChars" -> "5000"),
+      wire = true, decodeParallelism = Some("8"))
     val verdicts =
-      driveAdmissionPipeline(s, base, "l16", specJson, () => stage(2))
+      driveAdmissionPipeline(s, base, "l16", spec, () => stage(2))
         .select(col("doc_id"), col("exact_dup"), col("near_dup"),
           col("admitted"),
           lit(null).cast("string").as("stage"),
@@ -1966,7 +1288,8 @@ object LlmQueries {
    * batch checks against, so a near-dup of a wave-0 survivor is caught
    * two triggers later while a near-dup of a REJECTED doc is not.
    * State is the same parquet artifact-table family w12 grows (never
-   * executor memory, never re-derived text — [[runAdmissionStream]]),
+   * executor memory, never re-derived text —
+   * [[graft.pipeline.AdmissionGateCore]]),
    * verdicts land in idempotent per-batch dirs, and the per-batch cost
    * is one digest semi-join + one banded-candidate pass + one shingle
    * semi-join + a handful of codegen'd multiply-adds — all against
@@ -1976,8 +1299,7 @@ object LlmQueries {
   def streamCurationAdmission(s: SparkSession, dir: String): DataFrame = {
     val docs = Tpar(s, dir, "documents").select("doc_id", "text")
     val (existing, waves) = admissionWaves(docs)
-    runAdmissionStream(s, existing, waves,
-        s"target/tmp/w14_${new java.io.File(dir).getName}", fused = true)
+    admissionGate(s, "w14", dir, existing, waves, on("fused"))
       .select("doc_id", "exact_dup", "near_dup", "quality_keep",
         "n_shingles", "n_known", "novelty", "admitted")
       .orderBy("doc_id")
@@ -2013,9 +1335,8 @@ object LlmQueries {
     // two) at ~2/3 the bench cost; the oracle unrolls two rounds
     val waves = Seq(waves0(0),
       waves0(1).unionByName(plants).unionByName(waves0(2)))
-    runAdmissionStream(s, existing, waves,
-        s"target/tmp/w15_${new java.io.File(dir).getName}", fused = true,
-        bench = Some(bench))
+    admissionGate(s, "w15", dir, existing, waves, on("fused"),
+        Some(bench), Seq("benchPath"))
       .select("doc_id", "exact_dup", "near_dup", "quality_keep",
         "n_shingles", "n_known", "novelty", "contaminated", "admitted")
       .orderBy("doc_id")
@@ -2074,9 +1395,8 @@ object LlmQueries {
     // wave-0-ADMITTED docs, so they catch one trigger later
     val waves = Seq(waves0(0), waves0(1).unionByName(benchPlants)
       .unionByName(waves0(2)).unionByName(quoting).unionByName(sliced))
-    runAdmissionStream(s, existing, waves,
-        s"target/tmp/w16_${new java.io.File(dir).getName}", fused = true,
-        bench = Some(bench), containment = true)
+    admissionGate(s, "w16", dir, existing, waves,
+        on("fused", "containment"), Some(bench), Seq("benchPath"))
       .select("doc_id", "exact_dup", "near_dup", "quality_keep",
         "n_shingles", "n_known", "novelty", "contaminated",
         "contained_dup", "admitted")
@@ -2122,21 +1442,15 @@ object LlmQueries {
     // wave-0-ADMITTED docs, so they catch one trigger later
     val waves = Seq(waves0(0), waves0(1).unionByName(benchPlants)
       .unionByName(waves0(2)).unionByName(paraphrase))
-    runAdmissionStream(s, existing, waves,
-        s"target/tmp/w17_${new java.io.File(dir).getName}", fused = true,
-        bench = Some(bench), containment = true, semantic = true,
-        semPlanes = semPlanesFor(s, dir), semCenter = semCenterFor(s, dir))
+    admissionGate(s, "w17", dir, existing, waves,
+        on("fused", "containment", "semantic") :+
+          ("semPlanes" -> d14Planes(s, dir).toString),
+        Some(bench), Seq("benchPath"))
       .select("doc_id", "exact_dup", "near_dup", "quality_keep",
         "n_shingles", "n_known", "novelty", "contaminated",
         "contained_dup", "semantic_dup", "admitted")
       .orderBy("doc_id")
   }
-
-  /** The audio id-seed modulus for m22 — chosen NOT to divide (or be
-   * divided by) the textured image pack's 1 000 000 id seed, so plant
-   * offsets exist that preserve one modality's fingerprint while
-   * moving the other's (lcm = 7 000 000 preserves both). */
-  private val M22AudioSeedMod = 700000L
 
   /** M22: FUSED MULTIMODAL streamed admission — w14's production
    * ingest gate extended to media: each micro-batch's documents pack
@@ -2183,8 +1497,7 @@ object LlmQueries {
         .withColumn("doc_id", col("doc_id") + 7000000L))
       .unionByName(seed.filter(col("doc_id") % 100 === 0)
         .withColumn("doc_id", col("doc_id") + 21000000L))
-    runMultimodalAdmissionStream(s, seed, Seq(w0, w1, w2),
-        s"target/tmp/m22_${new java.io.File(dir).getName}")
+    admissionGate(s, "m22", dir, seed, Seq(w0, w1, w2), on("media"))
       .select("doc_id", "exact_dup", "near_dup", "image_dup", "audio_dup",
         "admitted")
       .orderBy("doc_id")
@@ -2225,9 +1538,8 @@ object LlmQueries {
         .withColumn("doc_id", col("doc_id") + 7000000L))
       .unionByName(tmut(bench.filter(col("doc_id") % 45 === 0))
         .withColumn("doc_id", col("doc_id") + 14000000L))
-    runMultimodalAdmissionStream(s, seed, Seq(w0, w1, w2),
-        s"target/tmp/m24_${new java.io.File(dir).getName}",
-        benchMedia = Some(bench))
+    admissionGate(s, "m24", dir, seed, Seq(w0, w1, w2), on("media"),
+        Some(bench), Seq("benchMediaPath"))
       .select("doc_id", "exact_dup", "near_dup", "image_dup", "audio_dup",
         "media_contaminated", "admitted")
       .orderBy("doc_id")
@@ -2241,8 +1553,8 @@ object LlmQueries {
    * centered bucketing and hot-bucket cap) AND image dup + audio dup
    * (m22, evolving fingerprint state) + media decontamination (m24,
    * frozen benchmark-media fingerprints). A production corpus is
-   * admitted ONCE — until this gate, the 7-leg text runner and the
-   * 5-leg media runner were siblings that never met.
+   * admitted ONCE — until this gate, the 7-leg text gate and the
+   * 5-leg media gate were siblings that never met.
    *
    * ONE benchmark suite (docs 300–399, disjoint from the corpus)
    * freezes for BOTH decontamination legs. Per-axis-unique plants
@@ -2272,7 +1584,7 @@ object LlmQueries {
    * media fingerprints). */
   /** The w18/l14 shared fixture: (seed, benchmark corpus, waves) —
    * see [[streamFullAdmission]]'s scaladoc for the per-axis-unique
-   * plant catalog. ONE construction so the bespoke runner and the
+   * plant catalog. ONE construction so the in-process drain and the
    * REST-registered pipeline provably gate IDENTICAL waves (they share
    * the oracle). */
   private def fullAdmissionFixture(s: SparkSession, dir: String)
@@ -2338,180 +1650,13 @@ object LlmQueries {
 
   def streamFullAdmission(s: SparkSession, dir: String): DataFrame = {
     val (seed, benchM, waves) = fullAdmissionFixture(s, dir)
-    runAdmissionStream(s, seed, waves,
-        s"target/tmp/w18_${new java.io.File(dir).getName}", fused = true,
-        bench = Some(benchM), containment = true, semantic = true,
-        semPlanes = semPlanesFor(s, dir),
-        semCenter = semCenterOver(s, dir, 300L),
-        media = true, benchMedia = Some(benchM))
+    admissionGate(s, "w18", dir, seed, waves, fullGateKeys(s, dir),
+        Some(benchM), FullGateBenchKeys)
       .select("doc_id", "exact_dup", "near_dup", "quality_keep",
         "n_shingles", "n_known", "novelty", "contaminated",
         "contained_dup", "semantic_dup", "image_dup", "audio_dup",
         "media_contaminated", "admitted")
       .orderBy("doc_id")
-  }
-
-  /** One frame's media FINGERPRINTS — pack to real containers, decode
-   * and fingerprint in the codec seam; returns (image (media_id,
-   * hash_hi, hash_lo), audio (media_id, fp_hi, fp_lo)). Per-doc cost
-   * only; this runs on the BATCH each trigger (and once on the seed at
-   * bootstrap) — never on the evolving reference. */
-  private def mediaFingerprints(df: DataFrame): (DataFrame, DataFrame) = (
-    Multimodal.imagePHash(Multimodal.packAsPngTextured(df, "doc_id", "text")),
-    Multimodal.audioFingerprint(
-      Multimodal.packAsWav(df, "doc_id", "text", idSeedMod = M22AudioSeedMod)))
-
-  /** [[runAdmissionStream]]'s shape with media fingerprint state
-   * tables beside the text artifacts: per trigger, the batch's OWN
-   * media decode (O(batch)) plus equality joins of its fingerprints
-   * against the state `imgfp`/`audfp` tables; admitted docs append
-   * their fingerprints the same way they append their text artifacts.
-   * Replay discipline identical (per-batch overwrite dirs, state read
-   * strictly below the current batch id). */
-  private[graft] def runMultimodalAdmissionStream(
-      s: SparkSession, seed: DataFrame, waves: Seq[DataFrame],
-      base: String,
-      onTrigger: (Long, Long) => Unit = (_, _) => (),
-      foldThreshold: Int = 6,
-      benchMedia: Option[DataFrame] = None): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    graft.util.Fs.deleteRecursive(Paths.get(base))
-    val in = Paths.get(base, "in")
-    Files.createDirectories(in)
-    stagedWaveFiles(graft.Tables.dirTag(base), waves)
-      .zipWithIndex.foreach { case (src, i) =>
-        graft.Tables.stageCopy(src, in.resolve(f"wave$i%02d.parquet"),
-          1000000000000L + i * 60000L)
-      }
-    val refDir = s"$base/ref"
-    val stateDir = s"$base/state"
-    val outDir = s"$base/out"
-    val schema = seed.schema
-    // r18: independent bootstrap writes run concurrently (guide §2.6)
-    val (seedImg, seedAud) = mediaFingerprints(seed)
-    val boot = Seq.newBuilder[() => Unit]
-    boot += (() => seed.write.parquet(s"$refDir/seed"))
-    boot += (() => Dedup.admissionArtifacts(seed, "doc_id", "text",
-        k = 3, numPerms = NumPerms)
-      .write.parquet(s"$stateDir/seed/art"))
-    boot += (() => seedImg.write.parquet(s"$stateDir/seed/imgfp"))
-    boot += (() => seedAud.write.parquet(s"$stateDir/seed/audfp"))
-    // the MEDIA decontamination state (m24): the benchmark suite's
-    // image/audio fingerprints freeze at bootstrap (the d16 move on
-    // m6/m9 fingerprints — 16 bytes per doc per modality) and every
-    // trigger equality-joins its batch fingerprints against them; an
-    // admitted benchmark image poisons multimodal eval exactly as
-    // quoted text does. `bench`-prefixed dirs stay invisible to
-    // AdmissionState.parts.
-    benchMedia.foreach { bm =>
-      val (bi, ba) = mediaFingerprints(bm)
-      boot += (() => bi.write.parquet(s"$stateDir/bench/imgfp"))
-      boot += (() => ba.write.parquet(s"$stateDir/bench/audfp"))
-    }
-    inParallel(boot.result())
-    // same runner-role fencing as the text runner
-    val epoch = graft.text.AdmissionState.acquireWriter(stateDir)
-    graft.text.AdmissionState.bindCheckpoint(stateDir, s"$base/ckpt")
-    val scoped = s.newSession()
-    scoped.conf.set("spark.sql.shuffle.partitions", "4")
-    val stream = scoped.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in.toString)
-    val q = stream.writeStream
-      .option("checkpointLocation", s"$base/ckpt")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val t0 = System.nanoTime()
-        val sp = batch.sparkSession
-        CacheScope.withScope { implicit scope =>
-          val b = scope.persist(batch).toDF()
-          graft.text.AdmissionState.guard(stateDir, epoch)
-          val parts = graft.text.AdmissionState.parts(stateDir, id)
-          val stateArt = readStateTable(sp, "art", parts.map(_ + "/art"))
-          val stateImg = readStateTable(sp, "imgfp",
-            parts.map(_ + "/imgfp"))
-          val stateAud = readStateTable(sp, "audfp",
-            parts.map(_ + "/audfp"))
-          val batchArt = scope.persist(Dedup.admissionArtifacts(
-            b, "doc_id", "text", k = 3, numPerms = NumPerms)).toDF()
-          val (bImgRaw, bAudRaw) = mediaFingerprints(b)
-          val bImg = scope.persist(bImgRaw).toDF()
-          val bAud = scope.persist(bAudRaw).toDF()
-          val dedup = Dedup.admissionVerdictIncremental(batchArt, stateArt,
-            numBands = Bands, numPerms = NumPerms)
-          // fingerprint-GROUP membership (the m6/m9 group semantics):
-          // semi joins, so duplicate state fingerprints never fan out
-          val imgDup = bImg.join(
-              stateImg.select("hash_hi", "hash_lo"),
-              Seq("hash_hi", "hash_lo"), "left_semi")
-            .select(col("media_id").as("doc_id")).withColumn("_im", lit(true))
-          val audDup = bAud.join(
-              stateAud.select("fp_hi", "fp_lo"),
-              Seq("fp_hi", "fp_lo"), "left_semi")
-            .select(col("media_id").as("doc_id")).withColumn("_au", lit(true))
-          // the frozen benchmark-media contamination leg (m24): one
-          // equality semi-join per modality against the bootstrap
-          // fingerprint tables — per-batch cost O(batch), state never
-          // grows (benchmark suites change rarely)
-          val mediaCt = benchMedia.map { _ =>
-            val bi = readStateTable(sp, "imgfp",
-              Seq(s"$stateDir/bench/imgfp"))
-            val ba = readStateTable(sp, "audfp",
-              Seq(s"$stateDir/bench/audfp"))
-            bImg.join(bi.select("hash_hi", "hash_lo"),
-                Seq("hash_hi", "hash_lo"), "left_semi")
-              .select(col("media_id").as("doc_id"))
-              .unionByName(bAud.join(ba.select("fp_hi", "fp_lo"),
-                  Seq("fp_hi", "fp_lo"), "left_semi")
-                .select(col("media_id").as("doc_id")))
-              .distinct().withColumn("_mc", lit(true))
-          }
-          val flags = dedup
-            .join(imgDup, Seq("doc_id"), "left")
-            .join(audDup, Seq("doc_id"), "left")
-          val withMc = mediaCt match {
-            case None => flags
-              .select(col("doc_id"), col("exact_dup"), col("near_dup"),
-                coalesce(col("_im"), lit(false)).as("image_dup"),
-                coalesce(col("_au"), lit(false)).as("audio_dup"))
-              .withColumn("admitted", !col("exact_dup") && !col("near_dup") &&
-                !col("image_dup") && !col("audio_dup"))
-            case Some(mc) => flags.join(mc, Seq("doc_id"), "left")
-              .select(col("doc_id"), col("exact_dup"), col("near_dup"),
-                coalesce(col("_im"), lit(false)).as("image_dup"),
-                coalesce(col("_au"), lit(false)).as("audio_dup"),
-                coalesce(col("_mc"), lit(false)).as("media_contaminated"))
-              .withColumn("admitted", !col("exact_dup") && !col("near_dup") &&
-                !col("image_dup") && !col("audio_dup") &&
-                !col("media_contaminated"))
-          }
-          val verdict = scope.persist(withMc).toDF()
-          verdict.write.mode("overwrite").parquet(s"$outDir/batch=$id")
-          val admIds = verdict.filter(col("admitted")).select("doc_id")
-          // r18: independent appends over already-cached frames run
-          // concurrently (guide §2.6), exactly as in the text core —
-          // disjoint per-batch overwrite dirs, crash exposure unchanged
-          inParallel(Seq(
-            () => b.join(admIds, "doc_id")
-              .write.mode("overwrite").parquet(s"$refDir/adm$id"),
-            () => batchArt.join(admIds, "doc_id")
-              .write.mode("overwrite").parquet(s"$stateDir/b$id/art"),
-            () => bImg.join(admIds, bImg("media_id") === admIds("doc_id"),
-                "left_semi")
-              .write.mode("overwrite").parquet(s"$stateDir/b$id/imgfp"),
-            () => bAud.join(admIds, bAud("media_id") === admIds("doc_id"),
-                "left_semi")
-              .write.mode("overwrite").parquet(s"$stateDir/b$id/audfp")))
-          // self-driving state fold, as in the text runner
-          if (parts.size > foldThreshold)
-            graft.text.AdmissionState.fold(sp, stateDir, upTo = id - 1,
-              subs = Seq("art", "imgfp", "audfp"), epoch = epoch)
-        }
-        onTrigger(id, (System.nanoTime() - t0) / 1000000L)
-        ()
-      }.start()
-    q.processAllAvailable()
-    q.stop()
-    s.read.parquet(outDir).drop("batch")
   }
 
   /** E14: INCREMENTAL ANN INDEX MAINTENANCE — the continual-ingestion
@@ -3621,8 +2766,8 @@ object LlmQueries {
     })
 
   /** E26: IVF cell MERGE — the inverse maintenance verb of e18's
-   * split, and the remedy for the drift this round's
-   * `LifecycleRecallProbe` deletion leg measures: takedowns hollow
+   * split, and the remedy for the drift the lifecycle recall
+   * deletion leg measured (bench/lifecycle_recall_r13.json): takedowns hollow
    * cells out, and a near-empty cell still costs a probe slot. The
    * two least-occupied cells merge surgically
    * ([[Similarity.ivfPqMerge]]): members relabel, higher cells shift
@@ -4682,44 +3827,18 @@ object LlmQueries {
     d14PlanesMemo.getOrElseUpdate(dir,
       scaledPlaneCount(Tpar(s, dir, "documents").count()))
 
-  /** THE LSH-family production dial (shared by d14b and the w17
-   * semantic admission leg): enough hyperplanes that the expected
-   * bucket holds ~16 docs — `floor` is the minimum (the fixed fixture
-   * dial, or a stream's current count so growth is monotone). */
-  private[graft] def scaledPlaneCount(n: Long, floor: Int = NPlanes): Int =
-    math.max(floor,
-      math.ceil(math.log(math.max(n, 1L) / 16.0) / math.log(2.0)).toInt)
-
-  /** w17's hyperplanes at the production dial, memoized per dir (the
-   * same count as [[d14Planes]] — one dial for the whole LSH family). */
-  private val semPlanesMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[Seq[Long]]]
-  private def semPlanesFor(s: SparkSession, dir: String): Seq[Seq[Long]] =
-    semPlanesMemo.getOrElseUpdate(dir,
-      Similarity.hyperplanes(d14Planes(s, dir), Dim))
-
-  /** w17's frozen bucketing center, memoized per dir: the DECIMAL-exact
-   * unit-mean of the gate SEED's hashed embeddings
-   * ([[Similarity.meanUnitVector]]) — deterministic, so the dynamic
-   * oracle renders the identical literal. */
+  /** The semantic leg's frozen bucketing center for a gate whose seed
+   * is `doc_id < maxId` (w17 seeds at 400; w18/l14 at 300, keeping the
+   * benchmark media suite disjoint), memoized per (dir, cutoff): the
+   * DECIMAL-exact unit-mean of the seed's hashed embeddings
+   * ([[Similarity.meanUnitVector]]) — deterministic, so the literal the
+   * oracle renders is the center the gate derives from its seed at
+   * bootstrap. */
   private val semCenterMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[Double]]
-  private def semCenterFor(s: SparkSession, dir: String): Seq[Double] =
-    semCenterMemo.getOrElseUpdate(dir, {
-      val docs = Tpar(s, dir, "documents").select("doc_id", "text")
-      Similarity.meanUnitVector(admissionWaves(docs)._1
-        .select(TextAnalysis.hashedEmbedding(
-          Dedup.tokens(lower(col("text"))), Dim).as("vec")), "vec", Dim)
-    })
-
-  /** [[semCenterFor]] for a gate whose seed is `doc_id < maxId`
-   * (w18's multimodal fixture seeds at 300 to keep the benchmark media
-   * suite disjoint), memoized per (dir, cutoff). */
-  private val semCenterOverMemo =
     scala.collection.concurrent.TrieMap.empty[String, Seq[Double]]
   private def semCenterOver(s: SparkSession, dir: String,
                             maxId: Long): Seq[Double] =
-    semCenterOverMemo.getOrElseUpdate(s"$dir|$maxId", {
+    semCenterMemo.getOrElseUpdate(s"$dir|$maxId", {
       val docs = Tpar(s, dir, "documents").select("doc_id", "text")
       Similarity.meanUnitVector(docs.filter(col("doc_id") < maxId)
         .select(TextAnalysis.hashedEmbedding(
@@ -5673,7 +4792,8 @@ object LlmQueries {
     // (deterministic — a count picks nPlanes, exactly d14b's move) with
     // the frozen seed-mean bucketing center as a literal
     "w17_stream_semantic_admission" ->
-      ((s, dir) => w17OracleSql(d14Planes(s, dir), semCenterFor(s, dir))),
+      ((s, dir) => w17OracleSql(d14Planes(s, dir),
+        semCenterOver(s, dir, 400L))),
     // w18: the complete multimodal gate — same dial, center over ITS
     // seed (doc_id < 300, the media-benchmark-disjoint cutoff)
     "w18_stream_full_admission" ->
@@ -6629,7 +5749,7 @@ object LlmQueries {
        |    AS hash_lo
        |  FROM mtt),
        |mad AS (SELECT doc_id, 1 + length(text) % 240 AS n,
-       |    (length(text) * 131 + 37 * (doc_id % ${M22AudioSeedMod})) % 65521
+       |    (length(text) * 131 + 37 * (doc_id % ${AudioSeedMod})) % 65521
        |      AS a
        |  FROM allm),
        |mae AS (SELECT doc_id,
@@ -7208,7 +6328,7 @@ object LlmQueries {
          |    AS hash_lo
          |  FROM mtt),
          |mad AS (SELECT doc_id, 1 + length(text) % 240 AS n,
-         |    (length(text) * 131 + 37 * (doc_id % ${M22AudioSeedMod})) % 65521
+         |    (length(text) * 131 + 37 * (doc_id % ${AudioSeedMod})) % 65521
          |      AS a
          |  FROM allc),
          |mae AS (SELECT doc_id,
@@ -7339,7 +6459,7 @@ object LlmQueries {
          |    AS hash_lo
          |  FROM mtt),
          |mad AS (SELECT doc_id, 1 + length(text) % 240 AS n,
-         |    (length(text) * 131 + 37 * (doc_id % ${M22AudioSeedMod})) % 65521
+         |    (length(text) * 131 + 37 * (doc_id % ${AudioSeedMod})) % 65521
          |      AS a
          |  FROM allm),
          |mae AS (SELECT doc_id,

@@ -736,7 +736,6 @@ object RelationalQueries {
    * is per-key local to the shuffle partition — no cross-key traffic. */
   def streamSessionWindow(s: SparkSession, dir: String): DataFrame = {
     import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
     val base = s"target/tmp/w3b_${new java.io.File(dir).getName}"
     graft.util.Fs.deleteRecursive(Paths.get(base)) // idempotent re-runs
     val in = s"$base/in"
@@ -796,7 +795,6 @@ object RelationalQueries {
    * `StreamingSpec`). */
   def streamDedup(s: SparkSession, dir: String): DataFrame = {
     import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
     val base = s"target/tmp/w7_${new java.io.File(dir).getName}"
     graft.util.Fs.deleteRecursive(Paths.get(base)) // idempotent re-runs
     val in = s"$base/in"

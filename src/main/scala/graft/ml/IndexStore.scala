@@ -303,26 +303,6 @@ object IndexStore {
     }
   }
 
-  /** Release the store's checkpoint-identity bind — the fenced
-   * maintenance verb for a bound-then-abandoned store (the original
-   * checkpoint is lost/retired and a NEW stream must take over).
-   * Operator contract: the next admit's checkpoint starts batch ids at
-   * 0, so the caller must ensure previously committed admission batches
-   * were folded (compact) or the new stream's early ids would collide
-   * with live `adm=b<id>` dirs — admit's folded-id re-check refuses the
-   * folded collisions; unfolded ones are the operator's to vacuum.
-   * Requires the current writer epoch, so a zombie cannot unbind the
-   * live holder's identity. */
-  def unbindCheckpoint(dir: String, epoch: Long): Unit = {
-    fence(dir, epoch)
-    if (Files.isDirectory(writersPath(dir))) {
-      val listing = Files.list(writersPath(dir))
-      val marks = try listing.iterator().asScala.toList finally listing.close()
-      marks.filter(_.getFileName.toString.startsWith("ckpt="))
-        .foreach(graft.util.Fs.deleteRecursive)
-    }
-  }
-
   // ---- tombstones (merge-on-read deletes) --------------------------------
 
   private def tombsPath(dir: String): Path = Paths.get(dir, "tombs")

@@ -198,7 +198,7 @@ object Similarity {
    * the Lloyd training loop, whose re-centering aggregates per
    * (subspace, code) cell over the sliced subvectors. */
   private def withSubvectors(df: DataFrame, idAs: String, m: Int, subDim: Int,
-                             extra: Seq[Column] = Nil): DataFrame =
+                             extra: Seq[Column]): DataFrame =
     df.select((col("id").as(idAs) +: extra) ++ ((0 until m).map(j =>
       slice(col("vec"), j * subDim + 1, subDim).as(s"_s$j"))): _*)
 
@@ -439,8 +439,9 @@ object Similarity {
    * IVF cell MERGE — the inverse maintenance verb of [[ivfPqSplit]]:
    * deletion holes (takedowns concentrated in a domain) hollow cells
    * out, and serving then pays a probe slot for a near-empty cell —
-   * merging the two emptiest reclaims it (the remedy for the drift
-   * `LifecycleRecallProbe`'s deletion leg measures). The merge is
+   * merging the two emptiest reclaims it (the remedy for the drift the
+   * lifecycle recall deletion leg measured,
+   * bench/lifecycle_recall_r13.json). The merge is
    * SURGICAL and O(index): `cellB`'s members relabel to `cellA`, cells
    * above `cellB` shift down one slot, and — the raw-family fact that
    * makes this a pure narrow map with NO vector fetch — PQ codes never
@@ -769,9 +770,6 @@ object Similarity {
     element_at(rankCells(vec, cents, 1), 1)
 
   /** The `nprobe` best cells for a query. */
-  def ivfProbes(vec: Column, cents: Seq[Seq[Long]], nprobe: Int): Column =
-    ivfProbesD(vec, cents.map(_.map(_.toDouble)), nprobe)
-
   def ivfProbesD(vec: Column, cents: Seq[Seq[Double]], nprobe: Int): Column =
     rankCells(vec, cents, nprobe)
 
@@ -813,7 +811,8 @@ object Similarity {
    * unchanged). A production REINDEX seeds from the corpus itself
    * (e.g. a deterministic stride sample) — a drifted corpus's mass
    * then attracts centroids the synthetic grid never reaches; the
-   * DriftRecallProbe measures exactly that gap. */
+   * drift recall probe measured exactly that gap
+   * (bench/lifecycle_recall_r14.json). */
   def trainIvfCentroidsFrom(corpus: DataFrame, init: Seq[Seq[Double]],
                             dim: Int, iters: Int): Seq[Seq[Double]] = {
     def unit(v: Seq[Double]): Seq[Double] = {

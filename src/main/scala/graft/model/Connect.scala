@@ -1,6 +1,6 @@
 package graft.model
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -35,22 +35,6 @@ object Connect {
   val SeqCol = "seq"
   val OpCol = "op"
 
-  /** Debezium-style CDC envelope schema for a given row schema.
-   * Reference shape: `{before, after, source{...}, op, ts_ms}`
-   * (`실습수행/Debezium MySQL CDC Source Connector 실습 - 01.md:162-176`). */
-  def cdcEnvelopeSchema(rowSchema: StructType): StructType = StructType(Seq(
-    StructField("before", rowSchema, nullable = true),
-    StructField("after", rowSchema, nullable = true),
-    StructField("source", StructType(Seq(
-      StructField("name", StringType, nullable = true),
-      StructField("ts_ms", LongType, nullable = true),
-      StructField("table", StringType, nullable = true),
-      StructField("pos", LongType, nullable = true)
-    )), nullable = true),
-    StructField("op", StringType, nullable = false),
-    StructField("ts_ms", LongType, nullable = true)
-  ))
-
   /**
    * Lift a plain table into a connect frame: `value` = struct of all
    * columns, `key` = struct of `keyFields`, `topic` = `topicPrefix+name`,
@@ -65,14 +49,4 @@ object Connect {
       valueStruct.as(ValueCol),
       lit(topic).as(TopicCol),
       col(seqCol).cast(LongType).as(SeqCol))
-  }
-
-  /** A record is a tombstone iff its value is NULL (reference:
-   * `실습수행/JDBC Sink Connector 실습.md:331-363`). */
-  def isTombstone: Column = col(ValueCol).isNull
-
-  /** Flatten `value.*` back to a plain table, dropping tombstones.
-   * (The lossy inverse of [[toConnectFrame]].) */
-  def fromConnectFrame(df: DataFrame): DataFrame =
-    df.filter(col(ValueCol).isNotNull).select(col(s"$ValueCol.*"))
-}
+  }}

@@ -81,19 +81,21 @@ object Multimodal {
    * pinned WAV reader first, the full AudioSystem probe for anything
    * it rejects (identical outcomes, no per-record provider sweep). */
   private[graft] def openAudio(bytes: Array[Byte])
-      : javax.sound.sampled.AudioInputStream =
-    wavReader match {
-      case Some(r) =>
-        try r.getAudioInputStream(new java.io.ByteArrayInputStream(bytes))
-        catch {
-          case _: javax.sound.sampled.UnsupportedAudioFileException =>
-            javax.sound.sampled.AudioSystem.getAudioInputStream(
-              new java.io.ByteArrayInputStream(bytes))
-        }
-      case None =>
-        javax.sound.sampled.AudioSystem.getAudioInputStream(
-          new java.io.ByteArrayInputStream(bytes))
-    }
+      : javax.sound.sampled.AudioInputStream = openAudioVia(wavReader, bytes)
+
+  /** [[openAudio]] through an explicit pinned reader. ANY non-fatal
+   * failure of the pinned reader — not only its
+   * UnsupportedAudioFileException — falls back to the full AudioSystem
+   * probe, so a payload's classification never depends on which
+   * provider happened to throw first. */
+  private[graft] def openAudioVia(
+      pinned: Option[javax.sound.sampled.spi.AudioFileReader],
+      bytes: Array[Byte]): javax.sound.sampled.AudioInputStream =
+    pinned.flatMap(r => scala.util.Try(
+        r.getAudioInputStream(new java.io.ByteArrayInputStream(bytes)))
+      .toOption)
+      .getOrElse(javax.sound.sampled.AudioSystem.getAudioInputStream(
+        new java.io.ByteArrayInputStream(bytes)))
 
   /** Metadata carried beside every media payload. */
   val MediaMetaSchema: StructType = StructType(Seq(
@@ -606,6 +608,42 @@ object Multimodal {
           Seq.fill[Any](nStats)(null))
     }
 
+  /** One record through the m16 quarantine contract: open the payload
+   * with `open` ([[openAudio]] in production), decode PCM16 mono, and
+   * classify any failure through [[classifyDecode]]. */
+  private[graft] def quarantinedAudioRow(id: Long, bytes: Array[Byte],
+      open: Array[Byte] => javax.sound.sampled.AudioInputStream = openAudio)
+      : Row =
+    classifyDecode(id, nStats = 4) {
+      val ais = open(bytes)
+      try {
+        val fmt = ais.getFormat
+        require(fmt.getSampleSizeInBits == 16 && fmt.getChannels == 1,
+          s"expected PCM16 mono, got $fmt")
+        val declared = ais.getFrameLength
+        val data = ais.readAllBytes()
+        val n = data.length / 2
+        if (n == 0 || (declared >= 0 && n < declared))
+          throw new TruncatedMediaException(
+            "PCM data ends before the declared frame count")
+        val big = fmt.isBigEndian
+        var i = 0
+        var sum = 0L
+        var peak = 0
+        while (i < n) {
+          val b0 = data(2 * i)
+          val b1 = data(2 * i + 1)
+          val s = if (big) (b0 << 8) | (b1 & 0xff)
+                  else (b1 << 8) | (b0 & 0xff)
+          sum += s
+          val a = math.abs(s)
+          if (a > peak) peak = a
+          i += 1
+        }
+        Row(id, true, null, fmt.getSampleRate.toInt, n.toLong, peak, sum)
+      } finally ais.close()
+    }
+
   def extractAudioFeaturesQuarantined(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val outSchema = StructType(Seq(
@@ -618,38 +656,7 @@ object Multimodal {
       StructField("amp_sum", LongType, nullable = true)))
     val projected = df.select(col("media_id").cast(LongType), col("payload"))
     val rdd = projected.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        classifyDecode(id, nStats = 4) {
-          val ais = openAudio(r.getAs[Array[Byte]](1))
-          try {
-            val fmt = ais.getFormat
-            require(fmt.getSampleSizeInBits == 16 && fmt.getChannels == 1,
-              s"expected PCM16 mono, got $fmt")
-            val declared = ais.getFrameLength
-            val data = ais.readAllBytes()
-            val n = data.length / 2
-            if (n == 0 || (declared >= 0 && n < declared))
-              throw new TruncatedMediaException(
-                "PCM data ends before the declared frame count")
-            val big = fmt.isBigEndian
-            var i = 0
-            var sum = 0L
-            var peak = 0
-            while (i < n) {
-              val b0 = data(2 * i)
-              val b1 = data(2 * i + 1)
-              val s = if (big) (b0 << 8) | (b1 & 0xff)
-                      else (b1 << 8) | (b0 & 0xff)
-              sum += s
-              val a = math.abs(s)
-              if (a > peak) peak = a
-              i += 1
-            }
-            Row(id, true, null, fmt.getSampleRate.toInt, n.toLong, peak, sum)
-          } finally ais.close()
-        }
-      }
+      rows.map(r => quarantinedAudioRow(r.getLong(0), r.getAs[Array[Byte]](1)))
     }
     spark.createDataFrame(rdd, outSchema)
   }

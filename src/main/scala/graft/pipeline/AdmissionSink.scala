@@ -5,15 +5,15 @@ import java.nio.file.Paths
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.LlmQueries
 import graft.ml.Similarity
 
 /**
  * L13/L14 — the INGEST GATE as a Connect-lifecycle sink: the reference's
- * whole UX is declarative configs over REST (L1/L9), and until this
- * sink the engine's flagship admission operators were reachable only
- * through the bespoke stream runners. A `{"type": "admission"}` sink
- * makes an admission pipeline a first-class [[PipelineSpec]]:
+ * whole UX is declarative configs over REST (L1/L9), and this sink is
+ * the ONE lifecycle every admission gate runs under (the w- and
+ * m-gates register it on an in-process [[Engine]]; l13–l16 go through
+ * REST). A `{"type": "admission"}` sink makes an admission pipeline a
+ * first-class [[PipelineSpec]]:
  * registrable via [[ConnectServer]], pausable, resumable from the
  * checkpoint, deletable — with the lifecycle verbs mapping onto the
  * fenced [[graft.text.AdmissionState]] contract:
@@ -42,10 +42,10 @@ import graft.ml.Similarity
  * `fused` adds the quality + novelty legs, `benchPath` the frozen
  * benchmark decontamination leg, `containment`/`semantic` their
  * postings/embedding legs, `media`+`benchMediaPath` the fingerprint
- * axes. The per-trigger body, state layout and maintenance fold are
- * [[graft.LlmQueries.AdmissionGateCore]] — the SAME implementation the
- * bespoke w12–w18 runners drive, so a REST-registered gate's verdicts
- * hash-match the runners' on identical waves. With every key absent
+ * axes; every leg composes with or without `fused`. The per-trigger
+ * body, state layout and maintenance fold are [[AdmissionGateCore]],
+ * so gates drained in process and REST-registered gates hash-match
+ * on identical waves. With every key absent
  * the gate is the plain w12 dedup shape (k=3 shingles, 16 perms, 4
  * bands). The semantic dial (`semPlanes`, a plane COUNT) is part of
  * the declarative config — OMITTED, it derives as
@@ -54,7 +54,7 @@ import graft.ml.Similarity
  * reference's connector configs work with every key defaulted); the
  * frozen center derives from the seed at bootstrap and persists beside
  * the state, and a RESUMED gate rebuilds the live dials from state
- * alone ([[graft.LlmQueries.AdmissionGateCore.resumeDials]]). The
+ * alone ([[AdmissionGateCore.resumeDials]]). The
  * whole axis set + dial persist as `.axes` beside the bootstrap
  * marker, and a resume REFUSES a spec that contradicts them (r18 —
  * see [[openGate]]).
@@ -115,8 +115,8 @@ object AdmissionSink {
   /** The gate core a sink spec declares at an EXPLICIT plane dial. Dim
    * is the engine-wide hashed-embedding width. */
   private def coreAt(sink: SinkSpec, semPlanes: Int)
-      : LlmQueries.AdmissionGateCore =
-    new LlmQueries.AdmissionGateCore(
+      : AdmissionGateCore =
+    new AdmissionGateCore(
       sink.path,
       fused = sink.fused,
       hasBench = sink.benchPath.nonEmpty,
@@ -124,7 +124,7 @@ object AdmissionSink {
       semantic = sink.semantic,
       media = sink.media,
       hasBenchMedia = sink.benchMediaPath.nonEmpty,
-      semPlanes0 = Similarity.hyperplanes(semPlanes, LlmQueries.Dim))
+      semPlanes0 = Similarity.hyperplanes(semPlanes, AdmissionGate.Dim))
 
   /** The gate core a sink spec declares — resume-aware: on a
    * bootstrapped root the plane dial comes from the persisted axis
@@ -132,7 +132,7 @@ object AdmissionSink {
    * root from the spec key, falling back to the fixture dial (8 — the
    * plain-shape default; [[openGate]] is the production entry and
    * derives the corpus-scaled dial instead). */
-  def coreFor(sink: SinkSpec): LlmQueries.AdmissionGateCore =
+  def coreFor(sink: SinkSpec): AdmissionGateCore =
     coreAt(sink, readAxes(sink).map(_.semPlanes)
       .orElse(sink.semPlanes).getOrElse(8))
 
@@ -155,7 +155,7 @@ object AdmissionSink {
    *    persisted paths now ENFORCE that instead of documenting it.
    */
   def openGate(spark: SparkSession,
-               sink: SinkSpec): LlmQueries.AdmissionGateCore = {
+               sink: SinkSpec): AdmissionGateCore = {
     def docs(p: String): DataFrame =
       spark.read.parquet(p).select("doc_id", "text")
     readAxes(sink) match {
@@ -178,7 +178,7 @@ object AdmissionSink {
       case None =>
         val planes = sink.semPlanes.getOrElse(
           if (sink.semantic)
-            LlmQueries.scaledPlaneCount(
+            AdmissionGate.scaledPlaneCount(
               spark.read.parquet(sink.seedPath.get).count())
           else 8)
         writeAxes(sink, axesOf(sink, planes))

@@ -300,18 +300,6 @@ final class Engine(spark: SparkSession, root: String) extends ConnectRuntime {
         throw new IllegalArgumentException(
           "admission sink consumes (doc_id, text) documents — a rate " +
             "source carries neither")
-      // the axis keys (L14): the verdict core composes the extra legs
-      // only in fused form (quality/novelty are what they AND into), so
-      // a leg without fused would be silently ignored — refuse instead
-      val legs = Seq(
-        spec.sink.benchPath.map(_ => "benchPath"),
-        if (spec.sink.containment) Some("containment") else None,
-        if (spec.sink.semantic) Some("semantic") else None,
-        if (spec.sink.media) Some("media") else None).flatten
-      if (legs.nonEmpty && !spec.sink.fused)
-        throw new IllegalArgumentException(
-          s"admission legs ${legs.mkString(", ")} require fused=true " +
-            "(they AND into the fused quality/novelty verdict)")
       if (spec.sink.benchMediaPath.nonEmpty && !spec.sink.media)
         throw new IllegalArgumentException(
           "benchMediaPath requires media=true (media decontamination " +
@@ -460,8 +448,8 @@ final class Engine(spark: SparkSession, root: String) extends ConnectRuntime {
         // claim the fenced admission-writer role (resume supersedes the
         // previous incarnation's epoch), bind the pipeline's checkpoint
         // identity to the state dir, then run the spec-declared axis
-        // set's verdict per batch — the same AdmissionGateCore the
-        // bespoke w12-w18 runners drive
+        // set's verdict per batch — the library's only caller of
+        // AdmissionGateCore.applyBatch, serving every admission gate
         val core = AdmissionSink.openGate(spark, sink)
         val epoch = graft.text.AdmissionState.acquireWriter(s"${sink.path}/state")
         graft.text.AdmissionState.bindCheckpoint(s"${sink.path}/state",

@@ -1,8 +1,7 @@
 package graft.pipeline
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.smt.Smt

@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -87,7 +87,6 @@ object SchemaEvolution {
   final case class Diff(added: Seq[StructField], dropped: Seq[StructField],
                         retyped: Seq[(StructField, StructField)]) {
     def isAddOnly: Boolean = dropped.isEmpty && retyped.isEmpty
-    def isNoop: Boolean = isAddOnly && added.isEmpty
   }
 
   def diff(target: StructType, incoming: StructType): Diff = {

@@ -5,11 +5,11 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 /**
- * The admission-state STORAGE layout shared by the streamed admission
- * runners (w12/w14's text artifacts, m22's media fingerprints): a
- * `seed/` bootstrap dir plus one `b<id>/` dir per admitted batch, each
- * holding the same sub-tables (`art`, `sh`, `imgfp`, ... — the runner
- * decides). Growing one dir per trigger is correct but accumulates
+ * The admission-state STORAGE layout of the admission gate
+ * ([[graft.pipeline.AdmissionGateCore]] — text artifacts, postings,
+ * embeddings, media fingerprints): a `seed/` bootstrap dir plus one
+ * `b<id>/` dir per admitted batch, each holding the same sub-tables
+ * (`art`, `sh`, `imgfp`, ... — the gate's axis set decides). Growing one dir per trigger is correct but accumulates
  * small files: at production trigger counts every trigger's state read
  * pays a listing + a parquet footer per historical batch — the classic
  * small-files problem, the same one [[graft.ml.IndexStore]] folds away
@@ -23,7 +23,7 @@ import scala.jdk.CollectionConverters._
  * ENFORCED by the same two mechanisms as the vector store:
  *
  *  1. **Epoch fencing** ([[acquireWriter]] / the fenced [[fold]] and
- *     [[guard]]): the admission-runner role is a mkdir-atomic
+ *     [[guard]]): the admission-writer role is a mkdir-atomic
  *     monotonically-increasing lease under `writers/epoch=<n>`. A
  *     rescheduled job acquires the next epoch; the superseded job's
  *     next fold or state append refuses deterministically with the
@@ -187,7 +187,7 @@ object AdmissionState {
         .sorted
     }
 
-  /** Claim the admission-runner role, superseding every prior holder:
+  /** Claim the admission-writer role, superseding every prior holder:
    * a monotonically increasing fencing token via mkdir-atomic claim
    * (two racers computing the same epoch collide on the mkdir; the
    * loser retries at n+1, so epochs are never shared). The superseded

@@ -47,10 +47,6 @@ object Dedup {
           i => concat_ws(" ", slice(toks, i + lit(1), lit(k))))))
       .otherwise(array().cast(ArrayType(StringType)))
 
-  /** Distinct 60-bit shingle hashes. */
-  def shingleHashes(text: Column, k: Int): Column =
-    transform(shingles(text, k), s => Hashing.h60(s))
-
   /** 31-bit-reduced per-token hashes — md5 each token ONCE; alias the
    * result before feeding [[shingleHashesFromTokenHashes]]. */
   def tokenHashes31(toks: Column): Column =
@@ -174,12 +170,6 @@ object Dedup {
             .otherwise(0)).as("n_matching"))
       .groupBy("ida", "idb").agg(max("n_matching").as("n_matching"))
   }
-
-  /** 60-bit SimHash over whitespace tokens (with multiplicity): bit i is
-   * set iff the count-weighted sum of token-hash bit i beats its
-   * complement. */
-  def simhash60(text: Column): Column =
-    simhashFromHashes(transform(tokens(text), t => Hashing.h60(t)))
 
   /** SimHash from pre-computed token hashes — the native codegen'd
    * [[graft.functions.SimHash60]] expression: one array pass bumping 60

@@ -68,7 +68,6 @@ object PlanDump {
     // task per staged file), "after" = decodeParallelism=8 (decode
     // above a round-robin Exchange).
     if (args.drop(1).contains("l15_wire")) {
-      import org.apache.spark.sql.functions._
       import spark.implicits._
       val engine = new graft.pipeline.Engine(spark, "target/tmp/plan_wire")
       val spec = graft.pipeline.SourceSpec(

@@ -3,24 +3,35 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.LlmQueries
+import graft.LlmQueries.on
+import graft.pipeline.AdmissionGate
+
 /** Per-trigger cost ladder for the streamed admission family — the
  * number behind r14's "flat batch cost as the reference grows" claim:
- * drive [[graft.LlmQueries.runAdmissionStream]] with MANY equal-size
- * waves (each admitted wave grows the reference the next wave checks
- * against) and record each trigger's wall millis. With the
- * incremental state tables, per-trigger cost must stay ~flat from the
- * first wave to the last; the old full-rescan form grew linearly with
- * the reference. Args: sfDir [waves] [mode] — mode `plain` = w12's
+ * drive the admission sink with MANY equal-size waves (each admitted
+ * wave grows the reference the next wave checks against) and record
+ * each trigger's wall millis (the streaming query's own
+ * triggerExecution metric). With the incremental state tables,
+ * per-trigger cost must stay ~flat from the first wave to the last;
+ * the old full-rescan form grew linearly with the reference.
+ *
+ * Every mode is a set of sink keys over the ONE admission lifecycle
+ * ([[graft.LlmQueries.drainAdmissionGate]] — an in-process Engine at 4
+ * shuffle partitions, like every admission gate): `plain` = w12's
  * dedup verdict, `fused` = w14's (default), `media` = m22's
- * multimodal runner (per-batch pack + decode + fingerprint checked
- * against the fingerprint state tables), `mediadecont` = m24's (media
- * runner + the frozen benchmark-media fingerprint leg), `full` =
- * w16's 6-leg text gate, `semantic` = w17's complete 7-leg gate
- * (adds the LSH-bucketed embedding leg at the corpus-scaled plane
- * dial, growing at the maintenance folds), `sink` = the DECLARATIVE
- * ten-axis gate through the Engine lifecycle (l14's path — per-trigger
- * wall from the streaming query's own triggerExecution metric).
- * Prints one JSON line.
+ * (per-batch pack + decode + fingerprint checked against the
+ * fingerprint state tables), `mediadecont` = m24's (+ the frozen
+ * benchmark-media fingerprint leg), `full` = w16's 6-leg text gate,
+ * `semantic` = w17's complete 7-leg gate (adds the LSH-bucketed
+ * embedding leg at the corpus-scaled plane dial, growing at the
+ * maintenance folds), `sink` = the full ten-axis gate (w18/l14), and
+ * `wire` = the plain gate fed through the wire transport (l15's CDC
+ * envelope inside the C1 JSON envelope, decoded by the converter +
+ * unwrap SMT per trigger; the decode-parallelism dial comes from
+ * $GRAFT_WIRE_DECODE_PAR, unset = single-task decode). The benchmark
+ * corpus of the decontamination legs is every 10th seed doc. Args:
+ * sfDir [waves] [mode]. Prints one JSON line.
  *
  * Usage:
  *   sbt -batch "runMain graft.tools.StreamAdmissionLadder /root/testdata/sf0.1 8 fused"
@@ -39,6 +50,10 @@ object StreamAdmissionLadder {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")
+      // recentProgress is a ring buffer (default 100 entries): size it
+      // to the wave count so a long ladder keeps its earliest rungs
+      .config("spark.sql.streaming.numRecentProgressUpdates",
+        (waves + 20).toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -59,135 +74,33 @@ object StreamAdmissionLadder {
     val rest = ranked.filter(col("_r") >= n / 2)
     val waveFrames = (0 until waves).map(i =>
       rest.filter(pmod(col("_r"), lit(waves)) === i).drop("_r"))
-    val timings = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
     val t0 = System.nanoTime()
     val base = s"target/tmp/ladder_admission_${new java.io.File(sfDir).getName}"
-    val hook = (id: Long, ms: Long) => { timings += ((id, ms)); () }
-    if (mode == "media")
-      graft.LlmQueries.runMultimodalAdmissionStream(spark, seed, waveFrames,
-        base, onTrigger = hook)
-    else if (mode == "mediadecont")
-      // m24's shape: media runner + the frozen benchmark-media
-      // fingerprint leg (bench = every 10th seed doc — state never
-      // grows, so the leg is flat by construction; this run proves it)
-      graft.LlmQueries.runMultimodalAdmissionStream(spark, seed, waveFrames,
-        base, onTrigger = hook,
-        benchMedia = Some(seed.filter(col("doc_id") % 10 === 0)))
-    else if (mode == "full")
-      // w16's complete 6-leg shape: fused verdict + frozen benchmark
-      // postings + evolving containment postings (bench = every 10th
-      // seed doc, the w15/w16 fixture's dial)
-      graft.LlmQueries.runAdmissionStream(spark, seed, waveFrames,
-        base, fused = true, onTrigger = hook,
-        bench = Some(seed.filter(col("doc_id") % 10 === 0)),
-        containment = true)
-    else if (mode == "semantic")
-      // w17's complete 7-leg gate at the production dial: plane count
-      // corpus-scaled (grows further at maintenance folds), bucketing
-      // over the unit-centered vectors, hot-bucket cap live
-      graft.LlmQueries.runAdmissionStream(spark, seed, waveFrames,
-        base, fused = true, onTrigger = hook,
-        bench = Some(seed.filter(col("doc_id") % 10 === 0)),
-        containment = true, semantic = true,
-        semPlanes = graft.ml.Similarity.hyperplanes(
-          graft.LlmQueries.scaledPlaneCount(n), 64))
-    else if (mode == "sink") {
-      // L14's path: the DECLARATIVE gate through the Engine lifecycle —
-      // the same AdmissionGateCore, driven by a registered PipelineSpec
-      // with every axis key on at the production dial. Waves stage as
-      // minute-spaced files (maxFilesPerTrigger=1 -> one trigger per
-      // wave); per-trigger wall comes from the query's own progress
-      // (triggerExecution ms). Proves the engine wrapper adds constant
-      // per-trigger overhead and the fold/dial machinery stays O(cell)
-      // under the sink lifecycle too.
-      import java.nio.file.{Files, Paths}
-      graft.util.Fs.deleteRecursive(Paths.get(base))
-      val in = s"$base/in"
-      Files.createDirectories(Paths.get(in))
-      seed.write.parquet(s"$base/seed")
-      seed.filter(col("doc_id") % 10 === 0).write.parquet(s"$base/bench")
-      waveFrames.zipWithIndex.foreach { case (w, i) =>
-        graft.Tables.stageFile(w, Paths.get(in, f"wave$i%02d.parquet"),
-          1000000000000L + i * 60000L)
-      }
-      val q = new com.fasterxml.jackson.databind.ObjectMapper()
-      val spec =
-        s"""{"name":"ladder","source":{"type":"parquet",
-           |  "path":${q.writeValueAsString(in)},
-           |  "schemaDdl":"doc_id BIGINT, text STRING",
-           |  "keyFields":["doc_id"],"seqColumn":"doc_id","topic":"c",
-           |  "maxFilesPerTrigger":"1"},
-           |"transforms":[],
-           |"sink":{"type":"admission",
-           |  "path":${q.writeValueAsString(s"$base/gate")},
-           |  "seedPath":${q.writeValueAsString(s"$base/seed")},
-           |  "fused":"true","containment":"true","semantic":"true",
-           |  "media":"true",
-           |  "benchPath":${q.writeValueAsString(s"$base/bench")},
-           |  "benchMediaPath":${q.writeValueAsString(s"$base/bench")},
-           |  "semPlanes":"${graft.LlmQueries.scaledPlaneCount(n)}"}}"""
-          .stripMargin
-      // recentProgress is a ring buffer (default 100 entries): a ladder
-      // run past ~100 waves would silently lose its earliest rungs'
-      // timings and report a truncated ladder — size the buffer to the
-      // wave count up front (r18, ADVICE)
-      spark.conf.set("spark.sql.streaming.numRecentProgressUpdates",
-        (waves + 20).toString)
-      val engine = new graft.pipeline.Engine(spark, s"$base/engine")
-      val query = engine.registerJson(spec)
-      query.processAllAvailable()
-      query.recentProgress.foreach { pr =>
-        if (pr.numInputRows > 0)
-          timings += ((pr.batchId,
-            pr.durationMs.getOrDefault("triggerExecution", -1L).toLong))
-      }
-      engine.delete("ladder")
-    } else if (mode == "wire") {
-      // r19 — L15's path: the same declarative gate fed through the
-      // WIRE transport (CDC envelope inside the C1 {schema,payload}
-      // JSON envelope, decoded by the converter + unwrap SMT per
-      // trigger). The decode-parallelism dial comes from
-      // $GRAFT_WIRE_DECODE_PAR (unset = the pre-r19 single-task
-      // decode), so the same binary measures both sides of the knob.
-      import java.nio.file.{Files, Paths}
-      graft.util.Fs.deleteRecursive(Paths.get(base))
-      val in = s"$base/in"
-      Files.createDirectories(Paths.get(in))
-      seed.write.parquet(s"$base/seed")
-      waveFrames.zipWithIndex.foreach { case (w, i) =>
-        graft.Tables.stageFile(graft.LlmQueries.wireWave(w),
-          Paths.get(in, f"wave$i%02d.parquet"),
-          1000000000000L + i * 60000L)
-      }
-      val q = new com.fasterxml.jackson.databind.ObjectMapper()
-      val dial = sys.env.get("GRAFT_WIRE_DECODE_PAR")
-        .map(v => s""""decodeParallelism":"$v",""").getOrElse("")
-      val spec =
-        s"""{"name":"ladder","source":{"type":"parquet",
-           |  "path":${q.writeValueAsString(in)},
-           |  "wireFormat":"json_envelope",
-           |  "schemaDdl":${q.writeValueAsString(graft.LlmQueries.DocCdcDdl)},
-           |  "keyFields":["after"],$dial
-           |  "topic":"corpus","maxFilesPerTrigger":"1"},
-           |"transforms":[{"type":"extractNewRecordState"}],
-           |"sink":{"type":"admission",
-           |  "path":${q.writeValueAsString(s"$base/gate")},
-           |  "seedPath":${q.writeValueAsString(s"$base/seed")}}}"""
-          .stripMargin
-      spark.conf.set("spark.sql.streaming.numRecentProgressUpdates",
-        (waves + 20).toString)
-      val engine = new graft.pipeline.Engine(spark, s"$base/engine")
-      val query = engine.registerJson(spec)
-      query.processAllAvailable()
-      query.recentProgress.foreach { pr =>
-        if (pr.numInputRows > 0)
-          timings += ((pr.batchId,
-            pr.durationMs.getOrDefault("triggerExecution", -1L).toLong))
-      }
-      engine.delete("ladder")
-    } else
-      graft.LlmQueries.runAdmissionStream(spark, seed, waveFrames,
-        base, fused = mode == "fused", onTrigger = hook)
+    val planes = "semPlanes" -> AdmissionGate.scaledPlaneCount(n).toString
+    val (axes, benchKeys) = mode match {
+      case "fused" => (on("fused"), Nil)
+      case "media" => (on("media"), Nil)
+      case "mediadecont" => (on("media"), Seq("benchMediaPath"))
+      case "full" => (on("fused", "containment"), Seq("benchPath"))
+      case "semantic" =>
+        (on("fused", "containment", "semantic") :+ planes, Seq("benchPath"))
+      case "sink" =>
+        (on("fused", "containment", "semantic", "media") :+ planes,
+          Seq("benchPath", "benchMediaPath"))
+      case _ => (Nil, Nil) // plain, wire
+    }
+    val keys = axes ++ benchKeys.map(_ -> s"$base/bench")
+    val stage = LlmQueries.stageGateFixture(base, seed,
+      if (benchKeys.isEmpty) None
+      else Some(seed.filter(col("doc_id") % 10 === 0)),
+      if (mode == "wire") waveFrames.map(LlmQueries.wireWave(_))
+      else waveFrames)
+    waveFrames.indices.foreach(stage)
+    val timings = LlmQueries.drainAdmissionGate(spark, base,
+      LlmQueries.admissionSpecJson("ladder", base, keys,
+        wire = mode == "wire",
+        decodeParallelism = sys.env.get("GRAFT_WIRE_DECODE_PAR")
+          .filter(_ => mode == "wire")))
     val total = (System.nanoTime() - t0) / 1000000L
     val sorted = timings.sortBy(_._1)
     val perTrigger = sorted.map(_._2)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import graft.operators.CacheScope
+import graft.pipeline.{AdmissionGate, AdmissionGateCore}
 import graft.text.Dedup
 
 /** The incremental streamed-admission contract (w12/w14's r14 scale
@@ -96,7 +97,7 @@ class AdmissionStateSpec extends SparkSpec {
     val base = "target/tmp/admission_fold_spec"
     graft.util.Fs.deleteRecursive(java.nio.file.Paths.get(base))
     val stateDir = s"$base/state"
-    // bootstrap + two admitted batches, exactly the runner's layout
+    // bootstrap + two admitted batches, exactly the gate core's layout
     def art(df: DataFrame) =
       Dedup.admissionArtifacts(df, "doc_id", "text", 3, 16)
     def sh(df: DataFrame) = art(df).select(explode(col("sset")).as("h")).distinct()
@@ -314,7 +315,7 @@ class AdmissionStateSpec extends SparkSpec {
         val a = art(df)
         a.write.parquet(s"$stateDir/$name/art")
         // seed cpost capped within the seed; batches append raw — the
-        // runner's exact layout
+        // the gate core's exact layout
         (if (name == "seed") Dedup.containmentPostings(a, cap)
          else a.select(col("doc_id").as("ref_id"),
              explode(col("sset")).as("h"),
@@ -346,7 +347,7 @@ class AdmissionStateSpec extends SparkSpec {
     val (existing, incoming) = fixture
     val base = "target/tmp/admission_state_spec"
     graft.util.Fs.deleteRecursive(java.nio.file.Paths.get(base))
-    // bootstrap exactly as runAdmissionStream does
+    // bootstrap exactly as AdmissionGateCore.bootstrap does
     existing.write.parquet(s"$base/ref/seed")
     val seedArt = Dedup.admissionArtifacts(existing, "doc_id", "text", 3, 16)
     seedArt.write.parquet(s"$base/state/seed/art")
@@ -357,7 +358,7 @@ class AdmissionStateSpec extends SparkSpec {
       val stateSh = spark.read.parquet(s"$base/state/seed/sh")
       val batchArt = scope.persist(
         Dedup.admissionArtifacts(incoming, "doc_id", "text", 3, 16)).toDF()
-      val verdict = LlmQueries.admissionTriggerVerdict(
+      val verdict = AdmissionGate.triggerVerdict(
         incoming, batchArt, stateArt, stateSh, fused = true)
       val scans = verdict.queryExecution.optimizedPlan.collect {
         case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
@@ -415,7 +416,7 @@ class AdmissionStateSpec extends SparkSpec {
       val bEmb = Seq((batchIds(0), 1L, vec), (batchIds(1), 2L, vec),
           (batchIds(2), 3L, vec))
         .toDF("doc_id", "bucket", "vec")
-      val verdict = LlmQueries.admissionTriggerVerdict(
+      val verdict = AdmissionGate.triggerVerdict(
           incoming, batchArt, stateArt,
           stateArt.select(explode(col("sset")).as("h")).distinct(),
           fused = true, semb = Some((bEmb, sEmb)))
@@ -446,10 +447,16 @@ class AdmissionStateSpec extends SparkSpec {
           concat_ws(" ", reverse(Dedup.tokens(col("text")))).as("text")))
     val waves = Seq(w0, later.filter(col("doc_id") % 4 === 1),
       later.filter(col("doc_id") % 4 === 2), w3)
-    val bootPlanes = Similarity.hyperplanes(2, 64)
-    val out = LlmQueries.runAdmissionStream(spark, seed, waves,
-      base, fused = true, foldThreshold = 1,
-      containment = true, semantic = true, semPlanes = bootPlanes)
+    val core = new AdmissionGateCore(base, fused = true, hasBench = false,
+      containment = true, semantic = true, media = false,
+      hasBenchMedia = false, semPlanes0 = Similarity.hyperplanes(2, 64),
+      foldThreshold = 1)
+    core.bootstrap(spark, seed, None, None)
+    val epoch = graft.text.AdmissionState.acquireWriter(core.stateDir)
+    waves.zipWithIndex.foreach { case (w, id) =>
+      core.applyBatch(spark, epoch, w, id.toLong)
+    }
+    val out = spark.read.parquet(core.outDir)
     // every paraphrase plant whose ORIGINAL was admitted (and is
     // therefore in the embedding state) was caught across the growth
     // folds — originals refused by other legs never entered state, so
@@ -490,7 +497,7 @@ class AdmissionStateSpec extends SparkSpec {
     val foldCp = spark.read.parquet(s"$base/state/fold=${folds.max}/cpost")
     assert(foldCp.exceptAll(rebuilt).isEmpty &&
       rebuilt.exceptAll(foldCp).isEmpty,
-      "runner fold must publish globally re-capped postings")
+      "maintenance fold must publish globally re-capped postings")
   }
 
   test("torn fold: a crash BETWEEN the fold rewrite and the state append resumes to verdicts identical to an uninterrupted run") {
@@ -518,10 +525,10 @@ class AdmissionStateSpec extends SparkSpec {
         seed.filter(col("doc_id") % 30 === 0 && length(col("text")) > 120)
           .select((col("doc_id") + 1000000L).as("doc_id"),
             concat_ws(" ", reverse(Dedup.tokens(col("text")))).as("text"))
-    def mkCore(base: String) = new LlmQueries.AdmissionGateCore(
+    def mkCore(base: String) = new AdmissionGateCore(
       base, fused = true, hasBench = true, containment = true,
       semantic = true, media = true, hasBenchMedia = true,
-      semPlanes0 = Similarity.hyperplanes(2, LlmQueries.Dim))
+      semPlanes0 = Similarity.hyperplanes(2, AdmissionGate.Dim))
     def run(base: String, crash: Boolean): Int = {
       graft.util.Fs.deleteRecursive(java.nio.file.Paths.get(base))
       var core = mkCore(base)
@@ -584,7 +591,7 @@ class AdmissionStateSpec extends SparkSpec {
     // COMPLETED by the time inParallel throws.
     val slowDone = new java.util.concurrent.atomic.AtomicBoolean(false)
     val boom = intercept[IllegalStateException] {
-      LlmQueries.inParallel(Seq(
+      AdmissionGate.inParallel(Seq(
         () => throw new IllegalStateException("fast failure"),
         () => { Thread.sleep(500); slowDone.set(true) }))
     }
@@ -593,7 +600,7 @@ class AdmissionStateSpec extends SparkSpec {
       "inParallel returned while a sibling write was still in flight")
     // multiple failures: the first (in declaration order) propagates
     val boom2 = intercept[RuntimeException] {
-      LlmQueries.inParallel(Seq(
+      AdmissionGate.inParallel(Seq(
         () => { Thread.sleep(200); throw new RuntimeException("second") },
         () => throw new RuntimeException("first-to-fail")))
     }
@@ -615,15 +622,15 @@ class AdmissionStateSpec extends SparkSpec {
     // doc_id renamed: the forked-schema shape the memo must refuse
     Seq((3L, "c")).toDF("other_id", "text")
       .write.parquet(s"$base/d3/$sub")
-    val first = LlmQueries.readStateTable(spark, sub, Seq(s"$base/d1/$sub"))
+    val first = AdmissionGate.readStateTable(spark, sub, Seq(s"$base/d1/$sub"))
     assert(first.schema.fieldNames.toSeq == Seq("doc_id", "text"))
     // same schema in a new dir: verified once, reads fine
-    assert(LlmQueries.readStateTable(spark, sub,
+    assert(AdmissionGate.readStateTable(spark, sub,
       Seq(s"$base/d2/$sub")).count() == 1)
     // forked schema in a new dir: the first read there must refuse
     // loudly instead of silently reading doc_id as null
     val err = intercept[IllegalArgumentException] {
-      LlmQueries.readStateTable(spark, sub,
+      AdmissionGate.readStateTable(spark, sub,
         Seq(s"$base/d3/$sub")).count()
     }
     assert(err.getMessage.contains(sub))

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 
 /** Bucketed co-located join: pre-bucketing both tables on the join key
   * removes the per-query shuffle — the 100 TB answer to repeated joins

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.functions._
 import graft.pipeline.{Cluster, PipelineSpec}
 
 /** Distributed-mode worker group: sticky incremental rebalancing,

@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.functions._
 
 import graft.pipeline.{ConnectServer, Engine}
 

@@ -459,7 +459,7 @@ class EngineSpec extends SparkSpec {
       .newestFold(s"$base/gate/state")
     assert(foldDir.nonEmpty, "batch 7 must have folded seed+b0..b6")
     val nFold = spark.read.parquet(s"${foldDir.get}/emb").count()
-    val expected = graft.LlmQueries.scaledPlaneCount(nFold, floor = 2)
+    val expected = graft.pipeline.AdmissionGate.scaledPlaneCount(nFold, floor = 2)
     assert(expected > 2, s"fixture must force growth (nFold=$nFold)")
     assert(resumed.currentPlaneCount == expected,
       "resume must re-derive the grown dial from the newest fold")
@@ -499,7 +499,7 @@ class EngineSpec extends SparkSpec {
     engine.delete("dial")
   }
 
-  test("L14 admission axis keys: legs require fused, benchMediaPath requires media, semPlanes requires semantic; full set parses") {
+  test("L14 admission axis keys: a media leg registers without fused and flags a planted media dup, benchMediaPath requires media, semPlanes requires semantic; full set parses") {
     val base = Files.createTempDirectory("admaxes").toString
     val engine = new Engine(spark, s"$base/engine")
     def spec(sinkExtra: String) =
@@ -508,10 +508,6 @@ class EngineSpec extends SparkSpec {
          |  "keyFields":["doc_id"],"seqColumn":"doc_id","topic":"c"},
          |"sink":{"type":"admission","path":"$base/gate",
          |  "seedPath":"$base/seed"$sinkExtra}}""".stripMargin
-    // a leg without fused would be silently ignored by the verdict core
-    val e1 = intercept[IllegalArgumentException](
-      engine.registerJson(spec(""","containment":"true"""")))
-    assert(e1.getMessage.contains("fused"))
     val e2 = intercept[IllegalArgumentException](
       engine.registerJson(spec(""","fused":"true","benchMediaPath":"/x"""")))
     assert(e2.getMessage.contains("media=true"))
@@ -524,6 +520,39 @@ class EngineSpec extends SparkSpec {
     assert(p.sink.fused && p.sink.containment && p.sink.semantic &&
       p.sink.media && p.sink.semPlanes.contains(9) &&
       p.sink.benchPath.contains("/b") && p.sink.benchMediaPath.contains("/bm"))
+    // every leg composes without fused: a media-only gate registers and
+    // its fingerprint legs refuse planted media duplicates of seed docs.
+    // +7M preserves both media id seeds (image 1M, audio 700k) and the
+    // vowel swap keeps each payload's length, so both fingerprints
+    // match the seed doc's while the text shingles do not
+    import spark.implicits._
+    val docs = (0 until 150).map { i =>
+      val r = new scala.util.Random(i)
+      (i.toLong, Seq.fill(12 + i % 9)(
+        Seq.fill(5)(('a' + r.nextInt(26)).toChar).mkString).mkString(" "))
+    }.toDF("doc_id", "text")
+    docs.filter(col("doc_id") < 100).write.parquet(s"$base/seed")
+    Files.createDirectories(Paths.get(s"$base/in"))
+    graft.Tables.stageFile(
+      docs.filter(col("doc_id") >= 100 && col("doc_id") < 150)
+        .unionByName(docs.filter(col("doc_id") < 100 &&
+            col("doc_id") % 25 === 0)
+          .select((col("doc_id") + 7000000L).as("doc_id"),
+            translate(col("text"), "aeiou", "uoiea").as("text"))),
+      Paths.get(s"$base/in", "w00.parquet"), 1000000000000L)
+    engine.registerJson(spec(""","media":"true"""")).processAllAvailable()
+    engine.delete("ax")
+    val v = spark.read.parquet(s"$base/gate/out")
+    assert(!v.columns.contains("quality_keep"),
+      "a gate without fused must not grow the quality leg")
+    val plants = v.filter(col("doc_id") >= 7000000L).collect()
+    assert(plants.length == 4)
+    plants.foreach { r =>
+      assert(r.getAs[Boolean]("image_dup") && r.getAs[Boolean]("audio_dup"),
+        s"planted media dup ${r.getAs[Long]("doc_id")} must flag both media legs")
+      assert(!r.getAs[Boolean]("admitted"))
+    }
+    assert(v.filter(col("doc_id") < 7000000L && col("admitted")).count() > 0)
   }
 
   test("L13 admission sink: offset reset wipes the gate root and the next resume re-ingests from scratch") {
@@ -575,7 +604,6 @@ class EngineSpec extends SparkSpec {
   }
 
   test("admission axis config persists at bootstrap: a resume with different axes refuses until an offset reset; omitted semPlanes resumes at the persisted dial") {
-    import org.apache.spark.sql.DataFrame
     val base = Files.createTempDirectory("axpersist").toString
     val in = s"$base/in"; Files.createDirectories(Paths.get(in))
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -627,7 +655,6 @@ class EngineSpec extends SparkSpec {
   }
 
   test("omitted semPlanes derives the corpus-scaled dial at bootstrap and the verdicts hash-match an explicit spec at that dial") {
-    import org.apache.spark.sql.DataFrame
     val baseRoot = Files.createTempDirectory("semdefault").toString
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "text")
@@ -639,7 +666,7 @@ class EngineSpec extends SparkSpec {
     val seed = (0 until 10).map(k =>
         docs.select((col("doc_id") + k * 10000L).as("doc_id"), col("text")))
       .reduce(_ unionByName _)
-    val expected = LlmQueries.scaledPlaneCount(5000L)
+    val expected = graft.pipeline.AdmissionGate.scaledPlaneCount(5000L)
     assert(expected > 8, s"fixture must exceed the legacy default (got $expected)")
     val wave = docs.filter(col("doc_id") >= 100 && col("doc_id") < 200)
       .select((col("doc_id") + 900000L).as("doc_id"), col("text"))

@@ -4,7 +4,6 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
-import graft.model.Connect
 import graft.sinks.LogTable
 import graft.sinks.LogTable.{CommitMode, ManifestCommit, RenameCommit}
 

@@ -333,6 +333,42 @@ class MultimodalSpec extends SparkSpec {
     assert(out(2).getLong(6) == loud.getLong(5))  // amp_sum
   }
 
+  test("openAudio falls back to the full AudioSystem probe on ANY pinned-reader failure: an IOException keeps the m16 quarantine classification") {
+    // a pinned provider that fails with an IOException instead of the
+    // UnsupportedAudioFileException the JDK WAV reader throws — the
+    // fallback must still reach AudioSystem, so the verdict stays the
+    // structural one rather than "whichever provider threw first"
+    val ioFailing = new javax.sound.sampled.spi.AudioFileReader {
+      private def fail = throw new java.io.IOException("provider I/O failure")
+      def getAudioFileFormat(s: java.io.InputStream) = fail
+      def getAudioFileFormat(u: java.net.URL) = fail
+      def getAudioFileFormat(f: java.io.File) = fail
+      def getAudioInputStream(s: java.io.InputStream) = fail
+      def getAudioInputStream(u: java.net.URL) = fail
+      def getAudioInputStream(f: java.io.File) = fail
+    }
+    val docs = Seq((1L, "hello world"), (2L, "y" * 300), (3L, "abc"))
+      .toDF("doc_id", "text")
+    // 1 truncated (header intact), 2 with mangled magic, 3 healthy
+    val corrupted = Multimodal.packAsWav(docs, "doc_id", "text")
+      .withColumn("payload",
+        when(col("media_id") === 1L,
+          expr("substring(payload, 1, 44 + cast(floor((length(payload) - 44) / 2) as int))"))
+          .when(col("media_id") === 2L,
+            concat(lit("X".getBytes("US-ASCII")),
+              expr("substring(payload, 2, length(payload) - 1)")))
+          .otherwise(col("payload")))
+    val expected = Multimodal.extractAudioFeaturesQuarantined(corrupted)
+      .orderBy("media_id").collect().toSeq
+    val viaFailing = corrupted.select("media_id", "payload").orderBy("media_id")
+      .collect().toSeq.map(r => Multimodal.quarantinedAudioRow(r.getLong(0),
+        r.getAs[Array[Byte]](1), Multimodal.openAudioVia(Some(ioFailing), _)))
+    assert(viaFailing.map(_.getString(2)) ==
+      Seq("truncated_payload", "unreadable_container", null))
+    assert(viaFailing == expected,
+      "a pinned-reader IOException must not change any verdict or stat")
+  }
+
   test("packAsY4m writes a genuine YUV4MPEG2 stream (header + FRAME sections)") {
     val docs = Seq((1L, "hello world"), (2L, "z" * 300)).toDF("doc_id", "text")
     val rows = Multimodal.packAsY4m(docs, "doc_id", "text").collect()

@@ -1,8 +1,7 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
-import org.apache.spark.sql.functions._
 import graft.pipeline.Engine
 
 /** Soak test — the reference's CONNECT_DML_TEST pattern

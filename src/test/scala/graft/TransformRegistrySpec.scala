@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.model.Connect
 import graft.pipeline.TransformSpec
