@@ -659,13 +659,8 @@ object ConnectQueries {
     val staged = waves.zipWithIndex.map { case (w, i) => Future {
       val stage = s"$base/stage$i"
       w.coalesce(4).write.mode("overwrite").parquet(stage)
-      val parts = {
-        val st = Files.list(Paths.get(stage))
-        try {
-          import scala.jdk.CollectionConverters._
-          st.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList
-        } finally st.close()
-      }
+      val parts = graft.state.StateDir.children(Paths.get(stage))
+        .filter(_.toString.endsWith(".parquet"))
       require(parts.nonEmpty, s"no parquet parts in $stage")
       (i, parts)
     }}
@@ -1429,13 +1424,9 @@ object ConnectQueries {
     val staged = waves.zipWithIndex.map { case (w, idx) => Future {
       val stage = s"$base/stage$idx"
       w.coalesce(1).write.mode("overwrite").parquet(stage)
-      val part = {
-        val st = Files.list(Paths.get(stage))
-        try {
-          import scala.jdk.CollectionConverters._
-          st.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList
-        } finally st.close()
-      }.headOption.getOrElse(sys.error(s"no parquet part in $stage"))
+      val part = graft.state.StateDir.children(Paths.get(stage))
+        .find(_.toString.endsWith(".parquet"))
+        .getOrElse(sys.error(s"no parquet part in $stage"))
       (idx, part)
     }}
     val t0 = 1000000000000L

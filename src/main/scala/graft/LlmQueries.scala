@@ -1752,7 +1752,7 @@ object LlmQueries {
     val incoming = emb.filter(col("id") >= AdmitBoundary)
     val stream = stageWaveStream(s, base, incoming)
     val idxDir = s"$base/index"
-    val ep = graft.ml.IndexStore.acquireWriter(idxDir)
+    val ep = graft.state.StateDir.acquireWriter(idxDir)
     graft.ml.IndexStore.writeBase(
       Similarity.ivfPqIndex(emb.filter(col("id") < AdmitBoundary), books, cents),
       idxDir, ep)
@@ -1833,13 +1833,13 @@ object LlmQueries {
     val stream = stageWaveStream(s, base,
       emb.filter(col("id") >= AdmitBoundary))
     val idxDir = s"$base/index"
-    val ep = graft.ml.IndexStore.acquireWriter(idxDir)
+    val ep = graft.state.StateDir.acquireWriter(idxDir)
     graft.ml.IndexStore.writeBase(
       Similarity.ivfPqIndex(emb.filter(col("id") < AdmitBoundary), books, cents),
       idxDir, ep)
     admitStream(Similarity.ivfPqIndex(stream, books, cents), idxDir,
       s"$base/ckpt", ep)
-    graft.ml.IndexStore.tombstone(s, idxDir,
+    graft.ml.IndexStore.tombstone(idxDir,
       emb.filter(pmod(col("id"), lit(DeleteMod)) === lit(3)).select("id"), ep)
     // 3 deltas + 1 tombstone batch > 2: the fold applies the delete
     // physically and drains both logs
@@ -1875,13 +1875,13 @@ object LlmQueries {
     val stream = stageWaveStream(s, base,
       emb.filter(col("id") >= AdmitBoundary))
     val idxDir = s"$base/index"
-    val ep = graft.ml.IndexStore.acquireWriter(idxDir)
+    val ep = graft.state.StateDir.acquireWriter(idxDir)
     graft.ml.IndexStore.writeBase(
       Similarity.ivfPqIndex(emb.filter(col("id") < AdmitBoundary), books, cents),
       idxDir, ep)
     admitStream(Similarity.ivfPqIndex(stream, books, cents), idxDir,
       s"$base/ckpt", ep)
-    graft.ml.IndexStore.tombstone(s, idxDir,
+    graft.ml.IndexStore.tombstone(idxDir,
       emb.filter(pmod(col("id"), lit(DeleteMod)) === lit(3)).select("id"), ep)
     // 3 deltas + 1 tombstone > 2 trips the fold; retainVersions=2
     // opens the grace window instead of retiring v0 immediately
@@ -1937,13 +1937,13 @@ object LlmQueries {
     val stream = stageWaveStream(s, base,
       emb.filter(col("id") >= AdmitBoundary))
     val idxDir = s"$base/index"
-    val ep = graft.ml.IndexStore.acquireWriter(idxDir)
+    val ep = graft.state.StateDir.acquireWriter(idxDir)
     graft.ml.IndexStore.writeBase(
       Similarity.ivfPqIndex(emb.filter(col("id") < AdmitBoundary), books, cents),
       idxDir, ep)
     admitStream(Similarity.ivfPqIndex(stream, books, cents), idxDir,
       s"$base/ckpt", ep)
-    graft.ml.IndexStore.tombstone(s, idxDir,
+    graft.ml.IndexStore.tombstone(idxDir,
       emb.filter(pmod(col("id"), lit(DeleteMod)) === lit(3)).select("id"), ep)
     val queries = emb.filter(col("id") < 3 ||
       (col("id") >= AdmitBoundary && col("id") < AdmitBoundary + 2))
@@ -2059,8 +2059,6 @@ object LlmQueries {
    * → three plan frames, each derived from exactly its admission
    * prefix. */
   def streamMaintenancePlans(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
     val cents = trainedCentsBase(s, dir)
     val emb = embFrame(s, dir)
     val base = s"target/tmp/w13_${new java.io.File(dir).getName}"
@@ -2080,13 +2078,9 @@ object LlmQueries {
         // the plan input = seed + labels up to and including THIS
         // trigger; a crashed later attempt's leftover dir never leaks
         // into an earlier batch's replayed plan
-        val listing = Files.list(Paths.get(idxDir))
-        val parts = try listing.iterator().asScala.toList.map(_.toString)
-          .filter { p =>
-            val n = Paths.get(p).getFileName.toString
-            n == "seed" ||
-              (n.startsWith("adm") && n.stripPrefix("adm").toLong <= id)
-          } finally listing.close()
+        val parts = s"$idxDir/seed" +: graft.state.StateDir
+          .numbered(java.nio.file.Paths.get(idxDir), "adm")
+          .collect { case (k, p) if k <= id => p.toString }
         planFromCells(sp, sp.read.parquet(parts: _*).select("cell"))
           .write.mode("overwrite").parquet(s"$plansDir/batch_id=$id")
         ()
@@ -2317,7 +2311,7 @@ object LlmQueries {
     val stream = stageWaveStream(s, base,
       emb.filter(col("id") >= AdmitBoundary))
     val idxDir = s"$base/index"
-    val ep = graft.ml.IndexStore.acquireWriter(idxDir)
+    val ep = graft.state.StateDir.acquireWriter(idxDir)
     graft.ml.IndexStore.writeBase(
       Similarity.ivfPqIndex(emb.filter(col("id") < AdmitBoundary), books, cents),
       idxDir, ep)
@@ -2372,7 +2366,7 @@ object LlmQueries {
     val inc = emb.filter(col("id") >= AdmitBoundary)
     val even = inc.filter(pmod(col("id"), lit(2)) === 0)
     val admStream = stageWaveStream(s, s"$base/admit", even)
-    val ep = graft.ml.IndexStore.acquireWriter(idxDir)
+    val ep = graft.state.StateDir.acquireWriter(idxDir)
     graft.ml.IndexStore.writeBase(
       Similarity.ivfPqIndex(emb.filter(col("id") < AdmitBoundary), books, cents),
       idxDir, ep)
@@ -2474,7 +2468,7 @@ object LlmQueries {
     val stream = stageWaveStream(s, base,
       emb.filter(col("id") >= AdmitBoundary))
     val idxDir = s"$base/index"
-    val ep = graft.ml.IndexStore.acquireWriter(idxDir)
+    val ep = graft.state.StateDir.acquireWriter(idxDir)
     graft.ml.IndexStore.writeBase(
       Similarity.ivfPqIndex(emb.filter(col("id") < AdmitBoundary), books, cents),
       idxDir, ep)
@@ -2605,7 +2599,7 @@ object LlmQueries {
     val stream = stageWaveStream(s, base,
       emb.filter(col("id") >= AdmitBoundary))
     val idxDir = s"$base/index"
-    val ep = graft.ml.IndexStore.acquireWriter(idxDir)
+    val ep = graft.state.StateDir.acquireWriter(idxDir)
     graft.ml.IndexStore.writeBase(
       Similarity.ivfPqResidualIndex(
         emb.filter(col("id") < AdmitBoundary), books, cents),

@@ -89,23 +89,20 @@ object Tables {
   def stageFile(df: DataFrame, dsts: Seq[java.nio.file.Path],
                 mtimeMillis: Long): Unit = {
     import java.nio.file.{Files, StandardCopyOption}
-    import scala.jdk.CollectionConverters._
     val head = dsts.head
     val tmp = head.resolveSibling("." + head.getFileName.toString + ".stage")
     df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = {
-      val st = Files.list(tmp)
-      try st.iterator().asScala.find(_.toString.endsWith(".parquet")).get
-      finally st.close()
-    }
+    val part = graft.state.StateDir.children(tmp)
+      .find(_.toString.endsWith(".parquet")).get
     dsts.zipWithIndex.foreach { case (dst, i) =>
       val hidden = dst.resolveSibling("." + dst.getFileName.toString + ".tmp")
-      if (i < dsts.size - 1)
-        Files.copy(part, hidden, StandardCopyOption.REPLACE_EXISTING)
-      else Files.move(part, hidden, StandardCopyOption.REPLACE_EXISTING)
-      Files.setLastModifiedTime(hidden,
-        java.nio.file.attribute.FileTime.fromMillis(mtimeMillis))
-      Files.move(hidden, dst, StandardCopyOption.ATOMIC_MOVE)
+      graft.state.StateDir.publish(hidden, dst) { h =>
+        if (i < dsts.size - 1)
+          Files.copy(part, h, StandardCopyOption.REPLACE_EXISTING)
+        else Files.move(part, h, StandardCopyOption.REPLACE_EXISTING)
+        Files.setLastModifiedTime(h,
+          java.nio.file.attribute.FileTime.fromMillis(mtimeMillis))
+      }
     }
     graft.util.Fs.deleteRecursive(tmp)
   }
@@ -156,17 +153,18 @@ object Tables {
    * files a session stages more than once (r18: bench reps and sibling
    * gates re-derived identical wave frames per invocation; deriving
    * once and copying keeps the same hidden-tmp → stamp-while-invisible
-   * → single-ATOMIC_MOVE publish discipline, so a live
+   * → single atomic rename publish discipline, so a live
    * FileStreamSource still can never list a torn file or a pre-final
    * mtime). */
   def stageCopy(src: java.nio.file.Path, dst: java.nio.file.Path,
                 mtimeMillis: Long): Unit = {
     import java.nio.file.{Files, StandardCopyOption}
     val hidden = dst.resolveSibling("." + dst.getFileName.toString + ".tmp")
-    Files.copy(src, hidden, StandardCopyOption.REPLACE_EXISTING)
-    Files.setLastModifiedTime(hidden,
-      java.nio.file.attribute.FileTime.fromMillis(mtimeMillis))
-    Files.move(hidden, dst, StandardCopyOption.ATOMIC_MOVE)
+    graft.state.StateDir.publish(hidden, dst) { h =>
+      Files.copy(src, h, StandardCopyOption.REPLACE_EXISTING)
+      Files.setLastModifiedTime(h,
+        java.nio.file.attribute.FileTime.fromMillis(mtimeMillis))
+    }
   }
 
   /** The converted events frame, memoized per (context, dir): building

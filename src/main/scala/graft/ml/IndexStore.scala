@@ -3,8 +3,8 @@ package graft.ml
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.StreamingQuery
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Path, Paths}
+import graft.state.StateDir
 
 /**
  * Storage layout + maintenance for a served ANN index: a VERSIONED BASE
@@ -61,17 +61,9 @@ object IndexStore {
   /** Live base versions (ascending): parquet committed (_SUCCESS) AND
    * fold marker present. */
   private def versions(dir: String): Seq[(Int, Path)] =
-    if (!Files.isDirectory(basePath(dir))) Nil
-    else {
-      val listing = Files.list(basePath(dir))
-      val entries = try listing.iterator().asScala.toList finally listing.close()
-      entries
-        .filter(_.getFileName.toString.startsWith("v="))
-        .map(p => p.getFileName.toString.stripPrefix("v=").toInt -> p)
-        .filter { case (_, p) =>
-          Files.exists(p.resolve("_SUCCESS")) && Files.exists(p.resolve("_folded"))
-        }
-        .sortBy(_._1)
+    StateDir.numbered(basePath(dir), "v=").collect {
+      case (v, p) if Files.exists(p.resolve("_SUCCESS")) &&
+        Files.exists(p.resolve("_folded")) => v.toInt -> p
     }
 
   private def writeVersion(df: DataFrame, dir: String, v: Int,
@@ -79,22 +71,17 @@ object IndexStore {
                            preCommit: () => Unit = () => ()): Path = {
     val target = basePath(dir).resolve(s"v=$v")
     df.write.mode("overwrite").parquet(target.toString)
-    // the marker lands AFTER the parquet commit, and ATOMICALLY: a bare
-    // write could crash mid-way and leave a TRUNCATED fold list beside a
-    // committed _SUCCESS — a live version whose missing names count as
-    // "unfolded" and get served twice (once from the delta file, once
-    // merged into the base). Staging to a tmp name and renaming means
-    // the version becomes visible to `versions` only with its COMPLETE
-    // fold list in place; a crash leaves `_folded.tmp`, which no reader
-    // looks at, and the retried compaction overwrites the whole dir.
-    val tmp = target.resolve("_folded.tmp")
-    Files.write(tmp, folded.mkString("\n").getBytes("UTF-8"))
-    // `preCommit` is the fenced verbs' last-instant re-check: it runs
-    // with the new version fully staged but still INVISIBLE (no
-    // `_folded`), so a throw here aborts the fold with the store
-    // unmoved — the zombie window really is the one rename below
-    preCommit()
-    Files.move(tmp, target.resolve("_folded"), StandardCopyOption.ATOMIC_MOVE)
+    // the marker lands AFTER the parquet commit, through the substrate's
+    // staged publish: a bare write could crash mid-way and leave a
+    // TRUNCATED fold list beside a committed _SUCCESS — a live version
+    // whose missing names count as "unfolded" and get served twice. The
+    // version becomes visible to `versions` only with its COMPLETE fold
+    // list in place; a crash leaves `_folded.tmp`, which no reader looks
+    // at, and the retried compaction overwrites the whole dir.
+    // `preCommit` is the fenced verbs' last-instant re-check, run with
+    // the new version fully staged but still INVISIBLE (no `_folded`)
+    StateDir.publish(target.resolve("_folded.tmp"), target.resolve("_folded"),
+      preCommit)(Files.write(_, folded.mkString("\n").getBytes("UTF-8")))
     target
   }
 
@@ -109,10 +96,11 @@ object IndexStore {
 
   /** [[writeBase]] under a fencing token: a superseded bootstrap job
    * refuses instead of racing the new holder's store creation. Claim
-   * the writer role FIRST ([[acquireWriter]] on the same dir), then
-   * bootstrap — the epoch dir and the base land under one root. */
+   * the writer role FIRST ([[graft.state.StateDir.acquireWriter]] on
+   * the same dir), then bootstrap — the lease and the base land under
+   * one root. */
   def writeBase(df: DataFrame, dir: String, epoch: Long): Unit = {
-    fence(dir, epoch)
+    StateDir.fence(dir, epoch)
     writeBase(df, dir)
   }
 
@@ -169,18 +157,8 @@ object IndexStore {
 
   /** All `adm=b<id>` batch dirs present under the delta root (torn ones
    * included — callers filter liveness). */
-  private def admDirsPresent(dir: String): Seq[(Long, Path)] = {
-    val d = Paths.get(deltaDir(dir))
-    if (!Files.isDirectory(d)) Nil
-    else {
-      val listing = Files.list(d)
-      val entries = try listing.iterator().asScala.toList finally listing.close()
-      entries
-        .filter(_.getFileName.toString.startsWith("adm=b"))
-        .map(p => p.getFileName.toString.stripPrefix("adm=b").toLong -> p)
-        .sortBy(_._1)
-    }
-  }
+  private def admDirsPresent(dir: String): Seq[(Long, Path)] =
+    StateDir.numbered(Paths.get(deltaDir(dir)), "adm=b")
 
   /** Live (committed, `_SUCCESS`-marked) admission batches not folded
    * into the GIVEN version. */
@@ -207,9 +185,8 @@ object IndexStore {
    * interleaving one delta log) this fence exists for.
    *
    * The checkpoint is part of the store's identity, ENFORCED: the
-   * first admit records the checkpoint's canonical path as a
-   * `writers/ckpt=<digest>` marker (mkdir-atomic, like the epoch
-   * claim), and every later admit refuses a DIFFERENT checkpoint —
+   * first admit binds it ([[graft.state.StateDir.bindCheckpoint]]),
+   * and every later admit refuses a DIFFERENT checkpoint at entry —
    * a fresh/foreign checkpoint restarts batch ids at 0 and would
    * silently replace committed batches with different rows (the
    * two-checkpoints-one-log race). A rescheduled holder resumes the
@@ -221,12 +198,12 @@ object IndexStore {
    */
   def admit(encoded: DataFrame, dir: String, checkpoint: String,
             epoch: Long): StreamingQuery = {
-    fence(dir, epoch)
-    bindCheckpoint(dir, checkpoint)
+    StateDir.fence(dir, epoch)
+    StateDir.bindCheckpoint(dir, checkpoint)
     encoded.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        fence(dir, epoch)
+        StateDir.fence(dir, epoch)
         // belt-and-suspenders behind the identity bind (a store written
         // before binding existed): an id already in the live fold list
         // would land rows in a vacuum-doomed dir — refuse loudly.
@@ -257,52 +234,6 @@ object IndexStore {
       }.start()
   }
 
-  /** The store-side CHECKPOINT IDENTITY — recorded on the first admit
-   * as a `writers/ckpt=<md5(canonical path)>` dir (mkdir-atomic: two
-   * racing first admits with different checkpoints cannot both bind;
-   * the loser removes its claim and refuses). Every admit thereafter
-   * must present the same checkpoint — a fresh or foreign checkpoint
-   * refuses HERE, at entry, before any batch can overwrite committed
-   * `adm=b<id>` dirs with different rows. */
-  private def bindCheckpoint(dir: String, checkpoint: String): Unit = {
-    Files.createDirectories(writersPath(dir))
-    // URI-aware identity (graft.util.Fs.checkpointCanon): an
-    // `hdfs://`/`s3a://` location normalizes structurally instead of
-    // resolving against the process CWD — the same logical checkpoint
-    // binds identically across working directories
-    val canon = graft.util.Fs.checkpointCanon(checkpoint)
-    val mine = "ckpt=" + graft.util.Fs.checkpointDigest(checkpoint)
-    def bound: Seq[String] = {
-      val listing = Files.list(writersPath(dir))
-      try listing.iterator().asScala.toList.map(_.getFileName.toString)
-        .filter(_.startsWith("ckpt=")).sorted
-      finally listing.close()
-    }
-    if (!bound.contains(mine)) {
-      require(bound.isEmpty,
-        s"store $dir is bound to a different admission checkpoint " +
-          s"(${bound.mkString(", ")}): a fresh checkpoint would restart " +
-          "batch ids and replace committed admission batches — resume " +
-          "the store's original checkpoint")
-      try Files.createDirectory(writersPath(dir).resolve(mine))
-      catch { case _: java.nio.file.FileAlreadyExistsException => () }
-      val now = bound
-      if (now != Seq(mine)) {
-        // a first-bind race against a DIFFERENT checkpoint: withdraw
-        // our claim and refuse. (If both racers observe each other,
-        // both withdraw and both refuse — fail-closed; the next admit
-        // binds a now-empty store cleanly. Two concurrent first admits
-        // with different checkpoints is already a deployment error.)
-        Files.deleteIfExists(writersPath(dir).resolve(mine))
-        require(false, s"store $dir was concurrently bound to a " +
-          s"different admission checkpoint (${now.mkString(", ")})")
-      }
-      // informative: the canonical path behind the digest (best-effort)
-      Files.write(writersPath(dir).resolve(mine).resolve("path"),
-        canon.getBytes("UTF-8"))
-    }
-  }
-
   // ---- tombstones (merge-on-read deletes) --------------------------------
 
   private def tombsPath(dir: String): Path = Paths.get(dir, "tombs")
@@ -311,15 +242,7 @@ object IndexStore {
    * callers filter liveness themselves; [[tombstone]] needs the full
    * list so a crashed batch's number is never reused). */
   private def tombDirsPresent(dir: String): Seq[(Int, Path)] =
-    if (!Files.isDirectory(tombsPath(dir))) Nil
-    else {
-      val listing = Files.list(tombsPath(dir))
-      val entries = try listing.iterator().asScala.toList finally listing.close()
-      entries
-        .filter(_.getFileName.toString.startsWith("t="))
-        .map(p => p.getFileName.toString.stripPrefix("t=").toInt -> p)
-        .sortBy(_._1)
-    }
+    StateDir.numbered(tombsPath(dir), "t=").map { case (k, p) => k.toInt -> p }
 
   private def tombMarker(k: Int): String = s"tombs/t=$k"
 
@@ -335,7 +258,7 @@ object IndexStore {
 
   /** Pending tombstone batches the live view still has to anti-join —
    * counts toward `compact`'s per-read merge-cost threshold. */
-  def unfoldedTombstoneBatches(spark: SparkSession, dir: String): Seq[String] =
+  def unfoldedTombstoneBatches(dir: String): Seq[String] =
     versions(dir).lastOption match {
       case None => Nil
       case Some((_, p)) => unfoldedTombs(dir, p).map(_.toString)
@@ -351,8 +274,7 @@ object IndexStore {
    * idempotent at the row level. Unfenced form is package-private (a
    * zombie must not bypass the fence by calling the old surface);
    * production callers use the epoch overload. */
-  private[graft] def tombstone(spark: SparkSession, dir: String,
-                               ids: DataFrame): Unit = {
+  private[graft] def tombstone(dir: String, ids: DataFrame): Unit = {
     val vs = versions(dir)
     require(vs.nonEmpty, s"no live base version under $dir")
     val present = tombDirsPresent(dir).map(_._1)
@@ -491,63 +413,19 @@ object IndexStore {
       .toSeq.sorted
   }
 
-  // ---- writer fencing (the storage half of L6's single-writer rule) ------
-
-  private def writersPath(dir: String): Path = Paths.get(dir, "writers")
-
-  private def epochsPresent(dir: String): Seq[Long] =
-    if (!Files.isDirectory(writersPath(dir))) Nil
-    else {
-      val listing = Files.list(writersPath(dir))
-      val entries = try listing.iterator().asScala.toList finally listing.close()
-      entries.map(_.getFileName.toString)
-        .filter(_.startsWith("epoch="))
-        .map(_.stripPrefix("epoch=").toLong)
-        .sorted
-    }
-
-  /** Claim the writer role, superseding every prior holder: returns a
-   * monotonically increasing FENCING TOKEN (the Kafka-producer-epoch /
-   * lease-epoch design). The claim is an atomic `createDirectory` — two
-   * racers both computing epoch N collide on the mkdir and the loser
-   * retries at N+1, so epochs are never shared. A prior writer is not
-   * notified; it discovers it is a ZOMBIE when its next fenced verb
-   * ([[compact]]/[[tombstone]] with its stale token) refuses — exactly
-   * the "fail the zombie's next action" semantics a 100 TB deployment
-   * needs when a maintenance job is rescheduled while its predecessor
-   * is stuck but not dead. */
-  @scala.annotation.tailrec
-  def acquireWriter(dir: String): Long = {
-    Files.createDirectories(writersPath(dir))
-    val next = epochsPresent(dir).lastOption.getOrElse(-1L) + 1L
-    val claimed =
-      try { Files.createDirectory(writersPath(dir).resolve(s"epoch=$next")); true }
-      catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    if (claimed) next else acquireWriter(dir)
-  }
-
-  /** Refuse a verb from a superseded writer. Checked at verb entry AND
-   * re-checked immediately before each commit point — [[compactCore]]
-   * re-fences right before the new version's marker move and again
-   * before its vacuum deletions, [[admit]] re-fences before every
-   * micro-batch's write — so a zombie that lost the role mid-verb
-   * aborts with the store unmoved. What remains is the standard
-   * fencing residual every lease design carries: a supersession landing
-   * between the final re-check and the (single, atomic)
-   * marker/`_SUCCESS` commit — the window is one rename wide, and the
-   * NEXT action from the zombie fails here deterministically. */
-  private def fence(dir: String, epoch: Long): Unit = {
-    val current = epochsPresent(dir).lastOption.getOrElse(-1L)
-    require(current == epoch,
-      s"writer fenced: epoch $epoch superseded by $current under $dir")
-  }
+  // ---- fenced verbs (the storage half of L6's single-writer rule) ---------
+  //
+  // Claim the writer role with `graft.state.StateDir.acquireWriter`
+  // on the store dir; every verb below takes the returned fencing token
+  // and refuses through `StateDir.fence` at entry — and, for compaction
+  // and cutover, again as the publish's `preCommit` and before the
+  // vacuum deletions — once a newer holder claimed the role.
 
   /** [[tombstone]] under a fencing token: a superseded writer's delete
    * refuses instead of corrupting the log. */
-  def tombstone(spark: SparkSession, dir: String, ids: DataFrame,
-                epoch: Long): Unit = {
-    fence(dir, epoch)
-    tombstone(spark, dir, ids)
+  def tombstone(dir: String, ids: DataFrame, epoch: Long): Unit = {
+    StateDir.fence(dir, epoch)
+    tombstone(dir, ids)
   }
 
   /** [[compact]] under a fencing token: a superseded maintenance job
@@ -557,16 +435,16 @@ object IndexStore {
    * the staged version invisible and nothing deleted). */
   def compact(spark: SparkSession, dir: String, maxDeltaFiles: Int,
               retainVersions: Int, epoch: Long): Boolean = {
-    fence(dir, epoch)
+    StateDir.fence(dir, epoch)
     compactCore(spark, dir, maxDeltaFiles, retainVersions,
-      () => fence(dir, epoch))
+      () => StateDir.fence(dir, epoch))
   }
 
   /** [[vacuum]] under a fencing token: a superseded maintenance job
    * cannot retire grace-window versions/files the new holder's pinned
    * readers still resolve. */
   def vacuum(dir: String, retainVersions: Int, epoch: Long): Unit = {
-    fence(dir, epoch)
+    StateDir.fence(dir, epoch)
     vacuum(dir, retainVersions)
   }
 
@@ -609,7 +487,7 @@ object IndexStore {
                                  rebuilt: DataFrame, retainVersions: Int,
                                  epoch: Long,
                                  afterSnapshot: () => Unit): Int = {
-    fence(dir, epoch)
+    StateDir.fence(dir, epoch)
     val vs = versions(dir)
     require(vs.nonEmpty, s"no live base version under $dir")
     val (pv, pdir) = vs.last
@@ -620,7 +498,7 @@ object IndexStore {
     writeVersion(rebuilt, dir, pv + 1,
       foldListFor(pdir, pending, admB, tombs),
       preCommit = () => {
-        fence(dir, epoch)
+        StateDir.fence(dir, epoch)
         val nowP = unfoldedFrom(spark, dir, pdir)
         val nowA = unfoldedAdm(dir, pdir)
         val nowT = unfoldedTombs(dir, pdir)
@@ -630,7 +508,7 @@ object IndexStore {
             "publishing would double-serve every row it does) — quiesce " +
             "the admission stream, rebuild, and retry")
       })
-    fence(dir, epoch)
+    StateDir.fence(dir, epoch)
     vacuum(dir, retainVersions)
     pv + 1
   }

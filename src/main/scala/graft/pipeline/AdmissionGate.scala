@@ -497,7 +497,7 @@ private[graft] final class AdmissionGateCore(
                  batch: DataFrame, id: Long): Unit =
     CacheScope.withScope { implicit scope =>
       val b = scope.persist(batch).toDF()
-      AdmissionState.guard(stateDir, epoch)
+      graft.state.StateDir.fence(stateDir, epoch)
       // self-driving state maintenance (the LogTable auto-compaction
       // move) runs at the HEAD of the trigger (r18): once the
       // unfolded tail exceeds the threshold, fold everything strictly

@@ -16,15 +16,16 @@ import graft.ml.Similarity
  * first-class [[PipelineSpec]]:
  * registrable via [[ConnectServer]], pausable, resumable from the
  * checkpoint, deletable — with the lifecycle verbs mapping onto the
- * fenced [[graft.text.AdmissionState]] contract:
+ * fenced [[graft.text.AdmissionState]] contract, whose lease and bind
+ * are the [[graft.state.StateDir]] substrate's:
  *
  *  - **register / resume** acquire the admission-writer epoch
- *    ([[graft.text.AdmissionState.acquireWriter]]) — a paused-then-
+ *    ([[graft.state.StateDir.acquireWriter]]) — a paused-then-
  *    resumed pipeline supersedes its previous incarnation, so a zombie
  *    query (e.g. a stop that raced a trigger) refuses its next state
  *    append deterministically instead of interleaving;
  *  - **the checkpoint identity binds to the state dir**
- *    ([[graft.text.AdmissionState.bindCheckpoint]]) — pointing a
+ *    ([[graft.state.StateDir.bindCheckpoint]]) — pointing a
  *    different pipeline name (= different checkpoint) at the same gate
  *    root refuses at entry, because fresh batch ids would overwrite
  *    committed `b<id>` state;

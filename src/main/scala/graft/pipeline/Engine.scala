@@ -3,7 +3,6 @@ package graft.pipeline
 import java.nio.file.{Files, Paths}
 
 import scala.collection.concurrent.TrieMap
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -11,6 +10,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.model.Connect
 import graft.sinks.MergeSink
+import graft.state.StateDir
 
 /**
  * L1-L8 — the Connect-worker analog: registers pipeline specs, runs each
@@ -178,15 +178,8 @@ final class Engine(spark: SparkSession, root: String) extends ConnectRuntime {
    * one id ahead of what actually applied. */
   def latestBatchId(name: String): Option[Long] = {
     entry(name) // unknown pipeline -> NoSuchElementException (404)
-    val dir = Paths.get(checkpointDir(name), "commits")
-    if (!Files.isDirectory(dir)) None
-    else {
-      val s = Files.list(dir)
-      try s.iterator().asScala
-        .flatMap(p => p.getFileName.toString.toLongOption)
-        .maxOption
-      finally s.close()
-    }
+    StateDir.numbered(Paths.get(checkpointDir(name), "commits"), "")
+      .lastOption.map(_._1)
   }
 
   private def entry(name: String): Entry =
@@ -451,9 +444,8 @@ final class Engine(spark: SparkSession, root: String) extends ConnectRuntime {
         // set's verdict per batch — the library's only caller of
         // AdmissionGateCore.applyBatch, serving every admission gate
         val core = AdmissionSink.openGate(spark, sink)
-        val epoch = graft.text.AdmissionState.acquireWriter(s"${sink.path}/state")
-        graft.text.AdmissionState.bindCheckpoint(s"${sink.path}/state",
-          checkpointDir(spec.name))
+        val epoch = StateDir.acquireWriter(s"${sink.path}/state")
+        StateDir.bindCheckpoint(s"${sink.path}/state", checkpointDir(spec.name))
         val tolerant = sink.errorsTolerance == "all"
         writer("update").foreachBatch { (batch: DataFrame, id: Long) =>
           if (tolerant) {
@@ -673,10 +665,8 @@ object TableSink {
     // merge would silently run against an empty snapshot
     if (!Files.exists(statePath) && Files.exists(old))
       Files.move(old, statePath)
-    val hasState = Files.exists(statePath) && {
-      val s = Files.list(statePath)
-      try s.anyMatch(p => p.toString.endsWith(".parquet")) finally s.close()
-    }
+    val hasState =
+      StateDir.children(statePath).exists(_.toString.endsWith(".parquet"))
     // schema-as-a-stream (Debezium history-topic analog): record the
     // CREATE on first materialization and every drift event after
     val table = statePath.getFileName.toString

@@ -2,11 +2,10 @@ package graft.sinks
 
 import java.nio.file.{Files, Path, Paths}
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.state.StateDir
 import graft.util.Fs
 
 /**
@@ -26,7 +25,8 @@ import graft.util.Fs
  *    like every other graft merge path).
  *
  * Two commit protocols behind one API, chosen per table at creation
- * ([[CommitMode]]) and detected from the layout afterwards:
+ * ([[CommitMode]]) and detected from the layout afterwards; both
+ * commit through the [[graft.state.StateDir.publish]] staged publish:
  *
  *  - [[RenameCommit]] (default; POSIX/HDFS): write to a hidden temp
  *    dir, then ONE atomic directory rename to `v%08d` — a version
@@ -71,19 +71,12 @@ object LogTable {
   private def modeOf(path: String): CommitMode =
     if (Files.isDirectory(manifestDir(path))) ManifestCommit else RenameCommit
 
-  private def listDir(p: Path): Seq[Path] =
-    if (!Files.isDirectory(p)) Seq.empty
-    else {
-      val s = Files.list(p)
-      try s.iterator().asScala.toSeq finally s.close()
-    }
-
   private def versionList(path: String): Seq[Version] = modeOf(path) match {
     case RenameCommit =>
-      listDir(Paths.get(path)).flatMap { p =>
+      StateDir.children(Paths.get(path)).flatMap { p =>
         p.getFileName.toString match {
           case VersionRe(n) =>
-            val marker = listDir(p).map(_.getFileName.toString).collectFirst {
+            val marker = StateDir.children(p).map(_.getFileName.toString).collectFirst {
               case BatchMarkerRe(id) => id.toLong
             }
             Some(Version(n.toInt, p, marker))
@@ -91,7 +84,7 @@ object LogTable {
         }
       }.sortBy(_.n)
     case ManifestCommit =>
-      listDir(manifestDir(path)).flatMap { m =>
+      StateDir.children(manifestDir(path)).flatMap { m =>
         m.getFileName.toString match {
           case ManifestRe(n) =>
             // a real JSON parse, not a regex: a future field whose value
@@ -240,14 +233,13 @@ object LogTable {
     mode match {
       case RenameCommit =>
         Files.createDirectories(Paths.get(path))
-        val tmp = Paths.get(path, f".tmp-v$n%08d")
-        df.write.mode("overwrite").parquet(tmp.toString)
-        // the marker rides inside the dir so the atomic rename commits it
-        // with the data; the leading underscore hides it from parquet
-        batchId.foreach(id =>
-          Files.createFile(tmp.resolve(s"_batchid-$id")))
-        Files.move(tmp, Paths.get(path, f"v$n%08d"),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        StateDir.publish(Paths.get(path, f".tmp-v$n%08d"),
+            Paths.get(path, f"v$n%08d")) { tmp =>
+          df.write.mode("overwrite").parquet(tmp.toString)
+          // the marker rides inside the dir so the atomic rename commits
+          // it with the data; the leading underscore hides it from parquet
+          batchId.foreach(id => Files.createFile(tmp.resolve(s"_batchid-$id")))
+        }
       case ManifestCommit =>
         // data lands at its FINAL path, unreferenced (overwrite absorbs
         // a crashed earlier attempt at the same version)
@@ -259,10 +251,8 @@ object LogTable {
           batchId.map(id => s""","batchId":$id""").getOrElse("") + "}"
         // one small object IS the commit: on a real store this is a
         // single PUT; locally an atomic file move stands in for it
-        val tmp = mdir.resolve(f".v$n%08d.json.tmp")
-        Files.writeString(tmp, body)
-        Files.move(tmp, mdir.resolve(f"v$n%08d.json"),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        StateDir.publish(mdir.resolve(f".v$n%08d.json.tmp"),
+          mdir.resolve(f"v$n%08d.json"))(Files.writeString(_, body))
     }
 
   /** Remove debris a crashed writer left behind: rename mode sweeps
@@ -272,12 +262,12 @@ object LogTable {
   private def sweepOrphans(path: String, vs: Seq[Version],
                            mode: CommitMode): Unit = mode match {
     case RenameCommit =>
-      listDir(Paths.get(path))
+      StateDir.children(Paths.get(path))
         .filter(_.getFileName.toString.startsWith(".tmp-v"))
         .foreach(Fs.deleteRecursive)
     case ManifestCommit =>
       val referenced = vs.map(_.dir.getFileName.toString).toSet
-      listDir(Paths.get(path)).foreach { p =>
+      StateDir.children(Paths.get(path)).foreach { p =>
         p.getFileName.toString match {
           case d @ DataDirRe(_) if !referenced(d) => Fs.deleteRecursive(p)
           case _ => ()

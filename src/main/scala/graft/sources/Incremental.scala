@@ -223,18 +223,16 @@ final class WatermarkStore(dir: String) {
     }
   }
 
-  /** Atomic save (temp file + ATOMIC_MOVE): a crash mid-write leaves the
-   * previous offset intact, never a torn file (the reference persists
-   * offsets durably in the replicated connect-offsets topic). */
+  /** Atomic save (the [[graft.state.StateDir.publish]] staged publish,
+   * replacing the previous file): a crash mid-write leaves the previous
+   * offset intact, never a torn file (the reference persists offsets
+   * durably in the replicated connect-offsets topic). */
   def save(table: String, w: Incremental.Watermark): Unit = {
     val parts = Seq(
       w.ts.map(t => s""""ts": "$t""""),
       w.inc.map(i => s""""inc": "$i"""")).flatten
-    val tmp = Paths.get(dir, s".$table.offset.json.tmp")
-    Files.writeString(tmp, parts.mkString("{", ", ", "}"))
-    Files.move(tmp, path(table),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    graft.state.StateDir.publish(Paths.get(dir, s".$table.offset.json.tmp"),
+      path(table))(Files.writeString(_, parts.mkString("{", ", ", "}")))
   }
 
   /** Targeted offset reset (L4): the null-to-connect-offsets analog. */

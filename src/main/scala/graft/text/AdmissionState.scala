@@ -1,8 +1,8 @@
 package graft.text
 
 import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Path, Paths}
+import graft.state.StateDir
 
 /**
  * The admission-state STORAGE layout of the admission gate
@@ -15,26 +15,26 @@ import scala.jdk.CollectionConverters._
  * small-files problem, the same one [[graft.ml.IndexStore]] folds away
  * for the vector delta log. [[fold]] is that compaction verb applied
  * here: seed + `b<=upTo` collapse into ONE `fold=<upTo>` dir (staged
- * dot-prefixed, published by a single atomic rename — a crash leaves
- * an invisible `.tmp`), and [[parts]] resolves the newest fold plus
- * the unfolded tail.
+ * dot-prefixed and published by the substrate's atomic rename — a
+ * crash leaves an invisible `.tmp`), and [[parts]] resolves the newest
+ * fold plus the unfolded tail.
  *
- * Concurrency contract (the [[graft.ml.IndexStore.compact]] shape),
- * ENFORCED by the same two mechanisms as the vector store:
+ * Concurrency contract: the [[graft.state.StateDir]] writer lease and
+ * checkpoint bind, the same two mechanisms as the vector store:
  *
  *  1. **Epoch fencing** ([[acquireWriter]] / the fenced [[fold]] and
- *     [[guard]]): the admission-writer role is a mkdir-atomic
- *     monotonically-increasing lease under `writers/epoch=<n>`. A
- *     rescheduled job acquires the next epoch; the superseded job's
- *     next fold or state append refuses deterministically with the
- *     state unmoved — a stale job can no longer retire `b<id>` dirs a
- *     newer job's trigger is about to read.
- *  2. **Checkpoint-identity bind** ([[bindCheckpoint]]): the first
- *     append records the stream checkpoint's canonical identity as a
- *     `writers/ckpt=<digest>` marker; a later job pointing a FRESH or
- *     foreign checkpoint at the same `stateDir` refuses at entry —
- *     fresh checkpoints restart batch ids at 0 and would silently
- *     overwrite committed `b<id>` state with different rows.
+ *     `StateDir.fence` before a state append): the admission-writer
+ *     role is the substrate's writer lease. A rescheduled job acquires
+ *     the next epoch; the superseded job's next fold or state append
+ *     refuses deterministically with the state unmoved — a stale job
+ *     can no longer retire `b<id>` dirs a newer job's trigger is about
+ *     to read.
+ *  2. **Checkpoint-identity bind** (`StateDir.bindCheckpoint`): the
+ *     admission sink binds the stream checkpoint at registration; a
+ *     later job pointing a FRESH or foreign checkpoint at the same
+ *     `stateDir` refuses at entry — fresh checkpoints restart batch ids
+ *     at 0 and would silently overwrite committed `b<id>` state with
+ *     different rows.
  *
  * Within one holder, fold still runs in a maintenance window — either
  * the stream is quiesced, or `upTo` is strictly below the stream's
@@ -46,22 +46,14 @@ import scala.jdk.CollectionConverters._
  */
 object AdmissionState {
 
-  private def list(stateDir: String): Seq[Path] = {
-    val d = Paths.get(stateDir)
-    if (!Files.isDirectory(d)) Nil
-    else {
-      val listing = Files.list(d)
-      try listing.iterator().asScala.toList finally listing.close()
-    }
-  }
+  private def list(stateDir: String): Seq[Path] =
+    StateDir.children(Paths.get(stateDir))
 
   private def batchId(name: String): Option[Long] =
-    if (name.startsWith("b") && name.drop(1).forall(_.isDigit))
-      Some(name.drop(1).toLong) else None
+    StateDir.numberAfter(name, "b")
 
   private def foldId(name: String): Option[Long] =
-    if (name.startsWith("fold=")) Some(name.stripPrefix("fold=").toLong)
-    else None
+    StateDir.numberAfter(name, "fold=")
 
   /** The newest committed fold dir, if any — a RESUMED gate re-derives
    * its grown dials (the semantic plane count) from this dir's row
@@ -129,15 +121,9 @@ object AdmissionState {
       val mk: (String, Seq[String]) => org.apache.spark.sql.DataFrame =
         if (build != null) build
         else (sub, parts) => spark.read.parquet(parts.map(_ + s"/$sub"): _*)
-      subs.foreach { sub =>
-        mk(sub, inputs).write.parquet(tmp.resolve(sub).toString)
+      StateDir.publish(tmp, Paths.get(stateDir, s"fold=$upTo"), preCommit) { t =>
+        subs.foreach(sub => mk(sub, inputs).write.parquet(t.resolve(sub).toString))
       }
-      // last-instant re-check with the fold fully staged but still
-      // INVISIBLE (dot-prefixed): a throw here aborts with the state
-      // unmoved — the zombie window is the one rename below
-      preCommit()
-      Files.move(tmp, Paths.get(stateDir, s"fold=$upTo"),
-        StandardCopyOption.ATOMIC_MOVE)
       entries.collect {
         case ("seed", p) => p
         case (n, p) if batchId(n).exists(_ <= upTo) => p
@@ -153,8 +139,8 @@ object AdmissionState {
    * invisible to every reader). */
   def fold(spark: SparkSession, stateDir: String, upTo: Long,
            subs: Seq[String], epoch: Long): Boolean = {
-    fence(stateDir, epoch)
-    fold(spark, stateDir, upTo, subs, () => fence(stateDir, epoch))
+    StateDir.fence(stateDir, epoch)
+    fold(spark, stateDir, upTo, subs, () => StateDir.fence(stateDir, epoch))
   }
 
   /** Fenced [[fold]] with a per-sub-table BUILD override — the hook
@@ -167,90 +153,11 @@ object AdmissionState {
   def fold(spark: SparkSession, stateDir: String, upTo: Long,
            subs: Seq[String], epoch: Long,
            build: (String, Seq[String]) => org.apache.spark.sql.DataFrame): Boolean = {
-    fence(stateDir, epoch)
-    fold(spark, stateDir, upTo, subs, () => fence(stateDir, epoch), build)
+    StateDir.fence(stateDir, epoch)
+    fold(spark, stateDir, upTo, subs, () => StateDir.fence(stateDir, epoch), build)
   }
 
-  // ---- writer fencing (the IndexStore discipline) --------------------------
-
-  private def writersPath(stateDir: String): Path =
-    Paths.get(stateDir, "writers")
-
-  private def epochsPresent(stateDir: String): Seq[Long] =
-    if (!Files.isDirectory(writersPath(stateDir))) Nil
-    else {
-      val listing = Files.list(writersPath(stateDir))
-      val entries = try listing.iterator().asScala.toList finally listing.close()
-      entries.map(_.getFileName.toString)
-        .filter(_.startsWith("epoch="))
-        .map(_.stripPrefix("epoch=").toLong)
-        .sorted
-    }
-
-  /** Claim the admission-writer role, superseding every prior holder:
-   * a monotonically increasing fencing token via mkdir-atomic claim
-   * (two racers computing the same epoch collide on the mkdir; the
-   * loser retries at n+1, so epochs are never shared). The superseded
-   * holder discovers it is a ZOMBIE when its next fenced verb
-   * ([[guard]] before a state append, the fenced [[fold]]) refuses. */
-  @scala.annotation.tailrec
-  def acquireWriter(stateDir: String): Long = {
-    Files.createDirectories(writersPath(stateDir))
-    val next = epochsPresent(stateDir).lastOption.getOrElse(-1L) + 1L
-    val claimed =
-      try { Files.createDirectory(writersPath(stateDir).resolve(s"epoch=$next")); true }
-      catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    if (claimed) next else acquireWriter(stateDir)
-  }
-
-  private def fence(stateDir: String, epoch: Long): Unit = {
-    val current = epochsPresent(stateDir).lastOption.getOrElse(-1L)
-    require(current == epoch,
-      s"admission writer fenced: epoch $epoch superseded by $current " +
-        s"under $stateDir")
-  }
-
-  /** The per-trigger append guard: re-checks the fence on the driver
-   * immediately before a trigger writes its `b<id>` state dirs, so a
-   * superseded admission job's next append refuses with the state
-   * unmoved instead of interleaving with the new holder's triggers. */
-  def guard(stateDir: String, epoch: Long): Unit = fence(stateDir, epoch)
-
-  /** The store-side CHECKPOINT IDENTITY bind (the
-   * [[graft.ml.IndexStore]] shape): recorded on the first append as a
-   * `writers/ckpt=<digest>` dir (mkdir-atomic — two racing first binds
-   * with different checkpoints cannot both win; the loser withdraws
-   * and refuses). Every append thereafter must present the same
-   * checkpoint: a fresh or foreign checkpoint restarts batch ids at 0
-   * and would silently overwrite committed `b<id>` state with
-   * different rows. Identity is URI-aware ([[graft.util.Fs
-   * .checkpointCanon]]) so `hdfs://`/`s3a://` locations don't resolve
-   * against the process CWD. */
-  def bindCheckpoint(stateDir: String, checkpoint: String): Unit = {
-    Files.createDirectories(writersPath(stateDir))
-    val mine = "ckpt=" + graft.util.Fs.checkpointDigest(checkpoint)
-    def bound: Seq[String] = {
-      val listing = Files.list(writersPath(stateDir))
-      try listing.iterator().asScala.toList.map(_.getFileName.toString)
-        .filter(_.startsWith("ckpt=")).sorted
-      finally listing.close()
-    }
-    if (!bound.contains(mine)) {
-      require(bound.isEmpty,
-        s"admission state $stateDir is bound to a different stream " +
-          s"checkpoint (${bound.mkString(", ")}): a fresh checkpoint " +
-          "would restart batch ids and overwrite committed state — " +
-          "resume the state's original checkpoint")
-      try Files.createDirectory(writersPath(stateDir).resolve(mine))
-      catch { case _: java.nio.file.FileAlreadyExistsException => () }
-      val now = bound
-      if (now != Seq(mine)) {
-        Files.deleteIfExists(writersPath(stateDir).resolve(mine))
-        require(false, s"admission state $stateDir was concurrently " +
-          s"bound to a different checkpoint (${now.mkString(", ")})")
-      }
-      Files.write(writersPath(stateDir).resolve(mine).resolve("path"),
-        graft.util.Fs.checkpointCanon(checkpoint).getBytes("UTF-8"))
-    }
-  }
+  /** Claim the admission-writer role of `stateDir`
+   * ([[graft.state.StateDir.acquireWriter]]). */
+  def acquireWriter(stateDir: String): Long = StateDir.acquireWriter(stateDir)
 }

@@ -49,14 +49,10 @@ object ScaleData {
     // several streaming harnesses hardlink that file — mirror the layout
     def writeSingleFile(df: DataFrame, name: String): Unit = {
       import java.nio.file.{Files, Paths}
-      import scala.jdk.CollectionConverters._
       val tmp = s"$dst/.stage_$name"
       df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = {
-        val s = Files.list(Paths.get(tmp))
-        try s.iterator().asScala.find(_.toString.endsWith(".parquet")).get
-        finally s.close()
-      }
+      val part = graft.state.StateDir.children(Paths.get(tmp))
+        .find(_.toString.endsWith(".parquet")).get
       Files.deleteIfExists(Paths.get(s"$dst/$name.parquet"))
       Files.move(part, Paths.get(s"$dst/$name.parquet"))
       graft.util.Fs.deleteRecursive(Paths.get(tmp))

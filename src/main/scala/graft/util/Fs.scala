@@ -9,45 +9,4 @@ object Fs {
     if (Files.exists(p))
       Files.walk(p).sorted(Comparator.reverseOrder[Path]())
         .forEach(f => Files.delete(f))
-
-  /** A checkpoint location's CANONICAL IDENTITY string — the value two
-   * processes binding the same logical checkpoint must agree on.
-   * URI-style locations (`hdfs://nn/path`, `s3a://bucket/path`) are
-   * normalized structurally (scheme+authority lowercased, path as
-   * given) — resolving them through `File.getCanonicalPath` would
-   * anchor them to the process CWD, making the SAME checkpoint hash
-   * differently across working directories and permanently refusing a
-   * legitimate resume. Bare local paths canonicalize through the
-   * filesystem (symlinks, `..`). */
-  def checkpointCanon(checkpoint: String): String =
-    if (checkpoint.contains("://")) {
-      val u = java.net.URI.create(checkpoint).normalize()
-      val auth = Option(u.getAuthority).getOrElse("").toLowerCase
-      // trailing-slash insensitive (and empty path ≡ root): the same
-      // logical checkpoint written as `hdfs://nn/path/` on resume must
-      // digest identically to `hdfs://nn/path`, or bindCheckpoint would
-      // permanently refuse a legitimate resume — URIs get no filesystem
-      // canonicalization, so normalize structurally.
-      // MIGRATION (one-time, r16): a ckpt=<md5> marker bound under the
-      // PRE-normalization canon of a trailing-slash URI digests
-      // differently now and would refuse resume. No such marker can
-      // exist here — every state dir in this repo's tests/benches is
-      // wiped per run and no durable deployment predates the change —
-      // but an operator upgrading a live store must rebind (delete the
-      // marker; the next run re-binds under the normalized canon).
-      val p = Option(u.getPath).getOrElse("") match {
-        case "" => "/"
-        case "/" => "/"
-        case s if s.endsWith("/") => s.dropRight(1)
-        case s => s
-      }
-      s"${Option(u.getScheme).getOrElse("").toLowerCase}://$auth$p"
-    } else new java.io.File(checkpoint).getCanonicalPath
-
-  /** MD5 digest of [[checkpointCanon]] — the `ckpt=<digest>` marker
-   * name used by the store-side checkpoint-identity binds. */
-  def checkpointDigest(checkpoint: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpointCanon(checkpoint).getBytes("UTF-8"))
-      .map(b => f"$b%02x").mkString
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import graft.operators.CacheScope
 import graft.pipeline.{AdmissionGate, AdmissionGateCore}
+import graft.state.StateDir
 import graft.text.Dedup
 
 /** The incremental streamed-admission contract (w12/w14's r14 scale
@@ -171,30 +172,30 @@ class AdmissionStateSpec extends SparkSpec {
       .write.parquet(s"$stateDir/b1/art")
 
     val e0 = AdmissionState.acquireWriter(stateDir)
-    AdmissionState.bindCheckpoint(stateDir, s"$base/ckpt")
+    StateDir.bindCheckpoint(stateDir, s"$base/ckpt")
     // the writers/ dir is invisible to readers
     assert(AdmissionState.parts(stateDir, 2L).toSet ==
       Set(s"$stateDir/seed", s"$stateDir/b0", s"$stateDir/b1"))
     // same checkpoint re-binds freely (restart of the same stream)
-    AdmissionState.bindCheckpoint(stateDir, s"$base/ckpt")
+    StateDir.bindCheckpoint(stateDir, s"$base/ckpt")
     // a fresh/foreign checkpoint refuses AT ENTRY — it would restart
     // batch ids and overwrite committed b<id> state
     intercept[IllegalArgumentException] {
-      AdmissionState.bindCheckpoint(stateDir, s"$base/ckpt_other")
+      StateDir.bindCheckpoint(stateDir, s"$base/ckpt_other")
     }
     // URI-style identity doesn't resolve against the CWD
-    AdmissionState.bindCheckpoint(
+    StateDir.bindCheckpoint(
       s"$base/state_uri", "hdfs://nn:8020/pipelines/adm/ckpt")
     intercept[IllegalArgumentException] {
-      AdmissionState.bindCheckpoint(
+      StateDir.bindCheckpoint(
         s"$base/state_uri", "hdfs://nn:8020/pipelines/adm/ckpt2")
     }
 
-    AdmissionState.guard(stateDir, e0) // holder appends fine
+    StateDir.fence(stateDir, e0) // holder appends fine
     val e1 = AdmissionState.acquireWriter(stateDir) // rescheduled job
     assert(e1 == e0 + 1)
     // the zombie's next append refuses…
-    intercept[IllegalArgumentException] { AdmissionState.guard(stateDir, e0) }
+    intercept[IllegalArgumentException] { StateDir.fence(stateDir, e0) }
     // …and so does its fold, with the state unmoved
     val before = AdmissionState.parts(stateDir, 2L)
     intercept[IllegalArgumentException] {
@@ -207,7 +208,7 @@ class AdmissionStateSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       AdmissionState.fold(spark, stateDir, upTo = 0L, Seq("art"),
         preCommit = () => { AdmissionState.acquireWriter(stateDir); // e2
-          AdmissionState.guard(stateDir, e1) })
+          StateDir.fence(stateDir, e1) })
     }
     assert(AdmissionState.parts(stateDir, 2L) == before)
     // the live holder (now e2's owner) folds fine
@@ -383,17 +384,16 @@ class AdmissionStateSpec extends SparkSpec {
   }
 
   test("checkpoint canonical identity: URI form is trailing-slash, case and dot-segment insensitive") {
-    import graft.util.Fs
-    assert(Fs.checkpointCanon("hdfs://nn/path/") ==
-      Fs.checkpointCanon("hdfs://nn/path"))
-    assert(Fs.checkpointCanon("HDFS://NN/path") ==
-      Fs.checkpointCanon("hdfs://nn/path"))
-    assert(Fs.checkpointCanon("s3a://bucket") ==
-      Fs.checkpointCanon("s3a://bucket/"))
-    assert(Fs.checkpointCanon("hdfs://nn/a/../b/") ==
-      Fs.checkpointCanon("hdfs://nn/b"))
-    assert(Fs.checkpointCanon("hdfs://nn/path") !=
-      Fs.checkpointCanon("hdfs://nn/path2"))
+    assert(StateDir.checkpointCanon("hdfs://nn/path/") ==
+      StateDir.checkpointCanon("hdfs://nn/path"))
+    assert(StateDir.checkpointCanon("HDFS://NN/path") ==
+      StateDir.checkpointCanon("hdfs://nn/path"))
+    assert(StateDir.checkpointCanon("s3a://bucket") ==
+      StateDir.checkpointCanon("s3a://bucket/"))
+    assert(StateDir.checkpointCanon("hdfs://nn/a/../b/") ==
+      StateDir.checkpointCanon("hdfs://nn/b"))
+    assert(StateDir.checkpointCanon("hdfs://nn/path") !=
+      StateDir.checkpointCanon("hdfs://nn/path2"))
   }
 
   test("semantic leg skips HOT state buckets (the m7 cap) and still catches cool-bucket paraphrase") {

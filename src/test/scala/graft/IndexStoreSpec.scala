@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ml.{IndexStore, Similarity}
+import graft.state.StateDir
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -98,11 +99,11 @@ class IndexStoreSpec extends SparkSpec {
     // merge-on-read: the verb is one id-list append, the view excludes
     // the ids immediately — rows in the BASE and rows in the DELTA both
     import spark.implicits._
-    IndexStore.tombstone(spark, idx,
+    IndexStore.tombstone(idx,
       (0L until 240L).filter(_ % 7 == 3).toDF("id"))
     val surviving = before.filterNot(_.getLong(0) % 7 == 3)
     assert(IndexStore.read(spark, idx).collect().toSet == surviving)
-    assert(IndexStore.unfoldedTombstoneBatches(spark, idx).size == 1)
+    assert(IndexStore.unfoldedTombstoneBatches(idx).size == 1)
 
     // a torn tombstone batch (crash before _SUCCESS) is invisible: it
     // must neither delete its ids nor block the next batch's number
@@ -111,7 +112,7 @@ class IndexStoreSpec extends SparkSpec {
     Files.delete(tornDir.resolve("_SUCCESS"))
     assert(IndexStore.read(spark, idx).collect().toSet == surviving,
       "a torn tombstone batch leaked into the serving view")
-    IndexStore.tombstone(spark, idx, Seq(139L).toDF("id"))
+    IndexStore.tombstone(idx, Seq(139L).toDF("id"))
     assert(Files.isDirectory(Paths.get(idx, "tombs", "t=2")),
       "tombstone reused a torn batch's number")
     val surviving2 = surviving.filterNot(_.getLong(0) == 139L)
@@ -124,7 +125,7 @@ class IndexStoreSpec extends SparkSpec {
     assert(IndexStore.compact(spark, idx, maxDeltaFiles = 2))
     assert(IndexStore.read(spark, idx).collect().toSet == surviving2,
       "the fold moved the serving view")
-    assert(IndexStore.unfoldedTombstoneBatches(spark, idx).isEmpty)
+    assert(IndexStore.unfoldedTombstoneBatches(idx).isEmpty)
     assert(spark.read.parquet(Paths.get(idx, "base", "v=1").toString)
       .filter(col("id") % 7 === 3 || col("id") === 139L).count() == 0,
       "a tombstoned row survived the physical apply")
@@ -134,7 +135,7 @@ class IndexStoreSpec extends SparkSpec {
 
     // tombstones ALONE trip the next fold (they are per-read merge
     // cost too), and the folded batch numbers are never reused
-    IndexStore.tombstone(spark, idx, Seq(140L).toDF("id"))
+    IndexStore.tombstone(idx, Seq(140L).toDF("id"))
     assert(Files.isDirectory(Paths.get(idx, "tombs", "t=3")),
       "tombstone reused a folded batch's number")
     assert(IndexStore.compact(spark, idx, maxDeltaFiles = 0))
@@ -195,7 +196,7 @@ class IndexStoreSpec extends SparkSpec {
       Similarity.ivfPqIndex(vecs.filter(col("id") < 120), books, cents), idx)
     admitWaves(dir, vecs.filter(col("id") >= 120), waves = 3, upTo = 240)
     import spark.implicits._
-    IndexStore.tombstone(spark, idx,
+    IndexStore.tombstone(idx,
       (0L until 240L).filter(_ % 7 == 3).toDF("id"))
     val before = IndexStore.read(spark, idx).collect().toSet
     def deltaParts(): Int = {
@@ -250,10 +251,10 @@ class IndexStoreSpec extends SparkSpec {
     val before = IndexStore.read(spark, idx).collect().toSet
     import spark.implicits._
 
-    val a = IndexStore.acquireWriter(idx)
-    IndexStore.tombstone(spark, idx, Seq(3L).toDF("id"), epoch = a)
+    val a = StateDir.acquireWriter(idx)
+    IndexStore.tombstone(idx, Seq(3L).toDF("id"), epoch = a)
     // B takes over: monotone token, A is now a zombie
-    val b = IndexStore.acquireWriter(idx)
+    val b = StateDir.acquireWriter(idx)
     assert(b > a)
     val ex = intercept[IllegalArgumentException] {
       IndexStore.compact(spark, idx, maxDeltaFiles = 2,
@@ -261,14 +262,14 @@ class IndexStoreSpec extends SparkSpec {
     }
     assert(ex.getMessage.contains("fenced"))
     intercept[IllegalArgumentException] {
-      IndexStore.tombstone(spark, idx, Seq(4L).toDF("id"), epoch = a)
+      IndexStore.tombstone(idx, Seq(4L).toDF("id"), epoch = a)
     }
     // the zombie's refusals left the store exactly where A's last
     // COMMITTED verb left it — no half-applied maintenance
     assert(IndexStore.read(spark, idx).collect().toSet ==
       before.filterNot(_.getLong(0) == 3L))
     // the current holder's verbs proceed under its token
-    IndexStore.tombstone(spark, idx, Seq(4L).toDF("id"), epoch = b)
+    IndexStore.tombstone(idx, Seq(4L).toDF("id"), epoch = b)
     assert(IndexStore.compact(spark, idx, maxDeltaFiles = 2,
       retainVersions = 1, epoch = b))
     assert(IndexStore.read(spark, idx).collect().toSet ==
@@ -295,7 +296,7 @@ class IndexStoreSpec extends SparkSpec {
         idx, s"$dir/ckpt", epoch)
     }
 
-    val a = IndexStore.acquireWriter(idx)
+    val a = StateDir.acquireWriter(idx)
     IndexStore.writeBase(
       Similarity.ivfPqIndex(vecs.filter(col("id") < 120), books, cents),
       idx, a)
@@ -310,7 +311,7 @@ class IndexStoreSpec extends SparkSpec {
 
     // B supersedes while A's stream is still running — A's NEXT batch
     // (wave 1) must refuse at its pre-write fence with the store unmoved
-    val b = IndexStore.acquireWriter(idx)
+    val b = StateDir.acquireWriter(idx)
     stageWave(1)
     val ex = intercept[Throwable] { qa.processAllAvailable() }
     assert(Option(ex.getMessage).getOrElse(ex.getCause.getMessage)
@@ -362,7 +363,7 @@ class IndexStoreSpec extends SparkSpec {
     // ENTRY: the store is bound to its original checkpoint's identity
     // on first admit, and a foreign checkpoint would restart batch ids
     // at 0 and replace committed admission batches with different rows
-    val c = IndexStore.acquireWriter(idx)
+    val c = StateDir.acquireWriter(idx)
     val scoped = spark.newSession()
     scoped.conf.set("spark.sql.shuffle.partitions", "4")
     val freshStream = scoped.readStream.schema(incoming.schema)
@@ -384,8 +385,8 @@ class IndexStoreSpec extends SparkSpec {
     val vecs = corpus(120)
     val idx = s"$dir/index"
     val base = Similarity.ivfPqIndex(vecs, books, cents)
-    val a = IndexStore.acquireWriter(idx)
-    val b = IndexStore.acquireWriter(idx)
+    val a = StateDir.acquireWriter(idx)
+    val b = StateDir.acquireWriter(idx)
     intercept[IllegalArgumentException] { IndexStore.writeBase(base, idx, a) }
     assert(IndexStore.liveVersions(idx).isEmpty,
       "the zombie's refused bootstrap left a live version")
@@ -443,7 +444,7 @@ class IndexStoreSpec extends SparkSpec {
       Similarity.ivfPqIndex(vecs.filter(col("id") < 120), books, cents), idx)
     admitWaves(dir, vecs.filter(col("id") >= 120), waves = 3, upTo = 240)
     import spark.implicits._
-    IndexStore.tombstone(spark, idx,
+    IndexStore.tombstone(idx,
       (0L until 240L).filter(_ % 7 == 3).toDF("id"))
     val before = IndexStore.read(spark, idx).collect().toSet
     assert(before.size == 240 - (0 until 240).count(_ % 7 == 3))
@@ -458,7 +459,7 @@ class IndexStoreSpec extends SparkSpec {
     assert(rebuiltRows != before,
       "fixture too weak: the retrained rebuild must differ row-wise")
 
-    val a = IndexStore.acquireWriter(idx)
+    val a = StateDir.acquireWriter(idx)
     val v1 = IndexStore.cutover(spark, idx, rebuilt, retainVersions = 2,
       epoch = a)
     assert(v1 == 1 && IndexStore.liveVersions(idx) == Seq(0, 1))
@@ -470,7 +471,7 @@ class IndexStoreSpec extends SparkSpec {
       "the cutover view is not the rebuilt index")
 
     // a superseded writer can neither cut over again nor vacuum
-    val b = IndexStore.acquireWriter(idx)
+    val b = StateDir.acquireWriter(idx)
     intercept[IllegalArgumentException] {
       IndexStore.cutover(spark, idx, rebuilt, retainVersions = 1, epoch = a)
     }
@@ -486,7 +487,7 @@ class IndexStoreSpec extends SparkSpec {
     assert(IndexStore.read(spark, idx).collect().toSet == rebuiltRows,
       "vacuum moved the serving view")
     assert(IndexStore.unfoldedDeltaFiles(spark, idx).isEmpty &&
-      IndexStore.unfoldedTombstoneBatches(spark, idx).isEmpty,
+      IndexStore.unfoldedTombstoneBatches(idx).isEmpty,
       "the cutover's fold list did not cover the drained logs")
   }
 
@@ -663,7 +664,7 @@ class IndexStoreSpec extends SparkSpec {
       IndexStore.admit(Similarity.ivfPqIndex(stream, books, cents),
         idx, ckpt, epoch)
     }
-    val a = IndexStore.acquireWriter(idx)
+    val a = StateDir.acquireWriter(idx)
     IndexStore.writeBase(
       Similarity.ivfPqIndex(vecs.filter(col("id") < 90), books, cents),
       idx, a)
@@ -719,7 +720,7 @@ class IndexStoreSpec extends SparkSpec {
     val before = IndexStore.read(spark, idx).collect().toSet
     val rebuilt = Similarity.ivfPqIndex(
       vecs.filter(col("id") < 240), books, cents.reverse)
-    val a = IndexStore.acquireWriter(idx)
+    val a = StateDir.acquireWriter(idx)
     // an admission batch commits between cutover's snapshot and its
     // marker move (same epoch — every fence passes; this is exactly
     // the double-serve the quiescence recheck exists to catch)
@@ -753,7 +754,7 @@ class IndexStoreSpec extends SparkSpec {
     graft.util.Fs.deleteRecursive(Paths.get(dir))
     val vecs = corpus(240)
     val idx = s"$dir/index"
-    val a = IndexStore.acquireWriter(idx)
+    val a = StateDir.acquireWriter(idx)
     IndexStore.writeBase(
       Similarity.ivfPqIndex(vecs.filter(col("id") < 120), books, cents),
       idx, a)

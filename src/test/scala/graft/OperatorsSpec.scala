@@ -206,7 +206,6 @@ class OperatorsSpec extends SparkSpec {
 
   test("semDedup drops the smaller-priority twin within a cell, keeps strangers") {
     import graft.ml.Similarity
-    val dim = 4
     val a = Seq(1.0f, 0.0f, 0.0f, 0.0f)
     val aDup = Seq(0.99f, 0.01f, 0.0f, 0.0f)   // cos(a, aDup) ~ 1
     val ortho = Seq(0.0f, 1.0f, 0.0f, 0.0f)
