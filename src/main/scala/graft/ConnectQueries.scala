@@ -445,8 +445,8 @@ object ConnectQueries {
   /** K6 — the delta-versioned keyed sink end-to-end: three batches
    * (snapshot, updates, tombstones) append three O(batch) delta
    * versions, compaction folds them, and the merged read matches the
-   * classic last-write-wins oracle. This is the scale path replacing
-   * TableSink's full-state rewrite. */
+   * classic last-write-wins oracle. This is the one keyed file sink
+   * every Engine `table`/`logtable` pipeline commits through. */
   def logTableMerge(s: SparkSession, dir: String): DataFrame = {
     import graft.sinks.LogTable
     val path = s"target/tmp/logtable_${new java.io.File(dir).getName}"
@@ -788,7 +788,7 @@ object ConnectQueries {
 
     val marker = Files.exists(
       Paths.get(s"$base/engine/checkpoints/s7b/graft_snapshot_done"))
-    s.read.parquet(s"$base/state")
+    graft.sinks.LogTable.read(s, s"$base/state", Seq("id"))
       .select(col("id"), col("v"), col("seq"),
         lit(marker).as("snapshot_completed_marker"))
       .orderBy("id")
@@ -853,7 +853,7 @@ object ConnectQueries {
     engine.register(spec)
     scoped.streams.active.foreach(_.processAllAvailable())
     val batches = engine.latestBatchId("l5").map(_ + 1).getOrElse(-1L)
-    val delivered = s.read.parquet(state).count()
+    val delivered = graft.sinks.LogTable.read(s, state, Seq("id")).count()
     engine.delete("l5")
 
     import s.implicits._
@@ -909,21 +909,10 @@ object ConnectQueries {
     val server = new graft.pipeline.ConnectServer(engine)
     val url = server.start()
     try {
-      val http = java.net.http.HttpClient.newHttpClient()
-      def call(method: String, path: String, body: Option[String] = None) = {
-        val b = java.net.http.HttpRequest
-          .newBuilder(java.net.URI.create(url + path))
-        val r = http.send(body.fold(b.method(method,
-            java.net.http.HttpRequest.BodyPublishers.noBody()))(s =>
-            b.method(method, java.net.http.HttpRequest.BodyPublishers.ofString(s)))
-          .build(), java.net.http.HttpResponse.BodyHandlers.ofString())
-        require(r.statusCode() < 400,
-          s"$method $path -> HTTP ${r.statusCode()}: ${r.body()}")
-        r.body()
-      }
+      val rest = new graft.pipeline.ConnectHttpClient(url)
       def state_(): String = { // connector.state out of the status payload
         val n = new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(call("GET", "/connectors/l9/status"))
+          .readTree(rest.call("GET", "/connectors/l9/status"))
         n.get("connector").get("state").asText()
       }
       val q = new com.fasterxml.jackson.databind.ObjectMapper() // JSON escape
@@ -936,17 +925,17 @@ object ConnectQueries {
            |"transforms":[],
            |"sink":{"type":"logtable","path":${q.writeValueAsString(state)},
            |  "keys":["n_nationkey"]}}""".stripMargin
-      call("POST", "/connectors", Some(specJson))
+      rest.call("POST", "/connectors", Some(specJson))
       scoped.streams.active.foreach(_.processAllAvailable()) // snapshot wave
       val stRunning = state_()
-      call("PUT", "/connectors/l9/pause")
+      rest.call("PUT", "/connectors/l9/pause")
       val stPaused = state_()
       stage(w2, 1) // backlog lands while paused
-      call("PUT", "/connectors/l9/resume")
+      rest.call("PUT", "/connectors/l9/resume")
       scoped.streams.active.foreach(_.processAllAvailable()) // change wave
       val stResumed = state_()
-      call("DELETE", "/connectors/l9")
-      val after = call("GET", "/connectors")
+      rest.call("DELETE", "/connectors/l9")
+      val after = rest.call("GET", "/connectors")
       graft.sinks.LogTable.read(s, state, Seq("n_nationkey"))
         .select(col("n_nationkey"), col("n_name"), col("n_regionkey"),
           lit(stRunning).as("status_after_register"),
@@ -1022,18 +1011,7 @@ object ConnectQueries {
     val connectUrl = connect.start()
     val registryUrl = registry.start()
     try {
-      val http = java.net.http.HttpClient.newHttpClient()
-      def call(method: String, path: String, body: Option[String] = None) = {
-        val b = java.net.http.HttpRequest
-          .newBuilder(java.net.URI.create(connectUrl + path))
-        val r = http.send(body.fold(b.method(method,
-            java.net.http.HttpRequest.BodyPublishers.noBody()))(s =>
-            b.method(method, java.net.http.HttpRequest.BodyPublishers.ofString(s)))
-          .build(), java.net.http.HttpResponse.BodyHandlers.ofString())
-        require(r.statusCode() < 400,
-          s"$method $path -> HTTP ${r.statusCode()}: ${r.body()}")
-        r.statusCode()
-      }
+      val rest = new graft.pipeline.ConnectHttpClient(connectUrl)
       val client = new graft.codec.RegistryHttpClient(registryUrl)
       val subject = "om.nation-value"
       val j = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -1062,7 +1040,7 @@ object ConnectQueries {
         org.apache.spark.sql.types.StructField("n_regionkey",
           org.apache.spark.sql.types.IntegerType, nullable = true)))
       client.register(subject, v1s)
-      call("POST", "/connectors", Some(spec(w1.schema.toDDL, "")))
+      rest.call("POST", "/connectors", Some(spec(w1.schema.toDDL, "")))
       scoped.streams.active.foreach(_.processAllAvailable())
 
       // 2 — upstream add-column: pre-flight the registry (the lab order:
@@ -1075,13 +1053,13 @@ object ConnectQueries {
       // the config update adds the new column AND an ingest-time SMT:
       // re-ingestion of the v1 wave would fill n_src for every row, so
       // NULL n_src on v1 rows proves offsets survived the update
-      val updateCode = call("PUT", "/connectors/l10/config",
+      val updateCode = rest.send("PUT", "/connectors/l10/config",
         Some(spec(w2.schema.toDDL,
           """{"type":"insertField","field":"n_src",
-            |"value":"upper(value.n_name)"}""".stripMargin)))
+            |"value":"upper(value.n_name)"}""".stripMargin)))._1
       stage(w2, 1)
       scoped.streams.active.foreach(_.processAllAvailable())
-      call("DELETE", "/connectors/l10")
+      rest.call("DELETE", "/connectors/l10")
 
       // 3 — the breaking rename: incompatible under BACKWARD, 409s,
       // then registers once subject compat relaxes to NONE over REST
@@ -1274,22 +1252,11 @@ object ConnectQueries {
       sharedConfigs = Some(sharedConfigs))
     val urlA = serverA.start(); val urlB = serverB.start()
     try {
-      val http = java.net.http.HttpClient.newHttpClient()
-      def call(url: String, method: String, path: String,
-               body: Option[String] = None) = {
-        val b = java.net.http.HttpRequest
-          .newBuilder(java.net.URI.create(url + path))
-        val r = http.send(body.fold(b.method(method,
-            java.net.http.HttpRequest.BodyPublishers.noBody()))(s =>
-            b.method(method, java.net.http.HttpRequest.BodyPublishers.ofString(s)))
-          .build(), java.net.http.HttpResponse.BodyHandlers.ofString())
-        require(r.statusCode() < 400,
-          s"$method $path -> HTTP ${r.statusCode()}: ${r.body()}")
-        r.body()
-      }
+      val restA = new graft.pipeline.ConnectHttpClient(urlA)
+      val restB = new graft.pipeline.ConnectHttpClient(urlB)
       val q = new com.fasterxml.jackson.databind.ObjectMapper()
       names.foreach { n => // all three register through worker w0's REST
-        call(urlA, "POST", "/connectors", Some(
+        restA.call("POST", "/connectors", Some(
           s"""{"name":"$n",
              |"source":{"type":"parquet","path":${q.writeValueAsString(s"$base/in_$n")},
              |  "schemaDdl":${q.writeValueAsString(w0.schema.toDDL)},
@@ -1305,7 +1272,7 @@ object ConnectQueries {
       scoped.streams.active.foreach(_.processAllAvailable())
       // the forwarding contract: a w0-owned connector through w1's REST
       val crossStatus = {
-        val node = q.readTree(call(urlB, "GET", "/connectors/l11a/status"))
+        val node = q.readTree(restB.call("GET", "/connectors/l11a/status"))
         s"${node.get("connector").get("state").asText}@" +
           node.get("connector").get("worker_id").asText
       }
@@ -1322,9 +1289,10 @@ object ConnectQueries {
         sharedConfigs = Some(sharedConfigs))
       val urlC = serverC.start()
       try {
-        names.foreach(n => call(urlC, "DELETE", s"/connectors/$n"))
+        val restC = new graft.pipeline.ConnectHttpClient(urlC)
+        names.foreach(n => restC.call("DELETE", s"/connectors/$n"))
       } finally serverC.stop()
-      val emptied = call(urlA, "GET", "/connectors") == "[]"
+      val emptied = restA.call("GET", "/connectors") == "[]"
       names.map { n =>
         graft.sinks.LogTable.read(s, s"$base/state_$n", Seq("n_nationkey"))
           .select(lit(n).as("connector"), col("n_nationkey"), col("n_name"))

@@ -1039,35 +1039,23 @@ object LlmQueries {
     val server = new graft.pipeline.ConnectServer(engine)
     val url = server.start()
     try {
-      val http = java.net.http.HttpClient.newHttpClient()
-      def call(method: String, path: String, body: Option[String] = None) = {
-        val b = java.net.http.HttpRequest
-          .newBuilder(java.net.URI.create(url + path))
-        val r = http.send(body.fold(b.method(method,
-            java.net.http.HttpRequest.BodyPublishers.noBody()))(s =>
-            b.method(method,
-              java.net.http.HttpRequest.BodyPublishers.ofString(s)))
-          .build(), java.net.http.HttpResponse.BodyHandlers.ofString())
-        require(r.statusCode() < 400,
-          s"$method $path -> HTTP ${r.statusCode()}: ${r.body()}")
-        r.body()
-      }
+      val rest = new graft.pipeline.ConnectHttpClient(url)
       def state_(): String = {
         val n = new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(call("GET", s"/connectors/$name/status"))
+          .readTree(rest.call("GET", s"/connectors/$name/status"))
         n.get("connector").get("state").asText()
       }
-      call("POST", "/connectors", Some(specJson))
+      rest.call("POST", "/connectors", Some(specJson))
       scoped.streams.active.foreach(_.processAllAvailable()) // pre-staged
       val stRunning = state_()
-      call("PUT", s"/connectors/$name/pause")
+      rest.call("PUT", s"/connectors/$name/pause")
       val stPaused = state_()
       stageBacklog() // the backlog a paused gate must NOT process
-      call("PUT", s"/connectors/$name/resume")
+      rest.call("PUT", s"/connectors/$name/resume")
       scoped.streams.active.foreach(_.processAllAvailable()) // backlog
       val stResumed = state_()
-      call("DELETE", s"/connectors/$name")
-      val after = call("GET", "/connectors")
+      rest.call("DELETE", s"/connectors/$name")
+      val after = rest.call("GET", "/connectors")
       s.read.parquet(s"$base/gate/out").drop("batch")
         .withColumn("status_after_register", lit(stRunning))
         .withColumn("status_while_paused", lit(stPaused))

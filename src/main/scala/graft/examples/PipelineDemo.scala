@@ -2,7 +2,6 @@ package graft.examples
 
 import java.nio.file.{Files, Paths}
 
-
 import graft.Graft
 import graft.pipeline.Engine
 
@@ -48,37 +47,28 @@ object PipelineDemo {
     val q = engine.registerJson(spec)
     q.processAllAvailable()
     println("--- after batch 1 (insert x2):")
-    spark.read.parquet(state).orderBy("customer_id").show(false)
+    graft.sinks.LogTable.read(spark, state, Seq("customer_id"))
+      .orderBy("customer_id").show(false)
 
     engine.pause("csv_customers")
     drop("batch2.csv", "1,alice2,999.0,20,false", "2,bob,0,21,true", "3,carol,55.5,22,false")
     engine.resume("csv_customers").processAllAvailable()
     println("--- after batch 2 (update 1, DELETE 2 via tombstone, insert 3):")
-    spark.read.parquet(state).orderBy("customer_id").show(false)
+    graft.sinks.LogTable.read(spark, state, Seq("customer_id"))
+      .orderBy("customer_id").show(false)
     println("--- status: " + engine.status("csv_customers"))
+    // each batch appended one O(batch) delta version (kind "logtable"
+    // names the same keyed file sink)
+    println("--- versions: " + graft.sinks.LogTable.versions(state))
     println("--- schema history (Debezium schema-changes analog):")
     graft.sinks.SchemaHistory.load(state).foreach(println)
     engine.delete("csv_customers")
-
-    // the scale-path sink: same spec, kind "logtable" — each batch
-    // appends an O(batch) delta version instead of rewriting state
-    val ltState = s"$base/customers_log"
-    val lt = engine.registerJson(spec
-      .replace(""""name": "csv_customers"""", """"name": "csv_customers_log"""")
-      .replace(s""""type": "table", "path": "$state"""",
-        s""""type": "logtable", "path": "$ltState""""))
-    lt.processAllAvailable()
-    println("--- logtable versions: " + graft.sinks.LogTable.versions(ltState))
-    println("--- logtable merged state:")
-    graft.sinks.LogTable.read(spark, ltState, Seq("customer_id"))
-      .orderBy("customer_id").show(false)
-    engine.delete("csv_customers_log")
 
     // registry-governed Avro wire (Confluent framing + evolution)
     import org.apache.spark.sql.types._
     val reg = new graft.codec.SchemaRegistry()
     val frame = graft.model.Connect.toConnectFrame(
-      graft.sinks.LogTable.read(spark, ltState, Seq("customer_id"))
+      graft.sinks.LogTable.read(spark, state, Seq("customer_id"))
         .select("customer_id", "name"), Seq("customer_id"), "om.customers", "customer_id")
     val framed = graft.codec.AvroCodec.encodeFramed(frame, reg, "om.customers-value")
     reg.register("om.customers-value", StructType(

@@ -840,28 +840,6 @@ object Similarity {
     cents
   }
 
-  /** Deterministic corpus-stride seeding for [[trainIvfCentroidsFrom]]:
-   * every ⌈n/k⌉-th vector in id order — the spread-out sample a
-   * production reindex initializes from (no RNG: resumable, and the
-   * same corpus always trains the same table). The global id order is
-   * a DISTRIBUTED range sort (range-partitioned shuffle + per-
-   * partition sort), and the global position comes from
-   * `zipWithIndex`'s per-partition offsets — never a single-partition
-   * `Window.orderBy`, which would funnel the whole corpus through one
-   * task at reindex scale. Driver traffic is the k seed vectors. */
-  def strideSeeds(corpus: DataFrame, k: Int): Seq[Seq[Double]] = {
-    val n = corpus.count()
-    val stride = math.max(1L, n / k)
-    corpus.select(col("id"), col("vec"))
-      .repartitionByRange(col("id"))
-      .sortWithinPartitions("id")
-      .rdd.zipWithIndex()
-      .collect { case (row, i) if i % stride == 0 && i / stride < k =>
-        (i, row.getSeq[Float](1).map(_.toDouble).toSeq) }
-      .collect()
-      .sortBy(_._1).map(_._2).toSeq
-  }
-
   /** Accumulator type for training sums: a float element rounds to 12
    * decimal places deterministically, sums stay exact (15 integer
    * digits of headroom), and order never matters — decimal addition is

@@ -33,7 +33,6 @@ object Connect {
   val ValueCol = "value"
   val TopicCol = "topic"
   val SeqCol = "seq"
-  val OpCol = "op"
 
   /**
    * Lift a plain table into a connect frame: `value` = struct of all

@@ -19,14 +19,12 @@ import org.apache.spark.sql.types._
  * so the decoded pixel stats equal the synthesis parameters — which is
  * what lets the DuckDB oracle check the real decoder's output.
  *
- * Audio/video decode stays behind the same seam with [[FakeDecoder]] as
- * the deterministic stand-in (no ffmpeg in this container). Swap recipe
- * for those formats:
- *  1. Replace [[FakeDecoder]] with a class holding the native handles
- *     (an ffmpeg JNI binding or a long-lived subprocess pipe). Keep the
- *     per-partition construction in [[extractFeatures]] — that placement
- *     IS the amortization; never construct per row. [[ImageIoDecoder]]
- *     is the worked example.
+ * Audio and video decode sit behind the same seam ([[WavDecoder]],
+ * [[Y4mDecoder]]). Swap recipe for a native codec:
+ *  1. Write a class holding the native handles (an ffmpeg JNI binding or
+ *     a long-lived subprocess pipe), constructed once per partition
+ *     inside `mapPartitions` — that placement IS the amortization; never
+ *     construct per row. [[ImageIoDecoder]] is the worked example.
  *  2. Extend the feature schema with the real outputs (e.g. phash,
  *     embedding: array<float>); `decode` returns a matching Row. The
  *     surrounding plan (schema projection, partition batching, the
@@ -103,13 +101,6 @@ object Multimodal {
     StructField("width", IntegerType, nullable = false),
     StructField("height", IntegerType, nullable = false),
     StructField("n_frames", IntegerType, nullable = false)))
-
-  /** Feature row emitted by the (stub) decoder. */
-  val FeatureSchema: StructType = StructType(Seq(
-    StructField("n_bytes", LongType, nullable = false),
-    StructField("first_byte", IntegerType, nullable = false),
-    StructField("byte_sum", LongType, nullable = false),
-    StructField("mean_luma", DoubleType, nullable = false)))
 
   /**
    * Pack a text table into the media shape: payload = utf-8 bytes,
@@ -1133,29 +1124,6 @@ object Multimodal {
     }
     spark.createDataFrame(rdd, outSchema)
   }
-
-  /**
-   * Batched feature extraction over the payload column. Runs via
-   * `mapPartitions` on the underlying RDD: one decoder instance per
-   * partition, rows streamed through it — the seam where a real codec
-   * plugs in. Output: (media_id, features struct).
-   */
-  def extractFeatures(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("features", FeatureSchema, nullable = false)))
-    val projected = df.select(col("media_id").cast(LongType), col("payload"))
-    val rdd = projected.rdd.mapPartitions { rows =>
-      val decoder = new FakeDecoder // per-partition init (amortized setup)
-      rows.map { r =>
-        val id = r.getLong(0)
-        val bytes = r.getAs[Array[Byte]](1)
-        Row(id, decoder.decode(bytes))
-      }
-    }
-    spark.createDataFrame(rdd, outSchema)
-  }
 }
 
 /**
@@ -1245,6 +1213,8 @@ final class TruncatedMediaException(msg: String) extends RuntimeException(msg)
  * colorspaces; a malformed or truncated stream fails loudly.
  */
 final class Y4mDecoder {
+  import Y4mDecoder.StreamHeader
+
   private def lineEnd(bytes: Array[Byte], from: Int): Int = {
     var i = from
     while (i < bytes.length && bytes(i) != '\n') i += 1
@@ -1252,10 +1222,6 @@ final class Y4mDecoder {
       "truncated Y4M: stream ends inside a header/marker line")
     i
   }
-
-  private final case class StreamHeader(w: Int, h: Int, fpsNum: Int,
-                                        fpsDen: Int, chromaSize: Int,
-                                        headerEnd: Int)
 
   private def parseHeader(bytes: Array[Byte]): StreamHeader = {
     // the MAGIC check runs BEFORE any truncation signal can fire: a
@@ -1483,21 +1449,8 @@ final class Y4mDecoder {
   }
 }
 
-/**
- * STUB DECODER — deterministic fake retained for the m2 fixed-size
- * framing query (video now has the REAL [[Y4mDecoder]] above; images
- * use [[ImageIoDecoder]] and wav audio [[WavDecoder]]). Features are
- * pure functions of the payload bytes so the DuckDB oracle can
- * reproduce them.
- */
-final class FakeDecoder {
-  def decode(bytes: Array[Byte]): Row = {
-    val n = bytes.length.toLong
-    val first = if (bytes.isEmpty) 0 else bytes(0) & 0xff
-    var sum = 0L
-    var i = 0
-    while (i < bytes.length) { sum += (bytes(i) & 0xff); i += 1 }
-    val luma = if (n == 0) 0.0 else sum.toDouble / n.toDouble
-    Row(n, first, sum, luma)
-  }
+object Y4mDecoder {
+  private final case class StreamHeader(w: Int, h: Int, fpsNum: Int,
+                                        fpsDen: Int, chromaSize: Int,
+                                        headerEnd: Int)
 }

@@ -228,22 +228,12 @@ object AdmissionSink {
    * The DLQ lands in a per-batch overwrite dir (`dlq/batch=<id>` —
    * the gate's idempotent-replay discipline), tombstones still drop
    * silently (they are DATA, not errors), and clean documents flow to
-   * the verdict unchanged. The split re-evaluates the micro-batch
-   * source twice (DLQ write + verdict input) — batches are pinned
-   * file sets, so the second pass is a bounded re-read, the same
-   * trade [[graft.codec.JsonEnvelope.routeDlq]] documents. */
-  def routeGateDlq(framed: DataFrame, sink: SinkSpec,
-                   id: Long): DataFrame = {
-    val (writeDlq, clean) = splitGateDlq(framed, sink, id)
-    writeDlq()
-    clean
-  }
-
-  /** [[routeGateDlq]] split into (DLQ-write thunk, clean documents) so
-   * the engine can OVERLAP the DLQ write with the gate verdict (r18,
-   * guide §2.6) — the two touch disjoint per-batch overwrite dirs and
-   * neither reads the other's output, so running them concurrently
-   * leaves the replay/crash semantics exactly as sequential. */
+   * the verdict unchanged. Returned as (DLQ-write thunk, clean
+   * documents) so the engine can OVERLAP the DLQ write with the gate
+   * verdict (r18, guide §2.6) — the two touch disjoint per-batch
+   * overwrite dirs and neither reads the other's output, so running
+   * them concurrently leaves the replay/crash semantics exactly as
+   * sequential. Both read the framed batch, which the caller pins. */
   def splitGateDlq(framed: DataFrame, sink: SinkSpec,
                    id: Long): (() => Unit, DataFrame) = {
     val v = col(graft.model.Connect.ValueCol)

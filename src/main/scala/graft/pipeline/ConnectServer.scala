@@ -243,3 +243,30 @@ object ConnectServer {
   private val mapper = new ObjectMapper()
   private def quote(s: String): String = mapper.writeValueAsString(s)
 }
+
+/**
+ * Client side of the Connect REST surface — what the reference's
+ * httpie scripts do, over JDK `java.net.http` (the [[ConnectServer]]
+ * analog of [[graft.codec.RegistryHttpClient]]). A status of 400 or
+ * above throws with the response body.
+ */
+final class ConnectHttpClient(baseUrl: String) {
+  private val http = java.net.http.HttpClient.newHttpClient()
+
+  /** Send one request; returns the status code and the body. */
+  def send(method: String, path: String,
+           body: Option[String] = None): (Int, String) = {
+    val b = java.net.http.HttpRequest.newBuilder(java.net.URI.create(baseUrl + path))
+    val r = http.send(body.fold(b.method(method,
+        java.net.http.HttpRequest.BodyPublishers.noBody()))(s =>
+        b.method(method, java.net.http.HttpRequest.BodyPublishers.ofString(s)))
+      .build(), java.net.http.HttpResponse.BodyHandlers.ofString())
+    require(r.statusCode() < 400,
+      s"$method $path -> HTTP ${r.statusCode()}: ${r.body()}")
+    (r.statusCode(), r.body())
+  }
+
+  /** [[send]], keeping only the body. */
+  def call(method: String, path: String, body: Option[String] = None): String =
+    send(method, path, body)._2
+}

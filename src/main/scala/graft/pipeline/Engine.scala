@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.model.Connect
-import graft.sinks.MergeSink
+import graft.sinks.{LogTable, SchemaHistory}
 import graft.state.StateDir
 
 /**
@@ -27,18 +27,12 @@ import graft.state.StateDir
  * | poll.interval.ms / batch knobs (L8)         | Trigger.ProcessingTime        |
  *
  * Recovery model is the reference's: at-least-once delivery from the
- * checkpoint, made effectively-exactly-once by the keyed idempotent
- * merge sink (re-applying a batch is a no-op).
+ * checkpoint, made effectively-exactly-once by idempotent sinks (a
+ * re-delivered batch is a no-op).
  */
 final class Engine(spark: SparkSession, root: String) extends ConnectRuntime {
 
-  sealed trait State
-  case object Running extends State
-  case object Paused extends State
-
-  private final case class Entry(spec: PipelineSpec,
-                                 query: Option[StreamingQuery],
-                                 state: State)
+  import Engine._
 
   private val pipelines = TrieMap.empty[String, Entry]
 
@@ -122,7 +116,7 @@ final class Engine(spark: SparkSession, root: String) extends ConnectRuntime {
       case Some(q) if q.exception.isDefined =>
         // nextOption: an empty exception message must not turn a status
         // read into a NoSuchElementException (which REST maps to 404)
-        s"FAILED: ${q.exception.get.message.linesIterator.nextOption.getOrElse("")}"
+        s"FAILED: ${q.exception.get.message.linesIterator.nextOption().getOrElse("")}"
       case _ => e.state match {
         case Paused => "PAUSED"
         case _ => "STOPPED"
@@ -318,10 +312,9 @@ final class Engine(spark: SparkSession, root: String) extends ConnectRuntime {
           throw new IllegalArgumentException(
             "snapshotMode=initial requires source.snapshotPath (the " +
               "current-state table to backfill)")
-        // the snapshot applies OUTSIDE the stream's batch-id sequence, so
-        // its crash-replay safety comes from the sink's keyed-merge
-        // idempotence — logtable's exactly-once is batch-id-based and
-        // would see a re-run snapshot as a contract violation
+        // the snapshot applies outside the stream's batch-id sequence,
+        // made replay-safe by keyed-merge idempotence; table and logtable
+        // are one sink, so this rule only keeps the declared surface
         if (!Set("table", "jdbc")(spec.sink.kind))
           throw new IllegalArgumentException(
             s"snapshotMode=initial requires an idempotent keyed merge " +
@@ -358,8 +351,8 @@ final class Engine(spark: SparkSession, root: String) extends ConnectRuntime {
    * an offset reset wipes it and the next start re-snapshots —
    * Debezium's exact behavior when connect-offsets are deleted. The
    * marker is written AFTER the sink apply, so a crash between them
-   * re-runs the snapshot (at-least-once), which the keyed merge sink
-   * absorbs idempotently. */
+   * re-runs the snapshot (at-least-once), which the keyed sink absorbs
+   * idempotently (the re-run version re-writes the same rows). */
   private def snapshotIfFirstStart(spec: PipelineSpec): Unit = {
     if (!spec.source.snapshotMode.contains("initial")) return
     val marker = Paths.get(checkpointDir(spec.name), "graft_snapshot_done")
@@ -375,13 +368,31 @@ final class Engine(spark: SparkSession, root: String) extends ConnectRuntime {
     val transformed = spec.transforms.map(_.toTransform)
       .foldLeft(framed)((df, t) => t(df))
     spec.sink.kind match {
-      case "table" => TableSink.applyBatch(spark, spec.sink, transformed)
+      case "table" => KeyedFileSink.applyBatch(spark, spec.sink, transformed, None)
       case "jdbc" => graft.sinks.JdbcSink.applyChangelog(transformed, jdbcCfg(spec))
       case other => // unreachable past validate()
         throw new IllegalArgumentException(s"snapshot unsupported for '$other'")
     }
     Files.createDirectories(marker.getParent)
     Files.writeString(marker, s"""{"snapshot":"initial","completed":true}""")
+  }
+
+  /** Added to every micro-batch id of a keyed file sink, so a reset
+   * checkpoint (ids restart at 0) never re-delivers a committed id. A
+   * checkpoint with no `offsets/` entries records the log's committed
+   * max + 1 beside `graft_snapshot_done`; a restart or crash replay reads
+   * it back (a replay stays a no-op). Offsets without a marker: 0. */
+  private def batchBase(spec: PipelineSpec): Long = {
+    val ckpt = Paths.get(checkpointDir(spec.name))
+    val marker = ckpt.resolve("graft_batch_base")
+    if (StateDir.numbered(ckpt.resolve("offsets"), "").isEmpty) {
+      val base = LogTable.maxCommittedBatchId(spec.sink.path).fold(0L)(_ + 1)
+      Files.createDirectories(ckpt)
+      StateDir.publish(ckpt.resolve(".graft_batch_base.tmp"), marker)(
+        Files.writeString(_, base.toString))
+      base
+    } else if (Files.exists(marker)) Files.readString(marker).trim.toLong
+    else 0L
   }
 
   private def start(spec: PipelineSpec): StreamingQuery = {
@@ -401,22 +412,13 @@ final class Engine(spark: SparkSession, root: String) extends ConnectRuntime {
       spec.triggerMs.map(ms => w.trigger(Trigger.ProcessingTime(ms))).getOrElse(w)
     }
     sink.kind match {
-      case "table" =>
-        writer("update").foreachBatch { (batch: DataFrame, _: Long) =>
-          TableSink.applyBatch(spark, sink, batch)
-        }.start()
-      case "logtable" =>
-        // delta-versioned keyed sink: O(batch) writes (TableSink rewrites
-        // full state — its documented scale limit); read-side merge cost
-        // bounded by compacting once the log grows past 8 versions
+      case "table" | "logtable" =>
+        // one keyed file sink for both names; the batch id makes the
+        // append idempotent, so a batch re-delivered after a crash
+        // between sink and checkpoint commit is not held twice
+        val base = batchBase(spec)
         writer("update").foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // batchId makes the append idempotent: a crash between sink
-          // and checkpoint commit re-delivers the batch, and the log
-          // must not hold it twice (exactly-once at the sink)
-          graft.sinks.LogTable.applyBatch(sink.path,
-            TableSink.dropDeletes(sink, batch), sink.keys, Some(batchId))
-          if (graft.sinks.LogTable.versions(sink.path).size >= 8)
-            graft.sinks.LogTable.compact(spark, sink.path, sink.keys)
+          KeyedFileSink.applyBatch(spark, sink, batch, Some(base + batchId))
         }.start()
       case "jdbc" =>
         // the live database sink: per-batch statement execution through
@@ -648,51 +650,34 @@ final class Engine(spark: SparkSession, root: String) extends ConnectRuntime {
   }
 }
 
+object Engine {
+  private sealed trait State
+  private case object Running extends State
+  private case object Paused extends State
+
+  private final case class Entry(spec: PipelineSpec,
+                                 query: Option[StreamingQuery],
+                                 state: State)
+}
+
 /**
- * The keyed table sink (K1-K4) as a `foreachBatch` body: read current
- * state, merge the batch (last-write-wins, tombstone deletes, add-only
- * evolution), atomically swap the state directory. A production target
- * would MERGE into Delta/Iceberg/JDBC; the swap keeps the offline demo
- * transactional on a local FS.
+ * The keyed file sink (K1-K4) behind `"table"` and `"logtable"`, for the
+ * stream, the snapshot backfill and [[PollingPipeline]]: drop tombstones
+ * unless deletes are enabled, record the schema history, append one
+ * [[graft.sinks.LogTable]] version, compact at 8 versions.
  */
-object TableSink {
+object KeyedFileSink {
 
-  def applyBatch(spark: SparkSession, sink: SinkSpec, batch: DataFrame): Unit = {
-    val statePath = Paths.get(sink.path)
-    val old = Paths.get(sink.path + ".old")
-    // crash recovery: a previous swap may have moved the state aside
-    // without completing the replace — restore it before reading, or the
-    // merge would silently run against an empty snapshot
-    if (!Files.exists(statePath) && Files.exists(old))
-      Files.move(old, statePath)
-    val hasState =
-      StateDir.children(statePath).exists(_.toString.endsWith(".parquet"))
-    // schema-as-a-stream (Debezium history-topic analog): record the
-    // CREATE on first materialization and every drift event after
-    val table = statePath.getFileName.toString
-    val cur = batch.schema("value").dataType
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val merged =
-      if (hasState) {
-        val snapshot = spark.read.parquet(sink.path)
-        graft.sinks.SchemaHistory.record(sink.path, table, sink.keys,
-          Some(snapshot.schema), cur)
-        MergeSink.applyBatch(snapshot, dropDeletes(sink, batch), sink.keys)
-      } else {
-        graft.sinks.SchemaHistory.record(sink.path, table, sink.keys, None, cur)
-        MergeSink.materialize(dropDeletes(sink, batch))
-      }
-    val tmp = sink.path + ".staging"
-    merged.write.mode("overwrite").parquet(tmp)
-    graft.util.Fs.deleteRecursive(old)
-    if (Files.exists(statePath)) Files.move(statePath, old)
-    Files.move(Paths.get(tmp), statePath)
-    graft.util.Fs.deleteRecursive(old)
+  def applyBatch(spark: SparkSession, sink: SinkSpec, batch: DataFrame,
+                 batchId: Option[Long]): Unit = {
+    val kept =
+      if (sink.deleteEnabled) batch
+      else batch.filter(col(Connect.ValueCol).isNotNull)
+    SchemaHistory.record(sink.path, Paths.get(sink.path).getFileName.toString,
+      sink.keys, kept.schema(Connect.ValueCol).dataType
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
+    LogTable.applyBatch(sink.path, kept, sink.keys, batchId)
+    if (LogTable.versions(sink.path).size >= 8)
+      LogTable.compact(spark, sink.path, sink.keys)
   }
-
-  /** Shared tombstone policy for the keyed sinks: with deletes disabled,
-   * tombstones are simply ignored. */
-  private[pipeline] def dropDeletes(sink: SinkSpec, batch: DataFrame): DataFrame =
-    if (sink.deleteEnabled) batch
-    else batch.filter(col(Connect.ValueCol).isNotNull)
 }

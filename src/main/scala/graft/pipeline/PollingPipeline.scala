@@ -15,8 +15,9 @@ import graft.sources.{Incremental, WatermarkStore}
  *
  * Crash contract (the reference's): the watermark is saved AFTER the
  * sink batch lands. A crash in between replays the batch on restart —
- * and the idempotent keyed merge makes the replay a no-op, so
- * at-least-once capture materializes effectively-exactly-once state.
+ * it re-writes the same rows as a new version, which the keyed sink's
+ * last-write-wins read absorbs, so at-least-once capture materializes
+ * effectively-exactly-once state.
  * Offset reset (`resetOffsets`) re-ingests from scratch; re-applying
  * the full history over existing state converges to the same table.
  */
@@ -55,7 +56,7 @@ final class PollingPipeline(
       val framed = Connect.toConnectFrame(batch, keyFields, name, seqColumn)
       val transformed = transforms.foldLeft(framed)((df, t) => t(df))
       val n = transformed.count()
-      if (n > 0) TableSink.applyBatch(spark, sink, transformed)
+      if (n > 0) KeyedFileSink.applyBatch(spark, sink, transformed, None)
       store.save(name, w2) // AFTER the sink write — replay-safe ordering
       n
     } finally cached.foreach(_.unpersist())

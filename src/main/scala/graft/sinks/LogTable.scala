@@ -9,15 +9,17 @@ import graft.state.StateDir
 import graft.util.Fs
 
 /**
- * Versioned keyed table — a miniature transaction-log format that
- * removes [[graft.pipeline.TableSink]]'s documented scale limit (full
- * state rewrite per batch). The idea is Delta/Iceberg's, reduced to the
- * piece the keyed sink needs:
+ * Versioned keyed table — the one keyed file sink: the Engine's
+ * `"table"` and `"logtable"` kinds both commit through it
+ * ([[graft.pipeline.KeyedFileSink]]). A miniature transaction-log
+ * format, Delta/Iceberg's idea reduced to the piece the keyed sink needs:
  *
  *  - each batch appends ONE delta version holding only that batch's
  *    last-per-key rows (tombstones travel as marker rows) — write cost
  *    is O(batch), never O(state);
- *  - reads merge the versions by (version, seq) last-write-wins —
+ *  - the payload is stored verbatim; the log's own `_`-columns never
+ *    surface in [[read]];
+ *  - reads merge the versions by (version, `_seq`) last-write-wins —
  *    cost bounded by compaction cadence;
  *  - [[compact]] folds everything into a single version that KEEPS
  *    tombstone markers, so a crash between the compacted write and the
@@ -62,6 +64,10 @@ object LogTable {
   private val DataDirRe = "d(\\d{8,})".r
 
   private final case class Version(n: Int, dir: Path, batchId: Option[Long])
+
+  /** The log's own columns (ordering, tombstone marker, and the version
+   * and merge order added on read); `flatten` drops a same-named field. */
+  private val Internal = Seq("_seq", "_tombstone", "_v", "_ord")
 
   private def manifestDir(path: String): Path = Paths.get(path, "_manifests")
 
@@ -146,7 +152,7 @@ object LogTable {
           "written by a query whose checkpoint was reset (or by a second " +
           "query); point it at a fresh sink path or delete the log first")
     val keyed = flatten(batch)
-    val delta = MergeSink.lastPerKey(keyed, keys, "seq")
+    val delta = MergeSink.lastPerKey(keyed, keys, "_seq")
     val n = vs.lastOption.map(_.n + 1).getOrElse(1)
     commit(path, n, delta, batchId, effective)
   }
@@ -159,9 +165,9 @@ object LogTable {
   def maxCommittedBatchId(path: String): Option[Long] =
     versionList(path).flatMap(_.batchId).maxOption
 
-  /** Current table state: merge all versions, newest (version, seq)
-   * wins per key, tombstoned keys dropped. One shuffle over the deltas
-   * (and the base, if compacted). */
+  /** Current table state: merge all versions, newest (version, `_seq`)
+   * wins per key, tombstoned keys dropped, the payload as written. One
+   * shuffle over the deltas (and the base, if compacted). */
   def read(spark: SparkSession, path: String, keys: Seq[String]): DataFrame = {
     val vs = versionList(path)
     require(vs.nonEmpty, s"no committed versions under $path")
@@ -169,9 +175,8 @@ object LogTable {
       spark.read.parquet(p.toString).withColumn("_v", lit(n))
     }.reduce(_.unionByName(_, allowMissingColumns = true))
     val merged = MergeSink.lastPerKey(
-      all.withColumn("_ord", struct(col("_v"), col("seq"))), keys, "_ord")
-    merged.filter(!col("_tombstone"))
-      .drop("_tombstone", "_v", "_ord", "seq")
+      all.withColumn("_ord", struct(col("_v"), col("_seq"))), keys, "_ord")
+    merged.filter(!col("_tombstone")).drop(Internal: _*)
   }
 
   /** Fold all versions into one. Tombstone markers are preserved so the
@@ -186,8 +191,8 @@ object LogTable {
       spark.read.parquet(p.toString).withColumn("_v", lit(n))
     }.reduce(_.unionByName(_, allowMissingColumns = true))
     val merged = MergeSink.lastPerKey(
-        all.withColumn("_ord", struct(col("_v"), col("seq"))), keys, "_ord")
-      .drop("_v", "_ord") // seq rides along in the payload unchanged
+        all.withColumn("_ord", struct(col("_v"), col("_seq"))), keys, "_ord")
+      .drop("_v", "_ord") // _seq and _tombstone ride along unchanged
     // the folded versions' max batch marker moves onto the compacted
     // base, so replay detection survives compaction
     val m = modeOf(path)
@@ -205,27 +210,24 @@ object LogTable {
   def versions(path: String): Seq[Int] = versionList(path).map(_.n)
 
   /** Flatten a connect frame to (key fields..., payload..., _tombstone,
-   * seq) rows — tombstones become marker rows carrying only their key.
+   * _seq) rows — tombstones become marker rows carrying only their key.
    * Key columns keep their struct-field names (the names `keys`
-   * callers pass); same-named value fields are the key's copy and drop. */
+   * callers pass); same-named value fields are the key's copy and drop,
+   * as do `Internal` names. Every other field, `seq` included, is kept. */
   private def flatten(batch: DataFrame): DataFrame = {
     val (keyNames, keyCols) = batch.schema("key").dataType match {
       case s: org.apache.spark.sql.types.StructType =>
         (s.fieldNames.toSeq, s.fieldNames.toSeq.map(f => col(s"key.$f").as(f)))
       case _ => (Seq("key"), Seq(col("key")))
     }
-    // value-struct copies of the key fields and of the frame-level
-    // `seq` (Engine frames carry the ordering column in both places)
-    // would collide with the flattened columns — the frame's own are
-    // authoritative, the copies drop
     val valueFields = batch.schema("value").dataType
       .asInstanceOf[org.apache.spark.sql.types.StructType]
       .fieldNames.toSeq
-      .filterNot(f => keyNames.contains(f) || f == "seq" || f == "_tombstone")
+      .filterNot(f => keyNames.contains(f) || Internal.contains(f))
     batch.select(
       keyCols ++
         valueFields.map(f => col(s"value.$f").as(f)) ++
-        Seq(col("value").isNull.as("_tombstone"), col("seq")): _*)
+        Seq(col("value").isNull.as("_tombstone"), col("seq").as("_seq")): _*)
   }
 
   private def commit(path: String, n: Int, df: DataFrame,

@@ -57,8 +57,9 @@ object MergeSink {
   }
 
   /**
-   * Apply a changelog batch on top of an existing snapshot (the
-   * `foreachBatch` body for a table-state sink). Existing rows get
+   * Apply a changelog batch on top of an existing snapshot (a batch
+   * table-state merge; the streaming sink appends instead, through
+   * [[LogTable]]). Existing rows get
    * `seq = -1` so any log entry wins; schema drift between snapshot and
    * batch is resolved add-only first ([[SchemaEvolution.unionEvolve]]),
    * mirroring `auto.evolve` (K4).

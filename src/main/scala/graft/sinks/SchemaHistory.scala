@@ -2,7 +2,7 @@ package graft.sinks
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /**
  * Debezium's schema-history topic analog ("schema as a stream",
@@ -20,7 +20,8 @@ import org.apache.spark.sql.types.StructType
  *
  * The durable form is a JSON-lines file next to the sink state — itself
  * streamable (`spark.readStream.json`), which is exactly the
- * schema-changes-topic consumption pattern.
+ * schema-changes-topic consumption pattern. A small JSON file beside it
+ * holds the table's add-only schema, so recording never reads the sink.
  */
 object SchemaHistory {
 
@@ -68,14 +69,19 @@ object SchemaHistory {
 
   private def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
 
-  /** Append the events of one observed transition (or the initial
-   * CREATE), continuing the stored version sequence. Idempotent per
+  /** Append the events of one batch's schema `cur` (the CREATE at first,
+   * then its transition from the stored add-only schema, which it then
+   * extends), continuing the stored version sequence. Idempotent per
    * DDL: an event whose ddl line is already in the history is skipped,
    * so a batch retry, or a persistently drifted writer (the add-only
-   * merge keeps evolved columns an older incoming schema never
-   * re-declares), cannot grow the file without bound. */
+   * table keeps evolved columns an older incoming schema never
+   * re-declares), cannot grow the file without bound; a crash between
+   * the history append and the schema publish re-derives skipped events. */
   def record(sinkPath: String, table: String, pks: Seq[String],
-             prev: Option[StructType], cur: StructType): Unit = {
+             cur: StructType): Unit = {
+    val sp = Paths.get(sinkPath + ".schema.json")
+    val prev = Option.when(Files.exists(sp))(
+      DataType.fromJson(Files.readString(sp)).asInstanceOf[StructType])
     val seen = load(sinkPath)
     // exact ddl-field comparison (it is the line's last member) — a
     // substring check would drop a DDL that happens to prefix another
@@ -88,14 +94,19 @@ object SchemaHistory {
       .zipWithIndex.map { case ((change, ddl), i) =>
         Event(seen.size + i + 1, change, ddl)
       }
+    val p = historyPath(sinkPath)
+    Option(p.getParent).foreach(Files.createDirectories(_))
     if (evs.nonEmpty) {
       val lines = evs.map(e =>
         s"""{"version":${e.version},"change":"${esc(e.change)}","ddl":"${esc(e.ddl)}"}""")
-      val p = historyPath(sinkPath)
-      Option(p.getParent).foreach(Files.createDirectories(_))
       Files.writeString(p, lines.mkString("", "\n", "\n"),
         StandardOpenOption.CREATE, StandardOpenOption.APPEND)
     }
+    val addOnly = prev.fold(cur)(t =>
+      StructType(t.fields ++ cur.fields.filterNot(f => t.fieldNames.contains(f.name))))
+    if (!prev.contains(addOnly))
+      graft.state.StateDir.publish(Paths.get(s"$sp.tmp"), sp)(
+        Files.writeString(_, addOnly.json))
   }
 
   /** The stored history, oldest first (empty if none recorded). */

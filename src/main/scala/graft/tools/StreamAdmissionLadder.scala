@@ -63,8 +63,8 @@ object StreamAdmissionLadder {
     // admitted wave grows the reference by ~|wave| while the batch
     // size stays constant — exactly the shape the flatness claim needs
     val n = docs.count()
-    // global rank via distributed range sort + zipWithIndex (the
-    // strideSeeds pattern) — never a single-partition Window.orderBy
+    // global rank via distributed range sort + zipWithIndex — never a
+    // single-partition Window.orderBy, which funnels through one task
     val ranked = spark.createDataFrame(
       docs.repartitionByRange(col("doc_id")).sortWithinPartitions("doc_id")
         .rdd.zipWithIndex()

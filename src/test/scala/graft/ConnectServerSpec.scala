@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import com.fasterxml.jackson.databind.ObjectMapper
 
 import graft.pipeline.{ConnectServer, Engine}
+import graft.sinks.LogTable
 
 /** The Connect worker REST surface: lifecycle over HTTP against a real
   * streaming pipeline, plus the protocol's status codes — 201/409 on
@@ -80,7 +81,7 @@ class ConnectServerSpec extends SparkSpec {
       writeCsv(in, "f2.csv", "1,a2,20,false", "3,c,21,false")
       assert(call(url, "PUT", "/connectors/p1/resume").statusCode() == 202)
       spark.streams.active.foreach(_.processAllAvailable())
-      val s2 = spark.read.parquet(out).select("id", "v")
+      val s2 = LogTable.read(spark, out, Seq("id")).select("id", "v")
         .collect().map(r => (r.getInt(0), r.getString(1))).toSet
       assert(s2 == Set((1, "a2"), (2, "b"), (3, "c")))
 
@@ -113,7 +114,7 @@ class ConnectServerSpec extends SparkSpec {
         .get("transforms").size() == 1)
       writeCsv(in, "f2.csv", "3,c,20,false")
       spark.streams.active.foreach(_.processAllAvailable())
-      val rows = spark.read.parquet(out).select("id", "vv").collect()
+      val rows = LogTable.read(spark, out, Seq("id")).select("id", "vv").collect()
         .map(r => r.getInt(0) -> Option(r.getString(1))).toMap
       // offsets continued: f1 rows were NOT re-ingested under the new
       // SMT (vv stays null for them); only the new row carries it
@@ -172,7 +173,7 @@ class ConnectServerSpec extends SparkSpec {
         .get("connector").get("state").asText() == "RUNNING")
       writeCsv(in, "f2.csv", "2,b,20,false")
       spark.streams.active.foreach(_.processAllAvailable())
-      assert(spark.read.parquet(out).count() == 2)
+      assert(LogTable.read(spark, out, Seq("id")).count() == 2)
       // restart from PAUSED: Connect's restart does NOT silently
       // resume — the paused target state survives the bounce
       assert(call(url, "PUT", "/connectors/p5/pause").statusCode() == 202)
@@ -213,12 +214,12 @@ class ConnectServerSpec extends SparkSpec {
       spark.streams.active.foreach(_.processAllAvailable())
       assert(mapper.readTree(call(url, "GET", "/connectors/p6/status").body())
         .get("connector").get("state").asText() == "PAUSED")
-      assert(spark.read.parquet(out).count() == 1,
+      assert(LogTable.read(spark, out, Seq("id")).count() == 1,
         "a micro-batch committed during the paused config update")
       // resume: the backlog flows under the NEW config
       assert(call(url, "PUT", "/connectors/p6/resume").statusCode() == 202)
       spark.streams.active.foreach(_.processAllAvailable())
-      val rows = spark.read.parquet(out).select("id", "vv").collect()
+      val rows = LogTable.read(spark, out, Seq("id")).select("id", "vv").collect()
         .map(r => r.getInt(0) -> Option(r.getString(1))).toMap
       assert(rows == Map(1 -> None, 2 -> Some("B")))
     } finally { server.stop(); engine.delete("p6") }

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 import graft.pipeline.{Engine, PipelineSpec}
+import graft.sinks.LogTable
 
 /** End-to-end pipeline lifecycle over a real streaming query: CSV spool
   * -> SMT chain -> keyed table sink, with pause/resume (offset
@@ -40,7 +41,7 @@ class EngineSpec extends SparkSpec {
     val q = engine.registerJson(specJson(in, out))
     q.processAllAvailable()
     assert(engine.status("p1")._2 == "RUNNING")
-    val s1 = spark.read.parquet(out)
+    val s1 = LogTable.read(spark, out, Seq("id"))
     assert(s1.count() == 2)
     // SMT ran: vv = upper(v)
     assert(s1.filter(col("id") === 1).select("vv").head().getString(0) == "A")
@@ -54,7 +55,7 @@ class EngineSpec extends SparkSpec {
     // and a fresh id=3
     writeCsv(in, "f2.csv", "1,a2,20,false", "2,b,21,true", "3,c,22,false")
     engine.resume("p1").processAllAvailable()
-    val s2 = spark.read.parquet(out)
+    val s2 = LogTable.read(spark, out, Seq("id"))
       .select("id", "v").collect().map(r => (r.getInt(0), r.getString(1))).toSet
     assert(s2 == Set((1, "a2"), (3, "c")))
     engine.pause("p1")
@@ -62,7 +63,6 @@ class EngineSpec extends SparkSpec {
     // offset reset + resume re-ingests everything (f1 no longer exists
     // as "new" -- both files are re-read from scratch)
     engine.resetOffsets("p1")
-    graft.pipeline.TableSink // touch to avoid unused warnings
     val deleted = Paths.get(s"$base/engine/checkpoints/p1")
     assert(!Files.exists(deleted))
     engine.delete("p1")
@@ -92,13 +92,13 @@ class EngineSpec extends SparkSpec {
     val engine = new Engine(spark, s"$base/engine")
     val q = engine.registerJson(spec)
     q.processAllAvailable()
-    assert(spark.read.parquet(out).count() == 2)
+    assert(LogTable.read(spark, out, Seq("id")).count() == 2)
     // update id=1, delete id=2 (after = null => tombstone after unwrap)
     writeBatch("b2", Seq(
       (1, Some(After(1, "a2")), "u", 20L), (2, None, "d", 21L)))
     q.processAllAvailable()
     engine.pause("cdc1")
-    val state = spark.read.parquet(out)
+    val state = LogTable.read(spark, out, Seq("id"))
       .select("id", "v").collect().map(r => (r.getInt(0), r.getString(1))).toSet
     assert(state == Set((1, "a2")))
     engine.delete("cdc1")
@@ -337,7 +337,7 @@ class EngineSpec extends SparkSpec {
     val q = engine.registerJson(spec)
     q.processAllAvailable()
     engine.delete("nopkfull")
-    val got = spark.read.parquet(out)
+    val got = LogTable.read(spark, out, Seq("id", "v"))
       .select("id", "v").collect().map(r => (r.getInt(0), r.getString(1))).toSet
     // (2,b) tombstoned away by its full-row key; (2,c) survives — a PK
     // key of just id=2 would have clobbered it
@@ -363,14 +363,14 @@ class EngineSpec extends SparkSpec {
     val engine = new Engine(spark, s"$base/engine")
     engine.register(spec).processAllAvailable()
     // snapshot applied with no change files at all
-    assert(spark.read.parquet(out).select("v").distinct().collect()
+    assert(LogTable.read(spark, out, Seq("id")).select("v").distinct().collect()
       .map(_.getString(0)).toSeq == Seq("snap"))
 
     // change wave, then a restart on the same checkpoint: no re-snapshot
     writeCsv(in, "f1.csv", "1,w1,10,false")
     engine.delete("snap")
     engine.register(spec).processAllAvailable()
-    val afterRestart = spark.read.parquet(out).select("id", "v").collect()
+    val afterRestart = LogTable.read(spark, out, Seq("id")).select("id", "v").collect()
       .map(r => (r.getInt(0), r.getString(1))).toMap
     assert(afterRestart == Map(1 -> "w1", 2 -> "snap", 3 -> "snap"))
 
@@ -379,7 +379,7 @@ class EngineSpec extends SparkSpec {
     engine.pause("snap")
     engine.resetOffsets("snap")
     engine.resume("snap").processAllAvailable()
-    val afterReset = spark.read.parquet(out).select("id", "v").collect()
+    val afterReset = LogTable.read(spark, out, Seq("id")).select("id", "v").collect()
       .map(r => (r.getInt(0), r.getString(1))).toMap
     assert(afterReset == Map(1 -> "w1", 2 -> "snap", 3 -> "snap"))
     engine.delete("snap")
@@ -392,6 +392,91 @@ class EngineSpec extends SparkSpec {
       sink = SinkSpec("logtable", out, Seq("id")))))
     intercept[IllegalArgumentException](engine.validate(spec.copy(
       source = spec.source.copy(snapshotMode = Some("bogus")))))
+  }
+
+  private def keyedState(out: String): Map[Int, String] =
+    LogTable.read(spark, out, Seq("id")).select("id", "v").collect()
+      .map(r => r.getInt(0) -> r.getString(1)).toMap
+
+  test("offset reset after one committed batch re-ingests every file (table and logtable)") {
+    for (kind <- Seq("table", "logtable")) {
+      val base = Files.createTempDirectory(s"reset1_$kind").toString
+      val in = s"$base/in"; val out = s"$base/state"
+      writeCsv(in, "f1.csv", "1,a,10,false", "2,b,11,false")
+      val engine = new Engine(spark, s"$base/engine")
+      engine.registerJson(specJson(in, out).replace(
+        """"type": "table"""", s""""type": "$kind"""")).processAllAvailable()
+      engine.pause("p1")
+      writeCsv(in, "f2.csv", "1,a2,20,false", "3,c,22,false")
+      engine.resetOffsets("p1")
+      engine.resume("p1").processAllAvailable()
+      // the re-ingested batch 0 must not pass for a replay of the
+      // committed batch 0: f2's rows land
+      assert(keyedState(out) == Map(1 -> "a2", 2 -> "b", 3 -> "c"), s"kind=$kind")
+      assert(engine.status("p1")._2 == "RUNNING", s"kind=$kind")
+      assert(LogTable.versions(out).size == 2, s"kind=$kind")
+      engine.delete("p1")
+    }
+  }
+
+  test("offset reset after two committed batches converges instead of failing the query") {
+    val base = Files.createTempDirectory("reset2").toString
+    val in = s"$base/in"; val out = s"$base/state"
+    val engine = new Engine(spark, s"$base/engine")
+    writeCsv(in, "f1.csv", "1,a,10,false", "2,b,11,false")
+    val q = engine.registerJson(specJson(in, out).replace(
+      """"type": "table"""", """"type": "logtable""""))
+    q.processAllAvailable()
+    writeCsv(in, "f2.csv", "2,b2,20,false")
+    q.processAllAvailable()
+    assert(engine.latestBatchId("p1").contains(1L))
+    engine.pause("p1")
+    writeCsv(in, "f3.csv", "1,a3,30,false", "2,b,31,true")
+    engine.resetOffsets("p1")
+    engine.resume("p1").processAllAvailable()
+    assert(engine.status("p1")._2 == "RUNNING")
+    assert(keyedState(out) == Map(1 -> "a3"))
+    engine.delete("p1")
+  }
+
+  test("pause/resume appends no version; a replayed batch after a reset stays a no-op") {
+    val base = Files.createTempDirectory("replay").toString
+    val in = s"$base/in"; val out = s"$base/state"
+    val ckpt = Paths.get(s"$base/engine/checkpoints/p1")
+    writeCsv(in, "f1.csv", "1,a,10,false", "2,b,11,false")
+    val engine = new Engine(spark, s"$base/engine")
+    engine.registerJson(specJson(in, out)).processAllAvailable()
+    engine.pause("p1")
+    engine.resume("p1").processAllAvailable()
+    assert(LogTable.versions(out).size == 1)
+    // a reset moves the batch ids above the committed max; a crash after
+    // the sink commit (commit-log entry lost) then re-delivers the batch
+    // under the same id, read back from the checkpoint's marker
+    engine.pause("p1")
+    engine.resetOffsets("p1")
+    engine.resume("p1").processAllAvailable()
+    assert(LogTable.versions(out).size == 2)
+    engine.pause("p1")
+    Files.delete(ckpt.resolve("commits/0"))
+    Files.deleteIfExists(ckpt.resolve("commits/.0.crc"))
+    engine.resume("p1").processAllAvailable()
+    assert(engine.latestBatchId("p1").contains(0L))
+    assert(LogTable.versions(out).size == 2)
+    assert(LogTable.maxCommittedBatchId(out).contains(1L))
+    assert(keyedState(out) == Map(1 -> "a", 2 -> "b"))
+    engine.delete("p1")
+  }
+
+  test("a logtable pipeline records the schema history") {
+    val base = Files.createTempDirectory("lthist").toString
+    val in = s"$base/in"; val out = s"$base/state"
+    writeCsv(in, "f1.csv", "1,a,10,false")
+    val engine = new Engine(spark, s"$base/engine")
+    engine.registerJson(specJson(in, out).replace(
+      """"type": "table"""", """"type": "logtable"""")).processAllAvailable()
+    engine.delete("p1")
+    val h = graft.sinks.SchemaHistory.load(out)
+    assert(h.size == 1 && h.head.contains("CREATE TABLE state"), h.mkString("\n"))
   }
 
   test("S8: publication autocreate modes resolve like the connector") {

@@ -58,8 +58,8 @@ class MergeSinkSpec extends SparkSpec {
     assert(out == Set((1, 1, "x2"), (1, 2, "y")))
   }
 
-  test("TableSink records the schema-history stream: CREATE then drift events") {
-    import graft.pipeline.{SinkSpec, TableSink}
+  test("KeyedFileSink records the schema-history stream: CREATE then drift events") {
+    import graft.pipeline.{KeyedFileSink, SinkSpec}
     import graft.sinks.SchemaHistory
     val base = java.nio.file.Files.createTempDirectory("hist").toString
     val sink = SinkSpec("table", s"$base/state", Seq("id"))
@@ -69,14 +69,14 @@ class MergeSinkSpec extends SparkSpec {
       if (withExtra) f.withColumn("value",
         col("value").withField("extra", lit(42))) else f
     }
-    TableSink.applyBatch(spark, sink, frame(withExtra = false))
+    KeyedFileSink.applyBatch(spark, sink, frame(withExtra = false), None)
     val h1 = SchemaHistory.load(sink.path)
     assert(h1.size == 1 && h1.head.contains("CREATE TABLE state"))
     // same schema again: no new events
-    TableSink.applyBatch(spark, sink, frame(withExtra = false))
+    KeyedFileSink.applyBatch(spark, sink, frame(withExtra = false), None)
     assert(SchemaHistory.load(sink.path).size == 1)
     // add-only drift: one ALTER event, versions continue
-    TableSink.applyBatch(spark, sink, frame(withExtra = true))
+    KeyedFileSink.applyBatch(spark, sink, frame(withExtra = true), None)
     val h2 = SchemaHistory.load(sink.path)
     assert(h2.size == 2)
     assert(h2.last.contains("\"version\":2"))
@@ -85,6 +85,30 @@ class MergeSinkSpec extends SparkSpec {
     val read = spark.read.json(SchemaHistory.historyPath(sink.path).toString)
     assert(read.count() == 2)
     assert(read.columns.sorted.toSeq == Seq("change", "ddl", "version"))
+  }
+
+  test("a batch omitting an earlier column records one manual DROP event, not one per batch") {
+    import graft.pipeline.{KeyedFileSink, SinkSpec}
+    import graft.sinks.{LogTable, SchemaHistory}
+    val base = java.nio.file.Files.createTempDirectory("histdrop").toString
+    val sink = SinkSpec("table", s"$base/state", Seq("id"))
+    def frame(id: Int, withExtra: Boolean) = {
+      val df = Seq((id, "a", id.toLong)).toDF("id", "payload", "s")
+      val f = Connect.toConnectFrame(df, Seq("id"), "t", "s")
+      if (withExtra) f.withColumn("value",
+        col("value").withField("extra", lit(42))) else f
+    }
+    KeyedFileSink.applyBatch(spark, sink, frame(1, withExtra = true), None)
+    KeyedFileSink.applyBatch(spark, sink, frame(2, withExtra = false), None)
+    KeyedFileSink.applyBatch(spark, sink, frame(3, withExtra = false), None)
+    val h = SchemaHistory.load(sink.path)
+    assert(h.size == 2, h.mkString("\n"))
+    assert(h.last.contains("\"change\":\"manual\"") &&
+      h.last.contains("DROP COLUMN extra"))
+    // the table stays add-only: the dropped column reads back as null
+    val rows = LogTable.read(spark, sink.path, Seq("id"))
+      .select("id", "extra").as[(Int, Option[Int])].collect().toSet
+    assert(rows == Set((1, Some(42)), (2, None), (3, None)))
   }
 
   test("schema history replays a chain incl. manual drop/retype events") {

@@ -58,7 +58,7 @@ class PollingSpec extends SparkSpec {
     // new rows appear; only they are captured (pushdown past watermark)
     writeSource(3L -> "c", 4L -> "d")
     assert(p1.pollOnce() == 2)
-    val s1 = spark.read.parquet(out)
+    val s1 = graft.sinks.LogTable.read(spark, out, Seq("id"))
     assert(s1.count() == 4)
     assert(s1.filter(col("id") === 3).select("vv").head().getString(0) == "C")
 
@@ -71,7 +71,7 @@ class PollingSpec extends SparkSpec {
     // state converges to the same table (idempotence)
     p2.resetOffsets()
     assert(p2.pollOnce() == 4)
-    val s2 = spark.read.parquet(out)
+    val s2 = graft.sinks.LogTable.read(spark, out, Seq("id"))
     assert(s2.count() == 4)
     assert(s2.select(sum("id")).head().getLong(0) == 10L)
   }

@@ -78,7 +78,7 @@ class SoakSpec extends SparkSpec {
     // reconciliation: counts AND content per table (labs: 5-way COUNT(*))
     tables.foreach { t =>
       val want = expected(t)
-      val got = spark.read.parquet(s"$base/state/$t")
+      val got = graft.sinks.LogTable.read(spark, s"$base/state/$t", Seq("id"))
         .select("id", "v").collect()
         .map(r => r.getLong(0) -> r.getString(1)).toMap
       assert(got.size == want.size, s"$t: ${got.size} != ${want.size}")
