@@ -95,6 +95,28 @@ object Multimodal {
       .getOrElse(javax.sound.sampled.AudioSystem.getAudioInputStream(
         new java.io.ByteArrayInputStream(bytes)))
 
+  // ImageIO's disk cache is a temp file per stream: off for the whole
+  // JVM, set here because this initializer runs before the first image
+  // encode or decode in every driver and executor JVM
+  javax.imageio.ImageIO.setUseCache(false)
+
+  /** The image-decode front door every per-record decoder uses. A
+   * payload no ImageIO reader accepts fails with the same
+   * IllegalArgumentException at every call site, so the m16/m20
+   * quarantine classification cannot depend on which one decoded it. */
+  private[multimodal] def openImage(bytes: Array[Byte]): java.awt.image.BufferedImage = {
+    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
+    require(img != null, s"undecodable image payload (${bytes.length} bytes)")
+    img
+  }
+
+  /** The image-encode counterpart of [[openImage]]: `img` as PNG bytes. */
+  private def pngBytes(img: java.awt.image.RenderedImage): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(img, "png", bos)
+    bos.toByteArray
+  }
+
   /** Metadata carried beside every media payload. */
   val MediaMetaSchema: StructType = StructType(Seq(
     StructField("format", StringType, nullable = false),
@@ -173,7 +195,6 @@ object Multimodal {
     val projected = df.select(col(idCol).cast(LongType),
       encode(col(textCol), "UTF-8"))
     val rdd = projected.rdd.mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false) // no temp-file cache in tasks
       rows.map { r =>
         val id = r.getLong(0)
         val len = r.getAs[Array[Byte]](1).length
@@ -189,9 +210,7 @@ object Multimodal {
           while (x < w) { raster.setSample(x, y, 0, a + x + y); x += 1 }
           y += 1
         }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", bos)
-        Row(id, bos.toByteArray, Row("image/png", w, h, 1))
+        Row(id, pngBytes(img), Row("image/png", w, h, 1))
       }
     }
     spark.createDataFrame(rdd, outSchema)
@@ -230,12 +249,9 @@ object Multimodal {
       StructField("meta", MediaMetaSchema, nullable = false)))
     val projected = df.select(col("media_id").cast(LongType), col("payload"))
     val rdd = projected.rdd.mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
       rows.map { r =>
         val id = r.getLong(0)
-        val in = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
-        require(in != null, "undecodable image payload")
+        val in = openImage(r.getAs[Array[Byte]](1))
         val (w, h) = (in.getWidth, in.getHeight)
         val (w2, h2) = ((w + factor - 1) / factor, (h + factor - 1) / factor)
         val out = new java.awt.image.BufferedImage(
@@ -250,9 +266,7 @@ object Multimodal {
           }
           y += 1
         }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(out, "png", bos)
-        Row(id, bos.toByteArray, Row("image/png", w2, h2, 1))
+        Row(id, pngBytes(out), Row("image/png", w2, h2, 1))
       }
     }
     spark.createDataFrame(rdd, outSchema)
@@ -287,11 +301,8 @@ object Multimodal {
       StructField("hash_lo", LongType, nullable = false)))
     val projected = df.select(col("media_id").cast(LongType), col("payload"))
     val rdd = projected.rdd.mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
       rows.map { r =>
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
-        require(img != null, "undecodable image payload")
+        val img = openImage(r.getAs[Array[Byte]](1))
         val (w, h) = (img.getWidth, img.getHeight)
         val raster = img.getRaster
         val bands = raster.getNumBands
@@ -353,7 +364,6 @@ object Multimodal {
       encode(col(textCol), "UTF-8"))
     val bumped = Set((2, 1), (6, 4), (10, 10))
     val rdd = projected.rdd.mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
       rows.map { r =>
         val id = r.getLong(0)
         val len = r.getAs[Array[Byte]](1).length.toLong
@@ -377,9 +387,7 @@ object Multimodal {
           }
           y += 1
         }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", bos)
-        Row(id, bos.toByteArray, Row("image/png", w, h, 1))
+        Row(id, pngBytes(img), Row("image/png", w, h, 1))
       }
     }
     spark.createDataFrame(rdd, outSchema)
@@ -672,7 +680,6 @@ object Multimodal {
       StructField("pixel_sum", LongType, nullable = true)))
     val projected = df.select(col("media_id").cast(LongType), col("payload"))
     val rdd = projected.rdd.mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
       rows.map { r =>
         val id = r.getLong(0)
         val bytes = r.getAs[Array[Byte]](1)
@@ -685,9 +692,7 @@ object Multimodal {
             bytes(n - 7) == 'E' && bytes(n - 6) == 'N' && bytes(n - 5) == 'D'
           if (!tailOk) throw new TruncatedMediaException(
             "PNG data section ends before IEND")
-          val img = javax.imageio.ImageIO.read(
-            new java.io.ByteArrayInputStream(bytes))
-          require(img != null, "undecodable image payload")
+          val img = openImage(bytes)
           val raster = img.getRaster
           var sum = 0L
           var y = 0
@@ -1135,11 +1140,8 @@ object Multimodal {
  * null image silently).
  */
 final class ImageIoDecoder {
-  javax.imageio.ImageIO.setUseCache(false)
-
   def decode(bytes: Array[Byte]): Row = {
-    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-    require(img != null, s"undecodable image payload (${bytes.length} bytes)")
+    val img = Multimodal.openImage(bytes)
     val w = img.getWidth
     val h = img.getHeight
     val raster = img.getRaster

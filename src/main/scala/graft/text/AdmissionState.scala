@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Path, Paths}
 import graft.state.StateDir
 
@@ -22,7 +22,7 @@ import graft.state.StateDir
  * Concurrency contract: the [[graft.state.StateDir]] writer lease and
  * checkpoint bind, the same two mechanisms as the vector store:
  *
- *  1. **Epoch fencing** ([[acquireWriter]] / the fenced [[fold]] and
+ *  1. **Epoch fencing** ([[acquireWriter]] / [[fold]] and
  *     `StateDir.fence` before a state append): the admission-writer
  *     role is the substrate's writer lease. A rescheduled job acquires
  *     the next epoch; the superseded job's next fold or state append
@@ -94,13 +94,24 @@ object AdmissionState {
    * just the ones this call folded, so a prior crash between publish
    * and retire (which leaks superseded dirs; `parts` excludes them,
    * so correctness was never affected) is cleaned by the next fold.
-   * Unfenced form is package-private (a zombie must not bypass the
-   * fence); production callers use the epoch overload. See the
-   * concurrency contract above. */
-  private[graft] def fold(spark: SparkSession, stateDir: String, upTo: Long,
-                          subs: Seq[String],
-                          preCommit: () => Unit = () => (),
-                          build: (String, Seq[String]) => org.apache.spark.sql.DataFrame = null): Boolean = {
+   *
+   * Fenced by the writer `epoch`: checked at entry AND re-checked
+   * immediately before the atomic publish, so a superseded maintenance
+   * pass aborts with the state unmoved (the staged `.tmp` stays
+   * invisible to every reader). See the concurrency contract above.
+   *
+   * `build(sub, read)` returns the compacted frame for `sub`, where
+   * `read(s)` concatenates the folded parts' own `s` dirs (the default
+   * build is `read(sub)`). It runs while the fold is staged — the hook
+   * maintenance rewrites publish through, so a derived table can be
+   * REBUILT from sibling state and go live atomically with the fold,
+   * e.g. re-capping the containment postings from the folded artifacts
+   * ([[Dedup.foldWithRecappedPostings]]). */
+  def fold(spark: SparkSession, stateDir: String, upTo: Long,
+           subs: Seq[String], epoch: Long,
+           build: (String, String => DataFrame) => DataFrame =
+             (sub, read) => read(sub)): Boolean = {
+    StateDir.fence(stateDir, epoch)
     val entries = list(stateDir).map(p => p.getFileName.toString -> p)
     val horizon = entries.flatMap { case (n, _) => foldId(n) }
       .foldLeft(-1L)(math.max)
@@ -118,11 +129,10 @@ object AdmissionState {
     else {
       val tmp = Paths.get(stateDir, s".fold=$upTo.tmp")
       graft.util.Fs.deleteRecursive(tmp)
-      val mk: (String, Seq[String]) => org.apache.spark.sql.DataFrame =
-        if (build != null) build
-        else (sub, parts) => spark.read.parquet(parts.map(_ + s"/$sub"): _*)
-      StateDir.publish(tmp, Paths.get(stateDir, s"fold=$upTo"), preCommit) { t =>
-        subs.foreach(sub => mk(sub, inputs).write.parquet(t.resolve(sub).toString))
+      val read = (sub: String) => spark.read.parquet(inputs.map(_ + s"/$sub"): _*)
+      StateDir.publish(tmp, Paths.get(stateDir, s"fold=$upTo"),
+          () => StateDir.fence(stateDir, epoch)) { t =>
+        subs.foreach(sub => build(sub, read).write.parquet(t.resolve(sub).toString))
       }
       entries.collect {
         case ("seed", p) => p
@@ -131,30 +141,6 @@ object AdmissionState {
       }.foreach(graft.util.Fs.deleteRecursive)
       true
     }
-  }
-
-  /** [[fold]] under a fencing token: checked at entry AND re-checked
-   * immediately before the atomic publish, so a superseded maintenance
-   * pass aborts with the state unmoved (the staged `.tmp` stays
-   * invisible to every reader). */
-  def fold(spark: SparkSession, stateDir: String, upTo: Long,
-           subs: Seq[String], epoch: Long): Boolean = {
-    StateDir.fence(stateDir, epoch)
-    fold(spark, stateDir, upTo, subs, () => StateDir.fence(stateDir, epoch))
-  }
-
-  /** Fenced [[fold]] with a per-sub-table BUILD override — the hook
-   * maintenance rewrites publish through: `build(sub, partDirs)`
-   * returns the compacted frame for `sub` (default: concatenate the
-   * parts' own `sub` dirs), so a derived table can be REBUILT from
-   * sibling state during the fold and go live atomically with it —
-   * e.g. re-capping the containment posting table from the folded
-   * artifacts ([[Dedup.foldWithRecappedPostings]]). */
-  def fold(spark: SparkSession, stateDir: String, upTo: Long,
-           subs: Seq[String], epoch: Long,
-           build: (String, Seq[String]) => org.apache.spark.sql.DataFrame): Boolean = {
-    StateDir.fence(stateDir, epoch)
-    fold(spark, stateDir, upTo, subs, () => StateDir.fence(stateDir, epoch), build)
   }
 
   /** Claim the admission-writer role of `stateDir`

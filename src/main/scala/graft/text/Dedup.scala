@@ -996,16 +996,13 @@ object Dedup {
                       recapMaxDf: Option[Int] = None,
                       rebucket: Option[Column => Column] = None): Boolean =
     graft.text.AdmissionState.fold(spark, stateDir, upTo, subs, epoch,
-      build = (sub: String, parts: Seq[String]) => (sub, recapMaxDf,
-          rebucket) match {
+      build = (sub, read) => (sub, recapMaxDf, rebucket) match {
         case ("cpost", Some(maxDf), _) =>
-          containmentPostings(
-            spark.read.parquet(parts.map(_ + "/art"): _*), maxDf)
+          containmentPostings(read("art"), maxDf)
         case ("emb", _, Some(bucketOf)) =>
-          spark.read.parquet(parts.map(_ + "/emb"): _*)
-            .select(col("ref_id"), bucketOf(col("vec")).as("bucket"),
-              col("vec"))
-        case _ => spark.read.parquet(parts.map(_ + s"/$sub"): _*)
+          read("emb").select(col("ref_id"), bucketOf(col("vec")).as("bucket"),
+            col("vec"))
+        case _ => read(sub)
       })
 
   /** Exact dedup: keep the smallest id per identical text. The groupBy

@@ -130,7 +130,8 @@ class AdmissionStateSpec extends SparkSpec {
 
     // fold seed + b0 (safe mid-stream: 0 < frontier 1): reads resolve
     // fold=0 + b1, and everything downstream is row-identical
-    assert(AdmissionState.fold(spark, stateDir, upTo = 0L, Seq("art", "sh")))
+    val e = AdmissionState.acquireWriter(stateDir)
+    assert(AdmissionState.fold(spark, stateDir, upTo = 0L, Seq("art", "sh"), e))
     assert(AdmissionState.parts(stateDir, 2L) ==
       Seq(s"$stateDir/fold=0", s"$stateDir/b1"))
     assert(!java.nio.file.Files.exists(
@@ -141,7 +142,7 @@ class AdmissionStateSpec extends SparkSpec {
       "the verdict moved across the fold")
 
     // fold the rest: one dir, prior fold retired, still identical
-    assert(AdmissionState.fold(spark, stateDir, upTo = 1L, Seq("art", "sh")))
+    assert(AdmissionState.fold(spark, stateDir, upTo = 1L, Seq("art", "sh"), e))
     assert(AdmissionState.parts(stateDir, 2L) == Seq(s"$stateDir/fold=1"))
     assert(readArt(2L).orderBy("doc_id").collect().toSeq == artBefore)
     assert(verdictRows() == verdictBefore)
@@ -149,10 +150,10 @@ class AdmissionStateSpec extends SparkSpec {
     // newest batch (it would retire seed yet stay invisible to every
     // parts(belowId <= upTo) reader)
     intercept[IllegalArgumentException] {
-      AdmissionState.fold(spark, stateDir, upTo = 1L, Seq("art", "sh"))
+      AdmissionState.fold(spark, stateDir, upTo = 1L, Seq("art", "sh"), e)
     }
     intercept[IllegalArgumentException] {
-      AdmissionState.fold(spark, stateDir, upTo = 9L, Seq("art", "sh"))
+      AdmissionState.fold(spark, stateDir, upTo = 9L, Seq("art", "sh"), e)
     }
   }
 
@@ -203,12 +204,12 @@ class AdmissionStateSpec extends SparkSpec {
     }
     assert(AdmissionState.parts(stateDir, 2L) == before)
     assert(Files.exists(Paths.get(stateDir, "seed")))
-    // a supersession landing MID-fold (after staging, before publish)
+    // a supersession landing MID-fold (while staging, before publish)
     // aborts at the pre-publish re-check with the state unmoved
     intercept[IllegalArgumentException] {
-      AdmissionState.fold(spark, stateDir, upTo = 0L, Seq("art"),
-        preCommit = () => { AdmissionState.acquireWriter(stateDir); // e2
-          StateDir.fence(stateDir, e1) })
+      AdmissionState.fold(spark, stateDir, upTo = 0L, Seq("art"), epoch = e1,
+        build = (sub, read) => { AdmissionState.acquireWriter(stateDir); // e2
+          read(sub) })
     }
     assert(AdmissionState.parts(stateDir, 2L) == before)
     // the live holder (now e2's owner) folds fine
@@ -236,7 +237,8 @@ class AdmissionStateSpec extends SparkSpec {
     val expected = spark.read.parquet(
         AdmissionState.parts(stateDir, 3L).map(_ + "/art"): _*)
       .orderBy("doc_id").collect().toSeq
-    assert(AdmissionState.fold(spark, stateDir, upTo = 0L, Seq("art")))
+    val e = AdmissionState.acquireWriter(stateDir)
+    assert(AdmissionState.fold(spark, stateDir, upTo = 0L, Seq("art"), e))
     // simulate the crash leak: fold=0 published but seed/b0 retire lost
     art(docsSmall).write.parquet(s"$stateDir/seed/art")
     art(docsSmall.filter(col("doc_id") % 3 === 0))
@@ -245,7 +247,7 @@ class AdmissionStateSpec extends SparkSpec {
     assert(AdmissionState.parts(stateDir, 3L) ==
       Seq(s"$stateDir/fold=0", s"$stateDir/b1", s"$stateDir/b2"))
     // …and the NEXT fold retires them along with its own inputs
-    assert(AdmissionState.fold(spark, stateDir, upTo = 1L, Seq("art")))
+    assert(AdmissionState.fold(spark, stateDir, upTo = 1L, Seq("art"), e))
     assert(!Files.exists(Paths.get(stateDir, "seed")))
     assert(!Files.exists(Paths.get(stateDir, "b0")))
     assert(!Files.exists(Paths.get(stateDir, "fold=0")))

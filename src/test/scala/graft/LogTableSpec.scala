@@ -5,17 +5,12 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
 import graft.sinks.LogTable
-import graft.sinks.LogTable.{CommitMode, ManifestCommit, RenameCommit}
 
 /** Delta-versioned keyed sink: O(batch) appends, merge-on-read,
- * tombstone-preserving compaction, crash-leftover hygiene, and the
- * end-to-end streaming pipeline wiring — the full behavioral suite runs
- * under BOTH commit protocols (atomic-rename and object-store
- * manifest), plus the manifest-only crash shapes. */
+ * tombstone-preserving compaction, batch-id replay and its refusals,
+ * crash-leftover hygiene, and the end-to-end streaming pipeline wiring. */
 class LogTableSpec extends SparkSpec {
   import spark.implicits._
-
-  private val modes: Seq[CommitMode] = Seq(RenameCommit, ManifestCommit)
 
   private def frame(rows: Seq[(Int, String)], seqV: Long,
                     tombstone: Boolean = false) = {
@@ -29,77 +24,82 @@ class LogTableSpec extends SparkSpec {
     LogTable.read(spark, path, Seq("id"))
       .select("id", "v").as[(Int, String)].collect().toSet
 
-  test("append deltas, merge-on-read, tombstones delete (both modes)") {
-    for (mode <- modes) {
-      val path = Files.createTempDirectory("logtable").toString + "/t"
-      LogTable.applyBatch(path, frame(Seq(1 -> "a", 2 -> "b"), 1), Seq("id"),
-        mode = mode)
-      LogTable.applyBatch(path, frame(Seq(1 -> "a2", 3 -> "c"), 2), Seq("id"),
-        mode = mode)
-      LogTable.applyBatch(path, frame(Seq(2 -> ""), 3, tombstone = true),
-        Seq("id"), mode = mode)
-      assert(LogTable.versions(path) == Seq(1, 2, 3), s"mode=$mode")
-      assert(state(path) == Set(1 -> "a2", 3 -> "c"), s"mode=$mode")
-    }
+  test("append deltas, merge-on-read, tombstones delete") {
+    val path = Files.createTempDirectory("logtable").toString + "/t"
+    LogTable.applyBatch(path, frame(Seq(1 -> "a", 2 -> "b"), 1), Seq("id"))
+    LogTable.applyBatch(path, frame(Seq(1 -> "a2", 3 -> "c"), 2), Seq("id"))
+    LogTable.applyBatch(path, frame(Seq(2 -> ""), 3, tombstone = true),
+      Seq("id"))
+    assert(LogTable.versions(path) == Seq(1, 2, 3))
+    assert(state(path) == Set(1 -> "a2", 3 -> "c"))
   }
 
-  test("replaying a batch as a new version converges (both modes)") {
-    for (mode <- modes) {
-      val path = Files.createTempDirectory("logtable").toString + "/t"
-      LogTable.applyBatch(path, frame(Seq(1 -> "a", 2 -> "b"), 1), Seq("id"),
-        mode = mode)
-      val before = state(path)
-      LogTable.applyBatch(path, frame(Seq(1 -> "a", 2 -> "b"), 1), Seq("id"),
-        mode = mode)
-      assert(state(path) == before, s"mode=$mode")
-    }
+  test("replaying a batch as a new version converges") {
+    val path = Files.createTempDirectory("logtable").toString + "/t"
+    LogTable.applyBatch(path, frame(Seq(1 -> "a", 2 -> "b"), 1), Seq("id"))
+    val before = state(path)
+    LogTable.applyBatch(path, frame(Seq(1 -> "a", 2 -> "b"), 1), Seq("id"))
+    assert(state(path) == before)
   }
 
-  test("batch-id markers make replay a no-op, and survive compaction (both modes)") {
-    for (mode <- modes) {
-      val path = Files.createTempDirectory("logtable").toString + "/t"
-      LogTable.applyBatch(path, frame(Seq(1 -> "a"), 1), Seq("id"), Some(10L), mode)
-      LogTable.applyBatch(path, frame(Seq(1 -> "a"), 1), Seq("id"), Some(10L), mode)
-      assert(LogTable.versions(path) == Seq(1), s"mode=$mode") // replay appended nothing
-      LogTable.applyBatch(path, frame(Seq(2 -> "b"), 2), Seq("id"), Some(11L), mode)
-      assert(LogTable.maxCommittedBatchId(path).contains(11L), s"mode=$mode")
-      LogTable.compact(spark, path, Seq("id"))
-      // the max marker moved onto the compacted base: replays still no-op
-      assert(LogTable.maxCommittedBatchId(path).contains(11L), s"mode=$mode")
-      val before = LogTable.versions(path)
-      LogTable.applyBatch(path, frame(Seq(2 -> "b"), 2), Seq("id"), Some(11L), mode)
-      assert(LogTable.versions(path) == before, s"mode=$mode")
-      // a STALE id breaks the monotonic contract (only the LAST batch can
-      // replay) — a reset checkpoint or second writer must fail loudly,
-      // not have its batches silently discarded as "replays"
-      val stale = intercept[IllegalStateException] {
-        LogTable.applyBatch(path, frame(Seq(9 -> "x"), 9), Seq("id"), Some(10L), mode)
-      }
-      assert(stale.getMessage.contains("behind committed batch"))
-      assert(LogTable.versions(path) == before, s"mode=$mode")
-      // un-id'd appends (batch-id unknown) still append — opt-in contract
-      LogTable.applyBatch(path, frame(Seq(3 -> "c"), 3), Seq("id"), mode = mode)
-      assert(state(path) == Set(1 -> "a", 2 -> "b", 3 -> "c"), s"mode=$mode")
+  test("batch-id markers make replay a no-op, and survive compaction") {
+    val path = Files.createTempDirectory("logtable").toString + "/t"
+    LogTable.applyBatch(path, frame(Seq(1 -> "a"), 1), Seq("id"), Some(10L))
+    LogTable.applyBatch(path, frame(Seq(1 -> "a"), 1), Seq("id"), Some(10L))
+    assert(LogTable.versions(path) == Seq(1)) // replay appended nothing
+    LogTable.applyBatch(path, frame(Seq(2 -> "b"), 2), Seq("id"), Some(11L))
+    assert(LogTable.maxCommittedBatchId(path).contains(11L))
+    LogTable.compact(spark, path, Seq("id"))
+    // the max marker moved onto the compacted base: replays still no-op
+    assert(LogTable.maxCommittedBatchId(path).contains(11L))
+    val before = LogTable.versions(path)
+    LogTable.applyBatch(path, frame(Seq(2 -> "b"), 2), Seq("id"), Some(11L))
+    assert(LogTable.versions(path) == before)
+    // a STALE id breaks the monotonic contract (only the LAST batch can
+    // replay) — a reset checkpoint or second writer must fail loudly,
+    // not have its batches silently discarded as "replays"
+    val stale = intercept[IllegalStateException] {
+      LogTable.applyBatch(path, frame(Seq(9 -> "x"), 9), Seq("id"), Some(10L))
     }
+    assert(stale.getMessage.contains("behind committed batch"))
+    assert(LogTable.versions(path) == before)
+    // un-id'd appends (batch-id unknown) still append — opt-in contract
+    LogTable.applyBatch(path, frame(Seq(3 -> "c"), 3), Seq("id"))
+    assert(state(path) == Set(1 -> "a", 2 -> "b", 3 -> "c"))
   }
 
-  test("compaction folds versions, keeps deletes deleted, is re-mergeable (both modes)") {
-    for (mode <- modes) {
-      val path = Files.createTempDirectory("logtable").toString + "/t"
-      LogTable.applyBatch(path, frame(Seq(1 -> "a", 2 -> "b"), 1), Seq("id"),
-        mode = mode)
-      LogTable.applyBatch(path, frame(Seq(2 -> ""), 2, tombstone = true),
-        Seq("id"), mode = mode)
-      LogTable.applyBatch(path, frame(Seq(3 -> "c"), 3), Seq("id"), mode = mode)
-      val before = state(path)
-      LogTable.compact(spark, path, Seq("id"))
-      assert(LogTable.versions(path).size == 1, s"mode=$mode")
-      assert(state(path) == before, s"mode=$mode")
-      assert(!state(path).exists(_._1 == 2), s"mode=$mode") // tombstone survived
-      // appends continue after compaction, in the table's own mode
-      LogTable.applyBatch(path, frame(Seq(4 -> "d"), 4), Seq("id"))
-      assert(state(path) == before + (4 -> "d"), s"mode=$mode")
+  test("a non-replayable log refuses an already-committed batch id, versions unmoved") {
+    val path = Files.createTempDirectory("logtable").toString + "/t"
+    LogTable.applyBatch(path, frame(Seq(1 -> "a"), 1), Seq("id"), Some(1L),
+      replayable = false)
+    LogTable.applyBatch(path, frame(Seq(2 -> "b"), 2), Seq("id"), Some(2L),
+      replayable = false)
+    val before = LogTable.versions(path)
+    // an equal id on a synchronous journal is a second writer that won
+    // the race, not a crash replay: swallowing it would lose the mutation
+    val dup = intercept[IllegalStateException] {
+      LogTable.applyBatch(path, frame(Seq(3 -> "c"), 3), Seq("id"), Some(2L),
+        replayable = false)
     }
+    assert(dup.getMessage.contains("non-replayable"))
+    assert(LogTable.versions(path) == before)
+    assert(state(path) == Set(1 -> "a", 2 -> "b"))
+  }
+
+  test("compaction folds versions, keeps deletes deleted, is re-mergeable") {
+    val path = Files.createTempDirectory("logtable").toString + "/t"
+    LogTable.applyBatch(path, frame(Seq(1 -> "a", 2 -> "b"), 1), Seq("id"))
+    LogTable.applyBatch(path, frame(Seq(2 -> ""), 2, tombstone = true),
+      Seq("id"))
+    LogTable.applyBatch(path, frame(Seq(3 -> "c"), 3), Seq("id"))
+    val before = state(path)
+    LogTable.compact(spark, path, Seq("id"))
+    assert(LogTable.versions(path).size == 1)
+    assert(state(path) == before)
+    assert(!state(path).exists(_._1 == 2)) // tombstone survived
+    // appends continue after compaction
+    LogTable.applyBatch(path, frame(Seq(4 -> "d"), 4), Seq("id"))
+    assert(state(path) == before + (4 -> "d"))
   }
 
   test("leftover temp dirs from a crashed rename commit are ignored and swept") {
@@ -112,35 +112,6 @@ class LogTableSpec extends SparkSpec {
     LogTable.applyBatch(path, frame(Seq(2 -> "b"), 2), Seq("id"))
     assert(!Files.exists(junk)) // next writer swept it
     assert(state(path) == Set(1 -> "a", 2 -> "b"))
-  }
-
-  test("manifest mode: unreferenced data dirs are invisible and swept") {
-    val path = Files.createTempDirectory("logtable").toString + "/t"
-    LogTable.applyBatch(path, frame(Seq(1 -> "a"), 1), Seq("id"),
-      mode = ManifestCommit)
-    // a crashed writer: data files landed at their final path but the
-    // manifest PUT never happened — readers must not see the version
-    val orphan = Paths.get(path, "d00000099")
-    Files.createDirectories(orphan)
-    Files.writeString(orphan.resolve("part-zzz.parquet"), "not parquet")
-    assert(LogTable.versions(path) == Seq(1))
-    assert(state(path) == Set(1 -> "a")) // unreferenced => invisible
-    LogTable.applyBatch(path, frame(Seq(2 -> "b"), 2), Seq("id"))
-    assert(!Files.exists(orphan)) // next writer reclaimed the space
-    assert(state(path) == Set(1 -> "a", 2 -> "b"))
-  }
-
-  test("manifest mode: the table layout wins over a caller's requested mode") {
-    val path = Files.createTempDirectory("logtable").toString + "/t"
-    LogTable.applyBatch(path, frame(Seq(1 -> "a"), 1), Seq("id"),
-      mode = ManifestCommit)
-    // a later writer passing the default mode must NOT fork the table
-    // into a second (rename-committed) version history
-    LogTable.applyBatch(path, frame(Seq(2 -> "b"), 2), Seq("id"))
-    assert(LogTable.versions(path) == Seq(1, 2))
-    assert(state(path) == Set(1 -> "a", 2 -> "b"))
-    assert(Files.isDirectory(Paths.get(path, "_manifests")))
-    assert(!Files.exists(Paths.get(path, "v00000002"))) // no rename-mode dirs
   }
 
   test("engine pipeline with logtable sink: stream -> deltas -> merged state") {

@@ -251,6 +251,20 @@ class MultimodalSpec extends SparkSpec {
     assert(e.getMessage.contains("undecodable"))
   }
 
+  test("imagePHash and resizePng fail a non-image payload as undecodable") {
+    val junk = Seq((1L, "not a png".getBytes("UTF-8"))).toDF("media_id", "payload")
+    def cause(t: Throwable): Seq[Throwable] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+    for ((name, run) <- Seq[(String, () => Unit)](
+        "imagePHash" -> (() => Multimodal.imagePHash(junk).collect()),
+        "resizePng" -> (() => Multimodal.resizePng(junk, 2).collect()))) {
+      val e = intercept[Exception](run())
+      assert(cause(e).exists(c => c.isInstanceOf[IllegalArgumentException] &&
+          c.getMessage.contains("undecodable image payload (9 bytes)")),
+        s"$name: expected the undecodable-image failure, got $e")
+    }
+  }
+
   test("resizePng samples the raster at stride f; factor 1 is identity") {
     val text = "abcdefghij" * 5 // len 50 -> w=3, h=3, a=50
     val docs = Seq((7L, text)).toDF("doc_id", "text")
