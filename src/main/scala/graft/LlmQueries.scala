@@ -1679,21 +1679,6 @@ object LlmQueries {
     }.orderBy("query_id", "rank")
   }
 
-  /** E16: STREAMING index admission — e14's admission step run INSIDE
-   * the streaming lifecycle: the existing index materializes once
-   * (batch), then incoming vectors arrive as three file-source
-   * micro-batches (`maxFilesPerTrigger=1`) and each batch encodes
-   * against the FROZEN trained constants and appends to the delta log
-   * through the EPOCH-FENCED admission channel
-   * ([[graft.ml.IndexStore.admit]] — per-batch commit dirs, idempotent
-   * on replay, fence re-checked before every batch's write). Search
-   * reads base + delta back from
-   * storage — the serving path sees only `(id, cell, codes)` files,
-   * never the original vectors, and a base alongside streamed deltas
-   * is exactly the layout a production index maintains. The oracle is
-   * the REBUILT whole-corpus form with the same frozen literals, so
-   * the gate proves the streamed admission lost, duplicated, and
-   * re-derived nothing. */
   /** Shared harness for the streaming index gates (e16 admission, w10
    * serving): wipe `base`, stage `waves` pmod-partitioned slices of
    * `df` as minute-spaced files under `base/in`, and return the scoped
@@ -1732,20 +1717,46 @@ object LlmQueries {
     q.stop()
   }
 
+  /** The store gates' shared prologue: stage the post-boundary slice of
+   * `emb` as waves under `base`, claim the writer role of `base/index`,
+   * bootstrap its base from the pre-boundary slice and admit the waves
+   * through the fenced channel under `base/ckpt`, all encoded by
+   * `encode` (the gate's index family). Returns the store dir and the
+   * writer's epoch. */
+  private def admittedStore(s: SparkSession, base: String, emb: DataFrame,
+                            encode: DataFrame => DataFrame): (String, Long) = {
+    val stream = stageWaveStream(s, base,
+      emb.filter(col("id") >= AdmitBoundary))
+    val idxDir = s"$base/index"
+    val ep = graft.state.StateDir.acquireWriter(idxDir)
+    graft.ml.IndexStore.writeBase(
+      encode(emb.filter(col("id") < AdmitBoundary)), idxDir, ep)
+    admitStream(encode(stream), idxDir, s"$base/ckpt", ep)
+    (idxDir, ep)
+  }
+
+  /** E16: STREAMING index admission — e14's admission step run INSIDE
+   * the streaming lifecycle: the existing index materializes once
+   * (batch), then incoming vectors arrive as three file-source
+   * micro-batches (`maxFilesPerTrigger=1`) and each batch encodes
+   * against the FROZEN trained constants and appends to the delta log
+   * through the EPOCH-FENCED admission channel
+   * ([[graft.ml.IndexStore.admit]] — per-batch commit dirs, idempotent
+   * on replay, fence re-checked before every batch's write). Search
+   * reads base + delta back from
+   * storage — the serving path sees only `(id, cell, codes)` files,
+   * never the original vectors, and a base alongside streamed deltas
+   * is exactly the layout a production index maintains. The oracle is
+   * the REBUILT whole-corpus form with the same frozen literals, so
+   * the gate proves the streamed admission lost, duplicated, and
+   * re-derived nothing. */
   def streamIndexAdmission(s: SparkSession, dir: String): DataFrame = {
     val books = trainedBooksBase(s, dir)
     val cents = trainedCentsBase(s, dir)
     val emb = embFrame(s, dir)
-    val base = s"target/tmp/e16_${new java.io.File(dir).getName}"
-    val incoming = emb.filter(col("id") >= AdmitBoundary)
-    val stream = stageWaveStream(s, base, incoming)
-    val idxDir = s"$base/index"
-    val ep = graft.state.StateDir.acquireWriter(idxDir)
-    graft.ml.IndexStore.writeBase(
-      Similarity.ivfPqIndex(emb.filter(col("id") < AdmitBoundary), books, cents),
-      idxDir, ep)
-    admitStream(Similarity.ivfPqIndex(stream, books, cents), idxDir,
-      s"$base/ckpt", ep)
+    val (idxDir, ep) = admittedStore(s,
+      s"target/tmp/e16_${new java.io.File(dir).getName}", emb,
+      Similarity.ivfPqIndex(_, books, cents))
     // past-threshold maintenance: three committed per-wave deltas exceed
     // maxDeltaFiles=2, so the round trips the fold — the serving view
     // (and the oracle hash) must not move by a row (IndexStoreSpec
@@ -1817,16 +1828,9 @@ object LlmQueries {
     val books = trainedBooksBase(s, dir)
     val cents = trainedCentsBase(s, dir)
     val emb = embFrame(s, dir)
-    val base = s"target/tmp/e25_${new java.io.File(dir).getName}"
-    val stream = stageWaveStream(s, base,
-      emb.filter(col("id") >= AdmitBoundary))
-    val idxDir = s"$base/index"
-    val ep = graft.state.StateDir.acquireWriter(idxDir)
-    graft.ml.IndexStore.writeBase(
-      Similarity.ivfPqIndex(emb.filter(col("id") < AdmitBoundary), books, cents),
-      idxDir, ep)
-    admitStream(Similarity.ivfPqIndex(stream, books, cents), idxDir,
-      s"$base/ckpt", ep)
+    val (idxDir, ep) = admittedStore(s,
+      s"target/tmp/e25_${new java.io.File(dir).getName}", emb,
+      Similarity.ivfPqIndex(_, books, cents))
     graft.ml.IndexStore.tombstone(idxDir,
       emb.filter(pmod(col("id"), lit(DeleteMod)) === lit(3)).select("id"), ep)
     // 3 deltas + 1 tombstone batch > 2: the fold applies the delete
@@ -1845,7 +1849,7 @@ object LlmQueries {
    * of the compaction contract. e16/e25 prove the fold preserves the
    * CURRENT serving view; this gate proves what the contract promises
    * the readers the fold overlaps: compaction with `retainVersions=2`
-   * keeps the pre-fold version AND its folded delta files on disk, so
+   * keeps the pre-fold version AND its folded delta batches on disk, so
    * a reader pinned at v0 ([[graft.ml.IndexStore.readAt]] — a 100 TB
    * serving tier mid-query when the maintenance window fires) resolves
    * its exact pre-fold file set (old base + retained deltas + live
@@ -1859,16 +1863,9 @@ object LlmQueries {
     val books = trainedBooksBase(s, dir)
     val cents = trainedCentsBase(s, dir)
     val emb = embFrame(s, dir)
-    val base = s"target/tmp/e28_${new java.io.File(dir).getName}"
-    val stream = stageWaveStream(s, base,
-      emb.filter(col("id") >= AdmitBoundary))
-    val idxDir = s"$base/index"
-    val ep = graft.state.StateDir.acquireWriter(idxDir)
-    graft.ml.IndexStore.writeBase(
-      Similarity.ivfPqIndex(emb.filter(col("id") < AdmitBoundary), books, cents),
-      idxDir, ep)
-    admitStream(Similarity.ivfPqIndex(stream, books, cents), idxDir,
-      s"$base/ckpt", ep)
+    val (idxDir, ep) = admittedStore(s,
+      s"target/tmp/e28_${new java.io.File(dir).getName}", emb,
+      Similarity.ivfPqIndex(_, books, cents))
     graft.ml.IndexStore.tombstone(idxDir,
       emb.filter(pmod(col("id"), lit(DeleteMod)) === lit(3)).select("id"), ep)
     // 3 deltas + 1 tombstone > 2 trips the fold; retainVersions=2
@@ -1921,16 +1918,9 @@ object LlmQueries {
     val books = trainedBooksBase(s, dir)
     val cents = trainedCentsBase(s, dir)
     val emb = embFrame(s, dir)
-    val base = s"target/tmp/e33_${new java.io.File(dir).getName}"
-    val stream = stageWaveStream(s, base,
-      emb.filter(col("id") >= AdmitBoundary))
-    val idxDir = s"$base/index"
-    val ep = graft.state.StateDir.acquireWriter(idxDir)
-    graft.ml.IndexStore.writeBase(
-      Similarity.ivfPqIndex(emb.filter(col("id") < AdmitBoundary), books, cents),
-      idxDir, ep)
-    admitStream(Similarity.ivfPqIndex(stream, books, cents), idxDir,
-      s"$base/ckpt", ep)
+    val (idxDir, ep) = admittedStore(s,
+      s"target/tmp/e33_${new java.io.File(dir).getName}", emb,
+      Similarity.ivfPqIndex(_, books, cents))
     graft.ml.IndexStore.tombstone(idxDir,
       emb.filter(pmod(col("id"), lit(DeleteMod)) === lit(3)).select("id"), ep)
     val queries = emb.filter(col("id") < 3 ||
@@ -1949,7 +1939,7 @@ object LlmQueries {
     val newBooks = trainedBooksReindex(s, dir)
     val rebuilt = Similarity.ivfPqIndex(embSurvivors(s, dir),
       newBooks, newCents)
-    graft.ml.IndexStore.cutover(s, idxDir, rebuilt, retainVersions = 2,
+    graft.ml.IndexStore.cutover(idxDir, rebuilt, retainVersions = 2,
       epoch = ep)
     require(graft.ml.IndexStore.liveVersions(idxDir) == Seq(0, 1),
       "e33 needs both versions live through the cutover grace window")
@@ -2296,15 +2286,8 @@ object LlmQueries {
     val (splits, mergeOpt, occ) = maintenancePlanState(s, dir)
     val emb = embFrame(s, dir)
     val base = s"target/tmp/e31_${new java.io.File(dir).getName}"
-    val stream = stageWaveStream(s, base,
-      emb.filter(col("id") >= AdmitBoundary))
-    val idxDir = s"$base/index"
-    val ep = graft.state.StateDir.acquireWriter(idxDir)
-    graft.ml.IndexStore.writeBase(
-      Similarity.ivfPqIndex(emb.filter(col("id") < AdmitBoundary), books, cents),
-      idxDir, ep)
-    admitStream(Similarity.ivfPqIndex(stream, books, cents), idxDir,
-      s"$base/ckpt", ep)
+    val (idxDir, ep) = admittedStore(s, base, emb,
+      Similarity.ivfPqIndex(_, books, cents))
     graft.ml.IndexStore.compact(s, idxDir, maxDeltaFiles = 2,
       retainVersions = 1, epoch = ep)
     val admitted = graft.ml.IndexStore.read(s, idxDir)
@@ -2378,12 +2361,10 @@ object LlmQueries {
     scoped.conf.set("spark.sql.shuffle.partitions", "4")
     runAdmission(scoped.readStream.schema(even.schema)
       .option("maxFilesPerTrigger", 1).parquet(in.toString))
-    // ≥ 2: one per late micro-batch at least — a batch may write more
-    // than one part file at larger SFs, so an exact file count would
-    // be asserting an accident of partitioning
-    require(graft.ml.IndexStore.unfoldedDeltaFiles(s, idxDir).size >= 2,
-      "w11's serving view must carry live unfolded deltas — the gate " +
-        "exists to exercise base ∪ delta resolution per micro-batch")
+    require(graft.ml.IndexStore.unfoldedDeltaBatches(idxDir).size == 2,
+      "w11's serving view must carry exactly its two late admission " +
+        "batches unfolded — the gate exists to exercise base ∪ delta " +
+        "resolution per micro-batch")
     // the serving loop: writer quiesced (L6), queries stream in
     val queries = emb.filter(col("id") < 6)
     val qStream = stageWaveStream(s, s"$base/serve", queries)
@@ -2453,15 +2434,8 @@ object LlmQueries {
     val (c, subs, newCents) = e21SplitState(s, dir)
     val emb = embFrame(s, dir)
     val base = s"target/tmp/e21_${new java.io.File(dir).getName}"
-    val stream = stageWaveStream(s, base,
-      emb.filter(col("id") >= AdmitBoundary))
-    val idxDir = s"$base/index"
-    val ep = graft.state.StateDir.acquireWriter(idxDir)
-    graft.ml.IndexStore.writeBase(
-      Similarity.ivfPqIndex(emb.filter(col("id") < AdmitBoundary), books, cents),
-      idxDir, ep)
-    admitStream(Similarity.ivfPqIndex(stream, books, cents), idxDir,
-      s"$base/ckpt", ep)
+    val (idxDir, ep) = admittedStore(s, base, emb,
+      Similarity.ivfPqIndex(_, books, cents))
     graft.ml.IndexStore.compact(s, idxDir, maxDeltaFiles = 2,
       retainVersions = 1, epoch = ep)
     val admitted = graft.ml.IndexStore.read(s, idxDir)
@@ -2566,13 +2540,13 @@ object LlmQueries {
   }
 
   /** E24: the residual family through the STREAMED STORAGE path —
-   * e21's IndexStore plumbing (versioned base, sink-log delta,
+   * e21's IndexStore plumbing (versioned base, fenced admission delta,
    * threshold-tripped fold) carrying e23's residual semantics, which
    * is the composition neither gate covers alone: e21 streams RAW
    * codes (storage-agnostic payload), e23 admits residual codes but
    * in one batch union. Here the residual rows — codes meaningful
-   * only BESIDE their centroid — are what streams through the sink
-   * log, survives a delta fold, re-encodes through the surgical split
+   * only BESIDE their centroid — are what streams through the fenced
+   * admission, survives a delta fold, re-encodes through the surgical split
    * and serves from the physically compacted table. Same frozen
    * constants and same rebuilt-form oracle as e23: the storage moves
    * (streamed admission, fold, compaction) must not move the answer
@@ -2584,16 +2558,8 @@ object LlmQueries {
     val (c, subs, newCents) = e21SplitState(s, dir)
     val emb = embFrame(s, dir)
     val base = s"target/tmp/e24_${new java.io.File(dir).getName}"
-    val stream = stageWaveStream(s, base,
-      emb.filter(col("id") >= AdmitBoundary))
-    val idxDir = s"$base/index"
-    val ep = graft.state.StateDir.acquireWriter(idxDir)
-    graft.ml.IndexStore.writeBase(
-      Similarity.ivfPqResidualIndex(
-        emb.filter(col("id") < AdmitBoundary), books, cents),
-      idxDir, ep)
-    admitStream(Similarity.ivfPqResidualIndex(stream, books, cents), idxDir,
-      s"$base/ckpt", ep)
+    val (idxDir, ep) = admittedStore(s, base, emb,
+      Similarity.ivfPqResidualIndex(_, books, cents))
     graft.ml.IndexStore.compact(s, idxDir, maxDeltaFiles = 2,
       retainVersions = 1, epoch = ep)
     val admitted = graft.ml.IndexStore.read(s, idxDir)

@@ -5,58 +5,47 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.StreamingQuery
 import java.nio.file.{Files, Path, Paths}
 import graft.state.StateDir
+import graft.util.Fs
 
 /**
  * Storage layout + maintenance for a served ANN index: a VERSIONED BASE
- * (one parquet dir per compaction epoch) beside a streaming DELTA dir
- * appended through Structured Streaming's file-sink commit protocol.
- * This is the piece that turns e16's "append one delta per micro-batch
- * forever" into a production layout — at 100 TB unbounded deltas are
- * the classic small-files problem (every search pays a file-listing +
- * footer read per delta), so past a threshold the deltas FOLD into a
- * new base version, exactly the LogTable auto-compaction move applied
- * to the index table.
+ * (one parquet dir per compaction epoch) beside ONE delta channel, the
+ * fenced streaming admission ([[admit]]) that lands each micro-batch in
+ * its own `delta/adm=b<id>` dir. Unbounded per-batch deltas are the
+ * classic small-files problem at 100 TB, so past a threshold they FOLD
+ * into a new base version — the LogTable compaction move applied to the
+ * index table. Every writer verb takes the fencing token from
+ * [[graft.state.StateDir.acquireWriter]] on the store dir and refuses at
+ * entry once a newer holder claimed the role.
  *
  * Isolation contract (what a reader may see, and when):
- *  - The delta dir is only ever read THROUGH its `_spark_metadata` sink
- *    log, so an in-flight or crashed micro-batch's data files are
- *    invisible until their batch commits — readers get committed-prefix
- *    snapshots for free from the sink protocol (`IndexStoreSpec` plants
- *    a torn file and pins this). The FENCED admission channel
- *    ([[admit]]) gives the same guarantee from per-batch `adm=b<k>`
- *    dirs live only with their parquet `_SUCCESS`, plus an epoch check
- *    before every batch's write.
- *  - A base version is live only once BOTH its parquet `_SUCCESS` and
- *    its `_folded` marker (the list of delta files folded into it)
- *    exist; `read` subtracts the live version's folded files from the
- *    committed delta, so during a compaction a reader sees either
- *    (old base + delta) or (new base + delta − folded) — never a row
- *    twice, never a torn fold.
- *  - DELETES are merge-on-read: [[tombstone]] logs a batch of ids as a
- *    `tombs/t=<k>` parquet dir (live once its `_SUCCESS` exists — the
- *    same commit-marker protocol as everything else here), `read`
- *    anti-joins the live unfolded tombstone ids out of the view, and
- *    compaction applies them PHYSICALLY (the new base contains no
- *    tombstoned row) while recording them in the same atomic `_folded`
- *    marker (namespaced `tombs/t=k` lines — delta file names never
- *    contain '/'). This is the Delta-Lake/Iceberg merge-on-read shape:
- *    at 100 TB a delete must not rewrite the base synchronously; it
- *    costs one id-list append now and its rewrite rides the next fold.
- *  - Compaction runs in the maintenance role with the WRITER quiesced
- *    (the same single-writer constraint as every lifecycle verb — L6);
- *    old-version/folded-file deletion is immediate here, where a
- *    production deployment would keep a vacuum grace period for
- *    readers still holding the old file list.
+ *  - An admission or tombstone batch is live only with its parquet
+ *    `_SUCCESS`: an in-flight or crashed batch is invisible, so readers
+ *    get committed-prefix snapshots.
+ *  - A base version is live only once BOTH its `_SUCCESS` and its
+ *    `_folded` marker (the batches folded into it) exist. Readers and
+ *    verbs resolve ONE snapshot per live version, its PENDING set (the
+ *    live batches not in its fold list), so during a compaction a reader
+ *    sees (old base + its pending) or (new base + its pending) — never a
+ *    row twice, never a torn fold.
+ *  - DELETES are merge-on-read (the Delta-Lake/Iceberg shape):
+ *    [[tombstone]] appends a `tombs/t=<k>` id batch, `read` anti-joins
+ *    the pending ids, and the next fold applies them PHYSICALLY while
+ *    recording them in the same atomic `_folded` marker.
+ *  - Compaction and cutover run with the WRITER quiesced (the
+ *    single-writer rule, L6); superseded versions and folded batches are
+ *    retired after the publish, at once or after a grace window.
  */
 object IndexStore {
 
   private def basePath(dir: String): Path = Paths.get(dir, "base")
 
-  /** The streaming-sink target: point `writeStream.option("path", ...)`
-   * here with a checkpoint — the sink's `_spark_metadata` IS the
-   * commit log `read` trusts. */
+  /** The admission channel's root: one `adm=b<id>` dir per committed
+   * micro-batch of [[admit]]. */
   def deltaDir(dir: String): String =
     Paths.get(dir, "delta").toString
+
+  private def tombsPath(dir: String): Path = Paths.get(dir, "tombs")
 
   /** Live base versions (ascending): parquet committed (_SUCCESS) AND
    * fold marker present. */
@@ -66,61 +55,26 @@ object IndexStore {
         Files.exists(p.resolve("_folded")) => v.toInt -> p
     }
 
+  private def newest(dir: String): (Int, Path) = {
+    val vs = versions(dir)
+    require(vs.nonEmpty, s"no live base version under $dir")
+    vs.last
+  }
+
   private def writeVersion(df: DataFrame, dir: String, v: Int,
                            folded: Seq[String],
-                           preCommit: () => Unit = () => ()): Path = {
+                           preCommit: () => Unit = () => ()): Unit = {
     val target = basePath(dir).resolve(s"v=$v")
     df.write.mode("overwrite").parquet(target.toString)
-    // the marker lands AFTER the parquet commit, through the substrate's
-    // staged publish: a bare write could crash mid-way and leave a
-    // TRUNCATED fold list beside a committed _SUCCESS — a live version
-    // whose missing names count as "unfolded" and get served twice. The
-    // version becomes visible to `versions` only with its COMPLETE fold
-    // list in place; a crash leaves `_folded.tmp`, which no reader looks
-    // at, and the retried compaction overwrites the whole dir.
-    // `preCommit` is the fenced verbs' last-instant re-check, run with
-    // the new version fully staged but still INVISIBLE (no `_folded`)
+    // the marker lands AFTER the parquet commit through the staged
+    // publish, so a version is visible only with its COMPLETE fold list
+    // (a truncated one would serve its missing batches twice); a crash
+    // leaves `_folded.tmp`, which no reader looks at, and the retry
+    // overwrites the whole dir. `preCommit` runs with the version staged
+    // but still INVISIBLE
     StateDir.publish(target.resolve("_folded.tmp"), target.resolve("_folded"),
       preCommit)(Files.write(_, folded.mkString("\n").getBytes("UTF-8")))
-    target
   }
-
-  /** Write the initial base (v=0, nothing folded). The target `dir`
-   * must be fresh. Unfenced bootstrap — package-private so a library
-   * consumer cannot bypass the fence; production callers use the
-   * epoch overload. */
-  private[graft] def writeBase(df: DataFrame, dir: String): Unit = {
-    require(versions(dir).isEmpty, s"base already exists under $dir")
-    writeVersion(df, dir, 0, Nil)
-  }
-
-  /** [[writeBase]] under a fencing token: a superseded bootstrap job
-   * refuses instead of racing the new holder's store creation. Claim
-   * the writer role FIRST ([[graft.state.StateDir.acquireWriter]] on
-   * the same dir), then bootstrap — the lease and the base land under
-   * one root. */
-  def writeBase(df: DataFrame, dir: String, epoch: Long): Unit = {
-    StateDir.fence(dir, epoch)
-    writeBase(df, dir)
-  }
-
-  /** Committed delta data files (absolute URIs) per the sink log, with
-   * the schema taken from the SNAPSHOTTED live version `live` — both so
-   * schema inference doesn't open deleted files' footers (only the log
-   * remembers folded files) and so a compaction committing between
-   * listings can't mix an old base with a new version's fold set. */
-  private def committedDeltaFiles(spark: SparkSession, dir: String,
-                                  live: Path): Seq[String] = {
-    val d = Paths.get(deltaDir(dir))
-    if (!Files.isDirectory(d.resolve("_spark_metadata"))) Nil
-    else {
-      val sch = spark.read.parquet(live.toString).schema
-      spark.read.schema(sch).parquet(deltaDir(dir)).inputFiles.toSeq.sorted
-    }
-  }
-
-  private def fileName(uri: String): String =
-    uri.substring(uri.lastIndexOf('/') + 1)
 
   private def foldedNames(v: Path): Set[String] = {
     val f = v.resolve("_folded")
@@ -129,72 +83,84 @@ object IndexStore {
       .split("\n").toSeq.filter(_.nonEmpty).toSet
   }
 
-  /** Delta files not folded into the GIVEN live version. All callers
-   * snapshot `versions` exactly once and pass the chosen version here —
-   * re-listing per sub-question would let a concurrent compaction serve
-   * old base + new fold set (dropping the folded rows). */
-  private def unfoldedFrom(spark: SparkSession, dir: String,
-                           live: Path): Seq[String] = {
-    val folded = foldedNames(live)
-    committedDeltaFiles(spark, dir, live).filterNot(f => folded(fileName(f)))
-  }
-
-  /** Committed delta units NOT yet folded into the live base — sink-log
-   * data files plus fenced-admission batch dirs, each one extra
-   * per-read merge cost; the count `compact` thresholds on. */
-  def unfoldedDeltaFiles(spark: SparkSession, dir: String): Seq[String] =
-    versions(dir).lastOption match {
-      // no live base yet (a writer racing ahead of writeBase): nothing
-      // is servable, so report no deltas rather than throw on the read
-      case None => Nil
-      case Some((_, p)) =>
-        unfoldedFrom(spark, dir, p) ++ unfoldedAdm(dir, p).map(_.toString)
-    }
-
-  // ---- fenced streaming admission (the delta writer role) -----------------
-
   private def admMarker(id: Long): String = s"adm=b$id"
+  private def tombMarker(k: Long): String = s"tombs/t=$k"
 
-  /** All `adm=b<id>` batch dirs present under the delta root (torn ones
-   * included — callers filter liveness). */
+  /** All `adm=b<id>` / `t=<k>` batch dirs present (torn ones included —
+   * callers filter liveness; [[tombstone]] needs the full list so a
+   * crashed batch's number is never reused). */
   private def admDirsPresent(dir: String): Seq[(Long, Path)] =
     StateDir.numbered(Paths.get(deltaDir(dir)), "adm=b")
+  private def tombDirsPresent(dir: String): Seq[(Long, Path)] =
+    StateDir.numbered(tombsPath(dir), "t=")
 
-  /** Live (committed, `_SUCCESS`-marked) admission batches not folded
-   * into the GIVEN version. */
-  private def unfoldedAdm(dir: String, live: Path): Seq[Path] = {
+  /** What a live version still has to merge: the committed
+   * (`_SUCCESS`-marked) admission and tombstone batches not in its fold
+   * list. */
+  private case class Pending(adm: Seq[(Long, Path)], tombs: Seq[(Long, Path)]) {
+    def size: Int = adm.size + tombs.size
+    def markers: Seq[String] =
+      adm.map(b => admMarker(b._1)) ++ tombs.map(t => tombMarker(t._1))
+  }
+
+  /** The ONE snapshot every reader and verb resolves against `live`.
+   * Callers snapshot `versions` once and pass the chosen version here —
+   * re-listing per sub-question would let a concurrent compaction serve
+   * old base + new fold set (dropping the folded rows). */
+  private def pending(dir: String, live: Path): Pending = {
     val folded = foldedNames(live)
-    admDirsPresent(dir).collect {
-      case (id, p) if Files.exists(p.resolve("_SUCCESS")) &&
-        !folded(admMarker(id)) => p
+    def unfolded(present: Seq[(Long, Path)], marker: Long => String) =
+      present.filter { case (k, p) =>
+        Files.exists(p.resolve("_SUCCESS")) && !folded(marker(k))
+      }
+    Pending(unfolded(admDirsPresent(dir), admMarker),
+      unfolded(tombDirsPresent(dir), tombMarker))
+  }
+
+  private def pendingNow(dir: String): Pending =
+    versions(dir).lastOption match {
+      // no live base yet (a writer racing ahead of writeBase): nothing
+      // is servable, so report no batches rather than throw on the read
+      case None => Pending(Nil, Nil)
+      case Some((_, p)) => pending(dir, p)
     }
+
+  /** Committed admission batch dirs NOT yet folded into the live base —
+   * each one extra per-read merge cost; with the pending tombstone
+   * batches, the count `compact` thresholds on. */
+  def unfoldedDeltaBatches(dir: String): Seq[String] =
+    pendingNow(dir).adm.map(_._2.toString)
+
+  /** Pending tombstone batches the live view still has to anti-join. */
+  def unfoldedTombstoneBatches(dir: String): Seq[String] =
+    pendingNow(dir).tombs.map(_._2.toString)
+
+  /** Write the initial base (v=0, nothing folded) under a fencing
+   * token: a superseded bootstrap job refuses instead of racing the new
+   * holder's store creation. Claim the writer role FIRST
+   * ([[graft.state.StateDir.acquireWriter]] on the same dir), then
+   * bootstrap — the lease and the base land under one root. */
+  def writeBase(df: DataFrame, dir: String, epoch: Long): Unit = {
+    StateDir.fence(dir, epoch)
+    require(versions(dir).isEmpty, s"base already exists under $dir")
+    writeVersion(df, dir, 0, Nil)
   }
 
   /**
-   * The EPOCH-FENCED streaming admission entry point — the delta
-   * writer role under the same fencing tokens as [[compact]] and
-   * [[tombstone]]. Each micro-batch re-checks the fence ON THE DRIVER
+   * The EPOCH-FENCED streaming admission entry point — the store's one
+   * delta writer. Each micro-batch re-checks the fence ON THE DRIVER
    * immediately before its write, then lands in its own
-   * `delta/adm=b<batchId>` dir with overwrite — a replayed trigger
-   * after a crash rewrites the same dir (idempotent, effectively
-   * exactly-once), and the batch goes live atomically with its parquet
-   * `_SUCCESS`, so readers get committed-prefix snapshots exactly as
-   * they do from the sink-log channel. A superseded writer's NEXT
-   * batch refuses here with the store unmoved — the rescheduled-
-   * admission-job race (two jobs with different checkpoints
-   * interleaving one delta log) this fence exists for.
+   * `delta/adm=b<batchId>` dir, live with its parquet `_SUCCESS`; a
+   * replayed trigger writes the same dir (idempotent, effectively
+   * exactly-once). A superseded writer's NEXT batch refuses with the
+   * store unmoved.
    *
-   * The checkpoint is part of the store's identity, ENFORCED: the
-   * first admit binds it ([[graft.state.StateDir.bindCheckpoint]]),
-   * and every later admit refuses a DIFFERENT checkpoint at entry —
-   * a fresh/foreign checkpoint restarts batch ids at 0 and would
-   * silently replace committed batches with different rows (the
-   * two-checkpoints-one-log race). A rescheduled holder resumes the
-   * SAME checkpoint under its NEW epoch (standard Structured
-   * Streaming restart + the Kafka producer-epoch bump), so batch
-   * numbering continues and a committed batch never replays with
-   * different data. Returns the started query; callers drive it
-   * (`processAllAvailable`/`awaitTermination`) and stop it.
+   * The checkpoint is part of the store's identity: the first admit
+   * binds it ([[graft.state.StateDir.bindCheckpoint]]) and a later admit
+   * with a DIFFERENT checkpoint refuses at entry — a fresh checkpoint
+   * restarts batch ids at 0 and would silently replace committed
+   * batches. A rescheduled holder resumes the SAME checkpoint under its
+   * NEW epoch. Returns the started query; callers drive and stop it.
    */
   def admit(encoded: DataFrame, dir: String, checkpoint: String,
             epoch: Long): StreamingQuery = {
@@ -213,7 +179,7 @@ object IndexStore {
           s"admission batch $id was already folded into a base version " +
             s"under $dir: this stream's checkpoint does not belong to " +
             "this store — resume the store's original checkpoint")
-        val target = Paths.get(deltaDir(dir), s"adm=b$id")
+        val target = Paths.get(deltaDir(dir), admMarker(id))
         if (Files.exists(target.resolve("_SUCCESS"))) {
           // crash-replay of an already-COMMITTED batch (the checkpoint
           // lost the commit record, the dir didn't): same checkpoint =>
@@ -227,61 +193,25 @@ object IndexStore {
           // to every reader, which filters on the marker): safe to
           // clear and rewrite; the batch goes live atomically with its
           // fresh _SUCCESS
-          graft.util.Fs.deleteRecursive(target)
+          Fs.deleteRecursive(target)
           batch.write.mode("overwrite").parquet(target.toString)
         }
         ()
       }.start()
   }
 
-  // ---- tombstones (merge-on-read deletes) --------------------------------
-
-  private def tombsPath(dir: String): Path = Paths.get(dir, "tombs")
-
-  /** All `t=<k>` batch dirs present on disk (torn ones included —
-   * callers filter liveness themselves; [[tombstone]] needs the full
-   * list so a crashed batch's number is never reused). */
-  private def tombDirsPresent(dir: String): Seq[(Int, Path)] =
-    StateDir.numbered(tombsPath(dir), "t=").map { case (k, p) => k.toInt -> p }
-
-  private def tombMarker(k: Int): String = s"tombs/t=$k"
-
-  /** Live (committed, `_SUCCESS`-marked) tombstone batches not folded
-   * into the GIVEN version. */
-  private def unfoldedTombs(dir: String, live: Path): Seq[Path] = {
-    val folded = foldedNames(live)
-    tombDirsPresent(dir).collect {
-      case (k, p) if Files.exists(p.resolve("_SUCCESS")) &&
-        !folded(tombMarker(k)) => p
-    }
-  }
-
-  /** Pending tombstone batches the live view still has to anti-join —
-   * counts toward `compact`'s per-read merge-cost threshold. */
-  def unfoldedTombstoneBatches(dir: String): Seq[String] =
-    versions(dir).lastOption match {
-      case None => Nil
-      case Some((_, p)) => unfoldedTombs(dir, p).map(_.toString)
-    }
-
   /** Record a batch of deletions (an `id` column) as a live tombstone
-   * set. Writer-role call (single-writer with admission and
-   * compaction). The batch goes live atomically with its parquet
-   * `_SUCCESS`; a crash mid-write leaves a torn dir no reader looks at,
-   * and the batch number is never reused (torn dirs and fold-recorded
-   * numbers both advance the counter), so the retry just writes the
-   * next one. Tombstoning an absent id is a no-op — the verb is
-   * idempotent at the row level. Unfenced form is package-private (a
-   * zombie must not bypass the fence by calling the old surface);
-   * production callers use the epoch overload. */
-  private[graft] def tombstone(dir: String, ids: DataFrame): Unit = {
-    val vs = versions(dir)
-    require(vs.nonEmpty, s"no live base version under $dir")
-    val present = tombDirsPresent(dir).map(_._1)
-    val recorded = foldedNames(vs.last._2)
-      .filter(_.startsWith("tombs/t="))
-      .map(_.stripPrefix("tombs/t=").toInt)
-    val next = (present ++ recorded ++ Seq(-1)).max + 1
+   * set, fenced at entry. The batch goes live atomically with its
+   * parquet `_SUCCESS`; a crash mid-write leaves a torn dir no reader
+   * looks at, and the batch number is never reused (torn dirs and
+   * fold-recorded numbers both advance the counter), so the retry just
+   * writes the next one. Tombstoning an absent id is a no-op — the verb
+   * is idempotent at the row level. */
+  def tombstone(dir: String, ids: DataFrame, epoch: Long): Unit = {
+    StateDir.fence(dir, epoch)
+    val recorded = foldedNames(newest(dir)._2)
+      .flatMap(StateDir.numberAfter(_, "tombs/t="))
+    val next = (tombDirsPresent(dir).map(_._1) ++ recorded ++ Seq(-1L)).max + 1
     ids.select(col("id"))
       .write.parquet(tombsPath(dir).resolve(s"t=$next").toString)
   }
@@ -292,268 +222,166 @@ object IndexStore {
 
   /** The serving view PINNED at a specific live base version — what a
    * reader still holding version `v`'s file list resolves during the
-   * vacuum-grace window. Version v's view is v's base plus every
-   * committed delta/tombstone NOT in v's fold list, so during the
-   * grace a pinned old reader and a current reader see the SAME rows
-   * through different file sets (old base + retained folded files vs
-   * new physically-merged base) — the gate/spec-checkable form of the
-   * isolation contract's "never a row twice, never a torn fold". */
+   * vacuum-grace window. During the grace a pinned old reader and a
+   * current reader see the SAME rows through different file sets (old
+   * base + retained batches vs new physically-merged base). */
   def readAt(spark: SparkSession, dir: String, version: Int): DataFrame = {
     val vs = versions(dir)
     val live = vs.collectFirst { case (v, p) if v == version => p }
     require(live.nonEmpty, s"version $version is not live under $dir " +
       s"(live: ${vs.map(_._1).mkString(", ")})")
-    readFrom(spark, dir, live.get)
+    merge(spark, live.get, pending(dir, live.get))
   }
 
-  /** The serving view: (live base version ∪ committed-but-unfolded
-   * delta files) − live unfolded tombstone ids. The version list is
-   * listed ONCE; the same version supplies the base read, the fold
-   * set, the delta schema and the tombstone subtraction. */
+  /** The serving view: (live base version ∪ pending admission batches)
+   * − pending tombstone ids, the version listed ONCE. */
   def read(spark: SparkSession, dir: String): DataFrame = {
-    val vs = versions(dir)
-    require(vs.nonEmpty, s"no live base version under $dir")
-    readFrom(spark, dir, vs.last._2)
+    val live = newest(dir)._2
+    merge(spark, live, pending(dir, live))
   }
 
-  private def readFrom(spark: SparkSession, dir: String,
-                       live: Path): DataFrame = {
+  /** `live`'s base ∪ `p`'s admission batches − `p`'s tombstone ids: the
+   * serving view, and the new base a fold writes. */
+  private def merge(spark: SparkSession, live: Path, p: Pending): DataFrame = {
+    def load(batches: Seq[(Long, Path)]) =
+      spark.read.parquet(batches.map(_._2.toString): _*)
     val base = spark.read.parquet(live.toString)
-    val withDelta = unfoldedFrom(spark, dir, live) match {
-      case Seq() => base
-      case files => base.unionByName(spark.read.parquet(files: _*))
-    }
-    val withAdm = unfoldedAdm(dir, live) match {
-      case Seq() => withDelta
-      case dirs => withDelta.unionByName(
-        spark.read.parquet(dirs.map(_.toString): _*))
-    }
-    unfoldedTombs(dir, live) match {
-      case Seq() => withAdm
-      case tombs => withAdm.join(
-        spark.read.parquet(tombs.map(_.toString): _*).select("id"),
-        Seq("id"), "left_anti")
-    }
+    val withAdm = if (p.adm.isEmpty) base else base.unionByName(load(p.adm))
+    if (p.tombs.isEmpty) withAdm
+    else withAdm.join(load(p.tombs).select("id"), Seq("id"), "left_anti")
   }
 
   /**
-   * Fold the committed deltas AND pending tombstones into a new base
+   * Fold the pending admission AND tombstone batches into a new base
    * version when their combined count exceeds `maxDeltaFiles` (both
    * are per-read merge cost: a delta is an extra footer+scan, a
    * tombstone batch an extra anti-join side); no-op (false) otherwise.
    * The new base is the union MINUS the tombstoned ids — the physical
    * apply of every merge-on-read delete. Requires the streaming WRITER
-   * quiesced (see the isolation contract above); readers stay
-   * consistent throughout because the new version only goes live with
-   * its fold list, and the folded files/batches/old version are
-   * retired only after that point — immediately with the default
-   * `retainVersions = 1`, or kept through a GRACE WINDOW with
-   * `retainVersions > 1` (readers pinned at the old version via
-   * [[readAt]] keep resolving their exact pre-fold view; a later
-   * [[vacuum]] retires it).
+   * quiesced; readers stay consistent throughout because the new
+   * version only goes live with its fold list, and the folded
+   * batches/old version are retired only after that point —
+   * immediately with `retainVersions = 1`, or kept through a GRACE
+   * WINDOW with `retainVersions > 1` (readers pinned at the old version
+   * via [[readAt]] keep resolving their exact pre-fold view; a later
+   * [[vacuum]] retires it). A supersession landing mid-fold aborts with
+   * the staged version invisible and nothing deleted.
    */
-  private[graft] def compact(spark: SparkSession, dir: String,
-                             maxDeltaFiles: Int,
-                             retainVersions: Int = 1): Boolean =
-    compactCore(spark, dir, maxDeltaFiles, retainVersions, () => ())
+  def compact(spark: SparkSession, dir: String, maxDeltaFiles: Int,
+              retainVersions: Int, epoch: Long): Boolean =
+    compactCore(spark, dir, maxDeltaFiles, retainVersions, epoch,
+      () => StateDir.fence(dir, epoch))
 
-  /** The fold body with an injectable fence RE-CHECK, called at the
-   * two points where a superseded writer could still damage the store
-   * after the entry check: immediately before the new version's
-   * `_folded` marker move (the publish) and immediately before the
-   * vacuum's deletions. A throw at either point leaves the store
-   * unmoved (the staged version has no marker; nothing was deleted).
-   * Package-private so the spec can pin the mid-fold abort
+  /** The fold body with an injectable fence RE-CHECK, called at the two
+   * points where a superseded writer could still damage the store after
+   * the entry check: immediately before the new version's `_folded`
+   * marker move (the publish) and immediately before the retire. A
+   * throw at the first leaves the store unmoved; at the second, the new
+   * version is live and the folded state waits for the next retire.
+   * Package-private so the spec can pin both crash points
    * deterministically. */
   private[graft] def compactCore(spark: SparkSession, dir: String,
                                  maxDeltaFiles: Int, retainVersions: Int,
-                                 recheck: () => Unit): Boolean = {
-    val vs = versions(dir)
-    require(vs.nonEmpty, s"no live base version under $dir")
-    val (pv, pdir) = vs.last
-    val pending = unfoldedFrom(spark, dir, pdir)
-    val admB = unfoldedAdm(dir, pdir)
-    val tombs = unfoldedTombs(dir, pdir)
-    if (pending.size + admB.size + tombs.size <= maxDeltaFiles) false
+                                 epoch: Long, recheck: () => Unit): Boolean = {
+    StateDir.fence(dir, epoch)
+    val (pv, pdir) = newest(dir)
+    val p = pending(dir, pdir)
+    if (p.size <= maxDeltaFiles) false
     else {
-      val deltaSrcs = pending ++ admB.map(_.toString)
-      val unioned =
-        if (deltaSrcs.isEmpty) spark.read.parquet(pdir.toString)
-        else spark.read.parquet(pdir.toString)
-          .unionByName(spark.read.parquet(deltaSrcs: _*))
-      val merged =
-        if (tombs.isEmpty) unioned
-        else unioned.join(
-          spark.read.parquet(tombs.map(_.toString): _*).select("id"),
-          Seq("id"), "left_anti")
-      writeVersion(merged, dir, pv + 1,
-        foldListFor(pdir, pending, admB, tombs),
-        preCommit = recheck)
-      recheck()
-      vacuum(dir, retainVersions)
+      publishFold(dir, pv, pdir, p, merge(spark, pdir, p), retainVersions,
+        recheck, recheck)
       true
     }
   }
 
-  /** The new version's CUMULATIVE fold list (prior folds' names carry
-   * forward): the sink log never forgets a committed file, so a version
-   * that listed only its own fold would let files folded two epochs ago
-   * — physically deleted — resurface as "pending"; tombstone batch and
-   * admission batch numbers carry forward the same way so they are
-   * never reused. ONE assembly shared by [[compactCore]] and
-   * [[cutover]] — vacuum's deletions trust exactly this composition,
-   * so the two verbs must never desynchronize. */
-  private def foldListFor(pdir: Path, pending: Seq[String],
-                          admB: Seq[Path], tombs: Seq[Path]): Seq[String] = {
-    val tombKs = tombs.map(p =>
-      tombMarker(p.getFileName.toString.stripPrefix("t=").toInt))
-    val admKs = admB.map(p =>
-      admMarker(p.getFileName.toString.stripPrefix("adm=b").toLong))
-    (foldedNames(pdir) ++ pending.map(fileName) ++ admKs ++ tombKs)
-      .toSeq.sorted
+  /** Publish `df` as the version after (`pv`, `pdir`) with `p` folded,
+   * then retire — the ONE commit path of [[compactCore]] and
+   * [[cutoverCore]]. The fold list is CUMULATIVE (prior folds' names
+   * carry forward), so a batch folded two versions ago never resurfaces
+   * as pending and its number is never reused; the retire's deletions
+   * trust exactly this composition. `preCommit` runs with the version
+   * staged but invisible, `recheck` before the retire. Returns the new
+   * version number. */
+  private def publishFold(dir: String, pv: Int, pdir: Path, p: Pending,
+                          df: DataFrame, retainVersions: Int,
+                          preCommit: () => Unit, recheck: () => Unit): Int = {
+    writeVersion(df, dir, pv + 1, (foldedNames(pdir) ++ p.markers).toSeq.sorted,
+      preCommit)
+    recheck()
+    retire(dir, retainVersions)
+    pv + 1
   }
 
-  // ---- fenced verbs (the storage half of L6's single-writer rule) ---------
-  //
-  // Claim the writer role with `graft.state.StateDir.acquireWriter`
-  // on the store dir; every verb below takes the returned fencing token
-  // and refuses through `StateDir.fence` at entry — and, for compaction
-  // and cutover, again as the publish's `preCommit` and before the
-  // vacuum deletions — once a newer holder claimed the role.
-
-  /** [[tombstone]] under a fencing token: a superseded writer's delete
-   * refuses instead of corrupting the log. */
-  def tombstone(dir: String, ids: DataFrame, epoch: Long): Unit = {
-    StateDir.fence(dir, epoch)
-    tombstone(dir, ids)
-  }
-
-  /** [[compact]] under a fencing token: a superseded maintenance job
-   * refuses instead of racing the new holder's fold — at entry, again
-   * immediately before the new version's marker move, and again before
-   * the vacuum deletions (a supersession landing mid-fold aborts with
-   * the staged version invisible and nothing deleted). */
-  def compact(spark: SparkSession, dir: String, maxDeltaFiles: Int,
-              retainVersions: Int, epoch: Long): Boolean = {
-    StateDir.fence(dir, epoch)
-    compactCore(spark, dir, maxDeltaFiles, retainVersions,
-      () => StateDir.fence(dir, epoch))
-  }
-
-  /** [[vacuum]] under a fencing token: a superseded maintenance job
-   * cannot retire grace-window versions/files the new holder's pinned
-   * readers still resolve. */
+  /** Retire grace-window state under a fencing token: a superseded
+   * maintenance job cannot retire versions/batches the new holder's
+   * pinned readers still resolve. */
   def vacuum(dir: String, retainVersions: Int, epoch: Long): Unit = {
     StateDir.fence(dir, epoch)
-    vacuum(dir, retainVersions)
+    retire(dir, retainVersions)
   }
 
   /**
    * REINDEX cutover — the verb for drift the surgical verbs can't
-   * repair: publish `rebuilt` (an index REBUILT from the current
-   * serving view under NEW trained constants, built as a SHADOW while
-   * the current version keeps serving) as the next base version,
-   * atomically via the version marker. The new version's fold list
-   * covers every delta file, admission batch and tombstone the serving
-   * view resolved — the rebuild incorporated them — so a post-cutover
-   * reader sees exactly the rebuilt table, while a reader pinned at
-   * the old version ([[readAt]]) keeps resolving its exact pre-cutover
-   * file set through the vacuum grace (`retainVersions` > 1) until a
-   * later fenced [[vacuum]] retires it. Requires the admission writer
-   * quiesced (the single-writer rule — the rebuild must have seen
-   * every commit), and ENFORCES it: the pre-marker re-check re-lists
-   * the unfolded delta/admission/tombstone sets and aborts if they
-   * moved since the entry snapshot — an admission stream still running
-   * under the SAME epoch (every fence passes: admit holds the same
-   * token) could otherwise commit a batch between the snapshot and the
-   * marker move, and that batch would union into the new view ON TOP
-   * of a rebuild that already contains its rows — double-served.
-   * Unlike [[compact]] (whose merge includes only snapshotted files,
-   * so a late batch merely stays pending), cutover's fold list claims
-   * everything the rebuild saw — so the claim is re-verified at the
-   * last instant. Also fenced like every maintenance verb: re-checked
-   * immediately before the marker move and before the vacuum. Returns
-   * the new live version number.
+   * repair: publish `rebuilt` (the serving view rebuilt as a SHADOW
+   * under NEW trained constants) as the next base version, its fold list
+   * claiming every batch the serving view resolved, so a post-cutover
+   * reader sees exactly the rebuilt table while a reader pinned at the
+   * old version ([[readAt]]) keeps its pre-cutover view through the
+   * grace. Requires the admission writer quiesced, and ENFORCES it: the
+   * pre-marker re-check re-resolves the pending snapshot and aborts if
+   * it moved — a same-epoch admission stream (every fence passes)
+   * committing between the snapshot and the marker move would otherwise
+   * union a batch ON TOP of a rebuild that already contains its rows.
+   * Returns the new live version number.
    */
-  def cutover(spark: SparkSession, dir: String, rebuilt: DataFrame,
-              retainVersions: Int, epoch: Long): Int =
-    cutoverCore(spark, dir, rebuilt, retainVersions, epoch, () => ())
+  def cutover(dir: String, rebuilt: DataFrame, retainVersions: Int,
+              epoch: Long): Int =
+    cutoverCore(dir, rebuilt, retainVersions, epoch, () => ())
 
   /** The cutover body with an injectable hook AFTER the entry
    * snapshot and before the publish — package-private so the spec can
    * land a late commit deterministically and pin the pre-marker
    * quiescence abort. */
-  private[graft] def cutoverCore(spark: SparkSession, dir: String,
-                                 rebuilt: DataFrame, retainVersions: Int,
-                                 epoch: Long,
+  private[graft] def cutoverCore(dir: String, rebuilt: DataFrame,
+                                 retainVersions: Int, epoch: Long,
                                  afterSnapshot: () => Unit): Int = {
     StateDir.fence(dir, epoch)
-    val vs = versions(dir)
-    require(vs.nonEmpty, s"no live base version under $dir")
-    val (pv, pdir) = vs.last
-    val pending = unfoldedFrom(spark, dir, pdir)
-    val admB = unfoldedAdm(dir, pdir)
-    val tombs = unfoldedTombs(dir, pdir)
+    val (pv, pdir) = newest(dir)
+    val p = pending(dir, pdir)
     afterSnapshot()
-    writeVersion(rebuilt, dir, pv + 1,
-      foldListFor(pdir, pending, admB, tombs),
+    publishFold(dir, pv, pdir, p, rebuilt, retainVersions,
       preCommit = () => {
         StateDir.fence(dir, epoch)
-        val nowP = unfoldedFrom(spark, dir, pdir)
-        val nowA = unfoldedAdm(dir, pdir)
-        val nowT = unfoldedTombs(dir, pdir)
-        require(nowP == pending && nowA == admB && nowT == tombs,
+        require(pending(dir, pdir) == p,
           s"cutover aborted: commits landed under $dir after the shadow " +
             "rebuild's snapshot (the rebuild cannot contain them; " +
             "publishing would double-serve every row it does) — quiesce " +
             "the admission stream, rebuild, and retry")
-      })
-    StateDir.fence(dir, epoch)
-    vacuum(dir, retainVersions)
-    pv + 1
+      },
+      recheck = () => StateDir.fence(dir, epoch))
   }
 
   /**
-   * Retire base versions past the newest `retainVersions`, then delete
-   * every delta file, admission batch and tombstone batch folded into
-   * the OLDEST retained version — those are invisible to all retained
-   * versions (fold lists are cumulative), so no pinned reader can
-   * still need them; files folded only into NEWER versions stay,
-   * because a reader pinned at the oldest retained version still
-   * resolves them as unfolded. Torn tombstone dirs (no `_SUCCESS`) are
-   * dead garbage and go too. A torn ADMISSION dir is retired only when
-   * its batch id is in the retained fold list — that id committed,
-   * folded and can never be legitimately rewritten ([[admit]] refuses
-   * folded ids), so the dir is a corpse from a crashed rewrite;
-   * at-the-frontier torn dirs stay, because an in-flight replay may be
-   * mid-write on its own batch dir and its retry overwrites it. Runs
-   * in the writer-quiesced maintenance window like [[compact]] (which
-   * calls it); idempotent. Unfenced form is package-private;
-   * production callers use the epoch overload.
+   * Retire base versions past the newest `retainVersions`, then every
+   * batch folded into the OLDEST retained version — invisible to all
+   * retained versions (fold lists are cumulative); batches folded only
+   * into newer versions stay for readers pinned at the oldest. Torn
+   * tombstone dirs go too. A torn ADMISSION dir goes only when its id is
+   * folded ([[admit]] refuses folded ids, so it is a crashed rewrite's
+   * corpse); a torn frontier dir stays, an in-flight replay may own it.
+   * Idempotent.
    */
-  private[graft] def vacuum(dir: String, retainVersions: Int = 1): Unit = {
+  private def retire(dir: String, retainVersions: Int): Unit = {
     require(retainVersions >= 1, s"retainVersions must be >= 1")
     val vs = versions(dir)
     if (vs.nonEmpty) {
-      vs.dropRight(retainVersions)
-        .foreach { case (_, p) => graft.util.Fs.deleteRecursive(p) }
+      vs.dropRight(retainVersions).foreach { case (_, p) => Fs.deleteRecursive(p) }
       val folded = foldedNames(vs.takeRight(retainVersions).head._2)
-      val deltaRoot = Paths.get(deltaDir(dir))
-      folded.filterNot(_.startsWith("tombs/"))
-        .foreach { name =>
-          // adm= markers name whole batch DIRS; plain names are files.
-          // The recursive delete on a folded adm= dir is the SINGLE
-          // owner of folded-batch retirement: it removes committed and
-          // torn-rewrite corpses alike (admit refuses folded ids, so a
-          // folded dir can never be a live in-flight write).
-          if (name.startsWith("adm="))
-            graft.util.Fs.deleteRecursive(deltaRoot.resolve(name))
-          else Files.deleteIfExists(deltaRoot.resolve(name))
-        }
-      tombDirsPresent(dir).collect {
-        case (k, p) if folded(tombMarker(k)) ||
-          !Files.exists(p.resolve("_SUCCESS")) => p
-      }.foreach(graft.util.Fs.deleteRecursive)
+      (admDirsPresent(dir).collect { case (id, p) if folded(admMarker(id)) => p } ++
+        tombDirsPresent(dir).collect {
+          case (k, p) if folded(tombMarker(k)) ||
+            !Files.exists(p.resolve("_SUCCESS")) => p
+        }).foreach(Fs.deleteRecursive)
     }
   }
 }

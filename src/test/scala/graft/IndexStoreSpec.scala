@@ -7,15 +7,16 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** The streamed-index storage layer (e16's layout): versioned base +
-  * file-sink delta, threshold-triggered compaction, and the isolation
-  * contract a concurrent reader relies on. The e16 gate's oracle proves
-  * the serving VIEW is row-stable across the fold; these tests pin the
+  * fenced admission delta (`delta/adm=b<id>`, one dir per micro-batch),
+  * threshold-triggered compaction, and the isolation contract a
+  * concurrent reader relies on. The e16 gate's oracle proves the
+  * serving VIEW is row-stable across the fold; these tests pin the
   * file-level effects and the torn-batch invisibility the oracle can't
-  * see. Isolation is tested DETERMINISTICALLY at its mechanism — the
-  * sink's `_spark_metadata` commit log — rather than with a racing
-  * thread: a reader at ANY instant sees exactly the committed prefix
-  * (test: serve after each wave) and never an uncommitted data file
-  * (test: planted torn file), which together are what "serve while
+  * see. Isolation is tested DETERMINISTICALLY at its mechanism — a
+  * batch dir is live only with its `_SUCCESS` — and then with a racing
+  * reader: a reader at ANY instant sees exactly the committed prefix
+  * (test: serve after each wave) and never an uncommitted batch
+  * (test: planted torn batch dir), which together are what "serve while
   * admitting never reads a torn batch" means at commit granularity.
   */
 class IndexStoreSpec extends SparkSpec {
@@ -30,69 +31,71 @@ class IndexStoreSpec extends SparkSpec {
   private val cents = Similarity.ivfCentroids(4, 8).map(_.map(_.toDouble))
   private val books = Similarity.pqCodebooks(2, 4, 4)
 
-  /** Stage `waves` slices of `df` as minute-spaced files and stream
-    * them into the delta dir, one file per trigger; returns after the
-    * stream drains and stops. */
-  private def admitWaves(dir: String, df: org.apache.spark.sql.DataFrame,
-                         waves: Int, upTo: Int): Unit = {
-    val in = Paths.get(dir, "in")
-    Files.createDirectories(in)
-    (0 until waves).foreach { i =>
-      Tables.stageFile(df.filter(pmod(col("id"), lit(3)) === i),
-        in.resolve(f"wave$i%02d.parquet"), 1000000000000L + i * 60000L)
-    }
+  /** A file-source stream over `dir/in`, one file per trigger. */
+  private def waveStream(dir: String, schema: org.apache.spark.sql.types.StructType) = {
     val scoped = spark.newSession()
     scoped.conf.set("spark.sql.shuffle.partitions", "4")
-    val stream = scoped.readStream.schema(df.schema)
-      .option("maxFilesPerTrigger", 1).parquet(in.toString)
-    val q = Similarity.ivfPqIndex(stream.filter(col("id") < upTo), books, cents)
-      .writeStream
-      .option("checkpointLocation", s"$dir/ckpt")
-      .option("path", IndexStore.deltaDir(s"$dir/index"))
-      .format("parquet").start()
-    q.processAllAvailable()
-    q.stop()
+    scoped.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1).parquet(Paths.get(dir, "in").toString)
   }
 
-  test("compaction folds committed deltas into a new live version; view row-stable; files bounded") {
-    val dir = "target/tmp/idxstore_fold"
+  /** A fresh store under `dir/index`: the base holds ids < 120 of a
+    * 240-vector corpus, and `waves` pmod-3 slices of the rest are staged
+    * as minute-spaced files and admitted under the writer's epoch, one
+    * batch per trigger. Returns the corpus, the store dir and the epoch
+    * once the stream drains and stops. */
+  private def admittedStore(dir: String, waves: Int = 3) = {
     graft.util.Fs.deleteRecursive(Paths.get(dir))
     val vecs = corpus(240)
     val idx = s"$dir/index"
+    val w = StateDir.acquireWriter(idx)
     IndexStore.writeBase(
-      Similarity.ivfPqIndex(vecs.filter(col("id") < 120), books, cents), idx)
-    admitWaves(dir, vecs.filter(col("id") >= 120), waves = 3, upTo = 240)
+      Similarity.ivfPqIndex(vecs.filter(col("id") < 120), books, cents), idx, w)
+    val incoming = vecs.filter(col("id") >= 120)
+    val in = Paths.get(dir, "in")
+    Files.createDirectories(in)
+    (0 until waves).foreach { i =>
+      Tables.stageFile(incoming.filter(pmod(col("id"), lit(3)) === i),
+        in.resolve(f"wave$i%02d.parquet"), 1000000000000L + i * 60000L)
+    }
+    val q = IndexStore.admit(
+      Similarity.ivfPqIndex(waveStream(dir, incoming.schema), books, cents),
+      idx, s"$dir/ckpt", w)
+    q.processAllAvailable()
+    q.stop()
+    (vecs, idx, w)
+  }
+
+  test("compaction folds committed deltas into a new live version; view row-stable; files bounded") {
+    val (_, idx, w) = admittedStore("target/tmp/idxstore_fold")
 
     // three per-wave commits pending
-    assert(IndexStore.unfoldedDeltaFiles(spark, idx).size == 3)
+    assert(IndexStore.unfoldedDeltaBatches(idx).size == 3)
     val before = IndexStore.read(spark, idx).collect().toSet
     assert(before.size == 240)
 
     // below threshold: no-op
-    assert(!IndexStore.compact(spark, idx, maxDeltaFiles = 3))
+    assert(!IndexStore.compact(spark, idx, maxDeltaFiles = 3,
+      retainVersions = 1, epoch = w))
     // past threshold: folds, view unchanged, delta drained, v=1 live
-    assert(IndexStore.compact(spark, idx, maxDeltaFiles = 2))
+    assert(IndexStore.compact(spark, idx, maxDeltaFiles = 2,
+      retainVersions = 1, epoch = w))
     assert(IndexStore.read(spark, idx).collect().toSet == before,
       "the fold moved the serving view")
-    assert(IndexStore.unfoldedDeltaFiles(spark, idx).isEmpty)
+    assert(IndexStore.unfoldedDeltaBatches(idx).isEmpty)
     assert(Files.exists(Paths.get(idx, "base", "v=1", "_SUCCESS")))
     assert(!Files.exists(Paths.get(idx, "base", "v=0")),
       "old version not vacuumed")
     // idempotent: nothing left to fold, and a zero-threshold re-compact
     // is a no-op (both pinned unconditionally — an || here would let the
     // no-op branch mask a fold that drained nothing)
-    assert(!IndexStore.compact(spark, idx, maxDeltaFiles = 0))
-    assert(IndexStore.unfoldedDeltaFiles(spark, idx).isEmpty)
+    assert(!IndexStore.compact(spark, idx, maxDeltaFiles = 0,
+      retainVersions = 1, epoch = w))
+    assert(IndexStore.unfoldedDeltaBatches(idx).isEmpty)
   }
 
   test("tombstones: merge-on-read excludes ids, compaction applies them physically, torn batch invisible") {
-    val dir = "target/tmp/idxstore_tombs"
-    graft.util.Fs.deleteRecursive(Paths.get(dir))
-    val vecs = corpus(240)
-    val idx = s"$dir/index"
-    IndexStore.writeBase(
-      Similarity.ivfPqIndex(vecs.filter(col("id") < 120), books, cents), idx)
-    admitWaves(dir, vecs.filter(col("id") >= 120), waves = 3, upTo = 240)
+    val (_, idx, w) = admittedStore("target/tmp/idxstore_tombs")
     val before = IndexStore.read(spark, idx).collect().toSet
     assert(before.size == 240)
 
@@ -100,7 +103,7 @@ class IndexStoreSpec extends SparkSpec {
     // the ids immediately — rows in the BASE and rows in the DELTA both
     import spark.implicits._
     IndexStore.tombstone(idx,
-      (0L until 240L).filter(_ % 7 == 3).toDF("id"))
+      (0L until 240L).filter(_ % 7 == 3).toDF("id"), w)
     val surviving = before.filterNot(_.getLong(0) % 7 == 3)
     assert(IndexStore.read(spark, idx).collect().toSet == surviving)
     assert(IndexStore.unfoldedTombstoneBatches(idx).size == 1)
@@ -112,7 +115,7 @@ class IndexStoreSpec extends SparkSpec {
     Files.delete(tornDir.resolve("_SUCCESS"))
     assert(IndexStore.read(spark, idx).collect().toSet == surviving,
       "a torn tombstone batch leaked into the serving view")
-    IndexStore.tombstone(idx, Seq(139L).toDF("id"))
+    IndexStore.tombstone(idx, Seq(139L).toDF("id"), w)
     assert(Files.isDirectory(Paths.get(idx, "tombs", "t=2")),
       "tombstone reused a torn batch's number")
     val surviving2 = surviving.filterNot(_.getLong(0) == 139L)
@@ -122,7 +125,8 @@ class IndexStoreSpec extends SparkSpec {
     // base holds no deleted row), records the batches in the atomic
     // fold marker, vacuums live+torn batch dirs, and the view is
     // row-stable across the fold
-    assert(IndexStore.compact(spark, idx, maxDeltaFiles = 2))
+    assert(IndexStore.compact(spark, idx, maxDeltaFiles = 2,
+      retainVersions = 1, epoch = w))
     assert(IndexStore.read(spark, idx).collect().toSet == surviving2,
       "the fold moved the serving view")
     assert(IndexStore.unfoldedTombstoneBatches(idx).isEmpty)
@@ -135,22 +139,17 @@ class IndexStoreSpec extends SparkSpec {
 
     // tombstones ALONE trip the next fold (they are per-read merge
     // cost too), and the folded batch numbers are never reused
-    IndexStore.tombstone(idx, Seq(140L).toDF("id"))
+    IndexStore.tombstone(idx, Seq(140L).toDF("id"), w)
     assert(Files.isDirectory(Paths.get(idx, "tombs", "t=3")),
       "tombstone reused a folded batch's number")
-    assert(IndexStore.compact(spark, idx, maxDeltaFiles = 0))
+    assert(IndexStore.compact(spark, idx, maxDeltaFiles = 0,
+      retainVersions = 1, epoch = w))
     assert(IndexStore.read(spark, idx).collect().toSet ==
       surviving2.filterNot(_.getLong(0) == 140L))
   }
 
   test("a crash mid-fold-commit (torn _folded marker) never makes a truncated fold list live") {
-    val dir = "target/tmp/idxstore_tornfold"
-    graft.util.Fs.deleteRecursive(Paths.get(dir))
-    val vecs = corpus(240)
-    val idx = s"$dir/index"
-    IndexStore.writeBase(
-      Similarity.ivfPqIndex(vecs.filter(col("id") < 120), books, cents), idx)
-    admitWaves(dir, vecs.filter(col("id") >= 120), waves = 3, upTo = 240)
+    val (_, idx, w) = admittedStore("target/tmp/idxstore_tornfold")
     val before = IndexStore.read(spark, idx).collect().toSet
     assert(before.size == 240)
 
@@ -158,62 +157,58 @@ class IndexStoreSpec extends SparkSpec {
     // the fold-marker rename: v=1 holds the fully merged data (with
     // _SUCCESS) but only a PARTIAL fold list, parked at the staging
     // name the atomic commit uses. Under the old bare-write scheme this
-    // partial list would be LIVE — the two missing delta files would be
-    // served from the delta dir AND from their merged copies in v=1.
-    val pending = IndexStore.unfoldedDeltaFiles(spark, idx)
+    // partial list would be LIVE — the two missing admission batches
+    // would be served from the delta dir AND from their merged copies
+    // in v=1. The fold list names batch dirs (`adm=b0`).
+    val pending = IndexStore.unfoldedDeltaBatches(idx)
     assert(pending.size == 3)
     val crashed = Paths.get(idx, "base", "v=1")
     spark.read.parquet(Paths.get(idx, "base", "v=0").toString)
       .unionByName(spark.read.parquet(pending: _*))
       .write.mode("overwrite").parquet(crashed.toString)
     Files.write(crashed.resolve("_folded.tmp"),
-      pending.take(1).map(u => u.substring(u.lastIndexOf('/') + 1))
+      pending.take(1).map(Paths.get(_).getFileName.toString)
         .mkString("\n").getBytes("UTF-8"))
 
     // the half-committed version is invisible: the reader still serves
     // v=0 + the full committed delta — no duplicates, no lost rows
     assert(IndexStore.read(spark, idx).collect().toSet == before,
       "a torn fold marker changed the serving view")
-    assert(IndexStore.unfoldedDeltaFiles(spark, idx).size == 3)
+    assert(IndexStore.unfoldedDeltaBatches(idx).size == 3)
 
     // recovery is the ordinary retry: compact() re-runs against the
     // still-live v=0, overwrites the crashed v=1 wholesale, and commits
     // its marker atomically
-    assert(IndexStore.compact(spark, idx, maxDeltaFiles = 0))
+    assert(IndexStore.compact(spark, idx, maxDeltaFiles = 0,
+      retainVersions = 1, epoch = w))
     assert(IndexStore.read(spark, idx).collect().toSet == before)
-    assert(IndexStore.unfoldedDeltaFiles(spark, idx).isEmpty)
+    assert(IndexStore.unfoldedDeltaBatches(idx).isEmpty)
     assert(Files.exists(Paths.get(idx, "base", "v=1", "_folded")))
     assert(!Files.exists(Paths.get(idx, "base", "v=1", "_folded.tmp")))
   }
 
   test("vacuum grace: a retained old version serves its exact pre-fold view; vacuum retires only out-of-grace state") {
     import scala.jdk.CollectionConverters._
-    val dir = "target/tmp/idxstore_grace"
-    graft.util.Fs.deleteRecursive(Paths.get(dir))
-    val vecs = corpus(240)
-    val idx = s"$dir/index"
-    IndexStore.writeBase(
-      Similarity.ivfPqIndex(vecs.filter(col("id") < 120), books, cents), idx)
-    admitWaves(dir, vecs.filter(col("id") >= 120), waves = 3, upTo = 240)
+    val (_, idx, w) = admittedStore("target/tmp/idxstore_grace")
     import spark.implicits._
     IndexStore.tombstone(idx,
-      (0L until 240L).filter(_ % 7 == 3).toDF("id"))
+      (0L until 240L).filter(_ % 7 == 3).toDF("id"), w)
     val before = IndexStore.read(spark, idx).collect().toSet
-    def deltaParts(): Int = {
+    def deltaBatches(): Int = {
       val l = Files.list(Paths.get(IndexStore.deltaDir(idx)))
       try l.iterator().asScala
-        .count(_.getFileName.toString.endsWith(".parquet"))
+        .count(_.getFileName.toString.startsWith("adm=b"))
       finally l.close()
     }
 
     assert(IndexStore.compact(spark, idx, maxDeltaFiles = 2,
-      retainVersions = 2))
+      retainVersions = 2, epoch = w))
     assert(IndexStore.liveVersions(idx) == Seq(0, 1))
     // the grace window retains v0 AND everything v0 still resolves as
-    // unfolded: the three folded delta files and the folded tombstone
-    // batch stay on disk even though v1 has them merged/applied
-    assert(deltaParts() >= 3,
-      "grace compaction deleted delta files a v0-pinned reader needs")
+    // unfolded: the three folded admission batches and the folded
+    // tombstone batch stay on disk even though v1 has them merged/applied
+    assert(deltaBatches() >= 3,
+      "grace compaction deleted delta batches a v0-pinned reader needs")
     assert(Files.exists(Paths.get(idx, "tombs", "t=0", "_SUCCESS")),
       "grace compaction deleted the tombstone batch v0 still anti-joins")
     // pinned and current reads converge on the SAME rows through
@@ -227,27 +222,21 @@ class IndexStoreSpec extends SparkSpec {
       IndexStore.readAt(spark, idx, 7)
     }
     // vacuum inside the grace is a no-op; vacuum(1) retires v0, its
-    // folded delta files and the folded tombstone batch — and the
+    // folded admission batches and the folded tombstone batch — and the
     // current view does not move by a row
-    IndexStore.vacuum(idx, retainVersions = 2)
+    IndexStore.vacuum(idx, retainVersions = 2, epoch = w)
     assert(IndexStore.liveVersions(idx) == Seq(0, 1))
-    IndexStore.vacuum(idx, retainVersions = 1)
+    IndexStore.vacuum(idx, retainVersions = 1, epoch = w)
     assert(IndexStore.liveVersions(idx) == Seq(1))
     assert(!Files.exists(Paths.get(idx, "base", "v=0")))
     assert(!Files.exists(Paths.get(idx, "tombs", "t=0")))
-    assert(deltaParts() == 0, "vacuum left folded delta files behind")
+    assert(deltaBatches() == 0, "vacuum left folded delta batches behind")
     assert(IndexStore.read(spark, idx).collect().toSet == before,
       "vacuum moved the serving view")
   }
 
   test("writer fencing: a superseded writer's next verb refuses; the new holder proceeds") {
-    val dir = "target/tmp/idxstore_fence"
-    graft.util.Fs.deleteRecursive(Paths.get(dir))
-    val vecs = corpus(240)
-    val idx = s"$dir/index"
-    IndexStore.writeBase(
-      Similarity.ivfPqIndex(vecs.filter(col("id") < 120), books, cents), idx)
-    admitWaves(dir, vecs.filter(col("id") >= 120), waves = 3, upTo = 240)
+    val (_, idx, _) = admittedStore("target/tmp/idxstore_fence")
     val before = IndexStore.read(spark, idx).collect().toSet
     import spark.implicits._
 
@@ -288,10 +277,7 @@ class IndexStoreSpec extends SparkSpec {
       Tables.stageFile(incoming.filter(pmod(col("id"), lit(3)) === w),
         in.resolve(f"wave$w%02d.parquet"), 1000000000000L + w * 60000L)
     def admitQuery(epoch: Long) = {
-      val scoped = spark.newSession()
-      scoped.conf.set("spark.sql.shuffle.partitions", "4")
-      val stream = scoped.readStream.schema(incoming.schema)
-        .option("maxFilesPerTrigger", 1).parquet(in.toString)
+      val stream = waveStream(dir, incoming.schema)
       IndexStore.admit(Similarity.ivfPqIndex(stream, books, cents),
         idx, s"$dir/ckpt", epoch)
     }
@@ -347,7 +333,7 @@ class IndexStoreSpec extends SparkSpec {
     qb.stop()
     val all = IndexStore.read(spark, idx).collect().toSet
     assert(all.size == 240)
-    assert(IndexStore.unfoldedDeltaFiles(spark, idx).size == 3)
+    assert(IndexStore.unfoldedDeltaBatches(idx).size == 3)
 
     // the fold drains the committed admission batches (not the torn
     // one), the view is row-stable, and vacuum retires the batch dirs
@@ -355,7 +341,7 @@ class IndexStoreSpec extends SparkSpec {
       retainVersions = 1, epoch = b))
     assert(IndexStore.read(spark, idx).collect().toSet == all,
       "the fold moved the serving view")
-    assert(IndexStore.unfoldedDeltaFiles(spark, idx).isEmpty)
+    assert(IndexStore.unfoldedDeltaBatches(idx).isEmpty)
     assert(!Files.exists(Paths.get(IndexStore.deltaDir(idx), "adm=b0")),
       "vacuum left a folded admission batch dir behind")
 
@@ -364,10 +350,7 @@ class IndexStoreSpec extends SparkSpec {
     // on first admit, and a foreign checkpoint would restart batch ids
     // at 0 and replace committed admission batches with different rows
     val c = StateDir.acquireWriter(idx)
-    val scoped = spark.newSession()
-    scoped.conf.set("spark.sql.shuffle.partitions", "4")
-    val freshStream = scoped.readStream.schema(incoming.schema)
-      .option("maxFilesPerTrigger", 1).parquet(in.toString)
+    val freshStream = waveStream(dir, incoming.schema)
     val exc = intercept[IllegalArgumentException] {
       IndexStore.admit(
         Similarity.ivfPqIndex(freshStream, books, cents),
@@ -400,13 +383,7 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("a supersession landing mid-fold aborts the compaction with the store unmoved") {
-    val dir = "target/tmp/idxstore_midfold"
-    graft.util.Fs.deleteRecursive(Paths.get(dir))
-    val vecs = corpus(240)
-    val idx = s"$dir/index"
-    IndexStore.writeBase(
-      Similarity.ivfPqIndex(vecs.filter(col("id") < 120), books, cents), idx)
-    admitWaves(dir, vecs.filter(col("id") >= 120), waves = 3, upTo = 240)
+    val (_, idx, w) = admittedStore("target/tmp/idxstore_midfold")
     val before = IndexStore.read(spark, idx).collect().toSet
     assert(before.size == 240)
 
@@ -416,7 +393,7 @@ class IndexStoreSpec extends SparkSpec {
     var rechecks = 0
     intercept[IllegalArgumentException] {
       IndexStore.compactCore(spark, idx, maxDeltaFiles = 2,
-        retainVersions = 1, recheck = () => {
+        retainVersions = 1, epoch = w, recheck = () => {
           rechecks += 1
           throw new IllegalArgumentException(
             "writer fenced: superseded mid-fold")
@@ -427,25 +404,58 @@ class IndexStoreSpec extends SparkSpec {
       "a mid-fold abort published the staged version")
     assert(!Files.exists(Paths.get(idx, "base", "v=1", "_folded")))
     assert(IndexStore.read(spark, idx).collect().toSet == before)
-    assert(IndexStore.unfoldedDeltaFiles(spark, idx).size == 3,
+    assert(IndexStore.unfoldedDeltaBatches(idx).size == 3,
       "a mid-fold abort deleted delta state")
 
     // recovery is the new holder's ordinary retry over the staged ruins
-    assert(IndexStore.compact(spark, idx, maxDeltaFiles = 2))
+    assert(IndexStore.compact(spark, idx, maxDeltaFiles = 2,
+      retainVersions = 1, epoch = w))
     assert(IndexStore.read(spark, idx).collect().toSet == before)
   }
 
+  test("a crash after the fold's publish and before its retire leaves both versions live and the view unmoved") {
+    val (_, idx, w) = admittedStore("target/tmp/idxstore_postpublish")
+    val before = IndexStore.read(spark, idx).collect().toSet
+    assert(before.size == 240)
+    val batches = IndexStore.unfoldedDeltaBatches(idx)
+    assert(batches.size == 3)
+
+    // the second re-check runs with the new version PUBLISHED and
+    // nothing retired yet — a crash there must leave a consistent store
+    var rechecks = 0
+    intercept[IllegalStateException] {
+      IndexStore.compactCore(spark, idx, maxDeltaFiles = 2,
+        retainVersions = 1, epoch = w, recheck = () => {
+          rechecks += 1
+          if (rechecks == 2)
+            throw new IllegalStateException("crash between publish and retire")
+        })
+    }
+    assert(rechecks == 2, "the crash must fire at the SECOND commit point")
+    assert(IndexStore.liveVersions(idx) == Seq(0, 1),
+      "the publish did not land, or the crashed fold retired v0")
+    assert(IndexStore.read(spark, idx).collect().toSet == before,
+      "a crash before the retire moved the serving view")
+    assert(IndexStore.unfoldedDeltaBatches(idx).isEmpty,
+      "the published version does not claim the folded batches")
+    assert(batches.forall(b => Files.exists(Paths.get(b))),
+      "the crashed fold deleted folded batch dirs before its retire")
+
+    // the next fenced vacuum is the recovery: it retires v0 and the
+    // folded batch dirs, and the view does not move by a row
+    IndexStore.vacuum(idx, retainVersions = 1, epoch = w)
+    assert(IndexStore.liveVersions(idx) == Seq(1))
+    assert(batches.forall(b => !Files.exists(Paths.get(b))),
+      "vacuum left the folded batch dirs behind")
+    assert(IndexStore.read(spark, idx).collect().toSet == before,
+      "vacuum moved the serving view")
+  }
+
   test("reindex cutover: atomic publish, pinned reader keeps its pre-cutover view, zombie refuses, vacuum retires grace") {
-    val dir = "target/tmp/idxstore_cutover"
-    graft.util.Fs.deleteRecursive(Paths.get(dir))
-    val vecs = corpus(240)
-    val idx = s"$dir/index"
-    IndexStore.writeBase(
-      Similarity.ivfPqIndex(vecs.filter(col("id") < 120), books, cents), idx)
-    admitWaves(dir, vecs.filter(col("id") >= 120), waves = 3, upTo = 240)
+    val (vecs, idx, w) = admittedStore("target/tmp/idxstore_cutover")
     import spark.implicits._
     IndexStore.tombstone(idx,
-      (0L until 240L).filter(_ % 7 == 3).toDF("id"))
+      (0L until 240L).filter(_ % 7 == 3).toDF("id"), w)
     val before = IndexStore.read(spark, idx).collect().toSet
     assert(before.size == 240 - (0 until 240).count(_ % 7 == 3))
 
@@ -460,7 +470,7 @@ class IndexStoreSpec extends SparkSpec {
       "fixture too weak: the retrained rebuild must differ row-wise")
 
     val a = StateDir.acquireWriter(idx)
-    val v1 = IndexStore.cutover(spark, idx, rebuilt, retainVersions = 2,
+    val v1 = IndexStore.cutover(idx, rebuilt, retainVersions = 2,
       epoch = a)
     assert(v1 == 1 && IndexStore.liveVersions(idx) == Seq(0, 1))
     // pinned reader mid-cutover: its exact pre-cutover view, row for row
@@ -473,7 +483,7 @@ class IndexStoreSpec extends SparkSpec {
     // a superseded writer can neither cut over again nor vacuum
     val b = StateDir.acquireWriter(idx)
     intercept[IllegalArgumentException] {
-      IndexStore.cutover(spark, idx, rebuilt, retainVersions = 1, epoch = a)
+      IndexStore.cutover(idx, rebuilt, retainVersions = 1, epoch = a)
     }
     intercept[IllegalArgumentException] {
       IndexStore.vacuum(idx, retainVersions = 1, epoch = a)
@@ -486,39 +496,29 @@ class IndexStoreSpec extends SparkSpec {
     assert(IndexStore.liveVersions(idx) == Seq(1))
     assert(IndexStore.read(spark, idx).collect().toSet == rebuiltRows,
       "vacuum moved the serving view")
-    assert(IndexStore.unfoldedDeltaFiles(spark, idx).isEmpty &&
+    assert(IndexStore.unfoldedDeltaBatches(idx).isEmpty &&
       IndexStore.unfoldedTombstoneBatches(idx).isEmpty,
       "the cutover's fold list did not cover the drained logs")
   }
 
   test("a torn (uncommitted) delta file is invisible to readers") {
-    val dir = "target/tmp/idxstore_torn"
-    graft.util.Fs.deleteRecursive(Paths.get(dir))
-    val vecs = corpus(240)
-    val idx = s"$dir/index"
-    IndexStore.writeBase(
-      Similarity.ivfPqIndex(vecs.filter(col("id") < 120), books, cents), idx)
-    admitWaves(dir, vecs.filter(col("id") >= 120), waves = 3, upTo = 240)
+    val (vecs, idx, w) = admittedStore("target/tmp/idxstore_torn")
     val committed = IndexStore.read(spark, idx).count()
 
-    // simulate an in-flight writer's crash: a data file present in the
-    // delta dir but absent from the sink's _spark_metadata commit log
-    val torn = "target/tmp/idxstore_torn_payload"
-    graft.util.Fs.deleteRecursive(Paths.get(torn))
+    // simulate an in-flight writer's crash: the next batch's dir
+    // (`adm=b3`) holds its data files but never got its `_SUCCESS`
+    val torn = Paths.get(IndexStore.deltaDir(idx), "adm=b3")
     Similarity.ivfPqIndex(
         vecs.filter(col("id") < 10).withColumn("id", col("id") + 9000L),
         books, cents)
-      .coalesce(1).write.parquet(torn)
-    val part = Files.list(Paths.get(torn)).iterator()
-    val src = Iterator.continually(part).takeWhile(_.hasNext).map(_.next())
-      .find(_.getFileName.toString.endsWith(".parquet")).get
-    Files.copy(src,
-      Paths.get(IndexStore.deltaDir(idx), "part-torn-batch.parquet"))
+      .coalesce(1).write.parquet(torn.toString)
+    Files.delete(torn.resolve("_SUCCESS"))
 
     assert(IndexStore.read(spark, idx).count() == committed,
-      "reader saw a data file the sink log never committed")
+      "reader saw a batch dir that never committed")
     // and compaction doesn't fold it either
-    IndexStore.compact(spark, idx, maxDeltaFiles = 0)
+    IndexStore.compact(spark, idx, maxDeltaFiles = 0,
+      retainVersions = 1, epoch = w)
     assert(IndexStore.read(spark, idx).count() == committed)
   }
 
@@ -532,8 +532,9 @@ class IndexStoreSpec extends SparkSpec {
     // each admitted wave genuinely reshapes the candidate pool
     val baseSlice = col("id") < 120 && col("id") % 16 === 0
     val idx = s"$dir/index"
+    val w = StateDir.acquireWriter(idx)
     IndexStore.writeBase(
-      Similarity.ivfPqIndex(vecs.filter(baseSlice), books, cents), idx)
+      Similarity.ivfPqIndex(vecs.filter(baseSlice), books, cents), idx, w)
     val queries = vecs.filter(col("id") < 4)
     def serve(i: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.Row] =
       Similarity.ivfPqSearchIndex(queries, i, 5, books, cents, 2)
@@ -566,12 +567,8 @@ class IndexStoreSpec extends SparkSpec {
       Tables.stageFile(incoming.filter(pmod(col("id"), lit(3)) === i),
         in.resolve(f"wave$i%02d.parquet"), 1000000000000L + i * 60000L)
     }
-    val scoped = spark.newSession()
-    scoped.conf.set("spark.sql.shuffle.partitions", "4")
     val slow = udf { (id: Long) => Thread.sleep(15); id >= 0 }
-    val stream = scoped.readStream.schema(incoming.schema)
-      .option("maxFilesPerTrigger", 1).parquet(in.toString)
-      .filter(slow(col("id")))
+    val stream = waveStream(dir, incoming.schema).filter(slow(col("id")))
 
     val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
@@ -589,10 +586,8 @@ class IndexStoreSpec extends SparkSpec {
       } catch { case t: Throwable => failure.set(t) }
     }, "racing-reader")
     reader.start()
-    val q = Similarity.ivfPqIndex(stream, books, cents).writeStream
-      .option("checkpointLocation", s"$dir/ckpt")
-      .option("path", IndexStore.deltaDir(idx))
-      .format("parquet").start()
+    val q = IndexStore.admit(Similarity.ivfPqIndex(stream, books, cents),
+      idx, s"$dir/ckpt", w)
     q.processAllAvailable()
     q.stop()
     stopReader = true
@@ -610,8 +605,9 @@ class IndexStoreSpec extends SparkSpec {
     graft.util.Fs.deleteRecursive(Paths.get(dir))
     val vecs = corpus(240)
     val idx = s"$dir/index"
+    val ep = StateDir.acquireWriter(idx)
     IndexStore.writeBase(
-      Similarity.ivfPqIndex(vecs.filter(col("id") < 120), books, cents), idx)
+      Similarity.ivfPqIndex(vecs.filter(col("id") < 120), books, cents), idx, ep)
     val queries = vecs.filter(col("id") < 4)
 
     // waves arrive ONE at a time (stream restarts from its checkpoint —
@@ -624,14 +620,9 @@ class IndexStoreSpec extends SparkSpec {
       Files.createDirectories(in)
       Tables.stageFile(incoming.filter(pmod(col("id"), lit(3)) === w),
         in.resolve(f"wave$w%02d.parquet"), 1000000000000L + w * 60000L)
-      val scoped = spark.newSession()
-      scoped.conf.set("spark.sql.shuffle.partitions", "4")
-      val stream = scoped.readStream.schema(incoming.schema)
-        .option("maxFilesPerTrigger", 1).parquet(in.toString)
-      val q = Similarity.ivfPqIndex(stream, books, cents).writeStream
-        .option("checkpointLocation", s"$dir/ckpt")
-        .option("path", IndexStore.deltaDir(idx))
-        .format("parquet").start()
+      val q = IndexStore.admit(
+        Similarity.ivfPqIndex(waveStream(dir, incoming.schema), books, cents),
+        idx, s"$dir/ckpt", ep)
       q.processAllAvailable()
       q.stop()
 
@@ -657,10 +648,7 @@ class IndexStoreSpec extends SparkSpec {
     val incoming = vecs.filter(col("id") >= 90)
     Tables.stageFile(incoming, in.resolve("wave00.parquet"), 1000000000000L)
     def admitQuery(ckpt: String, epoch: Long) = {
-      val scoped = spark.newSession()
-      scoped.conf.set("spark.sql.shuffle.partitions", "4")
-      val stream = scoped.readStream.schema(incoming.schema)
-        .option("maxFilesPerTrigger", 1).parquet(in.toString)
+      val stream = waveStream(dir, incoming.schema)
       IndexStore.admit(Similarity.ivfPqIndex(stream, books, cents),
         idx, ckpt, epoch)
     }
@@ -710,13 +698,7 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("cutover aborts when a commit lands after the shadow rebuild's snapshot") {
-    val dir = "target/tmp/idxstore_cutabort"
-    graft.util.Fs.deleteRecursive(Paths.get(dir))
-    val vecs = corpus(240)
-    val idx = s"$dir/index"
-    IndexStore.writeBase(
-      Similarity.ivfPqIndex(vecs.filter(col("id") < 120), books, cents), idx)
-    admitWaves(dir, vecs.filter(col("id") >= 120), waves = 2, upTo = 240)
+    val (vecs, idx, _) = admittedStore("target/tmp/idxstore_cutabort", waves = 2)
     val before = IndexStore.read(spark, idx).collect().toSet
     val rebuilt = Similarity.ivfPqIndex(
       vecs.filter(col("id") < 240), books, cents.reverse)
@@ -728,7 +710,7 @@ class IndexStoreSpec extends SparkSpec {
       vecs.filter(col("id") < 3).withColumn("id", col("id") + 9000L),
       books, cents)
     val exc = intercept[IllegalArgumentException] {
-      IndexStore.cutoverCore(spark, idx, rebuilt, retainVersions = 1,
+      IndexStore.cutoverCore(idx, rebuilt, retainVersions = 1,
         epoch = a, afterSnapshot = () =>
           late.write.parquet(
             Paths.get(IndexStore.deltaDir(idx), "adm=b7").toString))
@@ -744,7 +726,7 @@ class IndexStoreSpec extends SparkSpec {
       IndexStore.read(spark, idx).select("id").join(
         vecs.withColumn("id", col("id")), "id").select("id", "vec"),
       books, cents.reverse)
-    val v = IndexStore.cutover(spark, idx,
+    val v = IndexStore.cutover(idx,
       rebuilt2, retainVersions = 1, epoch = a)
     assert(v == 1 && IndexStore.liveVersions(idx) == Seq(1))
   }
@@ -762,10 +744,7 @@ class IndexStoreSpec extends SparkSpec {
     Files.createDirectories(in)
     val incoming = vecs.filter(col("id") >= 120)
     Tables.stageFile(incoming, in.resolve("wave00.parquet"), 1000000000000L)
-    val scoped = spark.newSession()
-    scoped.conf.set("spark.sql.shuffle.partitions", "4")
-    val stream = scoped.readStream.schema(incoming.schema)
-      .option("maxFilesPerTrigger", 1).parquet(in.toString)
+    val stream = waveStream(dir, incoming.schema)
     val q = IndexStore.admit(Similarity.ivfPqIndex(stream, books, cents),
       idx, s"$dir/ckpt", a)
     q.processAllAvailable(); q.stop()
