@@ -20,15 +20,21 @@ import org.apache.spark.sql.types._
  * what lets the DuckDB oracle check the real decoder's output.
  *
  * Audio and video decode sit behind the same seam ([[WavDecoder]],
- * [[Y4mDecoder]]). Swap recipe for a native codec:
+ * [[Y4mDecoder]]). Every media function — decode and synthesis alike —
+ * runs on ONE frame builder, [[codecFrame]]: it projects
+ * `(media_id, payload)`, evaluates its per-partition block once per
+ * partition, and emits that block's per-record rows under `media_id`
+ * plus the function's output fields. Swap recipe for a native codec:
  *  1. Write a class holding the native handles (an ffmpeg JNI binding or
- *     a long-lived subprocess pipe), constructed once per partition
- *     inside `mapPartitions` — that placement IS the amortization; never
- *     construct per row. [[ImageIoDecoder]] is the worked example.
+ *     a long-lived subprocess pipe), constructed in the per-partition
+ *     block handed to [[codecFrame]] — that placement IS the
+ *     amortization; never construct per row. [[extractImageFeatures]]
+ *     with [[ImageIoDecoder]] is the worked example.
  *  2. Extend the feature schema with the real outputs (e.g. phash,
  *     embedding: array<float>); `decode` returns a matching Row. The
- *     surrounding plan (schema projection, partition batching, the
- *     downstream queries) is schema-driven and needs no edits.
+ *     surrounding plan ([[codecFrame]]'s projection and partition
+ *     batching, the downstream queries) is schema-driven and needs no
+ *     edits.
  *  3. If the decoder is not thread-safe, guard with one instance per
  *     partition (already the case) — Spark runs one task per partition
  *     per thread, so no extra locking is needed.
@@ -110,12 +116,79 @@ object Multimodal {
     img
   }
 
-  /** The image-encode counterpart of [[openImage]]: `img` as PNG bytes. */
-  private def pngBytes(img: java.awt.image.RenderedImage): Array[Byte] = {
+  /** The image-encode counterpart of [[openImage]]: a `w`×`h`
+   * single-band gray raster with pixel(x, y) = `px(x, y)`, as PNG bytes. */
+  private def grayPng(w: Int, h: Int)(px: (Int, Int) => Int): Array[Byte] = {
+    val img = new java.awt.image.BufferedImage(
+      w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
+    val raster = img.getRaster
+    var y = 0
+    while (y < h) {
+      var x = 0
+      while (x < w) { raster.setSample(x, y, 0, px(x, y)); x += 1 }
+      y += 1
+    }
     val bos = new java.io.ByteArrayOutputStream()
     javax.imageio.ImageIO.write(img, "png", bos)
     bos.toByteArray
   }
+
+  /** Σ of band 0 over `img`'s raster — the pixel sum every image stat
+   * row reports. */
+  private[multimodal] def band0Sum(img: java.awt.image.BufferedImage): Long = {
+    val raster = img.getRaster
+    var sum = 0L
+    var y = 0
+    while (y < img.getHeight) {
+      var x = 0
+      while (x < img.getWidth) { sum += raster.getSample(x, y, 0); x += 1 }
+      y += 1
+    }
+    sum
+  }
+
+  /** The one 64-bit code packer every fingerprint ships through: bit p
+   * (p < `nBits` ≤ 64) is set iff `bit(p)`, returned as (hi, lo) 32-bit
+   * halves (hi = bits 32..63, lo = bits 0..31) because a signed BIGINT
+   * cannot carry bit 63 portably across engines. */
+  private[multimodal] def packBits(nBits: Int)(bit: Int => Boolean): (Long, Long) = {
+    var hi = 0L; var lo = 0L
+    var p = 0
+    while (p < nBits) {
+      if (bit(p)) { if (p < 32) lo |= 1L << p else hi |= 1L << (p - 32) }
+      p += 1
+    }
+    (hi, lo)
+  }
+
+  /** The one frame builder every media function runs on: `df`'s
+   * `(media_id, payload)` projected as (Long, bytes); `perPartition` is
+   * evaluated ONCE per partition — where a decoder's handles live,
+   * never per record — and the function it yields maps each record to
+   * its rows, emitted under `media_id` followed by `fields`. */
+  private def codecFrame(df: DataFrame, fields: StructField*)(
+      perPartition: => (Long, Array[Byte]) => IterableOnce[Row]): DataFrame = {
+    val rdd = df.select(col("media_id").cast(LongType), col("payload"))
+      .rdd.mapPartitions { rows =>
+        val perRecord = perPartition
+        rows.flatMap(r => perRecord(r.getLong(0), r.getAs[Array[Byte]](1)))
+      }
+    df.sparkSession.createDataFrame(rdd,
+      StructType(StructField("media_id", LongType, nullable = false) +: fields))
+  }
+
+  /** [[codecFrame]] for the synthesizers: each `(idCol, textCol)` row
+   * becomes `synth(id, utf-8 byte length of text)`'s
+   * `(media_id, payload, meta)` rows. */
+  private def synthFrame(df: DataFrame, idCol: String, textCol: String,
+                         meta: StructType)(
+      synth: (Long, Int) => IterableOnce[Row]): DataFrame =
+    codecFrame(df.select(col(idCol).as("media_id"),
+        encode(col(textCol), "UTF-8").as("payload")),
+      StructField("payload", BinaryType, nullable = false),
+      StructField("meta", meta, nullable = false)) {
+      (id, text) => synth(id, text.length)
+    }
 
   /** Metadata carried beside every media payload. */
   val MediaMetaSchema: StructType = StructType(Seq(
@@ -186,50 +259,20 @@ object Multimodal {
    * on). Encoding runs in the same partition-batched codec seam as
    * decoding.
    */
-  def packAsPng(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("payload", BinaryType, nullable = false),
-      StructField("meta", MediaMetaSchema, nullable = false)))
-    val projected = df.select(col(idCol).cast(LongType),
-      encode(col(textCol), "UTF-8"))
-    val rdd = projected.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val len = r.getAs[Array[Byte]](1).length
-        val w = 1 + len % 16
-        val h = 1 + len % 12
-        val a = len % 200
-        val img = new java.awt.image.BufferedImage(
-          w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-        val raster = img.getRaster
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) { raster.setSample(x, y, 0, a + x + y); x += 1 }
-          y += 1
-        }
-        Row(id, pngBytes(img), Row("image/png", w, h, 1))
-      }
+  def packAsPng(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    synthFrame(df, idCol, textCol, MediaMetaSchema) { (id, len) =>
+      val (w, h, a) = (1 + len % 16, 1 + len % 12, len % 200)
+      Some(Row(id, grayPng(w, h)((x, y) => a + x + y),
+        Row("image/png", w, h, 1)))
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /** Batched REAL image decode: one [[ImageIoDecoder]] per partition,
    * PNG payloads in, true width/height/pixel stats out. */
-  def extractImageFeatures(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("features", ImageFeatureSchema, nullable = false)))
-    val projected = df.select(col("media_id").cast(LongType), col("payload"))
-    val rdd = projected.rdd.mapPartitions { rows =>
-      val decoder = new ImageIoDecoder // per-partition init (amortized)
-      rows.map(r => Row(r.getLong(0), decoder.decode(r.getAs[Array[Byte]](1))))
+  def extractImageFeatures(df: DataFrame): DataFrame =
+    codecFrame(df, StructField("features", ImageFeatureSchema, nullable = false)) {
+      val decoder = new ImageIoDecoder
+      (id, bytes) => Some(Row(id, decoder.decode(bytes)))
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /**
    * REAL image resize: decode the PNG payload, nearest-neighbor
@@ -242,34 +285,15 @@ object Multimodal {
    */
   def resizePng(df: DataFrame, factor: Int): DataFrame = {
     require(factor >= 1, s"factor must be >= 1, got $factor")
-    val spark = df.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("payload", BinaryType, nullable = false),
-      StructField("meta", MediaMetaSchema, nullable = false)))
-    val projected = df.select(col("media_id").cast(LongType), col("payload"))
-    val rdd = projected.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val in = openImage(r.getAs[Array[Byte]](1))
-        val (w, h) = (in.getWidth, in.getHeight)
-        val (w2, h2) = ((w + factor - 1) / factor, (h + factor - 1) / factor)
-        val out = new java.awt.image.BufferedImage(
-          w2, h2, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-        val (ri, ro) = (in.getRaster, out.getRaster)
-        var y = 0
-        while (y < h2) {
-          var x = 0
-          while (x < w2) {
-            ro.setSample(x, y, 0, ri.getSample(x * factor, y * factor, 0))
-            x += 1
-          }
-          y += 1
-        }
-        Row(id, pngBytes(out), Row("image/png", w2, h2, 1))
-      }
+    codecFrame(df, StructField("payload", BinaryType, nullable = false),
+        StructField("meta", MediaMetaSchema, nullable = false)) { (id, bytes) =>
+      val in = openImage(bytes)
+      val (w, h) = (in.getWidth, in.getHeight)
+      val (w2, h2) = ((w + factor - 1) / factor, (h + factor - 1) / factor)
+      val ri = in.getRaster
+      Some(Row(id, grayPng(w2, h2)((x, y) => ri.getSample(x * factor, y * factor, 0)),
+        Row("image/png", w2, h2, 1)))
     }
-    spark.createDataFrame(rdd, outSchema)
   }
 
   /**
@@ -287,53 +311,37 @@ object Multimodal {
    * arithmetic is integer (`64·p >= Σsampled` avoids the division), so
    * the DuckDB oracle rebuilds the hash in closed form from the
    * synthesis algebra. The 64-bit hash ships as two 32-bit halves
-   * (`hash_hi` bits 32..63, `hash_lo` bits 0..31) because a signed
-   * BIGINT cannot carry bit 63 portably across engines. Runs in the
-   * same per-partition decoder seam as [[extractImageFeatures]].
+   * (`hash_hi` bits 32..63, `hash_lo` bits 0..31) through [[packBits]].
+   * Runs in the same per-partition codec seam as [[extractImageFeatures]].
    */
   def imagePHash(df: DataFrame, grid: Int = 8): DataFrame = {
     require(grid >= 1 && grid * grid <= 64,
       s"grid^2 must fit the 64-bit hash, got $grid")
-    val spark = df.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("hash_hi", LongType, nullable = false),
-      StructField("hash_lo", LongType, nullable = false)))
-    val projected = df.select(col("media_id").cast(LongType), col("payload"))
-    val rdd = projected.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val img = openImage(r.getAs[Array[Byte]](1))
-        val (w, h) = (img.getWidth, img.getHeight)
-        val raster = img.getRaster
-        val bands = raster.getNumBands
-        val sampled = Array.ofDim[Int](grid * grid)
-        var j = 0
-        while (j < grid) {
-          var i = 0
-          while (i < grid) {
-            val (sx, sy) = (i * w / grid, j * h / grid)
-            var p = 0; var b = 0
-            while (b < bands) { p += raster.getSample(sx, sy, b); b += 1 }
-            sampled(j * grid + i) = p
-            i += 1
-          }
-          j += 1
+    codecFrame(df, StructField("hash_hi", LongType, nullable = false),
+        StructField("hash_lo", LongType, nullable = false)) { (id, bytes) =>
+      val img = openImage(bytes)
+      val (w, h) = (img.getWidth, img.getHeight)
+      val raster = img.getRaster
+      val bands = raster.getNumBands
+      val sampled = Array.ofDim[Int](grid * grid)
+      var j = 0
+      while (j < grid) {
+        var i = 0
+        while (i < grid) {
+          val (sx, sy) = (i * w / grid, j * h / grid)
+          var p = 0; var b = 0
+          while (b < bands) { p += raster.getSample(sx, sy, b); b += 1 }
+          sampled(j * grid + i) = p
+          i += 1
         }
-        val total = sampled.foldLeft(0L)(_ + _)
-        val n = grid.toLong * grid
-        var hi = 0L; var lo = 0L
-        var pos = 0
-        while (pos < grid * grid) {
-          if (n * sampled(pos) >= total) { // p >= mean, integer-exact
-            if (pos < 32) lo |= 1L << pos
-            else hi |= 1L << (pos - 32)
-          }
-          pos += 1
-        }
-        Row(r.getLong(0), hi, lo)
+        j += 1
       }
+      val total = sampled.foldLeft(0L)(_ + _)
+      val n = grid.toLong * grid
+      // p >= mean, integer-exact
+      val (hi, lo) = packBits(grid * grid)(pos => n * sampled(pos) >= total)
+      Some(Row(id, hi, lo))
     }
-    spark.createDataFrame(rdd, outSchema)
   }
 
   /**
@@ -355,42 +363,21 @@ object Multimodal {
   def packAsPngTextured(df: DataFrame, idCol: String, textCol: String,
                         bumpDelta: Int = 0): DataFrame = {
     require(bumpDelta >= 0 && bumpDelta <= 250, s"bad bumpDelta $bumpDelta")
-    val spark = df.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("payload", BinaryType, nullable = false),
-      StructField("meta", MediaMetaSchema, nullable = false)))
-    val projected = df.select(col(idCol).cast(LongType),
-      encode(col(textCol), "UTF-8"))
     val bumped = Set((2, 1), (6, 4), (10, 10))
-    val rdd = projected.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val len = r.getAs[Array[Byte]](1).length.toLong
-        val sid = id % 1000000L
-        val (w, h) = (16, 12)
-        val a = ((len + 31L * sid) % 200L).toInt
-        val p1 = (3L + 2L * ((len + sid) % 13L)).toInt
-        val p2 = (5L + 2L * ((len + 3L * sid) % 11L)).toInt
-        val img = new java.awt.image.BufferedImage(
-          w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-        val raster = img.getRaster
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            val base = (a + x * p1 + y * p2) % 251
-            val p = if (bumpDelta > 0 && bumped((x, y)))
-              math.min(base + bumpDelta, 250) else base
-            raster.setSample(x, y, 0, p)
-            x += 1
-          }
-          y += 1
-        }
-        Row(id, pngBytes(img), Row("image/png", w, h, 1))
+    synthFrame(df, idCol, textCol, MediaMetaSchema) { (id, textLen) =>
+      val len = textLen.toLong
+      val sid = id % 1000000L
+      val (w, h) = (16, 12)
+      val a = ((len + 31L * sid) % 200L).toInt
+      val p1 = (3L + 2L * ((len + sid) % 13L)).toInt
+      val p2 = (5L + 2L * ((len + 3L * sid) % 11L)).toInt
+      val png = grayPng(w, h) { (x, y) =>
+        val base = (a + x * p1 + y * p2) % 251
+        if (bumpDelta > 0 && bumped((x, y))) math.min(base + bumpDelta, 250)
+        else base
       }
+      Some(Row(id, png, Row("image/png", w, h, 1)))
     }
-    spark.createDataFrame(rdd, outSchema)
   }
 
   /**
@@ -520,72 +507,70 @@ object Multimodal {
   def packAsWav(df: DataFrame, idCol: String, textCol: String,
                 perturbWindows: Seq[Int] = Nil,
                 perturbDelta: Long = 0L,
-                idSeedMod: Long = 0L): DataFrame = {
-    val spark = df.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("payload", BinaryType, nullable = false),
-      StructField("meta", AudioMetaSchema, nullable = false)))
-    val projected = df.select(col(idCol).cast(LongType),
-      encode(col(textCol), "UTF-8"))
-    val rdd = projected.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val len = r.getAs[Array[Byte]](1).length
-        val n = 1 + len % 240
-        val rate = 8000 + (len % 4) * 4000
-        val a = if (idSeedMod > 0L)
-          (len.toLong * 131L + 37L * (id % idSeedMod)) % 65521L
-        else (len.toLong * 131L) % 65521L
-        // a "noisy re-encode" stand-in for near-dup planting: samples
-        // inside the fingerprint windows listed in `perturbWindows`
-        // (boundaries EXACTLY as audioFingerprint slices them, so the
-        // closed-form oracle replays the same membership) synthesize
-        // with an extra additive inside the mod — a localized
-        // distortion that moves a few window energies and leaves the
-        // rest of the waveform byte-identical
-        val bump = new Array[Long](n)
-        perturbWindows.foreach { w =>
-          var j = w * n / 65
-          val until = (w + 1) * n / 65
-          while (j < until) { bump(j) = perturbDelta; j += 1 }
-        }
-        val dataSize = n * 2
-        val buf = java.nio.ByteBuffer.allocate(44 + dataSize)
-          .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-        buf.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataSize)
-          .put("WAVE".getBytes("US-ASCII"))
-          .put("fmt ".getBytes("US-ASCII")).putInt(16)
-          .putShort(1).putShort(1) // PCM, mono
-          .putInt(rate).putInt(rate * 2).putShort(2).putShort(16)
-          .put("data".getBytes("US-ASCII")).putInt(dataSize)
-        var i = 0
-        while (i < n) {
-          buf.putShort((((a + i.toLong * 7919L + bump(i)) % 65521L) - 32760L).toShort)
-          i += 1
-        }
-        Row(id, buf.array(), Row("audio/wav", rate, n))
+                idSeedMod: Long = 0L): DataFrame =
+    synthFrame(df, idCol, textCol, AudioMetaSchema) { (id, len) =>
+      val n = 1 + len % 240
+      val rate = 8000 + (len % 4) * 4000
+      val a = if (idSeedMod > 0L)
+        (len.toLong * 131L + 37L * (id % idSeedMod)) % 65521L
+      else (len.toLong * 131L) % 65521L
+      // a "noisy re-encode" stand-in for near-dup planting: samples
+      // inside the fingerprint windows listed in `perturbWindows`
+      // (boundaries EXACTLY as audioFingerprint slices them, so the
+      // closed-form oracle replays the same membership) synthesize
+      // with an extra additive inside the mod — a localized
+      // distortion that moves a few window energies and leaves the
+      // rest of the waveform byte-identical
+      val bump = new Array[Long](n)
+      perturbWindows.foreach { w =>
+        var j = w * n / 65
+        val until = (w + 1) * n / 65
+        while (j < until) { bump(j) = perturbDelta; j += 1 }
       }
+      val dataSize = n * 2
+      val buf = java.nio.ByteBuffer.allocate(44 + dataSize)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      buf.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataSize)
+        .put("WAVE".getBytes("US-ASCII"))
+        .put("fmt ".getBytes("US-ASCII")).putInt(16)
+        .putShort(1).putShort(1) // PCM, mono
+        .putInt(rate).putInt(rate * 2).putShort(2).putShort(16)
+        .put("data".getBytes("US-ASCII")).putInt(dataSize)
+      var i = 0
+      while (i < n) {
+        buf.putShort((((a + i.toLong * 7919L + bump(i)) % 65521L) - 32760L).toShort)
+        i += 1
+      }
+      Some(Row(id, buf.array(), Row("audio/wav", rate, n)))
     }
-    spark.createDataFrame(rdd, outSchema)
+
+  /** The one PCM16-mono reader every audio decode runs on: open `bytes`
+   * with `open`, require PCM16 mono (thrown before any length check a
+   * caller makes, so a wrong format always classifies unreadable),
+   * and return (sample rate, declared frame count, samples). */
+  private[multimodal] def readPcm16(bytes: Array[Byte],
+      open: Array[Byte] => javax.sound.sampled.AudioInputStream = openAudio)
+      : (Int, Long, Array[Int]) = {
+    val ais = open(bytes)
+    try {
+      val fmt = ais.getFormat
+      require(fmt.getSampleSizeInBits == 16 && fmt.getChannels == 1,
+        s"expected PCM16 mono, got $fmt")
+      val declared = ais.getFrameLength
+      val data = ais.readAllBytes()
+      val big = fmt.isBigEndian
+      val samples = new Array[Int](data.length / 2)
+      var i = 0
+      while (i < samples.length) {
+        val b0 = data(2 * i)
+        val b1 = data(2 * i + 1)
+        samples(i) = if (big) (b0 << 8) | (b1 & 0xff) else (b1 << 8) | (b0 & 0xff)
+        i += 1
+      }
+      (fmt.getSampleRate.toInt, declared, samples)
+    } finally ais.close()
   }
 
-  /** QUARANTINED audio decode (the m16 seam): decode failures become
-   * ROWS, not job failures — the DLQ/corrupt-record pattern (s9's CSV
-   * error channel, k11's routing) applied to the media decode seam,
-   * because at 100 TB of scraped media a single truncated upload must
-   * never kill a stage and a silent drop is unauditable. Per payload:
-   *  - the container parse rejects it (bad magic, mangled header,
-   *    non-PCM16-mono) → `err_kind = 'unreadable_container'`;
-   *  - the container parses but the data section holds fewer samples
-   *    than the header declares (interrupted write — the classic
-   *    corruption a crawler produces), or zero samples →
-   *    `err_kind = 'truncated_payload'`;
-   *  - otherwise `ok = true` with the [[extractAudioFeatures]] stats.
-   * Classification is STRUCTURAL (declared-vs-actual, parse outcome),
-   * never message-text matching, so the verdict is deterministic and
-   * the gate's closed-form oracle can replay it from the planted
-   * corruption alone. */
   /** The SHARED quarantine classification seam (m16 audio, m20
    * image/video): run the modality's decode thunk and turn any
    * structural failure into the same two typed verdicts every modality
@@ -614,51 +599,42 @@ object Multimodal {
       open: Array[Byte] => javax.sound.sampled.AudioInputStream = openAudio)
       : Row =
     classifyDecode(id, nStats = 4) {
-      val ais = open(bytes)
-      try {
-        val fmt = ais.getFormat
-        require(fmt.getSampleSizeInBits == 16 && fmt.getChannels == 1,
-          s"expected PCM16 mono, got $fmt")
-        val declared = ais.getFrameLength
-        val data = ais.readAllBytes()
-        val n = data.length / 2
-        if (n == 0 || (declared >= 0 && n < declared))
-          throw new TruncatedMediaException(
-            "PCM data ends before the declared frame count")
-        val big = fmt.isBigEndian
-        var i = 0
-        var sum = 0L
-        var peak = 0
-        while (i < n) {
-          val b0 = data(2 * i)
-          val b1 = data(2 * i + 1)
-          val s = if (big) (b0 << 8) | (b1 & 0xff)
-                  else (b1 << 8) | (b0 & 0xff)
-          sum += s
-          val a = math.abs(s)
-          if (a > peak) peak = a
-          i += 1
-        }
-        Row(id, true, null, fmt.getSampleRate.toInt, n.toLong, peak, sum)
-      } finally ais.close()
+      val (rate, declared, samples) = readPcm16(bytes, open)
+      val n = samples.length
+      if (n == 0 || (declared >= 0 && n < declared))
+        throw new TruncatedMediaException(
+          "PCM data ends before the declared frame count")
+      var sum = 0L
+      var peak = 0
+      samples.foreach { s => sum += s; peak = math.max(peak, math.abs(s)) }
+      Row(id, true, null, rate, n.toLong, peak, sum)
     }
 
-  def extractAudioFeaturesQuarantined(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("ok", BooleanType, nullable = false),
-      StructField("err_kind", StringType, nullable = true),
-      StructField("sample_rate", IntegerType, nullable = true),
-      StructField("n_samples", LongType, nullable = true),
-      StructField("peak_abs", IntegerType, nullable = true),
-      StructField("amp_sum", LongType, nullable = true)))
-    val projected = df.select(col("media_id").cast(LongType), col("payload"))
-    val rdd = projected.rdd.mapPartitions { rows =>
-      rows.map(r => quarantinedAudioRow(r.getLong(0), r.getAs[Array[Byte]](1)))
+  /** QUARANTINED audio decode (the m16 seam): decode failures become
+   * ROWS, not job failures — the DLQ/corrupt-record pattern (s9's CSV
+   * error channel, k11's routing) applied to the media decode seam,
+   * because at 100 TB of scraped media a single truncated upload must
+   * never kill a stage and a silent drop is unauditable. Per payload:
+   *  - the container parse rejects it (bad magic, mangled header,
+   *    non-PCM16-mono) → `err_kind = 'unreadable_container'`;
+   *  - the container parses but the data section holds fewer samples
+   *    than the header declares (interrupted write — the classic
+   *    corruption a crawler produces), or zero samples →
+   *    `err_kind = 'truncated_payload'`;
+   *  - otherwise `ok = true` with the [[extractAudioFeatures]] stats.
+   * Classification is STRUCTURAL (declared-vs-actual, parse outcome),
+   * never message-text matching, so the verdict is deterministic and
+   * the gate's closed-form oracle can replay it from the planted
+   * corruption alone. */
+  def extractAudioFeaturesQuarantined(df: DataFrame): DataFrame =
+    codecFrame(df, StructField("ok", BooleanType, nullable = false),
+        StructField("err_kind", StringType, nullable = true),
+        StructField("sample_rate", IntegerType, nullable = true),
+        StructField("n_samples", LongType, nullable = true),
+        StructField("peak_abs", IntegerType, nullable = true),
+        StructField("amp_sum", LongType, nullable = true)) {
+      (id, bytes) => Some(quarantinedAudioRow(id, bytes))
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /** M20 (image leg): [[extractImageFeaturesQuarantined]] — the m16
    * quarantine contract at the PNG decode seam, classified through the
@@ -669,46 +645,25 @@ object Multimodal {
    * — deterministic across JDKs. A payload without the 8-byte PNG
    * signature never identified itself as the container →
    * `unreadable_container`. */
-  def extractImageFeaturesQuarantined(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("ok", BooleanType, nullable = false),
-      StructField("err_kind", StringType, nullable = true),
-      StructField("width", IntegerType, nullable = true),
-      StructField("height", IntegerType, nullable = true),
-      StructField("pixel_sum", LongType, nullable = true)))
-    val projected = df.select(col("media_id").cast(LongType), col("payload"))
-    val rdd = projected.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val bytes = r.getAs[Array[Byte]](1)
-        classifyDecode(id, nStats = 3) {
-          val sig = bytes.length >= 8 && bytes(0) == 0x89.toByte &&
-            bytes(1) == 'P' && bytes(2) == 'N' && bytes(3) == 'G'
-          require(sig, "no PNG signature")
-          val n = bytes.length
-          val tailOk = n >= 12 && bytes(n - 8) == 'I' &&
-            bytes(n - 7) == 'E' && bytes(n - 6) == 'N' && bytes(n - 5) == 'D'
-          if (!tailOk) throw new TruncatedMediaException(
-            "PNG data section ends before IEND")
-          val img = openImage(bytes)
-          val raster = img.getRaster
-          var sum = 0L
-          var y = 0
-          while (y < img.getHeight) {
-            var x = 0
-            while (x < img.getWidth) {
-              sum += raster.getSample(x, y, 0); x += 1
-            }
-            y += 1
-          }
-          Row(id, true, null, img.getWidth, img.getHeight, sum)
-        }
-      }
+  def extractImageFeaturesQuarantined(df: DataFrame): DataFrame =
+    codecFrame(df, StructField("ok", BooleanType, nullable = false),
+        StructField("err_kind", StringType, nullable = true),
+        StructField("width", IntegerType, nullable = true),
+        StructField("height", IntegerType, nullable = true),
+        StructField("pixel_sum", LongType, nullable = true)) { (id, bytes) =>
+      Some(classifyDecode(id, nStats = 3) {
+        val sig = bytes.length >= 8 && bytes(0) == 0x89.toByte &&
+          bytes(1) == 'P' && bytes(2) == 'N' && bytes(3) == 'G'
+        require(sig, "no PNG signature")
+        val n = bytes.length
+        val tailOk = n >= 12 && bytes(n - 8) == 'I' &&
+          bytes(n - 7) == 'E' && bytes(n - 6) == 'N' && bytes(n - 5) == 'D'
+        if (!tailOk) throw new TruncatedMediaException(
+          "PNG data section ends before IEND")
+        val img = openImage(bytes)
+        Row(id, true, null, img.getWidth, img.getHeight, band0Sum(img))
+      })
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /** M20 (video leg): the quarantine contract at the Y4M demux seam.
    * [[Y4mDecoder]]'s structural length checks throw
@@ -717,44 +672,27 @@ object Multimodal {
    * as `truncated_payload`; a payload whose header is not `YUV4MPEG2`
    * never identified itself → `unreadable_container` — the same two
    * kinds, the same seam. */
-  def extractVideoFeaturesQuarantined(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("ok", BooleanType, nullable = false),
-      StructField("err_kind", StringType, nullable = true),
-      StructField("width", IntegerType, nullable = true),
-      StructField("height", IntegerType, nullable = true),
-      StructField("n_frames", IntegerType, nullable = true),
-      StructField("y_sum", LongType, nullable = true)))
-    val projected = df.select(col("media_id").cast(LongType), col("payload"))
-    val rdd = projected.rdd.mapPartitions { rows =>
+  def extractVideoFeaturesQuarantined(df: DataFrame): DataFrame =
+    codecFrame(df, StructField("ok", BooleanType, nullable = false),
+        StructField("err_kind", StringType, nullable = true),
+        StructField("width", IntegerType, nullable = true),
+        StructField("height", IntegerType, nullable = true),
+        StructField("n_frames", IntegerType, nullable = true),
+        StructField("y_sum", LongType, nullable = true)) {
       val decoder = new Y4mDecoder
-      rows.map { r =>
-        val id = r.getLong(0)
-        classifyDecode(id, nStats = 4) {
-          val (w, h, sums) = decoder.frameLumaSums(r.getAs[Array[Byte]](1))
-          Row(id, true, null, w, h, sums.length, sums.sum)
-        }
-      }
+      (id, bytes) => Some(classifyDecode(id, nStats = 4) {
+        val (w, h, sums) = decoder.frameLumaSums(bytes)
+        Row(id, true, null, w, h, sums.length, sums.sum)
+      })
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /** Batched REAL wav decode: one [[WavDecoder]] per partition, RIFF
    * payloads in, true rate/duration/amplitude stats out. */
-  def extractAudioFeatures(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("features", AudioFeatureSchema, nullable = false)))
-    val projected = df.select(col("media_id").cast(LongType), col("payload"))
-    val rdd = projected.rdd.mapPartitions { rows =>
-      val decoder = new WavDecoder // per-partition init (amortized)
-      rows.map(r => Row(r.getLong(0), decoder.decode(r.getAs[Array[Byte]](1))))
+  def extractAudioFeatures(df: DataFrame): DataFrame =
+    codecFrame(df, StructField("features", AudioFeatureSchema, nullable = false)) {
+      val decoder = new WavDecoder
+      (id, bytes) => Some(Row(id, decoder.decode(bytes)))
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /**
    * Audio FINGERPRINT over decoded PCM — the audio leg of the
@@ -767,65 +705,31 @@ object Multimodal {
    * variant): a global GAIN change scales every window equally, so all
    * comparisons — and the fingerprint — are invariant, exactly the
    * re-mastered/re-encoded copies byte dedup can never see (the audio
-   * analog of aHash's brightness cancel; spec-asserted). Runs in the
-   * same per-partition `AudioSystem` seam as [[extractAudioFeatures]];
+   * analog of aHash's brightness cancel; spec-asserted). Reads the
+   * samples through the same [[readPcm16]] as [[extractAudioFeatures]];
    * the verdict then shuffles 8-byte fingerprints, never samples.
    * Windows beyond the sample count have energy 0 (short clips
    * zero-pad the tail bits deterministically). Ships as two 32-bit
-   * halves like [[imagePHash]].
+   * halves through [[packBits]] like [[imagePHash]].
    */
   def audioFingerprint(df: DataFrame, windows: Int = 65): DataFrame = {
     require(windows >= 2 && windows <= 65,
       s"windows-1 bits must fit 64, got $windows")
-    val spark = df.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("fp_hi", LongType, nullable = false),
-      StructField("fp_lo", LongType, nullable = false)))
-    val projected = df.select(col("media_id").cast(LongType), col("payload"))
-    val rdd = projected.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val ais = openAudio(r.getAs[Array[Byte]](1))
-        val e =
-          try {
-            val fmt = ais.getFormat
-            require(fmt.getSampleSizeInBits == 16 && fmt.getChannels == 1,
-              s"expected PCM16 mono, got $fmt")
-            val big = fmt.isBigEndian
-            val data = ais.readAllBytes()
-            val n = data.length / 2
-            val energies = new Array[Long](windows)
-            var w = 0
-            while (w < windows) {
-              val from = w * n / windows
-              val until = (w + 1) * n / windows
-              var acc = 0L
-              var i = from
-              while (i < until) {
-                val b0 = data(2 * i)
-                val b1 = data(2 * i + 1)
-                val s = if (big) (b0 << 8) | (b1 & 0xff)
-                        else (b1 << 8) | (b0 & 0xff)
-                acc += math.abs(s)
-                i += 1
-              }
-              energies(w) = acc
-              w += 1
-            }
-            energies
-          } finally ais.close()
-        var hi = 0L; var lo = 0L
-        var p = 0
-        while (p < windows - 1) {
-          if (e(p + 1) > e(p)) {
-            if (p < 32) lo |= 1L << p else hi |= 1L << (p - 32)
-          }
-          p += 1
-        }
-        Row(r.getLong(0), hi, lo)
+    codecFrame(df, StructField("fp_hi", LongType, nullable = false),
+        StructField("fp_lo", LongType, nullable = false)) { (id, bytes) =>
+      val (_, _, samples) = readPcm16(bytes)
+      val n = samples.length
+      val e = new Array[Long](windows)
+      var w = 0
+      while (w < windows) {
+        val until = (w + 1) * n / windows
+        var i = w * n / windows
+        while (i < until) { e(w) += math.abs(samples(i)); i += 1 }
+        w += 1
       }
+      val (hi, lo) = packBits(windows - 1)(p => e(p + 1) > e(p))
+      Some(Row(id, hi, lo))
     }
-    spark.createDataFrame(rdd, outSchema)
   }
 
   /** Metadata carried beside a video payload. */
@@ -885,58 +789,25 @@ object Multimodal {
         brightnessShift + perturbDelta + cutDelta <= 46,
       s"brightnessShift + perturbDelta + cutDelta must be in [0, 46], got " +
         s"$brightnessShift + $perturbDelta + $cutDelta")
-    val spark = df.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("payload", BinaryType, nullable = false),
-      StructField("meta", VideoMetaSchema, nullable = false)))
-    val projected = df.select(col(idCol).cast(LongType),
-      encode(col(textCol), "UTF-8"))
-    val rdd = projected.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val len = r.getAs[Array[Byte]](1).length
-        val w = 2 * (1 + len % 6)
-        val h = 2 * (1 + len % 4)
-        val nf = 1 + len % 5
-        val fps = 24 + len % 2
-        val a = len % 180 + brightnessShift
-        val header = s"YUV4MPEG2 W$w H$h F$fps:1 Ip A1:1 C420jpeg\n"
-          .getBytes("US-ASCII")
-        val frameMark = "FRAME\n".getBytes("US-ASCII")
-        val cSize = (w / 2) * (h / 2)
-        val n = w * h * nf
-        val bump = new Array[Int](n)
-        perturbWindows.foreach { pw =>
-          var k = pw * n / 65
-          val until = (pw + 1) * n / 65
-          while (k < until) { bump(k) = perturbDelta; k += 1 }
-        }
-        val buf = java.nio.ByteBuffer.allocate(
-          header.length + nf * (frameMark.length + w * h + 2 * cSize))
-        buf.put(header)
-        var t = 0
-        while (t < nf) {
-          buf.put(frameMark)
-          val cut = if (cutAtFrame >= 0 && t >= cutAtFrame) cutDelta else 0
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              buf.put((a + x + y + 3 * t + cut +
-                bump(t * w * h + y * w + x)).toByte)
-              x += 1
-            }
-            y += 1
-          }
-          var c = 0
-          while (c < 2 * cSize) { buf.put(128.toByte); c += 1 }
-          t += 1
-        }
-        Row(id, buf.array(), Row("video/y4m", w, h, nf, fps))
+    synthFrame(df, idCol, textCol, VideoMetaSchema) { (id, len) =>
+      val w = 2 * (1 + len % 6)
+      val h = 2 * (1 + len % 4)
+      val nf = 1 + len % 5
+      val fps = 24 + len % 2
+      val a = len % 180 + brightnessShift
+      val n = w * h * nf
+      val bump = new Array[Int](n)
+      perturbWindows.foreach { pw =>
+        var k = pw * n / 65
+        val until = (pw + 1) * n / 65
+        while (k < until) { bump(k) = perturbDelta; k += 1 }
       }
+      val y4m = y4mBytes(w, h, fps, nf) { (t, x, y) =>
+        val cut = if (cutAtFrame >= 0 && t >= cutAtFrame) cutDelta else 0
+        a + x + y + 3 * t + cut + bump(t * w * h + y * w + x)
+      }
+      Some(Row(id, y4m, Row("video/y4m", w, h, nf, fps)))
     }
-    spark.createDataFrame(rdd, outSchema)
   }
 
   /**
@@ -954,58 +825,47 @@ object Multimodal {
    * fingerprints (m11/m12) structurally miss.
    */
   def packAsY4mSpliced(df: DataFrame, idCol: String,
-                       textCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("payload", BinaryType, nullable = false),
-      StructField("meta", VideoMetaSchema, nullable = false)))
-    val projected = df.select(col(idCol).cast(LongType),
-      encode(col(textCol), "UTF-8"))
-    val rdd = projected.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val id = r.getLong(0)
-        val len = r.getAs[Array[Byte]](1).length
-        val w = 2 * (1 + len % 6)
-        val h = 2 * (1 + len % 4)
-        val nf = 1 + len % 5
-        val fps = 24 + len % 2
-        val a = len % 180
-        if (nf < 3) None
-        else {
-          val m = nf - 2
-          val nfc = 3 * m
-          val header = s"YUV4MPEG2 W$w H$h F$fps:1 Ip A1:1 C420jpeg\n"
-            .getBytes("US-ASCII")
-          val frameMark = "FRAME\n".getBytes("US-ASCII")
-          val cSize = (w / 2) * (h / 2)
-          val buf = java.nio.ByteBuffer.allocate(
-            header.length + nfc * (frameMark.length + w * h + 2 * cSize))
-          buf.put(header)
-          var f = 0
-          while (f < nfc) {
-            buf.put(frameMark)
-            val donor = f >= m && f < 2 * m
-            val t = if (donor) 2 + (f - m) else 0
-            val lift = if (donor) 40 else 0
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                buf.put((a + x + y + 3 * t + lift).toByte)
-                x += 1
-              }
-              y += 1
-            }
-            var c = 0
-            while (c < 2 * cSize) { buf.put(128.toByte); c += 1 }
-            f += 1
-          }
-          Some(Row(id, buf.array(), Row("video/y4m", w, h, nfc, fps)))
+                       textCol: String): DataFrame =
+    synthFrame(df, idCol, textCol, VideoMetaSchema) { (id, len) =>
+      val (w, h, nf) = (2 * (1 + len % 6), 2 * (1 + len % 4), 1 + len % 5)
+      val (fps, a, m) = (24 + len % 2, len % 180, nf - 2)
+      if (nf < 3) None
+      else {
+        val y4m = y4mBytes(w, h, fps, 3 * m) { (f, x, y) =>
+          val donor = f >= m && f < 2 * m
+          val t = if (donor) 2 + (f - m) else 0
+          a + x + y + 3 * t + (if (donor) 40 else 0)
         }
+        Some(Row(id, y4m, Row("video/y4m", w, h, 3 * m, fps)))
       }
     }
-    spark.createDataFrame(rdd, outSchema)
+
+  /** The one Y4M writer both synthesizers share: a 4:2:0 stream header,
+   * then `nf` sections of `FRAME\n`, a `w`×`h` luma plane with
+   * Y = `luma(frame, x, y)` (truncated to a byte) and constant-128
+   * chroma planes. */
+  private def y4mBytes(w: Int, h: Int, fps: Int, nf: Int)(
+      luma: (Int, Int, Int) => Int): Array[Byte] = {
+    val header = s"YUV4MPEG2 W$w H$h F$fps:1 Ip A1:1 C420jpeg\n"
+      .getBytes("US-ASCII")
+    val frameMark = "FRAME\n".getBytes("US-ASCII")
+    val chroma = Array.fill(2 * (w / 2) * (h / 2))(128.toByte)
+    val buf = java.nio.ByteBuffer.allocate(
+      header.length + nf * (frameMark.length + w * h + chroma.length))
+    buf.put(header)
+    var t = 0
+    while (t < nf) {
+      buf.put(frameMark)
+      var y = 0
+      while (y < h) {
+        var x = 0
+        while (x < w) { buf.put(luma(t, x, y).toByte); x += 1 }
+        y += 1
+      }
+      buf.put(chroma)
+      t += 1
+    }
+    buf.array()
   }
 
   /** Per-SHOT video fingerprints in the codec seam —
@@ -1014,27 +874,16 @@ object Multimodal {
    * shot; downstream joins shuffle (media_id, shot_id, 8-byte code)
    * rows, never frames. */
   def videoShotFingerprints(df: DataFrame, windows: Int = 65,
-                            cutThreshold: Int = 10): DataFrame = {
-    val spark = df.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("shot_id", IntegerType, nullable = false),
-      StructField("start_frame", IntegerType, nullable = false),
-      StructField("end_frame", IntegerType, nullable = false),
-      StructField("fp_hi", LongType, nullable = false),
-      StructField("fp_lo", LongType, nullable = false)))
-    val projected = df.select(col("media_id").cast(LongType), col("payload"))
-    val rdd = projected.rdd.mapPartitions { rows =>
+                            cutThreshold: Int = 10): DataFrame =
+    codecFrame(df, StructField("shot_id", IntegerType, nullable = false),
+        StructField("start_frame", IntegerType, nullable = false),
+        StructField("end_frame", IntegerType, nullable = false),
+        StructField("fp_hi", LongType, nullable = false),
+        StructField("fp_lo", LongType, nullable = false)) {
       val decoder = new Y4mDecoder
-      rows.flatMap { r =>
-        val id = r.getLong(0)
-        decoder.shotFingerprints(r.getAs[Array[Byte]](1), windows,
-            cutThreshold)
-          .map { case (sid, t0, t1, hi, lo) => Row(id, sid, t0, t1, hi, lo) }
-      }
+      (id, bytes) => decoder.shotFingerprints(bytes, windows, cutThreshold)
+        .map { case (sid, t0, t1, hi, lo) => Row(id, sid, t0, t1, hi, lo) }
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /** Banded-Hamming near-duplicate pairs over PER-SHOT fingerprints —
    * the m21 candidate join: shots key as the STRUCT
@@ -1060,19 +909,11 @@ object Multimodal {
    * synthesis metadata. `sampleStride` additionally keeps every
    * stride-th frame (a keyframe sampler over the REAL demux, replacing
    * the fixed-size-framing stub). */
-  def extractVideoFeatures(df: DataFrame, sampleStride: Int = 2): DataFrame = {
-    val spark = df.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("features", VideoFeatureSchema, nullable = false)))
-    val projected = df.select(col("media_id").cast(LongType), col("payload"))
-    val rdd = projected.rdd.mapPartitions { rows =>
-      val decoder = new Y4mDecoder // per-partition init (amortized)
-      rows.map(r =>
-        Row(r.getLong(0), decoder.decode(r.getAs[Array[Byte]](1), sampleStride)))
+  def extractVideoFeatures(df: DataFrame, sampleStride: Int = 2): DataFrame =
+    codecFrame(df, StructField("features", VideoFeatureSchema, nullable = false)) {
+      val decoder = new Y4mDecoder
+      (id, bytes) => Some(Row(id, decoder.decode(bytes, sampleStride)))
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /** SCENE-CUT detection over the real Y4M demux — the shot-boundary
    * pass a video training pipeline runs before picking representative
@@ -1085,50 +926,33 @@ object Multimodal {
    * work is one linear scan of the luma planes in the same
    * partition-batched codec seam as every m-gate; downstream shot
    * tables carry (media_id, frame_idx) — never pixels. */
-  def videoSceneCuts(df: DataFrame, threshold: Int): DataFrame = {
-    val spark = df.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("frame_idx", IntegerType, nullable = false),
-      StructField("delta_mean", DoubleType, nullable = false),
-      StructField("is_cut", BooleanType, nullable = false)))
-    val projected = df.select(col("media_id").cast(LongType), col("payload"))
-    val rdd = projected.rdd.mapPartitions { rows =>
-      val decoder = new Y4mDecoder // per-partition init (amortized)
-      rows.flatMap { r =>
-        val (w, h, sums) = decoder.frameLumaSums(r.getAs[Array[Byte]](1))
+  def videoSceneCuts(df: DataFrame, threshold: Int): DataFrame =
+    codecFrame(df, StructField("frame_idx", IntegerType, nullable = false),
+        StructField("delta_mean", DoubleType, nullable = false),
+        StructField("is_cut", BooleanType, nullable = false)) {
+      val decoder = new Y4mDecoder
+      (id, bytes) =>
+        val (w, h, sums) = decoder.frameLumaSums(bytes)
         val ySize = w.toLong * h
         (1 until sums.length).iterator.map { t =>
           val diff = sums(t) - sums(t - 1)
-          Row(r.getLong(0), t, diff.toDouble / ySize,
-            math.abs(diff) > threshold * ySize)
+          Row(id, t, diff.toDouble / ySize, math.abs(diff) > threshold * ySize)
         }
-      }
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /** Video FINGERPRINT over the real Y4M demux — [[Y4mDecoder.fingerprint]]
    * in the per-partition codec seam, two 32-bit halves out like
    * [[imagePHash]]/[[audioFingerprint]]: the downstream verdict (m11)
    * and any banded near-dup join shuffle 8-byte fingerprints, never
    * frames. */
-  def videoFingerprint(df: DataFrame, windows: Int = 65): DataFrame = {
-    val spark = df.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("fp_hi", LongType, nullable = false),
-      StructField("fp_lo", LongType, nullable = false)))
-    val projected = df.select(col("media_id").cast(LongType), col("payload"))
-    val rdd = projected.rdd.mapPartitions { rows =>
-      val decoder = new Y4mDecoder // per-partition init (amortized)
-      rows.map { r =>
-        val (hi, lo) = decoder.fingerprint(r.getAs[Array[Byte]](1), windows)
-        Row(r.getLong(0), hi, lo)
-      }
+  def videoFingerprint(df: DataFrame, windows: Int = 65): DataFrame =
+    codecFrame(df, StructField("fp_hi", LongType, nullable = false),
+        StructField("fp_lo", LongType, nullable = false)) {
+      val decoder = new Y4mDecoder
+      (id, bytes) =>
+        val (hi, lo) = decoder.fingerprint(bytes, windows)
+        Some(Row(id, hi, lo))
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 }
 
 /**
@@ -1142,16 +966,8 @@ object Multimodal {
 final class ImageIoDecoder {
   def decode(bytes: Array[Byte]): Row = {
     val img = Multimodal.openImage(bytes)
-    val w = img.getWidth
-    val h = img.getHeight
-    val raster = img.getRaster
-    var sum = 0L
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) { sum += raster.getSample(x, y, 0); x += 1 }
-      y += 1
-    }
+    val (w, h) = (img.getWidth, img.getHeight)
+    val sum = Multimodal.band0Sum(img)
     val n = w.toLong * h
     Row(w, h, n, sum, sum.toDouble / n)
   }
@@ -1168,33 +984,19 @@ final class ImageIoDecoder {
  */
 final class WavDecoder {
   def decode(bytes: Array[Byte]): Row = {
-    val ais = Multimodal.openAudio(bytes)
-    try {
-      val fmt = ais.getFormat
-      require(fmt.getSampleSizeInBits == 16 && fmt.getChannels == 1,
-        s"expected PCM16 mono, got $fmt")
-      val rate = fmt.getSampleRate.toInt
-      val data = ais.readAllBytes()
-      val n = data.length / 2
-      require(n > 0, "empty audio payload")
-      val big = fmt.isBigEndian
-      var i = 0
-      var sum = 0L
-      var sumSq = 0L
-      var peak = 0
-      while (i < n) {
-        val b0 = data(2 * i)
-        val b1 = data(2 * i + 1)
-        val s = if (big) (b0 << 8) | (b1 & 0xff) else (b1 << 8) | (b0 & 0xff)
-        sum += s
-        sumSq += s.toLong * s
-        val a = math.abs(s)
-        if (a > peak) peak = a
-        i += 1
-      }
-      Row(rate, n.toLong, n.toLong * 1000L / rate, peak, sum,
-        math.sqrt(sumSq.toDouble / n))
-    } finally ais.close()
+    val (rate, _, samples) = Multimodal.readPcm16(bytes)
+    val n = samples.length
+    require(n > 0, "empty audio payload")
+    var sum = 0L
+    var sumSq = 0L
+    var peak = 0
+    samples.foreach { s =>
+      sum += s
+      sumSq += s.toLong * s
+      peak = math.max(peak, math.abs(s))
+    }
+    Row(rate, n.toLong, n.toLong * 1000L / rate, peak, sum,
+      math.sqrt(sumSq.toDouble / n))
   }
 }
 
@@ -1284,19 +1086,42 @@ final class Y4mDecoder {
     offs.toArray
   }
 
-  /** Per-frame luma sums from the demuxed planes — the scene-cut
-   * detector's input: (width, height, one Σy per frame). */
-  def frameLumaSums(bytes: Array[Byte]): (Int, Int, Array[Long]) = {
-    val sh = parseHeader(bytes)
-    val offs = lumaOffsets(bytes, sh)
-    val ySize = sh.w * sh.h
-    val sums = offs.map { o =>
+  /** One Σy per frame whose luma plane starts at `offs`. */
+  private def frameSums(bytes: Array[Byte], offs: Array[Int], ySize: Int): Array[Long] =
+    offs.map { o =>
       var s = 0L
       var i = 0
       while (i < ySize) { s += bytes(o + i) & 0xff; i += 1 }
       s
     }
-    (sh.w, sh.h, sums)
+
+  /** The windowed cross-multiplied delta-bit code (see [[fingerprint]])
+   * over the concatenated luma samples of frames `t0..t1`. */
+  private def windowedCode(bytes: Array[Byte], offs: Array[Int], ySize: Int,
+                           t0: Int, t1: Int, windows: Int): (Long, Long) = {
+    val n = (t1 - t0 + 1).toLong * ySize
+    val e = new Array[Long](windows)
+    val s = new Array[Long](windows)
+    var w = 0
+    while (w < windows) {
+      val from = w * n / windows
+      val until = (w + 1) * n / windows
+      s(w) = until - from
+      var k = from
+      while (k < until) {
+        e(w) += bytes(offs(t0 + (k / ySize).toInt) + (k % ySize).toInt) & 0xff
+        k += 1
+      }
+      w += 1
+    }
+    Multimodal.packBits(windows - 1)(p => e(p + 1) * s(p) > e(p) * s(p + 1))
+  }
+
+  /** Per-frame luma sums from the demuxed planes — the scene-cut
+   * detector's input: (width, height, one Σy per frame). */
+  def frameLumaSums(bytes: Array[Byte]): (Int, Int, Array[Long]) = {
+    val sh = parseHeader(bytes)
+    (sh.w, sh.h, frameSums(bytes, lumaOffsets(bytes, sh), sh.w * sh.h))
   }
 
   /** `sampleStride` keeps every stride-th frame (from frame 0) in the
@@ -1304,39 +1129,15 @@ final class Y4mDecoder {
   def decode(bytes: Array[Byte], sampleStride: Int = 2): Row = {
     require(sampleStride >= 1, s"stride must be >= 1, got $sampleStride")
     val sh = parseHeader(bytes)
-    val w = sh.w; val h = sh.h
-    val fpsNum = sh.fpsNum; val fpsDen = sh.fpsDen
-    val chromaSize = sh.chromaSize
-    val ySize = w * h
-    var pos = sh.headerEnd + 1
-    var nFrames = 0
-    var ySum = 0L
-    var sampledFrames = 0
-    var sampledYSum = 0L
-    while (pos < bytes.length) {
-      val fEnd = lineEnd(bytes, pos)
-      val mark = new String(bytes, pos, fEnd - pos, "US-ASCII")
-      require(mark.startsWith("FRAME"), s"expected FRAME marker, got '$mark'")
-      pos = fEnd + 1
-      if (pos + ySize + chromaSize > bytes.length)
-        throw new TruncatedMediaException(
-          s"truncated Y4M frame $nFrames: need ${ySize + chromaSize} bytes")
-      var frameSum = 0L
-      var i = 0
-      while (i < ySize) { frameSum += bytes(pos + i) & 0xff; i += 1 }
-      ySum += frameSum
-      if (nFrames % sampleStride == 0) {
-        sampledFrames += 1
-        sampledYSum += frameSum
-      }
-      nFrames += 1
-      pos += ySize + chromaSize
-    }
-    require(nFrames > 0, "empty Y4M stream: no frames")
-    Row(w, h, nFrames, fpsNum,
-      nFrames.toLong * 1000L * fpsDen / fpsNum,
+    val ySize = sh.w * sh.h
+    val sums = frameSums(bytes, lumaOffsets(bytes, sh), ySize)
+    val nFrames = sums.length
+    val ySum = sums.sum
+    val sampled = sums.indices.by(sampleStride).map(t => sums(t))
+    Row(sh.w, sh.h, nFrames, sh.fpsNum,
+      nFrames.toLong * 1000L * sh.fpsDen / sh.fpsNum,
       ySum, ySum.toDouble / (ySize.toLong * nFrames),
-      sampledFrames, sampledYSum)
+      sampled.length, sampled.sum)
   }
 
   /**
@@ -1354,41 +1155,15 @@ final class Y4mDecoder {
    * invariant quantity). Spans beyond the sample count are empty and
    * compare false deterministically. Overflow headroom: the products
    * are ≤ 255·n·(n/windows), fine through multi-billion-sample clips.
+   * The whole stream is the one-shot case of [[shotFingerprints]]:
+   * both run the same windowed code, here over frames 0..nf−1.
    */
   def fingerprint(bytes: Array[Byte], windows: Int = 65): (Long, Long) = {
     require(windows >= 2 && windows <= 65,
       s"windows-1 bits must fit 64, got $windows")
     val sh = parseHeader(bytes)
     val offs = lumaOffsets(bytes, sh)
-    val ySize = sh.w * sh.h
-    val n = offs.length.toLong * ySize
-    val e = new Array[Long](windows)
-    val s = new Array[Long](windows)
-    var w = 0
-    while (w < windows) {
-      val from = w * n / windows
-      val until = (w + 1) * n / windows
-      s(w) = until - from
-      var acc = 0L
-      var k = from
-      while (k < until) {
-        val frame = (k / ySize).toInt
-        val off = (k % ySize).toInt
-        acc += bytes(offs(frame) + off) & 0xff
-        k += 1
-      }
-      e(w) = acc
-      w += 1
-    }
-    var hi = 0L; var lo = 0L
-    var p = 0
-    while (p < windows - 1) {
-      if (e(p + 1) * s(p) > e(p) * s(p + 1)) {
-        if (p < 32) lo |= 1L << p else hi |= 1L << (p - 32)
-      }
-      p += 1
-    }
-    (hi, lo)
+    windowedCode(bytes, offs, sh.w * sh.h, 0, offs.length - 1, windows)
   }
 
   /** Per-SHOT fingerprints — the m18→m21 composition in one decode
@@ -1408,44 +1183,13 @@ final class Y4mDecoder {
     val sh = parseHeader(bytes)
     val offs = lumaOffsets(bytes, sh)
     val ySize = sh.w * sh.h
-    val sums = offs.map { o =>
-      var s = 0L
-      var i = 0
-      while (i < ySize) { s += bytes(o + i) & 0xff; i += 1 }
-      s
-    }
+    val sums = frameSums(bytes, offs, ySize)
     val cuts = (1 until offs.length)
       .filter(t => math.abs(sums(t) - sums(t - 1)) > cutThreshold.toLong * ySize)
     val starts = 0 +: cuts
     val ends = cuts.map(_ - 1) :+ (offs.length - 1)
     starts.zip(ends).zipWithIndex.map { case ((t0, t1), sid) =>
-      val n = (t1 - t0 + 1).toLong * ySize
-      val e = new Array[Long](windows)
-      val sw = new Array[Long](windows)
-      var w = 0
-      while (w < windows) {
-        val from = w * n / windows
-        val until = (w + 1) * n / windows
-        sw(w) = until - from
-        var acc = 0L
-        var k = from
-        while (k < until) {
-          val frame = t0 + (k / ySize).toInt
-          val off = (k % ySize).toInt
-          acc += bytes(offs(frame) + off) & 0xff
-          k += 1
-        }
-        e(w) = acc
-        w += 1
-      }
-      var hi = 0L; var lo = 0L
-      var p = 0
-      while (p < windows - 1) {
-        if (e(p + 1) * sw(p) > e(p) * sw(p + 1)) {
-          if (p < 32) lo |= 1L << p else hi |= 1L << (p - 32)
-        }
-        p += 1
-      }
+      val (hi, lo) = windowedCode(bytes, offs, ySize, t0, t1, windows)
       (sid, t0, t1, hi, lo)
     }
   }

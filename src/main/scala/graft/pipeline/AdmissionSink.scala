@@ -127,16 +127,6 @@ object AdmissionSink {
       hasBenchMedia = sink.benchMediaPath.nonEmpty,
       semPlanes0 = Similarity.hyperplanes(semPlanes, AdmissionGate.Dim))
 
-  /** The gate core a sink spec declares — resume-aware: on a
-   * bootstrapped root the plane dial comes from the persisted axis
-   * config (the seed that would re-derive it is retired); on a fresh
-   * root from the spec key, falling back to the fixture dial (8 — the
-   * plain-shape default; [[openGate]] is the production entry and
-   * derives the corpus-scaled dial instead). */
-  def coreFor(sink: SinkSpec): AdmissionGateCore =
-    coreAt(sink, readAxes(sink).map(_.semPlanes)
-      .orElse(sink.semPlanes).getOrElse(8))
-
   /** ENGINE ENTRY — bootstrap-or-resume with the axis-config contract:
    *
    *  - **fresh root**: resolve the semantic plane dial (the spec's

@@ -193,7 +193,7 @@ final class ConnectServer(engine: ConnectRuntime, port: Int = 0,
           val plugins =
             Seq("csv" -> "source", "parquet" -> "source", "rate" -> "source",
               "kafka" -> "source", "table" -> "sink", "logtable" -> "sink",
-              "jdbc" -> "sink", "append" -> "sink")
+              "jdbc" -> "sink", "append" -> "sink", "admission" -> "sink")
           json(ex, 200, plugins.map { case (c, t) =>
             s"""{"class":${quote(c)},"type":${quote(t)}}"""
           }.mkString("[", ",", "]"))

@@ -106,7 +106,7 @@ object AdmissionState {
    * maintenance rewrites publish through, so a derived table can be
    * REBUILT from sibling state and go live atomically with the fold,
    * e.g. re-capping the containment postings from the folded artifacts
-   * ([[Dedup.foldWithRecappedPostings]]). */
+   * ([[Dedup.maintenanceFold]] with `recapMaxDf`). */
   def fold(spark: SparkSession, stateDir: String, upTo: Long,
            subs: Seq[String], epoch: Long,
            build: (String, String => DataFrame) => DataFrame =

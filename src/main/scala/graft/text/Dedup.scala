@@ -951,33 +951,16 @@ object Dedup {
     capped.join(nb, Seq("ref_id")).select("ref_id", "h", "n_b")
   }
 
-  /** RE-CAP maintenance fold for the containment posting state — the
-   * policy verb the per-batch append defers to: batches append their
-   * postings RAW (a batch can't know global document frequency), so
-   * boilerplate that becomes hot only ACROSS batches accumulates
-   * uncapped in the tail. This fold compacts the admission state up to
-   * `upTo` AND rebuilds `cpost` from the folded `art` tables under the
-   * GLOBAL df cap — published atomically with the fold (the
-   * [[graft.text.AdmissionState.fold]] build hook), so readers see
-   * either the old state or the recapped one, never a torn mix.
-   * Verdict drift is the documented policy: cross-batch boilerplate
-   * leaves the postings (and the n_b denominators) at the next
-   * maintenance window, exactly as a reindex re-trains quantizers.
-   * Fenced: runs under the admission writer epoch. */
-  def foldWithRecappedPostings(spark: org.apache.spark.sql.SparkSession,
-                               stateDir: String, upTo: Long,
-                               otherSubs: Seq[String], maxDf: Int,
-                               epoch: Long): Boolean =
-    maintenanceFold(spark, stateDir, upTo, otherSubs :+ "cpost", epoch,
-      recapMaxDf = Some(maxDf))
-
   /** The PRODUCTION maintenance fold — ONE fenced compaction publishing
    * every derived-table rewrite atomically with the fold itself:
    *
    *  - `cpost` (when present and `recapMaxDf` is set) rebuilds from the
-   *    folded `art` tables under the GLOBAL df cap
-   *    ([[foldWithRecappedPostings]]'s re-cap — cross-batch boilerplate
-   *    leaves the postings and the `n_b` denominators here);
+   *    folded `art` tables under the GLOBAL df cap — the RE-CAP the
+   *    per-batch append defers to: batches append their postings RAW
+   *    (a batch can't know global document frequency), so boilerplate
+   *    that becomes hot only ACROSS batches leaves the postings and the
+   *    `n_b` denominators here, at the next maintenance window, exactly
+   *    as a reindex re-trains quantizers;
    *  - `emb` (when present and `rebucket` is set) RE-BUCKETS from the
    *    stored vectors under the caller's bucketing expression — the
    *    LSH-dial growth point for the semantic admission leg: as the

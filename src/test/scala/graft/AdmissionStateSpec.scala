@@ -336,8 +336,8 @@ class AdmissionStateSpec extends SparkSpec {
     // before maintenance: the raw batch appends still carry them
     assert(postedBoiler() == nBoiler)
     val e = AdmissionState.acquireWriter(stateDir)
-    assert(Dedup.foldWithRecappedPostings(spark, stateDir, upTo = 1L,
-      otherSubs = Seq("art"), maxDf = cap, epoch = e))
+    assert(Dedup.maintenanceFold(spark, stateDir, upTo = 1L,
+      subs = Seq("art", "cpost"), epoch = e, recapMaxDf = Some(cap)))
     assert(AdmissionState.parts(stateDir, 99L) == Seq(s"$stateDir/fold=1"))
     // after: global df = 12 > 10 — boilerplate gone from the postings
     assert(postedBoiler() == 0L,

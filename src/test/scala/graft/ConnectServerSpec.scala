@@ -306,8 +306,10 @@ class ConnectServerSpec extends SparkSpec {
         noName.body())
       assert(call(url, "GET", "/connectors").body() == "[]") // nothing leaked
       val plugins = mapper.readTree(call(url, "GET", "/connector-plugins").body())
-      assert(plugins.size() == 8 &&
+      assert(plugins.size() == 9 &&
         plugins.get(0).get("type").asText() == "source")
+      assert(plugins.get(8).get("class").asText() == "admission" &&
+        plugins.get(8).get("type").asText() == "sink")
     } finally server.stop()
   }
 }

@@ -534,12 +534,12 @@ class EngineSpec extends SparkSpec {
          |  "semPlanes":"2"}}""".stripMargin
     engine.registerJson(spec).processAllAvailable()
     // the fold committed under a GROWN dial; a fresh core resuming on
-    // this state must re-derive that dial from the newest fold, not
+    // this state (openGate checks the persisted axes and runs
+    // resumeDials) must re-derive that dial from the newest fold, not
     // fall back to the bootstrap floor
     val p = graft.pipeline.PipelineSpec.fromJson(spec)
-    val resumed = graft.pipeline.AdmissionSink.coreFor(p.sink)
+    val resumed = graft.pipeline.AdmissionSink.openGate(spark, p.sink)
     assert(resumed.bootstrapped)
-    resumed.resumeDials(spark)
     val foldDir = graft.text.AdmissionState
       .newestFold(s"$base/gate/state")
     assert(foldDir.nonEmpty, "batch 7 must have folded seed+b0..b6")

@@ -500,6 +500,32 @@ class MultimodalSpec extends SparkSpec {
     assert(none.count() == 0)
   }
 
+  test("on a cut-free clip the whole-stream Y4M paths equal the one-shot and per-frame paths") {
+    // the default clip ramps luma by 3 levels per frame, under the
+    // 10-level cut threshold, so every clip is ONE shot over 0..nf-1;
+    // lengths 50..59 cover nf = 1..5 twice, each time at other w/h
+    val d = new graft.multimodal.Y4mDecoder
+    val docs = (50 until 60).map(len => (len.toLong, "k" * len))
+      .toDF("doc_id", "text")
+    Multimodal.packAsY4m(docs, "doc_id", "text").collect().foreach { r =>
+      val bytes = r.getAs[Array[Byte]]("payload")
+      val nf = r.getStruct(2).getInt(3)
+      for (windows <- Seq(65, 9)) {
+        val shots = d.shotFingerprints(bytes, windows)
+        assert(shots.map(s => (s._1, s._2, s._3)) == Seq((0, 0, nf - 1)))
+        assert(d.fingerprint(bytes, windows) == ((shots.head._4, shots.head._5)),
+          s"whole-stream fingerprint != its one shot's (nf=$nf, windows=$windows)")
+      }
+      val sums = d.frameLumaSums(bytes)._3
+      assert(sums.length == nf)
+      for (stride <- 1 to 3) {
+        val row = d.decode(bytes, stride)
+        assert(row.getLong(5) == sums.sum)
+        assert(row.getLong(8) == sums.indices.by(stride).map(t => sums(t)).sum)
+      }
+    }
+  }
+
   test("packAsWav idSeedMod: clone at id + k*mod reproduces its original; same-length different-id diverges; default 0 keeps the len-only algebra") {
     val docs = Seq((10L, "x" * 100), (11L, "y" * 100), (700010L, "z" * 100))
       .toDF("doc_id", "text")
