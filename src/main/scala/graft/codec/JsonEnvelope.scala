@@ -243,6 +243,29 @@ object JsonEnvelope {
   }
 
   /**
+   * Decode a Kafka KEY as a `keySchema` struct. The envelope sniff
+   * strips `{schema,payload}`; whether the rest is a JSON OBJECT decides
+   * the path: an object parses with `keySchema`, a bare scalar (from_json
+   * of a non-object returns a non-null all-null struct — useless) parses
+   * via a one-element JSON array, so numbers AND quoted strings both land
+   * typed in a single-field key. A scalar against a multi-field key is
+   * NULL.
+   */
+  def decodeKey(raw: Column, keySchema: StructType): Column = {
+    val payload = when(get_json_object(raw, "$.schema").isNotNull,
+      get_json_object(raw, "$.payload")).otherwise(raw)
+    val scalar =
+      if (keySchema.size == 1)
+        struct(element_at(
+          from_json(concat(lit("["), payload, lit("]")),
+            ArrayType(keySchema.head.dataType)),
+          1).as(keySchema.head.name))
+      else lit(null).cast(keySchema)
+    when(substring(ltrim(payload), 1, 1) === "{", decode(raw, keySchema))
+      .otherwise(scalar)
+  }
+
+  /**
    * Classified decode — the converter half of Connect's error-handling
    * surface (`errors.tolerance=all` + dead-letter-queue routing; the
    * spooldir source's error channel is the same idea at the file stage).

@@ -33,6 +33,10 @@ object Connect {
   val ValueCol = "value"
   val TopicCol = "topic"
   val SeqCol = "seq"
+  /** The raw Kafka key (string) a wire frame carries beside `key`, so a
+   * key-shaping SMT can still key a tombstone whose value it cannot
+   * lift from. Transport metadata: the Engine drops it before the sink. */
+  val WireKeyCol = "_wire_key"
 
   /**
    * Lift a plain table into a connect frame: `value` = struct of all

@@ -1,12 +1,16 @@
 package graft.pipeline
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ml.Similarity
 import graft.multimodal.Multimodal
 import graft.operators.CacheScope
+import graft.state.StateDir
 import graft.text.{AdmissionState, Dedup, TextAnalysis}
+import graft.util.Fs
 
 /** The admission gate's library half: the dials every leg reads (the
  * oracle SQL renders the same constants), the per-trigger verdict
@@ -76,10 +80,7 @@ object AdmissionGate {
 
   /** Run independent write thunks concurrently (first failure
    * propagates, all complete or fail before return). ONLY for writes
-   * to DISTINCT directories with no ordering contract — the crash
-   * exposure is unchanged (any subset of the per-batch overwrite dirs
-   * may exist after a crash, exactly as with sequential writes, and a
-   * replay overwrites them all before any later batch reads). */
+   * to DISTINCT directories with no ordering contract. */
   private[graft] def inParallel(writes: Seq[() => Unit]): Unit =
     if (writes.size <= 1) writes.foreach(_())
     else {
@@ -272,12 +273,13 @@ object AdmissionGate {
  * PRECOMPUTED state ONLY: the admitted-corpus text lands under
  * `ref/` as the pipeline's product but is never re-read (the r13
  * scale fix — per-trigger cost is O(batch) hashing + joins against
- * state tables that grow only by admitted artifacts). Per-trigger
- * writes stay in their own `batch=`/`adm`/`b<id>` dirs with
- * overwrite (w10's idempotent replay shape), and the state read
- * filters to ids STRICTLY BELOW the current batch — a crashed
- * attempt's leftover state can never make its replay
- * self-duplicate.
+ * state tables that grow only by admitted artifacts). Every change
+ * under `state/` is one [[StateDir.publish]]: the bootstrap publishes
+ * `state/` itself, each trigger its `b<id>` (fenced by the writer
+ * epoch), each fold its `fold=<k>` — so [[AdmissionState.parts]] sees
+ * a batch whole or not at all. A replayed id first removes its own
+ * `b<id>`; the products `out/batch=<id>` and `ref/adm<id>` are
+ * per-batch overwrites outside `state/`.
  *
  * The class owns the gate's LIVE dials: the frozen bucketing center
  * and the growing semantic plane count. A RESUMED deployment rebuilds both
@@ -310,13 +312,6 @@ private[graft] final class AdmissionGateCore(
   /** Test hook: the live plane-dial size (spec-asserted around the
    * fold-growth and resume-derivation paths). */
   private[graft] def currentPlaneCount: Int = curPlanes.size
-  /** Test failpoint: throw BETWEEN the maintenance fold's atomic
-   * rewrite and this batch's state append — the crash window the
-   * torn-fold resume spec drives (the fold published, the folding
-   * batch's own appends never landed, the checkpoint never
-   * committed, so a restart replays this batch against the folded
-   * state under the re-derived dial). */
-  private[graft] var failAfterFold: Boolean = false
   // the bucketing CENTER: hashed text-count vectors share a dominant
   // common direction, so raw sign-of-dot buckets collapse into a
   // mega-bucket the hot-bucket cap would then blind; buckets derive
@@ -337,45 +332,40 @@ private[graft] final class AdmissionGateCore(
   private def embFrameOf(df: DataFrame): DataFrame = rawEmbOf(df)
     .select(col("ref_id"), bucketOf(col("vec")).as("bucket"), col("vec"))
 
-  /** True once [[bootstrap]] has COMPLETED on this gate root (the
-   * marker is the bootstrap's last write, so a crash mid-bootstrap
-   * reads false and the next start redoes the whole idempotent
-   * overwrite set). Dot-prefixed: invisible to AdmissionState.parts. */
-  def bootstrapped: Boolean =
-    java.nio.file.Files.exists(
-      java.nio.file.Paths.get(stateDir, ".bootstrapped"))
+  /** Run `body` under the Spark job label `desc` (guide §1.5). The
+   * label is thread-local, so a thunk on the write pool sets its own
+   * and profiles name exactly that write. */
+  private def labeled[A](sp: SparkSession, desc: String)(body: => A): A = {
+    sp.sparkContext.setJobDescription(desc)
+    try body finally sp.sparkContext.setJobDescription(null)
+  }
 
   /** First-start bootstrap: the seed corpus's DERIVED state — built
    * ONCE, before the stream starts; every trigger joins against
-   * these files. All writes are mode-overwrite and the completion
-   * marker lands last, so a crashed bootstrap simply re-runs. */
+   * these files. Every table and the caller's `axes` record (the
+   * `.axes` file) are staged under the hidden `.state.tmp`, and ONE
+   * rename publishes `state/`: a crashed bootstrap leaves no
+   * `state/`, so the next start bootstraps afresh. */
   def bootstrap(s: SparkSession, seed: DataFrame,
                 bench: Option[DataFrame],
-                benchMedia: Option[DataFrame]): Unit = {
+                benchMedia: Option[DataFrame], axes: String): Unit = {
+    val stage = Paths.get(base, ".state.tmp")
+    def at(sub: String): String = stage.resolve(sub).toString
     // r18: the bootstrap tables build in TWO CONCURRENT PHASES
     // (guide §2.6) — phase A writes everything derivable from the
     // caller's frames, phase B the tables that read phase-A parquet
-    // back (the lineage-cut discipline, see the sh/posts notes
-    // below). Same writes, same bytes, same idempotent overwrite
-    // semantics; only the serialization between independent jobs is
-    // gone. The marker still lands strictly last.
+    // back from the stage (the lineage-cut discipline, see the
+    // sh/posts notes below)
     val phaseA = Seq.newBuilder[() => Unit]
     val phaseB = Seq.newBuilder[() => Unit]
-    // job labels (guide §1.5), set INSIDE each thunk: the pool
-    // threads running them don't inherit the caller's thread-local
-    def boot(desc: String)(body: => Unit): () => Unit =
-      () => {
-        s.sparkContext.setJobDescription(desc)
-        try body finally s.sparkContext.setJobDescription(null)
-      }
-    phaseA += boot("adm:boot:seed") {
+    phaseA += (() => labeled(s, "adm:boot:seed") {
       seed.write.mode("overwrite").parquet(s"$refDir/seed")
-    }
-    phaseA += boot("adm:boot:art") {
+    })
+    phaseA += (() => labeled(s, "adm:boot:art") {
       Dedup.admissionArtifacts(seed, "doc_id", "text",
           k = 3, numPerms = NumPerms)
-        .write.mode("overwrite").parquet(s"$stateDir/seed/art")
-    }
+        .write.parquet(at("seed/art"))
+    })
     // the distinct-shingle table exists for the novelty leg only — the
     // plain dedup form (w12/l13) neither writes nor reads it. It
     // derives from the artifact PARQUET, not the artifact plan:
@@ -385,11 +375,11 @@ private[graft] final class AdmissionGateCore(
     // vs 0.5s on the seed) — the read-back cuts the lineage so the
     // filter lands on a materialized column
     if (fused)
-      phaseB += boot("adm:boot:sh") {
-        s.read.parquet(s"$stateDir/seed/art")
+      phaseB += (() => labeled(s, "adm:boot:sh") {
+        s.read.parquet(at("seed/art"))
           .select(explode(col("sset")).as("h")).distinct()
-          .write.mode("overwrite").parquet(s"$stateDir/seed/sh")
-      }
+          .write.parquet(at("seed/sh"))
+      })
     // the FROZEN benchmark posting table (w15's decontamination leg):
     // built once at bootstrap — benchmarks change rarely — and read by
     // every trigger; df-capped like d16, derived via the same artifact
@@ -397,38 +387,37 @@ private[graft] final class AdmissionGateCore(
     // `bench`-prefixed dirs are invisible to AdmissionState.parts
     // (names parse as neither seed, b<id> nor fold=<k>).
     bench.foreach { b =>
-      phaseA += boot("adm:boot:bench_art") {
+      phaseA += (() => labeled(s, "adm:boot:bench_art") {
         Dedup.admissionArtifacts(b, "doc_id", "text", k = 3,
             numPerms = NumPerms)
-          .write.mode("overwrite").parquet(s"$stateDir/bench/art")
-      }
-      phaseB += boot("adm:boot:bench_posts") {
-        val bsh = s.read.parquet(s"$stateDir/bench/art")
+          .write.parquet(at("bench/art"))
+      })
+      phaseB += (() => labeled(s, "adm:boot:bench_posts") {
+        val bsh = s.read.parquet(at("bench/art"))
           .select(col("doc_id").as("bench_id"),
             explode(col("sset")).as("h"))
         val bkeep = bsh.groupBy("h").agg(count(lit(1)).as("_df"))
           .filter(col("_df") <= DecontMaxDf).select("h")
-        bsh.join(bkeep, Seq("h"))
-          .write.mode("overwrite").parquet(s"$stateDir/bench/posts")
-      }
+        bsh.join(bkeep, Seq("h")).write.parquet(at("bench/posts"))
+      })
     }
     // the containment leg's posting state (w16): the seed's df-capped
     // per-doc postings, built once at bootstrap from the artifact
     // read-back (the same lineage-cut discipline as the sh table);
     // admitted batches append their raw postings per trigger
     if (containment)
-      phaseB += boot("adm:boot:cpost") {
-        Dedup.containmentPostings(
-            s.read.parquet(s"$stateDir/seed/art"), ContainMaxDf)
-          .write.mode("overwrite").parquet(s"$stateDir/seed/cpost")
-      }
+      phaseB += (() => labeled(s, "adm:boot:cpost") {
+        Dedup.containmentPostings(s.read.parquet(at("seed/art")),
+            ContainMaxDf)
+          .write.parquet(at("seed/cpost"))
+      })
     // the semantic leg's embedding state (w17): hashed-text vector +
     // LSH bucket per reference doc — one O(seed) codegen pass at
     // bootstrap, appended per admitted batch like every state table.
     // The center agg must complete before the bucketed emb write (the
     // bucket expression closes over it), so the leg is ONE thunk.
     if (semantic)
-      phaseA += boot("adm:boot:emb") {
+      phaseA += (() => labeled(s, "adm:boot:emb") {
         // one tokenize+embed pass, not two (r18): the center agg and
         // the bucketed emb write both read the seed's raw embeddings —
         // persist them for the thunk's lifetime
@@ -437,40 +426,40 @@ private[graft] final class AdmissionGateCore(
         try {
           center = Similarity.meanUnitVector(re, "vec", Dim)
           import s.implicits._
-          Seq(center).toDF("center")
-            .write.mode("overwrite").parquet(s"$stateDir/center")
+          Seq(center).toDF("center").write.parquet(at("center"))
           re.select(col("ref_id"), bucketOf(col("vec")).as("bucket"),
               col("vec"))
-            .write.mode("overwrite").parquet(s"$stateDir/seed/emb")
+            .write.parquet(at("seed/emb"))
         } finally { re.unpersist(blocking = false); () }
-      }
+      })
     // the MEDIA axes (m22/m24, and w18's full gate):
     // seed media fingerprints bootstrap once; the frozen
     // benchmark-media fingerprints freeze like the text posting
     // benchmark
     if (media) {
       val (si, sa) = mediaFingerprints(seed)
-      phaseA += boot("adm:boot:imgfp") {
-        si.write.mode("overwrite").parquet(s"$stateDir/seed/imgfp")
-      }
-      phaseA += boot("adm:boot:audfp") {
-        sa.write.mode("overwrite").parquet(s"$stateDir/seed/audfp")
-      }
+      phaseA += (() => labeled(s, "adm:boot:imgfp") {
+        si.write.parquet(at("seed/imgfp"))
+      })
+      phaseA += (() => labeled(s, "adm:boot:audfp") {
+        sa.write.parquet(at("seed/audfp"))
+      })
       benchMedia.foreach { bm =>
         val (bi, ba) = mediaFingerprints(bm)
-        phaseA += boot("adm:boot:benchm_imgfp") {
-          bi.write.mode("overwrite").parquet(s"$stateDir/benchm/imgfp")
-        }
-        phaseA += boot("adm:boot:benchm_audfp") {
-          ba.write.mode("overwrite").parquet(s"$stateDir/benchm/audfp")
-        }
+        phaseA += (() => labeled(s, "adm:boot:benchm_imgfp") {
+          bi.write.parquet(at("benchm/imgfp"))
+        })
+        phaseA += (() => labeled(s, "adm:boot:benchm_audfp") {
+          ba.write.parquet(at("benchm/audfp"))
+        })
       }
     }
-    inParallel(phaseA.result())
-    inParallel(phaseB.result())
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(stateDir, ".bootstrapped"), "1")
-    ()
+    StateDir.publish(stage, Paths.get(stateDir)) { t =>
+      Files.createDirectories(t)
+      Files.writeString(t.resolve(".axes"), axes)
+      inParallel(phaseA.result())
+      inParallel(phaseB.result())
+    }
   }
 
   /** Startup-with-existing-state (the sink lifecycle's resume path):
@@ -488,23 +477,28 @@ private[graft] final class AdmissionGateCore(
   }
 
   /** One micro-batch through the gate: verdict from state, admitted
-   * survivors' text to `ref/`, their artifacts appended to state,
-   * the maintenance fold once the unfolded tail exceeds the
-   * threshold. Replay-safe: verdict and appends land in per-batch
-   * overwrite dirs; the state read excludes ids at or above the
-   * current batch. */
+   * survivors' text to `ref/`, their artifacts staged under
+   * `.b<id>.tmp` and published as `b<id>` by one fenced rename, the
+   * maintenance fold once the unfolded tail exceeds the threshold.
+   * The state read excludes ids at or above the current batch. */
   def applyBatch(sp: SparkSession, epoch: Long,
                  batch: DataFrame, id: Long): Unit =
     CacheScope.withScope { implicit scope =>
       val b = scope.persist(batch).toDF()
-      graft.state.StateDir.fence(stateDir, epoch)
+      StateDir.fence(stateDir, epoch)
+      // a replayed id removes its own published state first: no later
+      // trigger or fold has read it, because its checkpoint never
+      // committed (a stale `.b<id>.tmp` goes at the publish)
+      val staged = Paths.get(stateDir, s".b$id.tmp")
+      val published = Paths.get(stateDir, s"b$id")
+      Fs.deleteRecursive(published)
       // self-driving state maintenance (the LogTable auto-compaction
       // move) runs at the HEAD of the trigger (r18): once the
       // unfolded tail exceeds the threshold, fold everything strictly
       // below this batch BEFORE computing its verdict. Fold-first
       // makes the whole trigger replay-deterministic: a crash
-      // anywhere in the trigger (fold published but appends not, or
-      // verdict written but checkpoint not committed) replays against
+      // anywhere in the trigger (fold published but `b<id>` not, or
+      // `b<id>` published but checkpoint not committed) replays against
       // exactly the state this attempt read — the fold is already
       // published and won't re-run (parts collapse below threshold),
       // so the verdict recomputes identically (pinned by the
@@ -537,12 +531,8 @@ private[graft] final class AdmissionGateCore(
           epoch = epoch,
           recapMaxDf = if (containment) Some(ContainMaxDf) else None,
           rebucket = if (semantic) Some(bucketOf _) else None)
-        if (failAfterFold)
-          throw new IllegalStateException(
-            "injected crash between fold rewrite and state append")
       }
-      // state = seed + every PRIOR batch's admitted artifacts —
-      // never this batch's own (replay safety, as with adm dirs);
+      // state = seed + every PRIOR batch's admitted artifacts;
       // resolves through AdmissionState so folded state (the
       // small-files maintenance verb) reads as one compacted dir —
       // re-resolved AFTER the fold above retired the dirs it covered
@@ -596,16 +586,10 @@ private[graft] final class AdmissionGateCore(
                   .unionByName(hits(bAud, ba, Seq("fp_hi", "fp_lo"))))
             })
       }
-      // job labels (guide §1.5): thread-local, so each pool thread's
-      // label names exactly its own append in profiles/the UI
-      def labeled[A](desc: String)(body: => A): A = {
-        sp.sparkContext.setJobDescription(desc)
-        try body finally sp.sparkContext.setJobDescription(null)
-      }
       val verdict = scope.persist(triggerVerdict(
         b, batchArt, stateArt, stateSh, fused, posts, cposts,
         semb, mediaFlags)).toDF()
-      labeled(s"adm:verdict b$id") {
+      labeled(sp, s"adm:verdict b$id") {
         verdict.write.mode("overwrite").parquet(s"$outDir/batch=$id")
       }
       val admIds = verdict.filter(col("admitted")).select("doc_id")
@@ -613,64 +597,64 @@ private[graft] final class AdmissionGateCore(
       // into the cache ONCE (count) so the concurrent writers below
       // all read it instead of racing to recompute the join.
       val admArt = scope.persist(batchArt.join(admIds, "doc_id")).toDF()
-      labeled(s"adm:admArt b$id")(admArt.count())
+      labeled(sp, s"adm:admArt b$id")(admArt.count())
       // r18: the per-batch product + state appends run CONCURRENTLY
       // (guide §2.6) — every input (verdict, b, batchArt, batchEmb,
       // media fingerprints) is already cached by the verdict pass,
-      // the destinations are disjoint per-batch overwrite dirs, and
-      // no append reads another's output. Crash exposure is
-      // unchanged: any subset of the dirs may exist after a crash
-      // (exactly as with sequential writes — the checkpoint hasn't
-      // committed), and the replay overwrites every one of them
-      // before any later batch or fold reads b<id>.
+      // the destinations are disjoint dirs, and no append reads
+      // another's output
+      def at(sub: String): String = staged.resolve(sub).toString
       val appends = Seq.newBuilder[() => Unit]
       // the admitted-corpus product (text) — WRITE-only from here on
-      appends += (() => labeled(s"adm:append:ref b$id") {
+      appends += (() => labeled(sp, s"adm:append:ref b$id") {
         b.join(admIds, "doc_id")
           .write.mode("overwrite").parquet(s"$refDir/adm$id")
       })
-      appends += (() => labeled(s"adm:append:art b$id") {
-        admArt.write.mode("overwrite").parquet(s"$stateDir/b$id/art")
+      appends += (() => labeled(sp, s"adm:append:art b$id") {
+        admArt.write.parquet(at("art"))
       })
       if (fused)
-        appends += (() => labeled(s"adm:append:sh b$id") {
+        appends += (() => labeled(sp, s"adm:append:sh b$id") {
           admArt.select(explode(col("sset")).as("h")).distinct()
-            .write.mode("overwrite").parquet(s"$stateDir/b$id/sh")
+            .write.parquet(at("sh"))
         })
       if (containment)
         // raw (uncapped) postings: the append is batch-bounded, so
         // per-trigger containment fanout stays O(batch*maxDf +
         // unfolded*batch); the maintenance fold above re-caps
         // globally ([[Dedup.maintenanceFold]])
-        appends += (() => labeled(s"adm:append:cpost b$id") {
+        appends += (() => labeled(sp, s"adm:append:cpost b$id") {
           admArt.select(col("doc_id").as("ref_id"), col("sset"))
             .select(col("ref_id"),
               explode(col("sset")).as("h"),
               size(col("sset")).cast("long").as("n_b"))
-            .write.mode("overwrite").parquet(s"$stateDir/b$id/cpost")
+            .write.parquet(at("cpost"))
         })
       // bucket derived FROM THE VECTOR at append time (not reused
       // from the verdict frame): if the fold above grew the plane
       // dial, this append must already bucket under the grown planes
       batchEmb.foreach(be =>
-        appends += (() => labeled(s"adm:append:emb b$id") {
+        appends += (() => labeled(sp, s"adm:append:emb b$id") {
           be.join(admIds, "doc_id")
             .select(col("doc_id").as("ref_id"),
               bucketOf(col("vec")).as("bucket"), col("vec"))
-            .write.mode("overwrite").parquet(s"$stateDir/b$id/emb")
+            .write.parquet(at("emb"))
         }))
       batchMedia.foreach { case (bImg, bAud) =>
-        appends += (() => labeled(s"adm:append:imgfp b$id") {
+        appends += (() => labeled(sp, s"adm:append:imgfp b$id") {
           bImg.join(admIds, bImg("media_id") === admIds("doc_id"),
               "left_semi")
-            .write.mode("overwrite").parquet(s"$stateDir/b$id/imgfp")
+            .write.parquet(at("imgfp"))
         })
-        appends += (() => labeled(s"adm:append:audfp b$id") {
+        appends += (() => labeled(sp, s"adm:append:audfp b$id") {
           bAud.join(admIds, bAud("media_id") === admIds("doc_id"),
               "left_semi")
-            .write.mode("overwrite").parquet(s"$stateDir/b$id/audfp")
+            .write.parquet(at("audfp"))
         })
       }
-      inParallel(appends.result())
+      StateDir.publish(staged, published,
+          () => StateDir.fence(stateDir, epoch)) { _ =>
+        inParallel(appends.result())
+      }
     }
 }

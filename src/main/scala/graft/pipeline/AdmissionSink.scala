@@ -56,15 +56,16 @@ import graft.ml.Similarity
  * frozen center derives from the seed at bootstrap and persists beside
  * the state, and a RESUMED gate rebuilds the live dials from state
  * alone ([[AdmissionGateCore.resumeDials]]). The
- * whole axis set + dial persist as `.axes` beside the bootstrap
- * marker, and a resume REFUSES a spec that contradicts them (r18 —
+ * whole axis set + dial persist as `state/.axes`, published with the
+ * bootstrap, and a resume REFUSES a spec that contradicts them (r18 —
  * see [[openGate]]).
  */
 object AdmissionSink {
 
-  /** The axis CONFIG persisted beside the gate state (dot-prefixed —
-   * invisible to [[graft.text.AdmissionState.parts]], like the
-   * `.bootstrapped` marker it lives next to). Everything the bootstrap
+  /** The axis CONFIG persisted in the gate state (dot-prefixed —
+   * invisible to [[graft.text.AdmissionState.parts]]; staged with the
+   * bootstrap's tables, so its presence means the bootstrap published).
+   * Everything the bootstrap
    * FROZE INTO the state layout: which sub-tables exist (the axis
    * flags), which corpora the frozen benchmark tables derive from (the
    * paths), and the semantic plane dial the bucketing started at. A
@@ -89,16 +90,14 @@ object AdmissionSink {
   private def axesFile(sink: SinkSpec) =
     Paths.get(sink.path, "state", ".axes")
 
-  private def writeAxes(sink: SinkSpec, a: Axes): Unit = {
+  private def axesJson(a: Axes): String = {
     val q = new com.fasterxml.jackson.databind.ObjectMapper()
     def s(v: String) = q.writeValueAsString(v)
-    java.nio.file.Files.createDirectories(axesFile(sink).getParent)
-    java.nio.file.Files.writeString(axesFile(sink),
-      s"""{"seedPath":${s(a.seedPath)},"fused":${a.fused},""" +
-        s""""containment":${a.containment},"semantic":${a.semantic},""" +
-        s""""media":${a.media},"benchPath":${s(a.benchPath)},""" +
-        s""""benchMediaPath":${s(a.benchMediaPath)},""" +
-        s""""semPlanes":${a.semPlanes}}""")
+    s"""{"seedPath":${s(a.seedPath)},"fused":${a.fused},""" +
+      s""""containment":${a.containment},"semantic":${a.semantic},""" +
+      s""""media":${a.media},"benchPath":${s(a.benchPath)},""" +
+      s""""benchMediaPath":${s(a.benchMediaPath)},""" +
+      s""""semPlanes":${a.semPlanes}}"""
   }
 
   private def readAxes(sink: SinkSpec): Option[Axes] =
@@ -132,13 +131,13 @@ object AdmissionSink {
    *  - **fresh root**: resolve the semantic plane dial (the spec's
    *    `semPlanes` key, else `scaledPlaneCount(seed rows)` — the same
    *    production dial the d14b/w17 operators use, so a spec with every
-   *    key defaulted gets the corpus-scaled dial, not a toy one),
-   *    persist the axis config, then bootstrap (idempotent — the
-   *    `.bootstrapped` marker lands last, so a crash mid-bootstrap
-   *    redoes the whole overwrite set, axes included);
-   *  - **bootstrapped root**: REFUSE a spec whose axes differ from the
-   *    persisted set — the state layout froze them at bootstrap (see
-   *    [[Axes]]) — unless the operator offset-resets (which wipes the
+   *    key defaulted gets the corpus-scaled dial, not a toy one), then
+   *    bootstrap: the state and its axis config publish as ONE
+   *    `state/` rename, so a crash mid-bootstrap leaves no `state/`
+   *    and the next start bootstraps afresh;
+   *  - **published root** (`state/.axes` exists): REFUSE a spec whose
+   *    axes differ from the persisted set — the state layout froze
+   *    them at bootstrap (see [[Axes]]) — unless the operator offset-resets (which wipes the
    *    gate root and re-bootstraps fresh). A spec omitting `semPlanes`
    *    resumes at the persisted dial; an explicit key must match it.
    *    Benchmark corpora freeze the same way — re-registering with a
@@ -155,16 +154,13 @@ object AdmissionSink {
           sink.semPlanes.getOrElse(persisted.semPlanes))
         if (spec != persisted)
           throw new IllegalStateException(
-            s"admission gate '${sink.path}' was bootstrapped with axis " +
+            s"admission gate '${sink.path}' was set up with axis " +
               s"config $persisted but the spec declares $spec — the " +
               "state layout froze the axis set at bootstrap; to change " +
               "axes, benchmark corpora or the semantic dial, reset the " +
               "connector's offsets (wipes the gate and re-bootstraps)")
         val core = coreAt(sink, persisted.semPlanes)
-        if (core.bootstrapped) core.resumeDials(spark)
-        else // crashed mid-bootstrap after the axes write: redo it all
-          core.bootstrap(spark, docs(sink.seedPath.get),
-            sink.benchPath.map(docs), sink.benchMediaPath.map(docs))
+        core.resumeDials(spark)
         core
       case None =>
         val planes = sink.semPlanes.getOrElse(
@@ -172,10 +168,10 @@ object AdmissionSink {
             AdmissionGate.scaledPlaneCount(
               spark.read.parquet(sink.seedPath.get).count())
           else 8)
-        writeAxes(sink, axesOf(sink, planes))
         val core = coreAt(sink, planes)
         core.bootstrap(spark, docs(sink.seedPath.get),
-          sink.benchPath.map(docs), sink.benchMediaPath.map(docs))
+          sink.benchPath.map(docs), sink.benchMediaPath.map(docs),
+          axesJson(axesOf(sink, planes)))
         core
     }
   }

@@ -365,8 +365,7 @@ final class Engine(spark: SparkSession, root: String) extends ConnectRuntime {
     val framed = toFrame(snap,
       if (spec.source.kind == "kafka") spec.source.copy(kind = "parquet")
       else spec.source)
-    val transformed = spec.transforms.map(_.toTransform)
-      .foldLeft(framed)((df, t) => t(df))
+    val transformed = sinkFrame(spec, framed)
     spec.sink.kind match {
       case "table" => KeyedFileSink.applyBatch(spark, spec.sink, transformed, None)
       case "jdbc" => graft.sinks.JdbcSink.applyChangelog(transformed, jdbcCfg(spec))
@@ -376,6 +375,12 @@ final class Engine(spark: SparkSession, root: String) extends ConnectRuntime {
     Files.createDirectories(marker.getParent)
     Files.writeString(marker, s"""{"snapshot":"initial","completed":true}""")
   }
+
+  /** The frame the Engine hands its sink: the spec's transform chain
+   * over the connect frame, minus the wire key the chain may read. */
+  private def sinkFrame(spec: PipelineSpec, framed: DataFrame): DataFrame =
+    spec.transforms.map(_.toTransform).foldLeft(framed)((df, t) => t(df))
+      .drop(Connect.WireKeyCol)
 
   /** Added to every micro-batch id of a keyed file sink, so a reset
    * checkpoint (ids restart at 0) never re-delivers a committed id. A
@@ -401,8 +406,7 @@ final class Engine(spark: SparkSession, root: String) extends ConnectRuntime {
     val src = readSource(spec.source)
     val framed = toFrame(src, spec.source,
       tolerant = spec.sink.errorsTolerance == "all")
-    val transformed = spec.transforms.map(_.toTransform)
-      .foldLeft(framed)((df, t) => t(df))
+    val transformed = sinkFrame(spec, framed)
     val sink = spec.sink
     def writer(mode: String) = {
       val w = transformed.writeStream
@@ -569,25 +573,10 @@ final class Engine(spark: SparkSession, root: String) extends ConnectRuntime {
       val keySchema = org.apache.spark.sql.types.StructType(
         s.keyFields.map(f => sc(f)))
       // A tombstone's key CANNOT come from the (null) value — decode the
-      // Kafka key itself. The envelope sniff strips {schema,payload};
-      // whether the remaining JSON is an OBJECT decides the path: object
-      // keys parse with the key schema, a bare scalar (from_json of a
-      // non-object returns a non-null all-null struct — useless) parses
-      // via a one-element JSON array so numbers AND quoted strings both
-      // land typed in the single key field. Live records still lift the
-      // key from the decoded value (authoritative post-SMT).
+      // Kafka key itself. Live records still lift the key from the
+      // decoded value (authoritative post-SMT). The raw key rides along
+      // as WireKeyCol for the key-shaping SMTs (Smt.valueToKey).
       val rawKey = col("key").cast("string")
-      val keyPayload = when(get_json_object(rawKey, "$.schema").isNotNull,
-        get_json_object(rawKey, "$.payload")).otherwise(rawKey)
-      val isObject = substring(ltrim(keyPayload), 1, 1) === "{"
-      val parsedKey = graft.codec.JsonEnvelope.decode(rawKey, keySchema)
-      val scalarKey =
-        if (s.keyFields.size == 1)
-          struct(element_at(
-            from_json(concat(lit("["), keyPayload, lit("]")),
-              org.apache.spark.sql.types.ArrayType(keySchema.fields.head.dataType)),
-            1).as(s.keyFields.head))
-        else lit(null).cast(keySchema)
       val rawVal = col("value").cast("string")
       // kafka keeps the envelope-SNIFFING decode (bare JSON values are
       // legal on a topic); an explicit wireFormat declares the schema'd
@@ -619,11 +608,12 @@ final class Engine(spark: SparkSession, root: String) extends ConnectRuntime {
         .select(Seq(
           when(col("_v").isNotNull,
             struct(s.keyFields.map(f => col(s"_v.$f")).toIndexedSeq: _*))
-            .otherwise(when(isObject, parsedKey).otherwise(scalarKey))
+            .otherwise(graft.codec.JsonEnvelope.decodeKey(rawKey, keySchema))
             .as(Connect.KeyCol),
           col("_v").as(Connect.ValueCol), // null kafka value stays a tombstone
           col("topic").as(Connect.TopicCol),
-          col("offset").cast("long").as(Connect.SeqCol)) ++ headerCols: _*)
+          col("offset").cast("long").as(Connect.SeqCol),
+          rawKey.as(Connect.WireKeyCol)) ++ headerCols: _*)
     }
     val seqCol = s.seqColumn.map(col).getOrElse {
       // rate's own monotonic `value` IS an arrival order — the layout-

@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.codec.JsonEnvelope
+import graft.model.Connect
+
 /**
  * The Single-Message-Transform (SMT) algebra: the reference's per-record
  * "expression language", re-expressed as pure `DataFrame => DataFrame`
@@ -36,8 +39,11 @@ object Smt {
    * onto one all-null key and deletes would route wrong. A tombstone
    * KEEPS the key it arrived with when its shape already matches the
    * requested one (the usual upstream: the frame's key was lifted from
-   * the same fields); otherwise its key becomes NULL — explicitly, not
-   * silently corrupted.
+   * the same fields); otherwise a wire frame's tombstone decodes its raw
+   * Kafka key ([[graft.model.Connect.WireKeyCol]]) as the requested key
+   * — a Debezium `op=d` envelope unwrapped to a tombstone and the Kafka
+   * tombstone after it both key the row they delete — and any other
+   * tombstone's key becomes NULL, explicitly, not silently corrupted.
    */
   def valueToKey(fields: Seq[String]): Transform = df => {
     val vt = df.schema("value").dataType.asInstanceOf[StructType]
@@ -61,18 +67,34 @@ object Smt {
     }
     val onTombstone =
       if (sameTypeNamed(df.schema("key").dataType, newType)) col("key")
-      else lit(null).cast(newType)
+      else wireKey(df, newType).getOrElse(lit(null).cast(newType))
     df.withColumn("key",
       when(col("value").isNotNull, built).otherwise(onTombstone))
   }
 
+  /** A wire frame's raw Kafka key decoded as `keyType`; None on a frame
+   * without one. */
+  private def wireKey(df: DataFrame, keyType: StructType): Option[Column] =
+    if (!df.columns.contains(Connect.WireKeyCol)) None
+    else Some(JsonEnvelope.decodeKey(col(Connect.WireKeyCol), keyType))
+
   /**
    * T2 `ExtractField$Key`: replace a struct key by one of its fields,
    * yielding a bare scalar key
-   * (`connector_configs/mysql_jdbc_om_source_smt.json:19-20`).
+   * (`connector_configs/mysql_jdbc_om_source_smt.json:19-20`). A wire
+   * frame's tombstone whose key field is NULL takes it from its raw
+   * Kafka key instead, as [[valueToKey]] does.
    */
-  def extractKeyField(field: String): Transform = df =>
-    df.withColumn("key", col(s"key.$field"))
+  def extractKeyField(field: String): Transform = df => {
+    val fromKey = col(s"key.$field")
+    val wire = df.schema("key").dataType match {
+      case kt: StructType if kt.fieldNames.contains(field) =>
+        wireKey(df, StructType(Seq(kt(field)))).map(_.getField(field))
+      case _ => None
+    }
+    df.withColumn("key", wire.fold(fromKey)(w =>
+      when(col("value").isNull, coalesce(fromKey, w)).otherwise(fromKey)))
+  }
 
   /** `ExtractField$Value` twin (same Connect SMT class, Value variant). */
   def extractValueField(field: String): Transform = df =>

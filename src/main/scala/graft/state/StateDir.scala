@@ -53,13 +53,15 @@ object StateDir {
       numberAfter(p.getFileName.toString, prefix).map(_ -> p)).sortBy(_._1)
 
   /** Staged publish: `stage` writes the new state at `staged` (a hidden
-   * sibling of `target` no reader resolves), `preCommit` — the caller's
-   * last-instant re-check — runs with it fully staged but still
-   * invisible, so a throw leaves the store unmoved, and ONE atomic
-   * rename publishes it. A file `target` is replaced atomically (POSIX
-   * rename); a directory `target` must not exist yet. */
+   * sibling of `target` no reader resolves; a crashed attempt's leftover
+   * there is removed first), `preCommit` — the caller's last-instant
+   * re-check — runs with it fully staged but still invisible, so a throw
+   * leaves the store unmoved, and ONE atomic rename publishes it. A file
+   * `target` is replaced atomically (POSIX rename); a directory `target`
+   * must not exist yet. */
   def publish(staged: Path, target: Path, preCommit: () => Unit = () => ())
              (stage: Path => Unit): Unit = {
+    graft.util.Fs.deleteRecursive(staged)
     stage(staged)
     preCommit()
     Files.move(staged, target, StandardCopyOption.ATOMIC_MOVE)

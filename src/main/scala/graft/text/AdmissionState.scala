@@ -8,27 +8,35 @@ import graft.state.StateDir
  * The admission-state STORAGE layout of the admission gate
  * ([[graft.pipeline.AdmissionGateCore]] — text artifacts, postings,
  * embeddings, media fingerprints): a `seed/` bootstrap dir plus one
- * `b<id>/` dir per admitted batch, each holding the same sub-tables
- * (`art`, `sh`, `imgfp`, ... — the gate's axis set decides). Growing one dir per trigger is correct but accumulates
- * small files: at production trigger counts every trigger's state read
- * pays a listing + a parquet footer per historical batch — the classic
- * small-files problem, the same one [[graft.ml.IndexStore]] folds away
- * for the vector delta log. [[fold]] is that compaction verb applied
- * here: seed + `b<=upTo` collapse into ONE `fold=<upTo>` dir (staged
- * dot-prefixed and published by the substrate's atomic rename — a
- * crash leaves an invisible `.tmp`), and [[parts]] resolves the newest
- * fold plus the unfolded tail.
+ * `b<id>/` dir per trigger, each holding the same sub-tables (`art`,
+ * `sh`, `imgfp`, ... — the gate's axis set decides), beside the frozen
+ * `bench/`, `benchm/` and `center` dirs and the `.axes` record.
+ *
+ * One commit protocol: every dir goes live by ONE
+ * [[graft.state.StateDir.publish]] of a hidden stage, so [[parts]]
+ * sees a dir whole or not at all.
+ *  - The bootstrap stages every table and `.axes` under `.state.tmp`
+ *    and publishes `state/` itself: `.axes` present means it published.
+ *  - Each trigger stages its sub-tables under `.b<id>.tmp` and
+ *    publishes `b<id>`, with the writer-epoch fence as the last-instant
+ *    re-check. A replayed id removes its own `b<id>` first; no later
+ *    trigger or fold has read it, because its checkpoint never
+ *    committed.
+ *  - [[fold]] compacts seed + `b<=upTo` into ONE `fold=<upTo>` dir
+ *    staged as `.fold=<upTo>.tmp`, the small-files fix
+ *    [[graft.ml.IndexStore]] applies to its vector delta log; [[parts]]
+ *    resolves the newest fold plus the unfolded tail.
  *
  * Concurrency contract: the [[graft.state.StateDir]] writer lease and
  * checkpoint bind, the same two mechanisms as the vector store:
  *
  *  1. **Epoch fencing** ([[acquireWriter]] / [[fold]] and
- *     `StateDir.fence` before a state append): the admission-writer
- *     role is the substrate's writer lease. A rescheduled job acquires
- *     the next epoch; the superseded job's next fold or state append
- *     refuses deterministically with the state unmoved — a stale job
- *     can no longer retire `b<id>` dirs a newer job's trigger is about
- *     to read.
+ *     `StateDir.fence` at a trigger's head and before its publish): the
+ *     admission-writer role is the substrate's writer lease. A
+ *     rescheduled job acquires the next epoch; the superseded job's
+ *     next fold or publish refuses deterministically with the state
+ *     unmoved — a stale job can no longer retire `b<id>` dirs a newer
+ *     job's trigger is about to read.
  *  2. **Checkpoint-identity bind** (`StateDir.bindCheckpoint`): the
  *     admission sink binds the stream checkpoint at registration; a
  *     later job pointing a FRESH or foreign checkpoint at the same
@@ -41,8 +49,9 @@ import graft.state.StateDir
  * frontier batch id (committed ids never replay, so no writer can
  * touch a folded dir; only the FRONTIER id can be rewritten by a
  * crash-replay). Readers racing a fold re-list on a miss, exactly
- * like a vacuum grace. The `writers/` dir is invisible to [[parts]]
- * (the name parses as neither `seed`, `b<id>` nor `fold=<k>`).
+ * like a vacuum grace. The `writers/` dir and the dot-prefixed stages
+ * are invisible to [[parts]] (the names parse as neither `seed`,
+ * `b<id>` nor `fold=<k>`).
  */
 object AdmissionState {
 
@@ -127,10 +136,9 @@ object AdmissionState {
     val inputs = parts(stateDir, upTo + 1)
     if (inputs.isEmpty) false
     else {
-      val tmp = Paths.get(stateDir, s".fold=$upTo.tmp")
-      graft.util.Fs.deleteRecursive(tmp)
       val read = (sub: String) => spark.read.parquet(inputs.map(_ + s"/$sub"): _*)
-      StateDir.publish(tmp, Paths.get(stateDir, s"fold=$upTo"),
+      StateDir.publish(Paths.get(stateDir, s".fold=$upTo.tmp"),
+          Paths.get(stateDir, s"fold=$upTo"),
           () => StateDir.fence(stateDir, epoch)) { t =>
         subs.foreach(sub => build(sub, read).write.parquet(t.resolve(sub).toString))
       }

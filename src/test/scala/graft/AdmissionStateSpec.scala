@@ -453,7 +453,7 @@ class AdmissionStateSpec extends SparkSpec {
       containment = true, semantic = true, media = false,
       hasBenchMedia = false, semPlanes0 = Similarity.hyperplanes(2, 64),
       foldThreshold = 1)
-    core.bootstrap(spark, seed, None, None)
+    core.bootstrap(spark, seed, None, None, axes = "{}")
     val epoch = graft.text.AdmissionState.acquireWriter(core.stateDir)
     waves.zipWithIndex.foreach { case (w, id) =>
       core.applyBatch(spark, epoch, w, id.toLong)
@@ -534,28 +534,32 @@ class AdmissionStateSpec extends SparkSpec {
     def run(base: String, crash: Boolean): Int = {
       graft.util.Fs.deleteRecursive(java.nio.file.Paths.get(base))
       var core = mkCore(base)
-      core.bootstrap(spark, seed, Some(bench), Some(bench))
+      core.bootstrap(spark, seed, Some(bench), Some(bench), axes = "{}")
       var epoch = graft.text.AdmissionState.acquireWriter(s"$base/state")
       var resumedDial = -1
       var fired = false
       (0 to 8).foreach { i =>
         val willFold =
           graft.text.AdmissionState.parts(s"$base/state", i).size > 6
+        core.applyBatch(spark, epoch, wave(i), i)
         if (crash && willFold && !fired) {
           fired = true
-          core.failAfterFold = true
-          intercept[IllegalStateException](
-            core.applyBatch(spark, epoch, wave(i), i))
+          // the crash state on disk: the trigger publishes its state
+          // once, so "fold published, trigger not" is the folding
+          // trigger with its b<i> and its products removed
+          Seq(s"state/b$i", s"out/batch=$i", s"ref/adm$i").foreach(d =>
+            graft.util.Fs.deleteRecursive(java.nio.file.Paths.get(base, d)))
           // the restart: a fresh core re-derives its dials from the
           // published fold, a fresh epoch supersedes the corpse, and
           // the uncommitted batch id replays
           core = mkCore(base)
-          assert(core.bootstrapped)
+          assert(java.nio.file.Files.exists(
+            java.nio.file.Paths.get(base, "state", ".axes")))
           core.resumeDials(spark)
           resumedDial = core.currentPlaneCount
           epoch = graft.text.AdmissionState.acquireWriter(s"$base/state")
+          core.applyBatch(spark, epoch, wave(i), i)
         }
-        core.applyBatch(spark, epoch, wave(i), i)
       }
       if (crash) {
         assert(fired, "fixture must reach the fold threshold")
@@ -584,6 +588,94 @@ class AdmissionStateSpec extends SparkSpec {
     assert(para.count() >= 2 &&
       para.filter(!col("semantic_dup")).count() == 0,
       "post-resume paraphrase plants must flag semantic_dup")
+  }
+
+  test("one publish per trigger: a crash before the publish, after it, and mid-bootstrap each resume to an uninterrupted run's out, ref and state") {
+    import java.nio.file.{Files, Path, Paths}
+    import graft.pipeline.{AdmissionSink, PipelineSpec}
+    import graft.text.AdmissionState
+    val root = "target/tmp/publish_crash"
+    graft.util.Fs.deleteRecursive(Paths.get(root))
+    docs.filter(col("doc_id") < 100).write.parquet(s"$root/seed")
+    docs.filter(col("doc_id") >= 300 && col("doc_id") < 320)
+      .write.parquet(s"$root/bench")
+    def wave(i: Int): DataFrame =
+      docs.filter(col("doc_id") >= 100 + 50 * i && col("doc_id") < 150 + 50 * i)
+    def sink(base: String) = PipelineSpec.fromJson(
+      s"""{"name":"pc","source":{"type":"parquet","path":"$root/in",
+         |  "schemaDdl":"doc_id BIGINT, text STRING",
+         |  "keyFields":["doc_id"],"seqColumn":"doc_id","topic":"c"},
+         |"transforms":[],
+         |"sink":{"type":"admission","path":"$base",
+         |  "seedPath":"$root/seed","fused":"true","containment":"true",
+         |  "semantic":"true","media":"true","benchPath":"$root/bench",
+         |  "benchMediaPath":"$root/bench","semPlanes":"2"}}""".stripMargin).sink
+    val subs = Seq("art", "sh", "cpost", "emb", "imgfp", "audfp")
+    def whole(state: String, id: Int): Boolean =
+      AdmissionState.parts(state, id + 1L).contains(s"$state/b$id") &&
+        subs.forall(sub => Files.exists(Paths.get(state, s"b$id", sub, "_SUCCESS")))
+    def run(base: String, crash: Boolean): Unit = {
+      val state = s"$base/state"
+      graft.util.Fs.deleteRecursive(Paths.get(base))
+      if (crash) {
+        // (c) crashed mid-bootstrap: a partial stage and no state/
+        val stage = Paths.get(base, ".state.tmp")
+        docs.limit(3).write.parquet(stage.resolve("seed/art").toString)
+        Files.writeString(stage.resolve(".axes"), "{}")
+        assert(AdmissionState.parts(state, Long.MaxValue).isEmpty)
+      }
+      var core = AdmissionSink.openGate(spark, sink(base))
+      assert(Files.exists(Paths.get(state, ".axes")) &&
+        !Files.exists(Paths.get(base, ".state.tmp")))
+      assert(AdmissionState.parts(state, Long.MaxValue) == Seq(s"$state/seed"))
+      var epoch = AdmissionState.acquireWriter(state)
+      // the restart: openGate resumes, a fresh epoch supersedes the
+      // corpse, and the uncommitted id replays
+      def replay(i: Int): Unit = {
+        core = AdmissionSink.openGate(spark, sink(base))
+        epoch = AdmissionState.acquireWriter(state)
+        core.applyBatch(spark, epoch, wave(i), i)
+      }
+      (0 to 3).foreach { i =>
+        core.applyBatch(spark, epoch, wave(i), i)
+        if (crash && i == 1) {
+          // (a) crashed before the publish: b1 staged (one sub-table
+          // still unwritten), not published
+          Files.move(Paths.get(state, "b1"), Paths.get(state, ".b1.tmp"))
+          graft.util.Fs.deleteRecursive(Paths.get(state, ".b1.tmp", "emb"))
+          assert(!AdmissionState.parts(state, 2L).contains(s"$state/b1"))
+          replay(1)
+        }
+        if (crash && i == 2) {
+          // (b) b2 published, its checkpoint never committed
+          assert(whole(state, 2))
+          replay(2)
+        }
+        assert(whole(state, i) && !Files.exists(Paths.get(state, s".b$i.tmp")))
+      }
+    }
+    def tables(dir: Path): Seq[Path] =
+      if (Files.exists(dir.resolve("_SUCCESS"))) Seq(dir)
+      else StateDir.children(dir).filter(Files.isDirectory(_))
+        .filterNot(p => p.getFileName.toString == "writers")
+        .flatMap(tables)
+    // rows as JSON (binary digests render by value); `sset` is a
+    // shingle SET, so its array order is not part of the state
+    def rows(t: Path): Seq[String] = {
+      val df = spark.read.parquet(t.toString)
+      (if (df.columns.contains("sset"))
+         df.withColumn("sset", array_sort(col("sset"))) else df)
+        .toJSON.collect().sorted.toSeq
+    }
+    def snap(base: String): Map[String, Seq[String]] =
+      tables(Paths.get(base)).map(t =>
+        Paths.get(base).relativize(t).toString -> rows(t)).toMap
+    run(s"$root/ref", crash = false)
+    run(s"$root/crash", crash = true)
+    val (a, b) = (snap(s"$root/ref"), snap(s"$root/crash"))
+    assert(a.keySet.count(_.matches("state/b\\d+/.*")) == 4 * subs.size &&
+      a.keySet.exists(_.startsWith("out/")) && a.keySet.exists(_.startsWith("ref/")))
+    assert(a == b, s"resumed tables differ: ${a.keySet.filter(k => !b.get(k).contains(a(k)))}")
   }
 
   test("inParallel awaits EVERY write before re-throwing the first failure (no in-flight sibling after return)") {

@@ -255,6 +255,55 @@ class EngineSpec extends SparkSpec {
     assert(e2.getMessage.contains("positive"))
   }
 
+  test("envelope deletes: an op=d envelope and its kafka tombstone delete the key through the logtable and table sinks") {
+    import spark.implicits._
+    import org.apache.spark.sql.types.StructType
+    import graft.codec.JsonEnvelope
+    import graft.model.Connect
+    // the perfbench/README.md repro: keyFields ["after"], the Debezium
+    // unwrap, then valueToKey(k); inserts k=1,2, then an op=d envelope
+    // for k=1 and the Kafka tombstone keyed {"k":1}
+    val base = Files.createTempDirectory("envdel").toString
+    val row = "STRUCT<k: BIGINT, v: STRING>"
+    val ddl = s"before $row, after $row, op STRING"
+    val schema = JsonEnvelope.connectSchemaJson(StructType.fromDDL(ddl))
+    def envelope(before: String, after: String, op: String) =
+      s"""{"schema":$schema,"payload":{"before":$before,"after":$after,"op":"$op"}}"""
+    Seq(
+      ("""{"k":1}""", envelope("null", """{"k":1,"v":"a"}""", "c"), 0L),
+      ("""{"k":2}""", envelope("null", """{"k":2,"v":"b"}""", "c"), 1L),
+      ("""{"k":1}""", envelope("""{"k":1,"v":"a"}""", "null", "d"), 2L),
+      ("""{"k":1}""", null, 3L))
+      .toDF("key", "value", "offset")
+      .select(col("key"), col("value"), lit("t").as("topic"), col("offset"))
+      .coalesce(1) // one file, one batch: part files stream in mtime order
+      .write.parquet(s"$base/in")
+    val engine = new Engine(spark, s"$base/engine")
+    def run(sink: String): Unit = {
+      val q = engine.registerJson(
+        s"""{"name":"envdel_$sink",
+           |"source":{"type":"parquet","path":"$base/in","schemaDdl":"$ddl",
+           |  "keyFields":["after"],"seqColumn":"offset","topic":"t",
+           |  "wireFormat":"json_envelope"},
+           |"transforms":[{"type":"extractNewRecordState"},
+           |  {"type":"valueToKey","fields":["k"]}],
+           |"sink":{"type":"$sink","path":"$base/$sink","keys":["k"]}}""".stripMargin)
+      q.processAllAvailable()
+      q.stop()
+    }
+    Seq("logtable", "table").foreach { sink =>
+      run(sink)
+      val live = LogTable.read(spark, s"$base/$sink", Seq("k"))
+        .select("k", "v").as[(Long, String)].collect().toSeq
+      assert(live == Seq((2L, "b")), s"$sink sink: k=1 must be gone, k=2 live")
+    }
+    // the wire key is dropped before the sink: an append sink's columns
+    // are the connect frame's
+    run("append")
+    assert(spark.read.parquet(s"$base/append").columns.toSet ==
+      Set(Connect.KeyCol, Connect.ValueCol, Connect.TopicCol, Connect.SeqCol))
+  }
+
   test("keyed sinks refuse empty keys; kafka into a keyed sink refuses empty keyFields") {
     val base = Files.createTempDirectory("emptykeys").toString
     val engine = new Engine(spark, s"$base/engine")
@@ -539,7 +588,7 @@ class EngineSpec extends SparkSpec {
     // fall back to the bootstrap floor
     val p = graft.pipeline.PipelineSpec.fromJson(spec)
     val resumed = graft.pipeline.AdmissionSink.openGate(spark, p.sink)
-    assert(resumed.bootstrapped)
+    assert(Files.exists(Paths.get(base, "gate", "state", ".axes")))
     val foldDir = graft.text.AdmissionState
       .newestFold(s"$base/gate/state")
     assert(foldDir.nonEmpty, "batch 7 must have folded seed+b0..b6")

@@ -47,6 +47,25 @@ class SmtSpec extends SparkSpec {
       .as[Int].collect().toSet == Set(10))
   }
 
+  test("a wire frame's tombstone keys from its raw Kafka key in valueToKey and extractKeyField") {
+    // the name-mismatched tombstone above on a wire frame: the raw key
+    // (a schema'd object here, a bare scalar below) decodes as the
+    // requested key instead of nulling it
+    val wire = frame()
+      .withColumn("value", when(col("key.id") === 2, lit(null))
+        .otherwise(struct(col("value.id"), col("value.name"),
+          (col("value.id") * 10).as("num"))))
+      .withColumn(Connect.WireKeyCol, when(col("key.id") === 2,
+        lit("""{"schema":{"type":"struct"},"payload":{"num":20}}""")))
+    val keyed = Smt.valueToKey(Seq("num"))(wire)
+    assert(keyed.select("key.num").as[Int].collect().toSet == Set(10, 20))
+    val nullKeyed = keyed
+      .withColumn("key", when(col("value").isNotNull, col("key")))
+      .withColumn(Connect.WireKeyCol, when(col("value").isNull, lit("20")))
+    assert(Smt.extractKeyField("num")(nullKeyed).select("key").as[Int]
+      .collect().toSet == Set(10, 20))
+  }
+
   test("T2 extractKeyField flattens the key to a scalar") {
     val out = Smt.extractKeyField("id")(frame())
     assert(out.schema("key").dataType == IntegerType)
