@@ -647,35 +647,12 @@ object ConnectQueries {
       wave(orders.filter(col("o_orderkey") % 100 === 0)
         .withColumn("o_totalprice", col("o_totalprice") + 10), "u", 2L)
         .unionByName(wave(orders.filter(col("o_orderkey") % 97 === 0), "d", 3L)))
-    // stage the two batches as CONCURRENT Spark jobs (independent
-    // writes; the scheduler interleaves their tasks across the cores a
-    // single coalesce(1) write would leave idle)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    // each wave stages as FOUR parquet parts (parallel write, parallel
-    // per-batch scan); same-mtime parts group into one micro-batch via
-    // maxFilesPerTrigger=4
-    val staged = waves.zipWithIndex.map { case (w, i) => Future {
-      val stage = s"$base/stage$i"
-      w.coalesce(4).write.mode("overwrite").parquet(stage)
-      val parts = graft.state.StateDir.children(Paths.get(stage))
-        .filter(_.toString.endsWith(".parquet"))
-      require(parts.nonEmpty, s"no parquet parts in $stage")
-      (i, parts)
-    }}
-    val t0 = 1000000000000L
-    Await.result(Future.sequence(staged), Duration.Inf).foreach { case (i, parts) =>
-      parts.zipWithIndex.foreach { case (part, j) =>
-        val dst = Paths.get(in, f"wave$i%02d-$j%d.parquet")
-        Files.move(part, dst)
-        // ascending mtimes PER WAVE: the file source processes
-        // oldest-first, so the change batch lands after the backfill
-        // (the offset order a Kafka topic would provide)
-        Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(t0 + i * 60000L))
-      }
-    }
+    // the two batches are waves 0 and 1, one micro-batch each: the
+    // change batch lands after the backfill (the offset order a Kafka
+    // topic would provide)
+    val stage = graft.Tables.stageWaves(s"k7b_${graft.Tables.dirTag(dir)}",
+      waves)
+    (0 to 1).foreach(stage(_, Seq(Paths.get(in))))
 
     // micro-batches are bounded (≤ the wave size): run the stream on a
     // session sized for them instead of the corpus-scale 32 partitions
@@ -688,7 +665,7 @@ object ConnectQueries {
         kind = "parquet", path = in,
         schemaDdl = Some(waves.head.schema.toDDL),
         keyFields = Seq("o_orderkey"), seqColumn = Some("seq"),
-        topic = "om.orders", maxFilesPerTrigger = 4),
+        topic = "om.orders", maxFilesPerTrigger = 1),
       transforms = Seq(graft.pipeline.TransformSpec(
         "extractNewRecordState", Map.empty, Seq.empty)),
       sink = graft.pipeline.SinkSpec("logtable", state, Seq("o_orderkey")),
@@ -744,14 +721,18 @@ object ConnectQueries {
     rows(nation, "snap", 0L).withColumn("seq", lit(0L))
       .coalesce(1).write.mode("overwrite").parquet(s"$base/snapshot")
 
-    // Tables.stageFile: dot-temp + mtime-before-publish + atomic move,
-    // so waves staged while the stream RUNS can never be read torn
-    def stage(df: DataFrame, i: Int): Unit =
-      graft.Tables.stageFileCached(
-        s"s7b_${graft.Tables.dirTag(dir)}_$i", df,
-        Paths.get(in, f"wave$i%02d.parquet"), 1000000000000L + i * 60000L)
-    // wave 1 — changes that arrive while the first worker is alive
-    stage(rows(nation.filter(col("n_nationkey") % 3 === 0), "w1", 100L), 0)
+    // wave 0 — changes that arrive while the first worker is alive;
+    // wave 1 — updates + the DELETE of key 0, staged while it is down
+    // (Tables.stageWaves publishes atomically: a wave staged while the
+    // stream RUNS can never be read torn)
+    val stage = graft.Tables.stageWaves(s"s7b_${graft.Tables.dirTag(dir)}",
+      Seq(rows(nation.filter(col("n_nationkey") % 3 === 0), "w1", 100L),
+        rows(nation.filter(col("n_nationkey") % 3 === 1), "w2", 200L)
+          .unionByName(nation.filter(col("n_nationkey") === 0)
+            .select(col("n_nationkey").cast("int").as("id"),
+              lit(null).cast("string").as("v"), lit(299L).as("seq"),
+              lit("true").as("__deleted")))))
+    stage(0, Seq(Paths.get(in)))
 
     val spec = graft.pipeline.PipelineSpec(
       name = "s7b",
@@ -772,12 +753,8 @@ object ConnectQueries {
     scoped.streams.active.foreach(_.processAllAvailable())
     engine1.pause("s7b")
 
-    // while the worker is down: wave 2 — updates + the DELETE of key 0
-    stage(rows(nation.filter(col("n_nationkey") % 3 === 1), "w2", 200L)
-      .unionByName(nation.filter(col("n_nationkey") === 0)
-        .select(col("n_nationkey").cast("int").as("id"),
-          lit(null).cast("string").as("v"), lit(299L).as("seq"),
-          lit("true").as("__deleted"))), 1)
+    // while the worker is down: the second wave
+    stage(1, Seq(Paths.get(in)))
 
     // a NEW worker on the same checkpoint root: must skip the snapshot
     // (marker present) and resume the stream from committed offsets
@@ -831,11 +808,9 @@ object ConnectQueries {
       .select(col("n_nationkey").cast("int").as("id"),
         col("n_name").as("v"), col("n_nationkey").cast("long").as("seq"),
         lit("false").as("__deleted"))
-    (0 until 6).foreach { i =>
-      graft.Tables.stageFileCached(s"l5_${graft.Tables.dirTag(dir)}_$i",
-        waves.filter(col("id") % 6 === i),
-        Paths.get(in, f"wave$i%02d.parquet"), 1000000000000L + i * 60000L)
-    }
+    val stage = graft.Tables.stageWaves(s"l5_${graft.Tables.dirTag(dir)}",
+      (0 until 6).map(i => waves.filter(col("id") % 6 === i)))
+    (0 until 6).foreach(stage(_, Seq(Paths.get(in))))
     val scoped = s.newSession()
     scoped.conf.set("spark.sql.shuffle.partitions", "4")
     val engine = new graft.pipeline.Engine(scoped, s"$base/engine")
@@ -896,12 +871,9 @@ object ConnectQueries {
       .unionByName(nation.filter(col("n_nationkey") % 7 === 3)
         .withColumn("__deleted", lit("true")).withColumn("seq", lit(2L)))
     // oldest-first source order per wave; race-free vs the live stream
-    def stage(df: DataFrame, i: Int): Unit =
-      graft.Tables.stageFileCached(
-        s"l9_${graft.Tables.dirTag(dir)}_$i", df,
-        Paths.get(in, f"wave$i%02d.parquet"),
-        1000000000000L + i * 60000L)
-    stage(w1, 0) // only the snapshot wave exists at register time
+    val stage = graft.Tables.stageWaves(s"l9_${graft.Tables.dirTag(dir)}",
+      Seq(w1, w2))
+    stage(0, Seq(Paths.get(in))) // only the snapshot wave exists at register time
 
     val scoped = s.newSession()
     scoped.conf.set("spark.sql.shuffle.partitions", "4")
@@ -930,7 +902,7 @@ object ConnectQueries {
       val stRunning = state_()
       rest.call("PUT", "/connectors/l9/pause")
       val stPaused = state_()
-      stage(w2, 1) // backlog lands while paused
+      stage(1, Seq(Paths.get(in))) // backlog lands while paused
       rest.call("PUT", "/connectors/l9/resume")
       scoped.streams.active.foreach(_.processAllAvailable()) // change wave
       val stResumed = state_()
@@ -996,12 +968,9 @@ object ConnectQueries {
       .withColumn("n_name", lit("evolved via REST"))
       .withColumn("n_priority", (col("n_nationkey") % 3).cast("int"))
       .withColumn("__deleted", lit("false")).withColumn("seq", lit(1L))
-    def stage(df: DataFrame, i: Int): Unit =
-      graft.Tables.stageFileCached(
-        s"l10_${graft.Tables.dirTag(dir)}_$i", df,
-        Paths.get(in, f"wave$i%02d.parquet"),
-        1000000000000L + i * 60000L)
-    stage(w1, 0) // only the v1 wave exists at register time
+    val stage = graft.Tables.stageWaves(s"l10_${graft.Tables.dirTag(dir)}",
+      Seq(w1, w2))
+    stage(0, Seq(Paths.get(in))) // only the v1 wave exists at register time
 
     val scoped = s.newSession()
     scoped.conf.set("spark.sql.shuffle.partitions", "4")
@@ -1057,7 +1026,7 @@ object ConnectQueries {
         Some(spec(w2.schema.toDDL,
           """{"type":"insertField","field":"n_src",
             |"value":"upper(value.n_name)"}""".stripMargin)))._1
-      stage(w2, 1)
+      stage(1, Seq(Paths.get(in)))
       scoped.streams.active.foreach(_.processAllAvailable())
       rest.call("DELETE", "/connectors/l10")
 
@@ -1138,7 +1107,8 @@ object ConnectQueries {
     val base = s"target/tmp/l12_${new java.io.File(dir).getName}"
     graft.util.Fs.deleteRecursive(Paths.get(base))
     val names = Seq("l12a", "l12b")
-    names.foreach(n => Files.createDirectories(Paths.get(s"$base/in_$n")))
+    val ins = names.map(n => Paths.get(s"$base/in_$n"))
+    ins.foreach(Files.createDirectories(_))
 
     val nation = T(s, dir, "nation")
     val w0 = nation
@@ -1149,15 +1119,10 @@ object ConnectQueries {
       .unionByName(nation.filter(col("n_nationkey") % 7 === 4)
         .withColumn("__deleted", lit("true")).withColumn("seq", lit(2L)))
     // one staged wave fans to every connector's input dir, race-free
-    // vs the live streams (Tables.stageFile publishes atomically)
-    def stage(df: DataFrame, wave: Int): Unit = {
-      val src = graft.Tables.stagedFile(
-        s"l12_${graft.Tables.dirTag(dir)}_$wave", df)
-      names.foreach(n => graft.Tables.stageCopy(src,
-        Paths.get(s"$base/in_$n", f"wave$wave%02d.parquet"),
-        1000000000000L + wave * 60000L))
-    }
-    stage(w0, 0)
+    // vs the live streams (Tables.stageWaves publishes atomically)
+    val stage = graft.Tables.stageWaves(s"l12_${graft.Tables.dirTag(dir)}",
+      Seq(w0, w1))
+    stage(0, ins)
 
     val scoped = s.newSession()
     scoped.conf.set("spark.sql.shuffle.partitions", "4")
@@ -1191,7 +1156,7 @@ object ConnectQueries {
       cluster.sweepExpired(now = 30000L, timeoutMs = 10000L).mkString(",")
     val assignAfterEvict = assigns()
 
-    stage(w1, 1) // the change wave lands on the post-eviction placement
+    stage(1, ins) // the change wave lands on the post-eviction placement
     scoped.streams.active.foreach(_.processAllAvailable())
     val committedAfter = rt1.latestBatchId("l12a")
     val resumed = committedBefore.nonEmpty &&
@@ -1215,7 +1180,8 @@ object ConnectQueries {
     val base = s"target/tmp/l11_${new java.io.File(dir).getName}"
     graft.util.Fs.deleteRecursive(Paths.get(base))
     val names = Seq("l11a", "l11b", "l11c")
-    names.foreach(n => Files.createDirectories(Paths.get(s"$base/in_$n")))
+    val ins = names.map(n => Paths.get(s"$base/in_$n"))
+    ins.foreach(Files.createDirectories(_))
 
     val nation = T(s, dir, "nation")
     val w0 = nation
@@ -1229,15 +1195,10 @@ object ConnectQueries {
       .withColumn("n_name", lit("final wave"))
       .withColumn("__deleted", lit("false")).withColumn("seq", lit(3L))
     // one staged wave fans to every connector's input dir, race-free
-    // vs the live streams (Tables.stageFile publishes atomically)
-    def stage(df: DataFrame, wave: Int): Unit = {
-      val src = graft.Tables.stagedFile(
-        s"l11_${graft.Tables.dirTag(dir)}_$wave", df)
-      names.foreach(n => graft.Tables.stageCopy(src,
-        Paths.get(s"$base/in_$n", f"wave$wave%02d.parquet"),
-        1000000000000L + wave * 60000L))
-    }
-    stage(w0, 0)
+    // vs the live streams (Tables.stageWaves publishes atomically)
+    val stage = graft.Tables.stageWaves(s"l11_${graft.Tables.dirTag(dir)}",
+      Seq(w0, w1, w2))
+    stage(0, ins)
 
     val scoped = s.newSession()
     scoped.conf.set("spark.sql.shuffle.partitions", "4")
@@ -1279,11 +1240,11 @@ object ConnectQueries {
       serverB.stop() // the worker leaves, its REST surface with it
       cluster.removeWorker("w1") // b orphans onto w0
       val assignAfterLeave = assigns()
-      stage(w1, 1) // the change wave lands on the post-leave placement
+      stage(1, ins) // the change wave lands on the post-leave placement
       scoped.streams.active.foreach(_.processAllAvailable())
       val rtC = cluster.addWorker("w2", now = 0L) // revokes only w0's excess: c moves
       val assignAfterJoin = assigns()
-      stage(w2, 2)
+      stage(2, ins)
       scoped.streams.active.foreach(_.processAllAvailable())
       val serverC = new graft.pipeline.ConnectServer(rtC,
         sharedConfigs = Some(sharedConfigs))
@@ -1380,30 +1341,13 @@ object ConnectQueries {
     }
     def waveOf(op: String): DataFrame =
       tables.map(rows(_, op)).reduce(_.unionByName(_))
-    // stage the waves as CONCURRENT jobs (independent writes — the k7b
-    // staging pattern), then pin ascending mtimes: oldest-first gives
-    // one wave per micro-batch
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
+    // one wave per micro-batch: the tombstones land after the DML batch
     val waves = Seq(
       waveOf("c").unionByName(waveOf("u")), // one DML batch: u beats c by seq
-      waveOf("d")) // tombstones land as their own later micro-batch
-    val staged = waves.zipWithIndex.map { case (w, idx) => Future {
-      val stage = s"$base/stage$idx"
-      w.coalesce(1).write.mode("overwrite").parquet(stage)
-      val part = graft.state.StateDir.children(Paths.get(stage))
-        .find(_.toString.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no parquet part in $stage"))
-      (idx, part)
-    }}
-    val t0 = 1000000000000L
-    Await.result(Future.sequence(staged), Duration.Inf).foreach { case (idx, part) =>
-      val dst = Paths.get(in, f"wave$idx%02d.parquet")
-      Files.move(part, dst)
-      Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(t0 + idx * 60000L))
-    }
+      waveOf("d"))
+    val stage = graft.Tables.stageWaves(s"k14_${graft.Tables.dirTag(dir)}",
+      waves)
+    (0 to 1).foreach(stage(_, Seq(Paths.get(in))))
 
     // micro-batches are ≤25k rows: a 32-partition shuffle per batch is
     // pure task overhead, so the STREAM runs on a scoped session sized

@@ -874,37 +874,6 @@ object LlmQueries {
     (existing, Seq(w0, w1, w2))
   }
 
-  /** Per-JVM staged-wave cache — the memoFrame discipline applied to
-   * the admission gates' INPUT staging (r18): every invocation used to
-   * re-derive its wave frames (multi-branch unions/joins over the docs
-   * table, collapsed to ONE task each by the single-file staging
-   * write's coalesce(1) — CollapseRepartition removes the Tpar
-   * repartition under it) and re-stage them; now the first invocation
-   * materializes each wave once under `target/tmp/stage_cache/<key>`
-   * and every later staging — bench reps, and the backlog wave a
-   * paused lifecycle gate stages mid-run — is a byte copy + mtime
-   * stamp ([[graft.Tables.stageCopy]], same atomic-publish
-   * discipline). JVM-scoped like every memo here: a fresh
-   * bench/oracle invocation always re-derives from the parquet
-   * inputs. The one-time build stages the independent waves
-   * concurrently (guide §2.6). */
-  private val stagedWaveCache = scala.collection.concurrent.TrieMap
-    .empty[String, Seq[java.nio.file.Path]]
-  private[graft] def stagedWaveFiles(key: String,
-      waves: => Seq[DataFrame]): Seq[java.nio.file.Path] =
-    stagedWaveCache.getOrElseUpdate(key, {
-      val cache = java.nio.file.Paths.get(s"target/tmp/stage_cache/$key")
-      graft.util.Fs.deleteRecursive(cache)
-      java.nio.file.Files.createDirectories(cache)
-      val ws = waves
-      val dsts = ws.indices
-        .map(i => cache.resolve(f"wave$i%02d.parquet"))
-      graft.pipeline.AdmissionGate.inParallel(ws.zip(dsts).map { case (w, p) =>
-        () => graft.Tables.stageFile(w, p, 0L)
-      })
-      dsts
-    })
-
   // ---- admission gates: one lifecycle, the Engine's admission sink ----
 
   /** An admission gate's working root for one data dir. */
@@ -913,9 +882,10 @@ object LlmQueries {
 
   /** Lay out an admission gate's fixture under `base` (wiped first):
    * the seed corpus at `seed/`, the benchmark corpus (if any) at
-   * `bench/`, and the waves staged once per JVM ([[stagedWaveFiles]]).
-   * Returns `stage(i)`, which lands wave i in the source dir `in/` as
-   * a minute-spaced file (one trigger per wave at maxFilesPerTrigger=1). */
+   * `bench/`, and the waves staged once per JVM
+   * ([[graft.Tables.stageWaves]]). Returns `stage(i)`, which lands wave
+   * i in the source dir `in/` (one trigger per wave at
+   * maxFilesPerTrigger=1). */
   private[graft] def stageGateFixture(base: String, seed: DataFrame,
       bench: Option[DataFrame], waves: Seq[DataFrame]): Int => Unit = {
     import java.nio.file.{Files, Paths}
@@ -923,10 +893,8 @@ object LlmQueries {
     Files.createDirectories(Paths.get(base, "in"))
     seed.write.parquet(s"$base/seed")
     bench.foreach(_.write.parquet(s"$base/bench"))
-    val staged = stagedWaveFiles(graft.Tables.dirTag(base), waves)
-    i => graft.Tables.stageCopy(staged(i),
-      Paths.get(base, "in", f"wave$i%02d.parquet"),
-      1000000000000L + i * 60000L)
+    val stage = graft.Tables.stageWaves(graft.Tables.dirTag(base), waves)
+    i => stage(i, Seq(Paths.get(base, "in")))
   }
 
   /** The `{"type":"admission"}` pipeline spec over a
@@ -1680,27 +1648,28 @@ object LlmQueries {
   }
 
   /** Shared harness for the streaming index gates (e16 admission, w10
-   * serving): wipe `base`, stage `waves` pmod-partitioned slices of
-   * `df` as minute-spaced files under `base/in`, and return the scoped
-   * file-source stream over them (`maxFilesPerTrigger=1`, fresh
-   * session, small shuffle) — one staging protocol, so a fix to the
-   * mtime stamping or wave partitioning lands in both gates. */
-  private def stageWaveStream(s: SparkSession, base: String, df: DataFrame,
-                              waves: Int = 3): DataFrame = {
+   * serving): wipe `base`, stage three pmod-partitioned slices of `df`
+   * as waves under `base/in`, and return the [[waveStream]] over them. */
+  private def stageWaveStream(s: SparkSession, base: String,
+                              df: DataFrame): DataFrame = {
     import java.nio.file.{Files, Paths}
     graft.util.Fs.deleteRecursive(Paths.get(base))
     val in = Paths.get(base, "in")
     Files.createDirectories(in)
-    stagedWaveFiles(s"sw_${graft.Tables.dirTag(base)}",
-        (0 until waves).map(i =>
-          df.filter(pmod(col("id"), lit(waves)) === i)))
-      .zipWithIndex.foreach { case (src, i) =>
-        graft.Tables.stageCopy(src, in.resolve(f"wave$i%02d.parquet"),
-          1000000000000L + i * 60000L)
-      }
+    val stage = graft.Tables.stageWaves(s"sw_${graft.Tables.dirTag(base)}",
+      (0 until 3).map(i => df.filter(pmod(col("id"), lit(3)) === i)))
+    (0 until 3).foreach(stage(_, Seq(in)))
+    waveStream(s, in, df.schema)
+  }
+
+  /** The file-source stream over a staged wave dir: one wave per
+   * trigger (`maxFilesPerTrigger=1`) on a fresh session at a small
+   * shuffle. */
+  private def waveStream(s: SparkSession, in: java.nio.file.Path,
+                         schema: StructType): DataFrame = {
     val scoped = s.newSession()
     scoped.conf.set("spark.sql.shuffle.partitions", "4")
-    scoped.readStream.schema(df.schema)
+    scoped.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(in.toString)
   }
 
@@ -2324,19 +2293,25 @@ object LlmQueries {
    * the fold/admission interleaving is the real one, not a staged
    * simplification. */
   def streamServeFromStore(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Paths
+    import java.nio.file.{Files, Paths}
     val books = trainedBooksBase(s, dir)
     val cents = trainedCentsBase(s, dir)
     val emb = embFrame(s, dir)
     val base = s"target/tmp/w11_${new java.io.File(dir).getName}"
-    // the staging helper wipes only its own subdir — wipe the whole
-    // gate root so the index/checkpoints from a previous run never
-    // collide with writeBase (the gate must be re-runnable)
+    // wipe the whole gate root so the index/checkpoints from a
+    // previous run never collide with writeBase (the gate must be
+    // re-runnable)
     graft.util.Fs.deleteRecursive(Paths.get(base))
     val idxDir = s"$base/index"
     val inc = emb.filter(col("id") >= AdmitBoundary)
     val even = inc.filter(pmod(col("id"), lit(2)) === 0)
-    val admStream = stageWaveStream(s, s"$base/admit", even)
+    val in = Paths.get(s"$base/admit", "in")
+    Files.createDirectories(in)
+    // waves 0-2 admit before the fold; waves 3-4 are the late admission
+    val stage = graft.Tables.stageWaves(s"w11_${graft.Tables.dirTag(dir)}",
+      (0 until 3).map(i => even.filter(pmod(col("id"), lit(3)) === i)) ++
+        Seq(1L, 3L).map(r => inc.filter(pmod(col("id"), lit(4)) === r)))
+    (0 until 3).foreach(stage(_, Seq(in)))
     val ep = graft.state.StateDir.acquireWriter(idxDir)
     graft.ml.IndexStore.writeBase(
       Similarity.ivfPqIndex(emb.filter(col("id") < AdmitBoundary), books, cents),
@@ -2344,23 +2319,14 @@ object LlmQueries {
     def runAdmission(stream: DataFrame): Unit =
       admitStream(Similarity.ivfPqIndex(stream, books, cents), idxDir,
         s"$base/admit/ckpt", ep)
-    runAdmission(admStream)
+    runAdmission(waveStream(s, in, even.schema))
     graft.ml.IndexStore.compact(s, idxDir, maxDeltaFiles = 2,
       retainVersions = 1, epoch = ep)
     // late admission AFTER the fold: two more waves land in the same
     // staging dir with later mtimes and the SAME checkpoint resumes —
     // they stay unfolded, so serving reads base ∪ live delta tail
-    val in = Paths.get(s"$base/admit", "in")
-    stagedWaveFiles(s"w11late_${graft.Tables.dirTag(dir)}",
-        Seq(1L, 3L).map(r => inc.filter(pmod(col("id"), lit(4)) === r)))
-      .zipWithIndex.foreach { case (src, i) =>
-        graft.Tables.stageCopy(src, in.resolve(f"wave${3 + i}%02d.parquet"),
-          1000000000000L + (3 + i) * 60000L)
-      }
-    val scoped = s.newSession()
-    scoped.conf.set("spark.sql.shuffle.partitions", "4")
-    runAdmission(scoped.readStream.schema(even.schema)
-      .option("maxFilesPerTrigger", 1).parquet(in.toString))
+    (3 until 5).foreach(stage(_, Seq(in)))
+    runAdmission(waveStream(s, in, even.schema))
     require(graft.ml.IndexStore.unfoldedDeltaBatches(idxDir).size == 2,
       "w11's serving view must carry exactly its two late admission " +
         "batches unfolded — the gate exists to exercise base ∪ delta " +

@@ -461,13 +461,12 @@ object RelationalQueries {
     val base = s"target/tmp/w4_${new java.io.File(dir).getName}"
     graft.util.Fs.deleteRecursive(Paths.get(base)) // idempotent re-runs
     // the file source wants a DIRECTORY; stage the normalized events
-    // frame into one (encoding-proof, and never touches the testdata
-    // inode — see Tables.stageFile)
+    // frame into one as wave 0 (encoding-proof, and never touches the
+    // testdata inode — see Tables.stageFile)
     val in = Paths.get(base, "in")
     Files.createDirectories(in)
-    graft.Tables.stageFileCached(
-      s"events_${graft.Tables.dirTag(dir)}", graft.Tables.readEvents(s, dir),
-      in.resolve("events.parquet"), 1000000000000L)
+    graft.Tables.stageWaves(s"events_${graft.Tables.dirTag(dir)}",
+      Seq(graft.Tables.readEvents(s, dir)))(0, Seq(in))
     val scoped = s.newSession()
     scoped.conf.set("spark.sql.session.timeZone", "UTC")
     // stateful join: one state store PER shuffle partition PER side —
@@ -523,19 +522,16 @@ object RelationalQueries {
     // query commits them across three micro-batches (data, sentinel,
     // no-data flush) — see streamShuffle for the default/override split
     scoped.conf.set("spark.sql.shuffle.partitions", streamShuffle(s, 4))
-    // one sentinel per SIDE at 2100-01-01, mtime-ordered after the data
-    // file so it lands as its own micro-batch
+    // wave 1: one sentinel per SIDE at 2100-01-01, after the data wave
+    // so it lands as its own micro-batch
     val farFuture = java.time.LocalDateTime.of(2100, 1, 1, 0, 0)
-    graft.Tables.stageFileCached(
-      s"events_${graft.Tables.dirTag(dir)}", graft.Tables.readEvents(s, dir),
-      in.resolve("events.parquet"), 1000000000000L)
-    graft.Tables.stageFileCached("w8_sentinel",
-      scoped.createDataFrame(
+    val stage = graft.Tables.stageWaves(s"w8_${graft.Tables.dirTag(dir)}",
+      Seq(graft.Tables.readEvents(s, dir), scoped.createDataFrame(
         java.util.List.of(
           org.apache.spark.sql.Row(-1L, farFuture, -1L, "view", 0.0, "{}"),
           org.apache.spark.sql.Row(-2L, farFuture, -2L, "purchase", 0.0, "{}")),
-        graft.Tables.eventsStreamSchema),
-      in.resolve("zz-sentinel.parquet"), 1000060000L * 1000L)
+        graft.Tables.eventsStreamSchema)))
+    (0 to 1).foreach(stage(_, Seq(in)))
 
     def side(tpe: String, tsAs: String) = scoped.readStream
       .schema(graft.Tables.eventsStreamSchema)
@@ -601,13 +597,12 @@ object RelationalQueries {
         -1L, ts, -1L, "sentinel", 0.0, "{}")),
       graft.Tables.eventsStreamSchema)
     val farFuture = java.time.LocalDateTime.of(2100, 1, 1, 0, 0)
-    def stage(df: DataFrame, i: Int): Unit =
-      graft.Tables.stageFileCached(s"w9_${graft.Tables.dirTag(dir)}_$i", df,
-        in.resolve(f"wave$i%02d.parquet"), 1000000000000L + i * 60000L)
-    stage(events.filter(col("event_id") % 10 =!= 3), 0)    // on time
-    stage(sentinel(farFuture), 1)                          // advances wm
-    stage(sentinel(farFuture.plusHours(2)), 2)             // propagates wm
-    stage(events.filter(col("event_id") % 10 === 3), 3)    // arrives LATE
+    val stage = graft.Tables.stageWaves(s"w9_${graft.Tables.dirTag(dir)}", Seq(
+      events.filter(col("event_id") % 10 =!= 3),  // on time
+      sentinel(farFuture),                        // advances wm
+      sentinel(farFuture.plusHours(2)),           // propagates wm
+      events.filter(col("event_id") % 10 === 3))) // arrives LATE
+    (0 until 4).foreach(stage(_, Seq(in)))
 
     val agg = scoped.readStream.schema(graft.Tables.eventsStreamSchema)
       .option("maxFilesPerTrigger", 1)
@@ -648,9 +643,8 @@ object RelationalQueries {
     graft.util.Fs.deleteRecursive(Paths.get(base)) // idempotent re-runs
     val in = Paths.get(base, "in")
     Files.createDirectories(in)
-    graft.Tables.stageFileCached(
-      s"events_${graft.Tables.dirTag(dir)}", graft.Tables.readEvents(s, dir),
-      in.resolve("events.parquet"), 1000000000000L)
+    graft.Tables.stageWaves(s"events_${graft.Tables.dirTag(dir)}",
+      Seq(graft.Tables.readEvents(s, dir)))(0, Seq(in))
     val scoped = s.newSession()
     scoped.conf.set("spark.sql.session.timeZone", "UTC")
     val stream = scoped.readStream
@@ -692,9 +686,8 @@ object RelationalQueries {
     graft.util.Fs.deleteRecursive(Paths.get(base)) // idempotent re-runs
     val in = Paths.get(base, "in")
     Files.createDirectories(in)
-    graft.Tables.stageFileCached(
-      s"events_${graft.Tables.dirTag(dir)}", graft.Tables.readEvents(s, dir),
-      in.resolve("events.parquet"), 1000000000000L)
+    graft.Tables.stageWaves(s"events_${graft.Tables.dirTag(dir)}",
+      Seq(graft.Tables.readEvents(s, dir)))(0, Seq(in))
     val scoped = s.newSession()
     scoped.conf.set("spark.sql.session.timeZone", "UTC")
     scoped.conf.set("spark.sql.shuffle.partitions", streamShuffle(s, 8))
@@ -748,7 +741,7 @@ object RelationalQueries {
     // wave 1 can have set), so nothing drops and sessions merge across
     // the batch boundary. Derivation (incl. the midpoint agg) runs once
     // per JVM; later invocations byte-copy (r18 stage cache).
-    LlmQueries.stagedWaveFiles(s"w3b_${graft.Tables.dirTag(dir)}", {
+    val stage = graft.Tables.stageWaves(s"w3b_${graft.Tables.dirTag(dir)}", {
       val ev = graft.Tables.T(scoped, dir, "events")
         .select("event_id", "ts", "user_id")
       val cut = ev.select(unix_micros(col("ts").cast("timestamp")).as("t"))
@@ -756,10 +749,8 @@ object RelationalQueries {
       Seq(
         ev.filter(unix_micros(col("ts").cast("timestamp")) <= cut),
         ev.filter(unix_micros(col("ts").cast("timestamp")) > cut))
-    }).zipWithIndex.foreach { case (src, i) =>
-      graft.Tables.stageCopy(src, Paths.get(in, f"wave$i%02d.parquet"),
-        1000000000000L + i * 60000L)
-    }
+    })
+    (0 to 1).foreach(stage(_, Seq(Paths.get(in))))
     val schema = StructType(Seq(
       StructField("event_id", LongType), StructField("ts", TimestampNTZType),
       StructField("user_id", LongType)))
@@ -802,10 +793,9 @@ object RelationalQueries {
     val scoped = s.newSession()
     scoped.conf.set("spark.sql.session.timeZone", "UTC")
     scoped.conf.set("spark.sql.shuffle.partitions", streamShuffle(s, 8))
-    val t0 = 1000000000000L
     // wave derivation (incl. the midpoint-cut agg) runs once per JVM;
     // later invocations byte-copy the staged files (r18 stage cache)
-    LlmQueries.stagedWaveFiles(s"w7_${graft.Tables.dirTag(dir)}", {
+    val stage = graft.Tables.stageWaves(s"w7_${graft.Tables.dirTag(dir)}", {
       val ev = graft.Tables.T(scoped, dir, "events")
         .select("event_id", "ts", "user_id", "event_type")
       val cut = ev.agg(max("event_id")).head().getLong(0) / 2
@@ -814,10 +804,8 @@ object RelationalQueries {
         ev.filter(col("event_id") > cut)
           .unionByName(ev.filter(col("event_id") <= cut &&
             col("event_id") % 10 === 0))) // replayed rows
-    }).zipWithIndex.foreach { case (src, i) =>
-      graft.Tables.stageCopy(src, Paths.get(in, f"wave$i%02d.parquet"),
-        t0 + i * 60000L)
-    }
+    })
+    (0 to 1).foreach(stage(_, Seq(Paths.get(in))))
     val schema = StructType(Seq(
       StructField("event_id", LongType), StructField("ts", TimestampNTZType),
       StructField("user_id", LongType), StructField("event_type", StringType)))

@@ -3,8 +3,11 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import java.nio.file.{Files, Path, Paths}
 
-/** Shared testdata readers for the query registries. */
+/** Shared testdata readers for the query registries, and the one
+ * wave-staging seam ([[stageWaves]]) through which every file-source
+ * gate, tool and spec replays its fixture waves. */
 object Tables {
 
   def T(s: SparkSession, dir: String, name: String): DataFrame =
@@ -62,80 +65,83 @@ object Tables {
     })
 
   /** The normalized-events schema as the file-stream gates need it:
-   * what [[stageEventsFile]] writes, so `readStream.schema(...)` and the
-   * staged files always agree regardless of the generator's encoding. */
+   * what [[readEvents]] returns and the gates stage as a wave, so
+   * `readStream.schema(...)` and the staged files always agree
+   * regardless of the generator's encoding. */
   val eventsStreamSchema: StructType = StructType(Seq(
     StructField("event_id", LongType), StructField("ts", TimestampNTZType),
     StructField("user_id", LongType), StructField("event_type", StringType),
     StructField("value", DoubleType), StructField("props", StringType)))
 
-  /** Stage a frame as ONE parquet file at `dst`, stamped with
-   * `mtimeMillis` (the file source replays files in mtime order —
-   * deterministic micro-batch sequencing needs explicit stamps).
-   * Always a rewrite, never a hard link of the source file: a link
-   * shares the testdata inode, so stamping its mtime would mutate the
-   * read-only testdata in place — and a rewrite is what decouples the
-   * gates from the generator's physical encoding in the first place. */
-  def stageFile(df: DataFrame, dst: java.nio.file.Path, mtimeMillis: Long): Unit =
-    stageFile(df, Seq(dst), mtimeMillis)
-
-  /** [[stageFile]] fanned to several destinations (one staged wave
-   * feeding N connectors' input dirs). SAFE AGAINST A RUNNING STREAM:
-   * everything intermediate is dot-prefixed (the file source's index
-   * skips any path component starting with `.` or `_`), the mtime is
-   * stamped while the file is still invisible, and ONE atomic same-dir
-   * move publishes it — a live `FileStreamSource` can never list a torn
-   * file or observe a wave before its mtime is final. */
-  def stageFile(df: DataFrame, dsts: Seq[java.nio.file.Path],
-                mtimeMillis: Long): Unit = {
-    import java.nio.file.{Files, StandardCopyOption}
-    val head = dsts.head
-    val tmp = head.resolveSibling("." + head.getFileName.toString + ".stage")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = graft.state.StateDir.children(tmp)
-      .find(_.toString.endsWith(".parquet")).get
-    dsts.zipWithIndex.foreach { case (dst, i) =>
-      val hidden = dst.resolveSibling("." + dst.getFileName.toString + ".tmp")
-      graft.state.StateDir.publish(hidden, dst) { h =>
-        if (i < dsts.size - 1)
-          Files.copy(part, h, StandardCopyOption.REPLACE_EXISTING)
-        else Files.move(part, h, StandardCopyOption.REPLACE_EXISTING)
-        Files.setLastModifiedTime(h,
-          java.nio.file.attribute.FileTime.fromMillis(mtimeMillis))
-      }
-    }
-    graft.util.Fs.deleteRecursive(tmp)
+  /** The wave-staging entry: every file-source gate replays its fixture
+   * through it, so the replay order is decided here and nowhere else.
+   * Wave `i` of `key` is one parquet file `waveNN.parquet`, published
+   * through a hidden stage and one atomic rename ([[stageCopy]]) and
+   * stamped `T0 + i` minutes. The file source lists files oldest-first
+   * and, at `maxFilesPerTrigger = 1`, makes each file one micro-batch,
+   * so the stamp is the replay order. `T0` is a fixed instant, not the
+   * wall clock, so every replay lists identically. The stamps are a
+   * minute apart: strictly ordered under any filesystem's mtime
+   * granularity, and far inside the file source's `maxFileAge` window
+   * (7 days back from the newest file), so no wave ages out unread.
+   *
+   * `waves` is derived and materialized at most once per JVM per `key`
+   * (the wave files live under `target/tmp/stage_cache/<key>`; a fresh
+   * JVM always re-derives from the parquet inputs), its waves built
+   * concurrently. By name, so a derivation that needs a driver-side
+   * action (a midpoint cut shared by its waves) runs it once. `key`
+   * must name (derivation × data dir); gates that stage the identical
+   * frame share one key on purpose. Two concurrent first callers of
+   * one key run `waves` once: the second waits for the first's build.
+   *
+   * Returns `publish(i, dirs)`, which lands wave `i` in every dir of
+   * `dirs` (one wave can feed several connectors' inputs), safe against
+   * a stream already running over them. */
+  def stageWaves(key: String, waves: => Seq[DataFrame])
+      : (Int, Seq[Path]) => Unit = {
+    val files = waveCache.computeIfAbsent(key,
+      _ => new StagedWaves(key, waves)).files
+    (i, dirs) => dirs.foreach(d =>
+      stageCopy(files(i), d.resolve(f"wave$i%02d.parquet"), waveMtime(i)))
   }
 
-  /** Stage `df` at `dst`, deriving + materializing it at most ONCE per
-   * JVM per `cacheKey` (r18 — the memo discipline applied to input
-   * staging): the first call runs [[stageFile]]'s coalesce-to-one-file
-   * write into `target/tmp/stage_cache/<cacheKey>`; every later call —
-   * sibling gates staging the identical frame (several w-gates stage
-   * the same normalized events table) and later bench reps — publishes
-   * a byte copy via [[stageCopy]]. JVM-scoped (a fresh invocation
-   * always re-derives from the parquet inputs); `cacheKey` must
-   * uniquely name (frame derivation × data dir). */
-  def stageFileCached(cacheKey: String, df: => DataFrame,
-                      dst: java.nio.file.Path, mtimeMillis: Long): Unit =
-    stageCopy(stagedFile(cacheKey, df), dst, mtimeMillis)
+  /** Wave `i`'s stamp: `T0 + i` minutes. */
+  private[graft] def waveMtime(i: Int): Long = 1000000000000L + i * 60000L
 
-  /** The cache-or-build half of [[stageFileCached]]: the single-file
-   * staged form of `df`, materialized at most once per JVM per
-   * `cacheKey`. Callers that fan one wave to several destinations
-   * copy from the returned path via [[stageCopy]]. */
-  def stagedFile(cacheKey: String, df: => DataFrame): java.nio.file.Path =
-    stageCache.getOrElseUpdate(cacheKey, {
-      val dir = java.nio.file.Paths.get(s"target/tmp/stage_cache/$cacheKey")
+  /** One key's staged waves. A lazy val initializes once under the
+   * cell's own lock, so concurrent first readers of a key build it once
+   * while builds of other keys proceed; a failed build is retried by
+   * the next reader. */
+  private final class StagedWaves(key: String, waves: => Seq[DataFrame]) {
+    lazy val files: IndexedSeq[Path] = {
+      val dir = Paths.get(s"target/tmp/stage_cache/$key")
       graft.util.Fs.deleteRecursive(dir)
-      java.nio.file.Files.createDirectories(dir)
-      val p = dir.resolve("staged.parquet")
-      stageFile(df, p, 0L)
-      p
-    })
+      Files.createDirectories(dir)
+      val ws = waves.toIndexedSeq
+      val dsts = ws.indices.map(i => dir.resolve(f"wave$i%02d.parquet"))
+      graft.pipeline.AdmissionGate.inParallel(ws.zip(dsts).map {
+        case (w, p) => () => stageFile(w, p, 0L)
+      })
+      dsts
+    }
+  }
 
-  private val stageCache =
-    scala.collection.concurrent.TrieMap.empty[String, java.nio.file.Path]
+  private val waveCache =
+    new java.util.concurrent.ConcurrentHashMap[String, StagedWaves]()
+
+  /** Stage a frame as ONE parquet file at `dst`, stamped `mtimeMillis`,
+   * through [[stageCopy]]'s publish. Always a rewrite, never a hard
+   * link of the source file: a link shares the testdata inode, so
+   * stamping its mtime would mutate the read-only testdata in place,
+   * and a rewrite is what decouples the gates from the generator's
+   * physical encoding in the first place. */
+  def stageFile(df: DataFrame, dst: Path, mtimeMillis: Long): Unit = {
+    val tmp = dst.resolveSibling("." + dst.getFileName.toString + ".stage")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    stageCopy(graft.state.StateDir.children(tmp)
+      .find(_.toString.endsWith(".parquet")).get, dst, mtimeMillis)
+    graft.util.Fs.deleteRecursive(tmp)
+  }
 
   /** Collision-safe cache-key fragment for a data dir: basename for
    * readability + 8 hex of the absolute path's MD5 (the memoFrame
@@ -148,14 +154,12 @@ object Tables {
     s"${new java.io.File(dir).getName}_$md5"
   }
 
-  /** Publish an ALREADY-MATERIALIZED staged file to `dst` with
-   * `mtimeMillis` — the byte-copy fast path of [[stageFile]] for wave
-   * files a session stages more than once (r18: bench reps and sibling
-   * gates re-derived identical wave frames per invocation; deriving
-   * once and copying keeps the same hidden-tmp → stamp-while-invisible
-   * → single atomic rename publish discipline, so a live
-   * FileStreamSource still can never list a torn file or a pre-final
-   * mtime). */
+  /** Publish the already-materialized file `src` at `dst`, stamped
+   * `mtimeMillis`: copied into a hidden `.<name>.tmp` (the file source
+   * skips any path component starting with `.` or `_`), stamped while
+   * still invisible, and published by ONE atomic same-dir rename, so a
+   * live FileStreamSource never lists a torn file or a pre-final
+   * mtime. */
   def stageCopy(src: java.nio.file.Path, dst: java.nio.file.Path,
                 mtimeMillis: Long): Unit = {
     import java.nio.file.{Files, StandardCopyOption}

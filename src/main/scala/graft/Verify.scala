@@ -13,10 +13,12 @@ import java.nio.file.{Files, Paths}
   *    constants the gate functions share — shared work, not extra).
   *  - gates dump through a small driver-side thread pool
   *    (`SPARK_GRAFT_VERIFY_PAR`, default 4): every gate's temp dirs,
-  *    Derby databases and REST ports are gate-name-keyed or ephemeral,
-  *    so gates are independent; Spark schedules their jobs fairly on
-  *    one session. Measured: 373 s serial → well under the budget in
-  *    parallel at the same CPU count.
+  *    Derby databases and REST ports are gate-name-keyed or ephemeral;
+  *    the one thing gates share on purpose is `Tables.stageWaves`'
+  *    per-JVM wave cache (w4, w5 and w6 stage one events wave), which
+  *    builds each key once even under concurrent first callers. Spark
+  *    schedules their jobs fairly on one session. Measured: 373 s
+  *    serial → well under the budget in parallel at the same CPU count.
   *  - per-gate wall seconds log to stderr (`[verify-time]`) so a budget
   *    regression is diagnosable from the driver log alone. */
 object Verify {

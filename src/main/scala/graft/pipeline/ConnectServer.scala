@@ -189,11 +189,9 @@ final class ConnectServer(engine: ConnectRuntime, port: Int = 0,
             s"""{"message":"The offsets for this connector have been reset successfully."}""")
         case ("GET", List("connector-plugins")) =>
           // the installed-connector listing the labs inspect before
-          // registering; kinds mirror Engine.readSource / sink dispatch
-          val plugins =
-            Seq("csv" -> "source", "parquet" -> "source", "rate" -> "source",
-              "kafka" -> "source", "table" -> "sink", "logtable" -> "sink",
-              "jdbc" -> "sink", "append" -> "sink", "admission" -> "sink")
+          // registering: the kinds the Engine dispatches on
+          val plugins = Engine.SourceKinds.map(_ -> "source") ++
+            Engine.SinkKinds.map(_ -> "sink")
           json(ex, 200, plugins.map { case (c, t) =>
             s"""{"class":${quote(c)},"type":${quote(t)}}"""
           }.mkString("[", ",", "]"))

@@ -38,17 +38,14 @@ final class Engine(spark: SparkSession, root: String) extends ConnectRuntime {
 
   private def checkpointDir(name: String) = s"$root/checkpoints/$name"
 
-  /** L1: register + start. Rejects duplicate names outright — paused
+  /** L1: register + start — [[adopt]] with a RUNNING target, returning
+   * the started query. Rejects duplicate names outright — paused
    * included — because a replacement spec would inherit the previous
    * pipeline's checkpoint offsets (L6 single-writer/identity rule);
    * `delete` first to re-register. */
   def register(spec: PipelineSpec): StreamingQuery = synchronized {
-    if (pipelines.contains(spec.name))
-      throw new IllegalStateException(
-        s"pipeline '${spec.name}' already registered (single-writer rule; delete it first)")
-    val q = start(spec)
-    pipelines(spec.name) = Entry(spec, Some(q), Running)
-    q
+    adopt(spec, running = true)
+    pipelines(spec.name).query.get
   }
 
   def registerJson(json: String): StreamingQuery =
@@ -189,7 +186,7 @@ final class Engine(spark: SparkSession, root: String) extends ConnectRuntime {
    * connector running, so a spec that would fail registration must be
    * detected while the old pipeline is still alive. */
   def validate(spec: PipelineSpec): Unit = {
-    val keyedSinks = Set("table", "logtable", "jdbc")
+    val keyedSinks = KeyedSinkKinds.toSet
     // A keyed merge sink resolves intra-batch duplicate keys
     // last-write-wins by seq; the monotonically_increasing_id fallback
     // follows partition LAYOUT, not source order, so a table sink must
@@ -221,7 +218,7 @@ final class Engine(spark: SparkSession, root: String) extends ConnectRuntime {
     if (keyedSinks(spec.sink.kind) && spec.sink.keys.isEmpty)
       throw new IllegalArgumentException(
         s"${spec.sink.kind} sink requires non-empty sink.keys (the merge key)")
-    if (!Set("csv", "parquet", "rate", "kafka")(spec.source.kind))
+    if (!SourceKinds.contains(spec.source.kind))
       throw new IllegalArgumentException(
         s"unknown source '${spec.source.kind}'")
     if (spec.source.kind == "kafka" && spec.source.schema.isEmpty)
@@ -271,7 +268,7 @@ final class Engine(spark: SparkSession, root: String) extends ConnectRuntime {
         spec.source.keyFields.isEmpty && keyedSinks(spec.sink.kind))
       throw new IllegalArgumentException(
         "kafka source feeding a keyed sink requires source.keyFields")
-    if (!(keyedSinks + "append" + "admission")(spec.sink.kind))
+    if (!SinkKinds.contains(spec.sink.kind))
       throw new IllegalArgumentException(s"unknown sink '${spec.sink.kind}'")
     // L13 — the ingest-gate sink: needs the seed corpus to bootstrap
     // its reference state, and a gate root to own
@@ -641,6 +638,13 @@ final class Engine(spark: SparkSession, root: String) extends ConnectRuntime {
 }
 
 object Engine {
+  /** The source kinds [[Engine.readSource]] dispatches on. */
+  val SourceKinds: Seq[String] = Seq("csv", "parquet", "rate", "kafka")
+  /** The sink kinds that merge by key (sink.keys, seqColumn rules). */
+  val KeyedSinkKinds: Seq[String] = Seq("table", "logtable", "jdbc")
+  /** Every sink kind the Engine dispatches on. */
+  val SinkKinds: Seq[String] = KeyedSinkKinds ++ Seq("append", "admission")
+
   private sealed trait State
   private case object Running extends State
   private case object Paused extends State

@@ -39,24 +39,17 @@ object ScaleData {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ui.enabled", "false")
+      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val Off = 100000000L // far above any shipped SF's max key
 
-    // the driver ships each table as ONE parquet FILE (not a dir) and
-    // several streaming harnesses hardlink that file — mirror the layout
-    def writeSingleFile(df: DataFrame, name: String): Unit = {
-      import java.nio.file.{Files, Paths}
-      val tmp = s"$dst/.stage_$name"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = graft.state.StateDir.children(Paths.get(tmp))
-        .find(_.toString.endsWith(".parquet")).get
-      Files.deleteIfExists(Paths.get(s"$dst/$name.parquet"))
-      Files.move(part, Paths.get(s"$dst/$name.parquet"))
-      graft.util.Fs.deleteRecursive(Paths.get(tmp))
-    }
+    // the driver ships each table as ONE parquet FILE (not a dir) —
+    // mirror the layout
+    def writeSingleFile(df: DataFrame, name: String): Unit =
+      graft.Tables.stageFile(df, java.nio.file.Paths.get(dst, s"$name.parquet"),
+        System.currentTimeMillis())
     def replicate(name: String, df: Int => DataFrame): Unit = {
       writeSingleFile((0 until k).map(df).reduce(_.unionByName(_)), name)
       println(s"[scale] $name x$k")

@@ -28,18 +28,13 @@ class ClusterSpec extends SparkSpec {
          |  "keys":["id"]}}""".stripMargin)
   }
 
-  private def stage(in: String, wave: Int, rows: Seq[(Long, String, Long)]): Unit = {
+  /** `in`'s fixture, one `(id, v, seq)` row list per wave: returns
+    * `stage(i)`, which lands wave `i` in `in`. */
+  private def waves(in: String, rows: Seq[(Long, String, Long)]*): Int => Unit = {
     import spark.implicits._
-    val tmpDir = s"$in/.stage"
-    rows.toDF("id", "v", "seq").coalesce(1)
-      .write.mode("overwrite").parquet(tmpDir)
-    val st = Files.list(Paths.get(tmpDir))
-    val part =
-      try {
-        import scala.jdk.CollectionConverters._
-        st.iterator().asScala.find(_.toString.endsWith(".parquet")).get
-      } finally st.close()
-    Files.move(part, Paths.get(in, f"wave$wave%02d.parquet"))
+    val stage = Tables.stageWaves(Tables.dirTag(in),
+      rows.map(_.toDF("id", "v", "seq")))
+    i => stage(i, Seq(Paths.get(in)))
   }
 
   test("sticky least-loaded assignment, incremental join/leave rebalance") {
@@ -50,7 +45,7 @@ class ClusterSpec extends SparkSpec {
     val names = Seq("a", "b", "c", "d")
     names.foreach { n =>
       Files.createDirectories(Paths.get(s"$base/in_$n"))
-      stage(s"$base/in_$n", 0, Seq((1L, n, 0L)))
+      waves(s"$base/in_$n", Seq((1L, n, 0L)))(0)
       rt.register(spec(n, s"$base/in_$n", s"$base/state_$n"))
     }
     // least-loaded with smallest-id ties: a->w0, b->w1, c->w0, d->w1
@@ -78,7 +73,7 @@ class ClusterSpec extends SparkSpec {
     val cluster = new Cluster(spark, s"$base/root")
     val rt = cluster.addWorker("w0", now = 0L)
     Files.createDirectories(Paths.get(s"$base/in"))
-    stage(s"$base/in", 0, Seq((1L, "x", 0L)))
+    waves(s"$base/in", Seq((1L, "x", 0L)))(0)
     rt.register(spec("p", s"$base/in", s"$base/state"))
     spark.streams.active.foreach(_.processAllAvailable())
     rt.pause("p")
@@ -100,7 +95,9 @@ class ClusterSpec extends SparkSpec {
     val cluster = new Cluster(spark, s"$base/root")
     val rt = cluster.addWorker("w0", now = 0L)
     Files.createDirectories(Paths.get(s"$base/in"))
-    stage(s"$base/in", 0, Seq((1L, "v0", 0L), (2L, "v0", 0L)))
+    val stage = waves(s"$base/in", Seq((1L, "v0", 0L), (2L, "v0", 0L)),
+      Seq((2L, "v1", 1L), (3L, "v1", 1L)))
+    stage(0)
     rt.register(spec("m", s"$base/in", s"$base/state"))
     spark.streams.active.foreach(_.processAllAvailable())
     val committed = rt.latestBatchId("m")
@@ -109,7 +106,7 @@ class ClusterSpec extends SparkSpec {
     cluster.addWorker("w1", now = 0L)
     cluster.removeWorker("w0") // m moves to w1, resuming from the checkpoint
     assert(rt.workerId("m").contains("w1"))
-    stage(s"$base/in", 1, Seq((2L, "v1", 1L), (3L, "v1", 1L)))
+    stage(1)
     spark.streams.active.foreach(_.processAllAvailable())
     // batch ids CONTINUE (the checkpoint moved with the pipeline) …
     assert(rt.latestBatchId("m").exists(id => committed.exists(_ < id)))
@@ -137,7 +134,7 @@ class ClusterSpec extends SparkSpec {
     val base = tmp("storm")
     val in = s"$base/in"
     Files.createDirectories(Paths.get(in))
-    stage(in, 0, Seq((1L, "a", 0L), (2L, "b", 0L)))
+    waves(in, Seq((1L, "a", 0L), (2L, "b", 0L)))(0)
     val cluster = new Cluster(spark, s"$base/root")
     val rtA = cluster.addWorker("w0", now = 0L)
     val rtB = cluster.addWorker("w1", now = 0L)
@@ -214,7 +211,8 @@ class ClusterSpec extends SparkSpec {
     val rtA = cluster.addWorker("w0", now = 0L)
     cluster.addWorker("w1", now = 0L)
     Files.createDirectories(Paths.get(s"$base/in"))
-    stage(s"$base/in", 0, Seq((1L, "v0", 0L)))
+    val stage = waves(s"$base/in", Seq((1L, "v0", 0L)), Seq((2L, "v1", 1L)))
+    stage(0)
     val shared = scala.collection.concurrent.TrieMap.empty[String, String]
     val serverB = new graft.pipeline.ConnectServer(cluster.runtime("w1"),
       sharedConfigs = Some(shared))
@@ -240,7 +238,7 @@ class ClusterSpec extends SparkSpec {
           .method("PUT", java.net.http.HttpRequest.BodyPublishers.ofString(body))
           .build(), java.net.http.HttpResponse.BodyHandlers.ofString())
       assert(r.statusCode() == 200, s"${r.statusCode()}: ${r.body()}")
-      stage(s"$base/in", 1, Seq((2L, "v1", 1L)))
+      stage(1)
       spark.streams.active.foreach(_.processAllAvailable())
       // offsets survived the update: batch ids continue past the
       // pre-update commit, and wave 0 was not re-ingested (1 row per key)
@@ -259,7 +257,7 @@ class ClusterSpec extends SparkSpec {
     intercept[NoSuchElementException](cluster.removeWorker("ghost"))
     val rt = cluster.addWorker("w0", now = 0L)
     Files.createDirectories(Paths.get(s"$base/in"))
-    stage(s"$base/in", 0, Seq((1L, "x", 0L)))
+    waves(s"$base/in", Seq((1L, "x", 0L)))(0)
     rt.register(spec("dup", s"$base/in", s"$base/state"))
     intercept[IllegalStateException](
       rt.register(spec("dup", s"$base/in", s"$base/state2")))
@@ -293,7 +291,7 @@ class ClusterSpec extends SparkSpec {
     assert(rt.list().isEmpty, "failed start must roll the registration back")
     // the name re-registers cleanly with a runnable config
     Files.createDirectories(Paths.get(s"$base/in"))
-    stage(s"$base/in", 0, Seq((1L, "x", 0L)))
+    waves(s"$base/in", Seq((1L, "x", 0L)))(0)
     rt.register(spec("w", s"$base/in", s"$base/state"))
     assert(rt.status("w")._2 == "RUNNING")
     // the LAST worker leaves: the pipeline stays registered and
@@ -316,7 +314,9 @@ class ClusterSpec extends SparkSpec {
     val rt0 = cluster.addWorker("w0", now = 0L)
     val rt1 = cluster.addWorker("w1", now = 0L)
     Files.createDirectories(Paths.get(s"$base/in"))
-    stage(s"$base/in", 0, Seq((1L, "v0", 0L), (2L, "v0", 0L)))
+    val stage = waves(s"$base/in", Seq((1L, "v0", 0L), (2L, "v0", 0L)),
+      Seq((2L, "v1", 1L), (3L, "v1", 1L)))
+    stage(0)
     rt0.register(spec("hb", s"$base/in", s"$base/state"))
     assert(rt0.workerId("hb").contains("w0")) // least-loaded, smallest id
     spark.streams.active.foreach(_.processAllAvailable())
@@ -335,7 +335,7 @@ class ClusterSpec extends SparkSpec {
     assert(rt1.workerId("hb").contains("w1"))
     assert(rt1.status("hb")._2 == "RUNNING")
 
-    stage(s"$base/in", 1, Seq((2L, "v1", 1L), (3L, "v1", 1L)))
+    stage(1)
     spark.streams.active.foreach(_.processAllAvailable())
     // batch ids CONTINUE from the corpse's committed checkpoint …
     assert(rt1.latestBatchId("hb").exists(id => committed.exists(_ < id)))

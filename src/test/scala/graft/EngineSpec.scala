@@ -550,7 +550,6 @@ class EngineSpec extends SparkSpec {
   }
 
   test("L14 semantic dial survives resume ACROSS a maintenance fold (resumeDials re-derives the grown plane count)") {
-    import org.apache.spark.sql.DataFrame
     val base = Files.createTempDirectory("adm_dial").toString
     val in = s"$base/in"; Files.createDirectories(Paths.get(in))
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -559,16 +558,29 @@ class EngineSpec extends SparkSpec {
     seed.write.parquet(s"$base/seed")
     docs.filter(col("doc_id") >= 300 && col("doc_id") < 320)
       .write.parquet(s"$base/bench")
-    def stage(df: DataFrame, i: Int): Unit =
-      graft.Tables.stageFile(df, Paths.get(in, f"w$i%02d.parquet"),
-        1000000000000L + i * 60000L)
+    // wave 8, the backlog staged after the fold: token-REVERSED
+    // paraphrases of three seed docs (same token bag -> identical hashed
+    // vector -> same bucket, but shingle-novel, so ONLY the semantic leg
+    // can refuse them) plus a control: doc 499 with a tiny prefix —
+    // token bag CHANGED, so its hashed vector differs and the semantic
+    // leg must stay silent (near-dup/containment legs legitimately
+    // refuse it — irrelevant here; the control guards against a
+    // mis-derived dial flagging everything semantic_dup)
+    val para = seed.filter(col("doc_id") % 30 === 0 && length(col("text")) > 120)
+      .select((col("doc_id") + 1000000L).as("doc_id"),
+        concat_ws(" ", reverse(graft.text.Dedup.tokens(col("text")))).as("text"))
+    val backlog = para.unionByName(
+      docs.filter(col("doc_id") === 499)
+        .select((col("doc_id") + 2000000L).as("doc_id"),
+          concat(lit("zq "), col("text")).as("text")))
     // 8 pre-staged waves -> batches 0..7; at batch 7 the unfolded tail
     // (seed + b0..b6 = 8 parts) exceeds foldThreshold=6, so the
     // maintenance fold runs AND grows the plane dial (floor 2, ~450
     // reference embeddings -> scaledPlaneCount = 5)
-    (0 until 8).foreach(i => stage(
-      docs.filter(col("doc_id") >= 100 + 50 * i &&
-        col("doc_id") < 100 + 50 * (i + 1) && col("doc_id") < 500), i))
+    val stage = graft.Tables.stageWaves(graft.Tables.dirTag(base),
+      (0 until 8).map(i => docs.filter(col("doc_id") >= 100 + 50 * i &&
+        col("doc_id") < 100 + 50 * (i + 1) && col("doc_id") < 500)) :+ backlog)
+    (0 until 8).foreach(stage(_, Seq(Paths.get(in))))
     val engine = new Engine(spark, s"$base/engine")
     val spec =
       s"""{"name":"dial","source":{"type":"parquet","path":"$in",
@@ -597,27 +609,13 @@ class EngineSpec extends SparkSpec {
     assert(expected > 2, s"fixture must force growth (nFold=$nFold)")
     assert(resumed.currentPlaneCount == expected,
       "resume must re-derive the grown dial from the newest fold")
-    // behavioral proof through the REST lifecycle: pause, stage a
-    // backlog carrying token-REVERSED paraphrases of three seed docs
-    // (same token bag -> identical hashed vector -> same bucket, but
-    // shingle-novel, so ONLY the semantic leg can refuse them) plus a
-    // fresh control doc; resume (a fresh incarnation re-derives the
+    // behavioral proof through the REST lifecycle: pause, stage the
+    // backlog (wave 8); resume (a fresh incarnation re-derives the
     // dial) and the paraphrases must flag semantic_dup under the
     // GROWN-dial state while the control admits
     engine.pause("dial")
-    val para = seed.filter(col("doc_id") % 30 === 0 && length(col("text")) > 120)
-      .select((col("doc_id") + 1000000L).as("doc_id"),
-        concat_ws(" ", reverse(graft.text.Dedup.tokens(col("text")))).as("text"))
     assert(para.count() >= 2, "need at least two paraphrase plants")
-    // control: doc 499 with a tiny prefix — token bag CHANGED, so its
-    // hashed vector differs and the semantic leg must stay silent
-    // (near-dup/containment legs legitimately refuse it — irrelevant
-    // here; the control guards against a mis-derived dial flagging
-    // everything semantic_dup)
-    stage(para.unionByName(
-      docs.filter(col("doc_id") === 499)
-        .select((col("doc_id") + 2000000L).as("doc_id"),
-          concat(lit("zq "), col("text")).as("text"))), 8)
+    stage(8, Seq(Paths.get(in)))
     engine.resume("dial")
     spark.streams.active.foreach(_.processAllAvailable())
     val last = spark.read.parquet(s"$base/gate/out")
@@ -667,13 +665,13 @@ class EngineSpec extends SparkSpec {
     }.toDF("doc_id", "text")
     docs.filter(col("doc_id") < 100).write.parquet(s"$base/seed")
     Files.createDirectories(Paths.get(s"$base/in"))
-    graft.Tables.stageFile(
+    graft.Tables.stageWaves(graft.Tables.dirTag(base), Seq(
       docs.filter(col("doc_id") >= 100 && col("doc_id") < 150)
         .unionByName(docs.filter(col("doc_id") < 100 &&
             col("doc_id") % 25 === 0)
           .select((col("doc_id") + 7000000L).as("doc_id"),
-            translate(col("text"), "aeiou", "uoiea").as("text"))),
-      Paths.get(s"$base/in", "w00.parquet"), 1000000000000L)
+            translate(col("text"), "aeiou", "uoiea").as("text")))))(
+      0, Seq(Paths.get(s"$base/in")))
     engine.registerJson(spec(""","media":"true"""")).processAllAvailable()
     engine.delete("ax")
     val v = spark.read.parquet(s"$base/gate/out")
@@ -690,20 +688,18 @@ class EngineSpec extends SparkSpec {
   }
 
   test("L13 admission sink: offset reset wipes the gate root and the next resume re-ingests from scratch") {
-    import org.apache.spark.sql.DataFrame
     val base = Files.createTempDirectory("engine_adm").toString
     val in = s"$base/in"; Files.createDirectories(Paths.get(in))
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "text")
     docs.filter(col("doc_id") < 300).write.parquet(s"$base/seed")
-    def stage(df: DataFrame, i: Int): Unit =
-      graft.Tables.stageFile(df, Paths.get(in, f"w$i%02d.parquet"),
-        1000000000000L + i * 60000L)
-    stage(docs.filter(col("doc_id") >= 300 && col("doc_id") % 2 === 0), 0)
-    stage(docs.filter(col("doc_id") >= 300 && col("doc_id") % 2 === 1)
-      .unionByName(docs.filter(col("doc_id") >= 300 &&
-          col("doc_id") % 2 === 0 && col("doc_id") % 7 === 0)
-        .withColumn("doc_id", col("doc_id") + 1000000L)), 1)
+    val stage = graft.Tables.stageWaves(graft.Tables.dirTag(base), Seq(
+      docs.filter(col("doc_id") >= 300 && col("doc_id") % 2 === 0),
+      docs.filter(col("doc_id") >= 300 && col("doc_id") % 2 === 1)
+        .unionByName(docs.filter(col("doc_id") >= 300 &&
+            col("doc_id") % 2 === 0 && col("doc_id") % 7 === 0)
+          .withColumn("doc_id", col("doc_id") + 1000000L))))
+    (0 to 1).foreach(stage(_, Seq(Paths.get(in))))
     val engine = new Engine(spark, s"$base/engine")
     val spec =
       s"""{"name":"adm","source":{"type":"parquet","path":"$in",
@@ -743,9 +739,9 @@ class EngineSpec extends SparkSpec {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "text")
     docs.filter(col("doc_id") < 100).write.parquet(s"$base/seed")
-    graft.Tables.stageFile(
-      docs.filter(col("doc_id") >= 100 && col("doc_id") < 150),
-      Paths.get(in, "w00.parquet"), 1000000000000L)
+    graft.Tables.stageWaves(graft.Tables.dirTag(base),
+      Seq(docs.filter(col("doc_id") >= 100 && col("doc_id") < 150)))(
+      0, Seq(Paths.get(in)))
     val engine = new Engine(spark, s"$base/engine")
     def spec(extra: String) =
       s"""{"name":"axp","source":{"type":"parquet","path":"$in",
@@ -808,8 +804,8 @@ class EngineSpec extends SparkSpec {
       val base = s"$baseRoot/$tag"
       Files.createDirectories(Paths.get(s"$base/in"))
       seed.write.parquet(s"$base/seed")
-      graft.Tables.stageFile(wave, Paths.get(s"$base/in/w00.parquet"),
-        1000000000000L)
+      graft.Tables.stageWaves(graft.Tables.dirTag(base), Seq(wave))(
+        0, Seq(Paths.get(s"$base/in")))
       val engine = new Engine(spark, s"$base/engine")
       engine.registerJson(
         s"""{"name":"sd_$tag","source":{"type":"parquet","path":"$base/in",

@@ -39,9 +39,13 @@ class IndexStoreSpec extends SparkSpec {
       .option("maxFilesPerTrigger", 1).parquet(Paths.get(dir, "in").toString)
   }
 
+  /** `df` as three waves by `pmod(id, 3)`. */
+  private def thirds(df: org.apache.spark.sql.DataFrame) =
+    (0 until 3).map(i => df.filter(pmod(col("id"), lit(3)) === i))
+
   /** A fresh store under `dir/index`: the base holds ids < 120 of a
     * 240-vector corpus, and `waves` pmod-3 slices of the rest are staged
-    * as minute-spaced files and admitted under the writer's epoch, one
+    * as waves and admitted under the writer's epoch, one
     * batch per trigger. Returns the corpus, the store dir and the epoch
     * once the stream drains and stops. */
   private def admittedStore(dir: String, waves: Int = 3) = {
@@ -54,10 +58,8 @@ class IndexStoreSpec extends SparkSpec {
     val incoming = vecs.filter(col("id") >= 120)
     val in = Paths.get(dir, "in")
     Files.createDirectories(in)
-    (0 until waves).foreach { i =>
-      Tables.stageFile(incoming.filter(pmod(col("id"), lit(3)) === i),
-        in.resolve(f"wave$i%02d.parquet"), 1000000000000L + i * 60000L)
-    }
+    val stage = Tables.stageWaves(Tables.dirTag(dir), thirds(incoming))
+    (0 until waves).foreach(stage(_, Seq(in)))
     val q = IndexStore.admit(
       Similarity.ivfPqIndex(waveStream(dir, incoming.schema), books, cents),
       idx, s"$dir/ckpt", w)
@@ -273,9 +275,7 @@ class IndexStoreSpec extends SparkSpec {
     val in = Paths.get(dir, "in")
     Files.createDirectories(in)
     val incoming = vecs.filter(col("id") >= 120)
-    def stageWave(w: Int): Unit =
-      Tables.stageFile(incoming.filter(pmod(col("id"), lit(3)) === w),
-        in.resolve(f"wave$w%02d.parquet"), 1000000000000L + w * 60000L)
+    val stage = Tables.stageWaves(Tables.dirTag(dir), thirds(incoming))
     def admitQuery(epoch: Long) = {
       val stream = waveStream(dir, incoming.schema)
       IndexStore.admit(Similarity.ivfPqIndex(stream, books, cents),
@@ -287,7 +287,7 @@ class IndexStoreSpec extends SparkSpec {
       Similarity.ivfPqIndex(vecs.filter(col("id") < 120), books, cents),
       idx, a)
     // wave 0 commits under A's epoch through the fenced channel
-    stageWave(0)
+    stage(0, Seq(in))
     val qa = admitQuery(a)
     qa.processAllAvailable()
     val afterW0 = IndexStore.read(spark, idx).collect().toSet
@@ -298,7 +298,7 @@ class IndexStoreSpec extends SparkSpec {
     // B supersedes while A's stream is still running — A's NEXT batch
     // (wave 1) must refuse at its pre-write fence with the store unmoved
     val b = StateDir.acquireWriter(idx)
-    stageWave(1)
+    stage(1, Seq(in))
     val ex = intercept[Throwable] { qa.processAllAvailable() }
     assert(Option(ex.getMessage).getOrElse(ex.getCause.getMessage)
       .contains("fenced") || ex.getCause != null &&
@@ -328,7 +328,7 @@ class IndexStoreSpec extends SparkSpec {
     Files.delete(torn.resolve("_SUCCESS"))
     assert(IndexStore.read(spark, idx).collect().toSet.size == 200,
       "a torn admission batch leaked into the serving view")
-    stageWave(2)
+    stage(2, Seq(in))
     qb.processAllAvailable()
     qb.stop()
     val all = IndexStore.read(spark, idx).collect().toSet
@@ -563,10 +563,8 @@ class IndexStoreSpec extends SparkSpec {
     // — never a torn batch, never a half-visible fold state
     val in = Paths.get(dir, "in")
     Files.createDirectories(in)
-    (0 until 3).foreach { i =>
-      Tables.stageFile(incoming.filter(pmod(col("id"), lit(3)) === i),
-        in.resolve(f"wave$i%02d.parquet"), 1000000000000L + i * 60000L)
-    }
+    val stage = Tables.stageWaves(Tables.dirTag(dir), thirds(incoming))
+    (0 until 3).foreach(stage(_, Seq(in)))
     val slow = udf { (id: Long) => Thread.sleep(15); id >= 0 }
     val stream = waveStream(dir, incoming.schema).filter(slow(col("id")))
 
@@ -615,11 +613,11 @@ class IndexStoreSpec extends SparkSpec {
     // commit a serve over the store must equal the batch-built index of
     // exactly the admitted-so-far corpus: committed-prefix snapshots
     val incoming = vecs.filter(col("id") >= 120)
+    val in = Paths.get(dir, "in")
+    Files.createDirectories(in)
+    val stage = Tables.stageWaves(Tables.dirTag(dir), thirds(incoming))
     (0 until 3).foreach { w =>
-      val in = Paths.get(dir, "in")
-      Files.createDirectories(in)
-      Tables.stageFile(incoming.filter(pmod(col("id"), lit(3)) === w),
-        in.resolve(f"wave$w%02d.parquet"), 1000000000000L + w * 60000L)
+      stage(w, Seq(in))
       val q = IndexStore.admit(
         Similarity.ivfPqIndex(waveStream(dir, incoming.schema), books, cents),
         idx, s"$dir/ckpt", ep)
@@ -646,7 +644,7 @@ class IndexStoreSpec extends SparkSpec {
     val in = Paths.get(dir, "in")
     Files.createDirectories(in)
     val incoming = vecs.filter(col("id") >= 90)
-    Tables.stageFile(incoming, in.resolve("wave00.parquet"), 1000000000000L)
+    Tables.stageWaves(Tables.dirTag(dir), Seq(incoming))(0, Seq(in))
     def admitQuery(ckpt: String, epoch: Long) = {
       val stream = waveStream(dir, incoming.schema)
       IndexStore.admit(Similarity.ivfPqIndex(stream, books, cents),
@@ -743,7 +741,7 @@ class IndexStoreSpec extends SparkSpec {
     val in = Paths.get(dir, "in")
     Files.createDirectories(in)
     val incoming = vecs.filter(col("id") >= 120)
-    Tables.stageFile(incoming, in.resolve("wave00.parquet"), 1000000000000L)
+    Tables.stageWaves(Tables.dirTag(dir), Seq(incoming))(0, Seq(in))
     val stream = waveStream(dir, incoming.schema)
     val q = IndexStore.admit(Similarity.ivfPqIndex(stream, books, cents),
       idx, s"$dir/ckpt", a)
