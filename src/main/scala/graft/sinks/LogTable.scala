@@ -2,8 +2,9 @@ package graft.sinks
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.state.StateDir
 import graft.util.Fs
@@ -19,8 +20,10 @@ import graft.util.Fs
  *    is O(batch), never O(state);
  *  - the payload is stored verbatim; the log's own `_`-columns never
  *    surface in [[read]];
- *  - reads merge the versions by (version, `_seq`) last-write-wins —
- *    cost bounded by compaction cadence;
+ *  - reads merge the versions by (version, `_seq`) last-write-wins over
+ *    ONE parquet relation whose schema is pinned from the versions'
+ *    recorded schemas: a version costs one more directory listing, not
+ *    one more Spark job, and a key filter reaches the single scan;
  *  - [[compact]] folds everything into a single version that KEEPS
  *    tombstone markers, so a crash between the compacted write and the
  *    old-version cleanup re-merges to the identical state (replay-safe,
@@ -30,7 +33,10 @@ import graft.util.Fs
  * publish: written to a hidden `.tmp-v%08d` dir, then ONE atomic
  * directory rename to `v%08d` — a version either exists completely or
  * not at all; leftover temp dirs are ignored by readers and swept by the
- * next writer (safe under the engine's single-writer rule, L6).
+ * next writer (safe under the engine's single-writer rule, L6). The
+ * written frame's schema (`_schema.json`) and the batch marker
+ * (`_batchid-N`) ride inside the dir, so the rename commits them with
+ * the data; their leading underscore hides them from parquet.
  */
 object LogTable {
 
@@ -38,6 +44,10 @@ object LogTable {
   // silently drop a version that outgrows the padding
   private val VersionRe = "v(\\d{8,})".r
   private val BatchMarkerRe = "_batchid-(\\d+)".r
+  /** A data file's version: its own parent dir, so an ancestor dir named
+   * like a version cannot match. */
+  private val FileVersionRe = "/v(\\d{8,})/[^/]+$"
+  private val SchemaFile = "_schema.json"
 
   private final case class Version(n: Int, dir: Path, batchId: Option[Long])
 
@@ -114,7 +124,8 @@ object LogTable {
 
   /** Current table state: merge all versions, newest (version, `_seq`)
    * wins per key, tombstoned keys dropped, the payload as written. One
-   * shuffle over the deltas (and the base, if compacted). */
+   * scan and one shuffle over the deltas (and the base, if compacted);
+   * building the frame starts no Spark job. */
   def read(spark: SparkSession, path: String, keys: Seq[String]): DataFrame = {
     val vs = versionList(path)
     require(vs.nonEmpty, s"no committed versions under $path")
@@ -138,14 +149,27 @@ object LogTable {
   def versions(path: String): Seq[Int] = versionList(path).map(_.n)
 
   /** The newest row per key across `vs`, ordered by (version, `_seq`);
-   * tombstone markers and the log's own columns are kept. */
+   * tombstone markers and the log's own columns are kept. All versions
+   * are ONE parquet relation read under a pinned schema: the add-only
+   * union of their recorded schemas in version order (the columns and
+   * types `unionByName` gives), built over empty frames so that no
+   * footer is inferred; `_v` comes from each file's version dir. */
   private def merge(spark: SparkSession, vs: Seq[Version],
                     keys: Seq[String]): DataFrame = {
-    val all = vs.map { case Version(n, p, _) =>
-      spark.read.parquet(p.toString).withColumn("_v", lit(n))
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
+    val pinned = vs.map(v => spark.createDataFrame(java.util.List.of[Row](), schemaOf(v)))
+      .reduce(_.unionByName(_, allowMissingColumns = true)).schema
+    val all = spark.read.schema(pinned).parquet(vs.map(_.dir.toString): _*)
+      .withColumn("_v", regexp_extract(col("_metadata.file_path"), FileVersionRe, 1).cast("int"))
     MergeSink.lastPerKey(
       all.withColumn("_ord", struct(col("_v"), col("_seq"))), keys, "_ord")
+  }
+
+  private def schemaOf(v: Version): StructType = {
+    val f = v.dir.resolve(SchemaFile)
+    if (!Files.exists(f)) throw new IllegalStateException(
+      s"LogTable version dir ${v.dir} has no $SchemaFile: every version " +
+        "records the schema it was written with at commit")
+    DataType.fromJson(Files.readString(f)).asInstanceOf[StructType]
   }
 
   /** Flatten a connect frame to (key fields..., payload..., _tombstone,
@@ -175,8 +199,10 @@ object LogTable {
     StateDir.publish(Paths.get(path, f".tmp-v$n%08d"),
         Paths.get(path, f"v$n%08d")) { tmp =>
       df.write.mode("overwrite").parquet(tmp.toString)
-      // the marker rides inside the dir so the atomic rename commits
-      // it with the data; the leading underscore hides it from parquet
+      // the schema and the marker ride inside the dir so the atomic
+      // rename commits them with the data; the leading underscore hides
+      // them from parquet
+      Files.writeString(tmp.resolve(SchemaFile), df.schema.json)
       batchId.foreach(id => Files.createFile(tmp.resolve(s"_batchid-$id")))
     }
   }
